@@ -15,11 +15,14 @@ Determinism contract: the hash here must agree between stage time and
 probe time FOREVER (a sidecar written today is probed years later), so
 it is hand-rolled from fixed constants — splitmix64 over a canonical
 64-bit encoding per column (int64 value / FNV-1a-64 of utf-8 / epoch
-days), vectorized in numpy inside Arrow batches; no library hash whose
-implementation could drift (pandas' hash_array makes no cross-version
-promise).  False positives only cost a wasted probe read; a false
-NEGATIVE would silently drop an update, which is why nothing
-environment-dependent is allowed in this file.
+days), vectorized in numpy; no library hash whose implementation could
+drift (pandas' hash_array makes no cross-version promise).  Both sides
+run on the driver: stage time hashes the pk columns read back from the
+staged parquet files (:func:`arrow_key_hashes`), probe time the batch
+keys collected as Arrow — no Python worker is involved, so the package
+never has to be importable on executors.  False positives only cost a
+wasted probe read; a false NEGATIVE would silently drop an update,
+which is why nothing environment-dependent is allowed in this file.
 
 Sidecar format (``_index/bloom-<datafile>.bin``):
 ``MBF1 | uint32 k | uint64 m | ceil(m/8) bitmap bytes`` (little-endian).
@@ -76,12 +79,41 @@ def supported_pk_types(schema, pk: list[str]) -> bool:
     return all(isinstance(by_name.get(k), ok) for k in pk)
 
 
+def _fnv1a64_utf8(values) -> np.ndarray:
+    """:func:`_fnv1a64` of each string's utf-8 bytes, vectorized: one
+    numpy step per byte position over only the strings at least that
+    long (sorted longest first, so they are a prefix) — O(total bytes)
+    array work and no per-value Python call."""
+    import pyarrow as pa
+
+    arr = pa.array(values, type=pa.large_string())
+    _, offs_buf, data_buf = arr.buffers()
+    offs = np.frombuffer(offs_buf, dtype=np.int64)[: len(arr) + 1]
+    data = (
+        np.frombuffer(data_buf, dtype=np.uint8)
+        if data_buf is not None
+        else np.empty(0, dtype=np.uint8)
+    )
+    lens = np.diff(offs)
+    order = np.argsort(-lens, kind="stable")
+    starts = offs[:-1][order]
+    ascending = lens[order][::-1]
+    h = np.full(len(arr), _FNV_OFFSET, dtype=np.uint64)
+    for j in range(int(ascending[-1]) if len(arr) else 0):
+        live = len(arr) - int(np.searchsorted(ascending, j, side="right"))
+        h[:live] ^= data[starts[:live] + j].astype(np.uint64)
+        h[:live] *= _FNV_PRIME
+    out = np.empty_like(h)
+    out[order] = h
+    return out
+
+
 def key_hash_array(cols: list["np.ndarray | object"]) -> np.ndarray:
     """Canonical uint64 hash per row from the pk column arrays (pandas
     Series values).  Integers hash by value, strings by FNV-1a-64 of
-    utf-8 (the one per-value Python loop, same concession as the Iceberg
-    bucket transform's string path), dates by epoch day; columns fold
-    left with splitmix64 so (1, 2) and (2, 1) differ."""
+    utf-8, dates by epoch day; columns fold left with splitmix64 so
+    (1, 2) and (2, 1) differ.  An all-string column takes the vectorized
+    FNV path; mixed object columns (dates, NULLs) loop per value."""
     import datetime
 
     import pandas as pd
@@ -96,6 +128,8 @@ def key_hash_array(cols: list["np.ndarray | object"]) -> np.ndarray:
             enc = (
                 s.to_numpy().astype("datetime64[D]").astype(np.int64)
             ).view(np.uint64)
+        elif pd.api.types.infer_dtype(s, skipna=False) == "string":
+            enc = _fnv1a64_utf8(s.tolist())
         else:
             vals = s.tolist()
             out = np.empty(n, dtype=np.uint64)
@@ -114,6 +148,18 @@ def key_hash_array(cols: list["np.ndarray | object"]) -> np.ndarray:
             enc = out
         acc = _splitmix64(acc ^ enc)
     return acc
+
+
+def arrow_key_hashes(table, pk: list[str]) -> Optional[np.ndarray]:
+    """:func:`key_hash_array` over the ``pk`` columns of a pyarrow
+    Table, or None when any key is NULL: pandas would coerce a nullable
+    integer column to float64 and corrupt the canonical encoding of the
+    real keys (a false-negative risk), so NULL-key data is never
+    bloom-indexed or bloom-pruned."""
+    if any(table.column(c).null_count for c in pk):
+        return None
+    pdf = table.select(pk).to_pandas(date_as_object=True)
+    return key_hash_array([pdf[c] for c in pk])
 
 
 def bloom_m_for(rows: int) -> int:

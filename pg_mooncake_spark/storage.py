@@ -633,182 +633,89 @@ class MoonTable:
         reference contract: file statistics & skipping,
         reference CHANGELOG.md:26).
 
+        Row counts and stats come from each staged file's parquet footer
+        on the driver (min/max merged across row groups), for the column
+        types whose footer statistics equal Spark's ``min``/``max``
+        (:data:`_FOOTER_STAT_TYPES`).  One Spark pass over the staged
+        files covers only the stat columns a footer cannot describe
+        (float/double, timestamps, absent statistics), so a pk-only
+        stage — every CDC/DML commit — runs no stats job.  Zero-row
+        files are dropped, never committed.
+
         For bloom-indexable key types a per-file bloom filter over the pk
-        is also built (one extra Arrow-batched pass over the staged
-        files, no shuffle) and persisted as an immutable ``_index/``
-        sidecar — MERGE's candidate pruning tests batch keys against it
-        driver-side instead of scanning the file (functions/bloom.py)."""
+        is also built on the driver from the staged files' pk columns and
+        persisted as an immutable ``_index/`` sidecar — MERGE's candidate
+        pruning tests batch keys against it driver-side instead of
+        scanning the file (functions/bloom.py)."""
+        import pyarrow.parquet as pq
+
+        from pg_mooncake_spark.functions import bloom as B
+
         staging = os.path.join(self.data_path, f"_staging_{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(staging)
-        descriptors: list[dict] = []
-        part_files = [
-            f for f in os.listdir(staging) if f.endswith(".parquet")
-        ]
         stat_cols = list(pk or [])
         for c in extra_stats_cols or []:
             if c not in stat_cols and c in df.columns:
                 stat_cols.append(c)
-        # per-file stats via one spark pass over the staged files
-        stats: dict[str, dict] = {}
-        if stat_cols and part_files:
+        types = {f.name: f.dataType for f in df.schema.fields}
+        footers: dict[str, Any] = {}
+        for f in sorted(os.listdir(staging)):
+            if f.endswith(".parquet"):
+                md = pq.read_metadata(os.path.join(staging, f))
+                if md.num_rows:
+                    footers[f] = md
+        stats = {
+            f: _footer_stats(md, stat_cols, types) for f, md in footers.items()
+        }
+        rest = [c for c in stat_cols if any(c not in st for st in stats.values())]
+        if rest:
             stat_df = (
-                self.spark.read.parquet(staging)
+                self.spark.read.schema(df.schema)
+                .parquet(staging)
                 .withColumn("__file", F.element_at(F.split(F.input_file_name(), "/"), -1))
                 .groupBy("__file")
                 .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    *[F.min(k).alias(f"min_{k}") for k in stat_cols],
-                    *[F.max(k).alias(f"max_{k}") for k in stat_cols],
+                    *[F.min(k).alias(f"min_{k}") for k in rest],
+                    *[F.max(k).alias(f"max_{k}") for k in rest],
                 )
             )
             for r in stat_df.collect():
-                d = r.asDict()
-                stats[d.pop("__file")] = d
-        blooms: dict[str, bytes] = {}
-        if pk and part_files:
-            from pg_mooncake_spark.functions import bloom as B
-
-            if B.supported_pk_types(df.schema, pk):
-                rows_by_staged = {f: (stats.get(f) or {}).get("rows") for f in part_files}
-                blooms = self._stage_blooms(staging, list(pk), rows_by_staged)
-        for fname in part_files:
+                stats[r["__file"]].update(
+                    {k: (r[f"min_{k}"], r[f"max_{k}"]) for k in rest}
+                )
+        bloomable = bool(pk) and B.supported_pk_types(df.schema, pk)
+        descriptors: list[dict] = []
+        for fname, md in footers.items():
             new_name = f"part-{uuid.uuid4().hex}.parquet"
-            os.rename(os.path.join(staging, fname), os.path.join(self.data_path, new_name))
-            st = stats.get(fname, {})
+            st = stats[fname]
             desc = {
                 "name": new_name,
-                "rows": st.get("rows"),
+                "rows": md.num_rows,
                 "stats": {
-                    k: [
-                        _plain(st.get(f"min_{k}"), "lo"),
-                        _plain(st.get(f"max_{k}"), "hi"),
-                    ]
+                    k: [_plain(st[k][0], "lo"), _plain(st[k][1], "hi")]
                     for k in stat_cols
                 },
             }
-            if fname in blooms:
+            h = None
+            if bloomable:
+                with pq.ParquetFile(os.path.join(staging, fname)) as pf:
+                    h = B.arrow_key_hashes(pf.read(columns=list(pk)), pk)
+            os.rename(os.path.join(staging, fname), os.path.join(self.data_path, new_name))
+            if h is not None:
+                m = B.bloom_m_for(md.num_rows)
                 side = f"bloom-{new_name}.bin"
                 self.backend.mkdirs(os.path.join(self.path, _INDEX_DIR))
                 self.backend.write_atomic(
-                    os.path.join(self.path, _INDEX_DIR, side), blooms[fname]
+                    os.path.join(self.path, _INDEX_DIR, side),
+                    B.serialize(B.build_bitmap(h, m), m),
                 )
                 desc["bloom"] = side
             descriptors.append(desc)
-        # clean staging remnants
+        # clean staging remnants (zero-row files included)
         for f in os.listdir(staging):
             os.remove(os.path.join(staging, f))
         os.rmdir(staging)
         return descriptors
-
-    def _stage_blooms(
-        self,
-        staging: str,
-        pk: list[str],
-        rows_by_staged: dict[str, Optional[int]],
-    ) -> dict[str, bytes]:
-        """Serialized bloom bitmap per staged file name.
-
-        One ``mapInPandas`` pass over the staged parquet (pk columns
-        only): each Arrow batch contributes a PARTIAL bitmap for the file
-        chunk it covers; the driver ORs partials per file.  Driver
-        traffic is O(files × m/8) bitmap bytes — independent of row
-        count — and the bitmap size m is fixed per file up front from the
-        stats row count, so partials always agree."""
-        import numpy as np
-
-        from pg_mooncake_spark.functions import bloom as B
-
-        rows_map = {
-            f: int(r) if r else 0 for f, r in rows_by_staged.items()
-        }
-
-        def gen(batches):
-            import pandas as pd
-
-            # Accumulate ONE partial per (task, file), ORing every Arrow
-            # batch into it — NOT one partial per batch.  A per-batch
-            # yield re-ships the file's full m-bit bitmap every ~10k rows,
-            # making driver traffic O(rows/batch_size × m/8): at a 60M-row
-            # rewrite that exceeded spark.driver.maxResultSize outright.
-            # Per-task accumulation restores the documented O(files × m/8)
-            # (a task covers one input split, so a file gets as many
-            # partials as splits that overlap it).
-            acc: dict[str, Optional[tuple[int, Any]]] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                for fname, g in pdf.groupby("__file", sort=False):
-                    if fname in acc and acc[fname] is None:
-                        continue
-                    if g[pk].isna().any().any():
-                        # a NULL key anywhere in the chunk makes pandas
-                        # coerce integer columns to float64, corrupting
-                        # the canonical hash for the chunk's REAL keys —
-                        # a false-negative (lost-update) risk.  m=0 marks
-                        # the file as not-bloomable; the driver drops it.
-                        acc[fname] = None
-                        continue
-                    m = B.bloom_m_for(rows_map.get(fname) or len(g))
-                    h = B.key_hash_array([g[c] for c in pk])
-                    bm = B.build_bitmap(h, m)
-                    cur = acc.get(fname)
-                    if cur is None:
-                        acc[fname] = (m, bm)
-                    elif cur[0] != m:
-                        # stats row count missing → chunks could size the
-                        # bitmap differently; unsound to OR — drop file
-                        acc[fname] = None
-                    else:
-                        acc[fname] = (m, cur[1] | bm)
-            for fname, v in acc.items():
-                if v is None:
-                    yield pd.DataFrame(
-                        {"file": [fname], "m": [0], "bits": [b""]}
-                    )
-                else:
-                    m, bm = v
-                    yield pd.DataFrame(
-                        {
-                            "file": [fname],
-                            "m": [m],
-                            "bits": [
-                                np.packbits(bm, bitorder="little").tobytes()
-                            ],
-                        }
-                    )
-
-        src = (
-            self.spark.read.parquet(staging)
-            .select(*pk)
-            .withColumn(
-                "__file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-            )
-        )
-        partials = src.mapInPandas(gen, "file string, m long, bits binary").collect()
-        merged: dict[str, Optional[tuple[int, Any]]] = {}
-        for r in partials:
-            bm = np.unpackbits(
-                np.frombuffer(r["bits"], dtype=np.uint8), bitorder="little"
-            )[: r["m"]].astype(bool)
-            if int(r["m"]) == 0:  # null-key chunk: file is not bloomable
-                merged[r["file"]] = None
-                continue
-            cur = merged.get(r["file"])
-            if r["file"] in merged:
-                if cur is None or cur[0] != int(r["m"]):
-                    # chunks sized the bitmap differently (stats row count
-                    # missing for the file) — ORing mismatched bitmaps
-                    # would be unsound, so the file just gets no sidecar
-                    merged[r["file"]] = None
-                    continue
-                np.bitwise_or(cur[1], bm, out=cur[1])
-            else:
-                merged[r["file"]] = (int(r["m"]), bm)
-        return {
-            f: B.serialize(t[1], t[0])
-            for f, t in merged.items()
-            if t is not None
-        }
 
     def _stage_delete_files(
         self, keys_df: DataFrame, pk: list[str]
@@ -1406,10 +1313,15 @@ class MoonTable:
         candidates get pruned before the probe scan — the 1M-file /
         10k-key production shape).  When keys ≥ files nearly every file
         contains some key (expected hit fraction 1−(1−1/F)^N), so the
-        filter would save nothing and the key-hash job is pure overhead
-        — measured at sf0.1: +0.6 s per merge for a 32→29 prune.  Also
-        skipped past _BLOOM_MAX_KEYS (the hash collect is O(batch); the
-        probe scan's per-file parallelism wins anyway)."""
+        filter would save nothing and hashing the keys is pure overhead
+        — measured at sf0.1 (then a worker-side hash job): +0.6 s per
+        merge for a 32→29 prune.  Also skipped past _BLOOM_MAX_KEYS (the
+        key collect is O(batch); the probe scan's per-file parallelism
+        wins anyway).
+
+        The batch keys are collected to the driver as Arrow and hashed
+        there with :func:`bloom.arrow_key_hashes`, the same function the
+        sidecars are built with — no Python worker runs."""
         if (
             len(candidates) <= 1
             or n_keys == 0
@@ -1418,35 +1330,11 @@ class MoonTable:
             or not any(d.get("bloom") for d in candidates)
         ):
             return candidates
-        import numpy as np
-
         from pg_mooncake_spark.functions import bloom as B
 
-        def gen(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                if pdf[pk].isna().any().any():
-                    # pandas coerces int columns with nulls to float64,
-                    # corrupting the chunk's OTHER hashes (and >2^53 keys
-                    # irrecoverably) — flag the batch as unhashable
-                    yield pd.DataFrame({"h": [0], "bad": [True]})
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "h": B.key_hash_array(
-                            [pdf[c] for c in pk]
-                        ).view(np.int64),
-                        "bad": False,
-                    }
-                )
-
-        rows = keys_df.mapInPandas(gen, "h long, bad boolean").collect()
-        if any(r["bad"] for r in rows):
+        hs = B.arrow_key_hashes(keys_df.toArrow(), pk)
+        if hs is None:
             return candidates  # null-key batch: pruning skipped, sound
-        hs = np.array([r["h"] for r in rows], dtype=np.int64).view(np.uint64)
         return self._bloom_filter_candidates(candidates, hs)
 
     def _load_bloom(self, side: str):
@@ -2251,6 +2139,56 @@ def _widens(from_t: T.DataType, to_t: T.DataType) -> bool:
             != (from_t.precision, from_t.scale)
         )
     return ft is T.FloatType and tt is T.DoubleType
+
+
+# Stat column types whose parquet footer min/max equal Spark's min/max:
+# integral, UTF-8 binary-collated strings (unsigned byte order is code
+# point order) and dates.  Float/double (NaN ordering), timestamps (INT96
+# carries no statistics), decimals and the rest take the Spark stats pass.
+_FOOTER_STAT_TYPES = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType,
+    T.DateType,
+)
+
+
+def _footer_stats(md: Any, cols: list[str], types: dict) -> dict[str, tuple]:
+    """(min, max) per column of ``cols`` from one parquet footer ``md``,
+    merged across row groups; all-NULL row groups contribute nothing.
+    A column is left out when its type is not footer-describable or any
+    row group lacks min/max statistics for non-NULL values."""
+    import datetime
+
+    want = {T.StringType: str, T.DateType: datetime.date}
+    idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    out: dict[str, tuple] = {}
+    for c in cols:
+        dt = types.get(c)
+        if (
+            c not in idx
+            or not isinstance(dt, _FOOTER_STAT_TYPES)
+            or getattr(dt, "collation", "UTF8_BINARY") != "UTF8_BINARY"
+        ):
+            continue
+        py = want.get(type(dt), int)
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(idx[c]).statistics
+            if st is not None and st.has_min_max:
+                a, b = st.min, st.max
+                if type(a) is not py or type(b) is not py:
+                    break
+                lo = a if lo is None else min(lo, a)
+                hi = b if hi is None else max(hi, b)
+            elif not (
+                st is not None
+                and st.has_null_count
+                and st.null_count == rg.num_rows
+            ):
+                break
+        else:
+            out[c] = (lo, hi)
+    return out
 
 
 def _plain(v: Any, side: Optional[str] = None) -> Any:

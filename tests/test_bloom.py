@@ -8,13 +8,16 @@ the rewrite and drop an update.  False positives are only a perf leak.
 from __future__ import annotations
 
 import datetime
+import json
+import os
 
 import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_mooncake_spark.functions import bloom as B
-from pg_mooncake_spark.storage import MoonTable
+from pg_mooncake_spark.storage import MoonTable, _footer_stats, _plain
 
 
 class TestBloomPrimitives:
@@ -53,6 +56,29 @@ class TestBloomPrimitives:
             6857225946766476583,
             9621805213556870768,
         ]
+
+    def test_vectorized_string_hash_matches_scalar(self):
+        """The numpy FNV-1a-64 string path equals the per-value
+        reference on random unicode (multi-byte, NUL, empty strings,
+        skewed lengths)."""
+        import random
+
+        rng = random.Random(7)
+        alphabet = "az09 'é\u00dfÆ中文字\U0001F319\x00\n"
+        vals = [
+            "".join(rng.choice(alphabet) for _ in range(rng.choice([0, 0, 1, 3, 8, 64])))
+            for _ in range(2000)
+        ] + ["x" * 5000]
+        want = np.array(
+            [B._fnv1a64(v.encode("utf-8")) for v in vals], dtype=np.uint64
+        )
+        assert (B._fnv1a64_utf8(vals) == want).all()
+        col = np.array(vals, dtype=object)
+        mixed = col.copy()
+        mixed[3] = None  # mixed object column: the per-value path
+        a, b = B.key_hash_array([col]), B.key_hash_array([mixed])
+        assert (np.delete(a, 3) == np.delete(b, 3)).all()
+        assert B._fnv1a64_utf8([]).tolist() == []
 
     def test_multi_column_order_matters(self):
         a = np.array([1], dtype=np.int64)
@@ -254,3 +280,168 @@ def test_null_pk_values_disable_bloom_soundly(spark, tmp_path):
     mt.merge(ch)
     got = {r["id"]: r["v"] for r in mt.read().collect()}
     assert got == {1: "A", None: "nullkey", 2: "b", 11: "y"}
+
+
+def _worker_sidecars(spark, data_path, names, pk):
+    """Reference: the former executor-side sidecar construction — one
+    ``mapInPandas`` pass over the files' pk columns, each Arrow batch ORing
+    a bitmap per file (sized from the Spark row count), the driver ORing
+    the partials.  Driver-built sidecars must equal its output byte for
+    byte."""
+    paths = [os.path.join(data_path, n) for n in names]
+    file_col = F.element_at(F.split(F.input_file_name(), "/"), -1)
+    rows_map = {
+        r["f"]: r["n"]
+        for r in spark.read.parquet(*paths).groupBy(file_col.alias("f"))
+        .count().withColumnRenamed("count", "n").collect()
+    }
+
+    def gen(batches):
+        import pandas as pd
+
+        acc = {}
+        for pdf in batches:
+            for fname, g in pdf.groupby("__file", sort=False):
+                if acc.get(fname, 1) is None or g[pk].isna().any().any():
+                    acc[fname] = None
+                    continue
+                m = B.bloom_m_for(rows_map[fname])
+                bm = B.build_bitmap(B.key_hash_array([g[c] for c in pk]), m)
+                cur = acc.get(fname)
+                acc[fname] = (m, bm if cur is None else cur[1] | bm)
+        for fname, v in acc.items():
+            m, bm = v if v is not None else (0, np.zeros(0, dtype=bool))
+            yield pd.DataFrame(
+                {"file": [fname], "m": [m],
+                 "bits": [np.packbits(bm, bitorder="little").tobytes()]}
+            )
+
+    src = spark.read.parquet(*paths).select(*pk).withColumn("__file", file_col)
+    merged = {}
+    for r in src.mapInPandas(gen, "file string, m long, bits binary").collect():
+        bm = np.unpackbits(
+            np.frombuffer(r["bits"], dtype=np.uint8), bitorder="little"
+        )[: r["m"]].astype(bool)
+        if r["m"] == 0 or merged.get(r["file"], 1) is None:
+            merged[r["file"]] = None
+        elif r["file"] in merged:
+            merged[r["file"]] = (r["m"], merged[r["file"]][1] | bm)
+        else:
+            merged[r["file"]] = (r["m"], bm)
+    return {f: B.serialize(v[1], v[0]) for f, v in merged.items() if v}
+
+
+def _spark_pass_stats(spark, data_path, names, cols):
+    """Reference: the former Spark stats pass (per-file count, min, max)."""
+    out = (
+        spark.read.parquet(*[os.path.join(data_path, n) for n in names])
+        .groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("f"))
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            *[F.min(c).alias(f"min_{c}") for c in cols],
+            *[F.max(c).alias(f"max_{c}") for c in cols],
+        )
+        .collect()
+    )
+    return {
+        r["f"]: (
+            r["rows"],
+            {c: [_plain(r[f"min_{c}"], "lo"), _plain(r[f"max_{c}"], "hi")]
+             for c in cols},
+        )
+        for r in out
+    }
+
+
+class TestDriverSideCommitMetadata:
+    """Row counts, min/max stats and bloom sidecars are built on the
+    driver (parquet footers + pk columns); they must equal what the
+    former Spark stats pass and worker bloom pass produced."""
+
+    def _stage(self, mt, df, pk, extra=None):
+        mt.create(df.schema, primary_key=pk)
+        return mt._stage_files(df, pk, extra_stats_cols=extra)
+
+    def test_footer_stats_match_spark_pass(self, spark, tmp_path):
+        df = spark.range(0, 20_000).select(
+            F.col("id").cast("int").alias("i"),
+            (F.col("id") * 7919 % 100_003).alias("l"),
+            F.concat(F.lit("k"), (F.col("id") * 31 % 997).cast("string")).alias("s"),
+            F.date_add(F.lit("2020-01-01").cast("date"), (F.col("id") % 900).cast("int")).alias("d"),
+            # NULL in every other row, and NULL throughout early row groups
+            F.when(F.col("id") % 2 == 0, F.col("id")).alias("n"),
+            F.when(F.col("id") >= 15_000, F.col("id").cast("int")).alias("late"),
+            F.lit(None).cast("string").alias("allnull"),
+            # kept Spark pass: timestamp (INT96) and double (NaN ordering)
+            F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+            F.when(F.col("id") == 5, F.lit(float("nan")))
+            .otherwise(F.col("id") / 3.0).alias("x"),
+        ).repartition(3)
+        mt = MoonTable(spark, str(tmp_path / "t"))
+        spark.conf.set("parquet.block.size", "8192")
+        try:
+            descs = self._stage(
+                mt, df, ["l"], extra=["i", "s", "d", "n", "late", "allnull", "ts", "x"]
+            )
+        finally:
+            spark.conf.unset("parquet.block.size")
+        cols = ["l", "i", "s", "d", "n", "late", "allnull", "ts", "x"]
+        ref = _spark_pass_stats(spark, mt.data_path, [d["name"] for d in descs], cols)
+        assert max(
+            pq.read_metadata(os.path.join(mt.data_path, d["name"])).num_row_groups
+            for d in descs
+        ) > 1
+        assert len(descs) == 3
+        md = pq.read_metadata(os.path.join(mt.data_path, descs[0]["name"]))
+        types = {f.name: f.dataType for f in df.schema.fields}
+        assert set(_footer_stats(md, cols, types)) == set(cols) - {"ts", "x"}
+        for d in descs:
+            rows, stats = ref[d["name"]]
+            assert d["rows"] == rows
+            # json form: NaN compares equal to itself, as in the commit log
+            assert json.dumps(d["stats"], sort_keys=True) == json.dumps(
+                stats, sort_keys=True
+            ), d["name"]
+
+    def test_sidecars_match_worker_construction(self, spark, tmp_path):
+        base = spark.range(0, 3000).select(
+            F.col("id").cast("int").alias("i"),
+            F.concat(F.lit("ключ-"), F.col("id").cast("string")).alias("s"),
+            F.date_add(F.lit("1999-12-25").cast("date"), F.col("id").cast("int")).alias("d"),
+            F.col("id").alias("v"),
+        ).repartition(4)
+        for pk in (["i"], ["s"], ["d"], ["s", "i", "d"]):
+            mt = MoonTable(spark, str(tmp_path / "_".join(pk)))
+            descs = self._stage(mt, base, pk)
+            names = [d["name"] for d in descs]
+            want = _worker_sidecars(spark, mt.data_path, names, pk)
+            got = {
+                d["name"]: mt.backend.read_bytes(
+                    os.path.join(mt.path, "_index", d["bloom"])
+                )
+                for d in descs
+            }
+            assert set(want) == set(names), pk
+            assert got == want, pk
+
+    def test_pk_only_stage_runs_only_the_write_job(self, spark, tmp_path):
+        mt = MoonTable(spark, str(tmp_path / "t"))
+        df = spark.range(0, 500).select(
+            "id", F.concat(F.lit("v"), F.col("id")).alias("v")
+        ).repartition(2)
+        mt.create(df.schema, primary_key=["id"])
+        sc = spark.sparkContext
+        sc.setJobGroup("stage-jobs", "pk-only stage")
+        try:
+            descs = mt._stage_files(df, ["id"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("stage-jobs")
+        sc.setJobGroup("write-jobs", "plain write")
+        try:
+            df.write.parquet(str(tmp_path / "plain"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) == len(sc.statusTracker().getJobIdsForGroup("write-jobs"))
+        assert sum(d["rows"] for d in descs) == 500
+        assert all(d.get("bloom") for d in descs)
