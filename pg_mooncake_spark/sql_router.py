@@ -13,8 +13,15 @@ every effect goes through the lifecycle methods the host class
 delete_where/apply_changes/optimize_table/... — and the shared session
 state (``_txn``, ``_prepared``, ``_gucs``) initialized by the host.
 
-Split out of engine.py in round 13 (the file had grown to 5.5k lines);
-pure text-level move, zero behavior change — the tests are the proof.
+All SQL text handling goes through the one lexer in ``sqlparse``:
+:meth:`sql` strips comments once at entry (Spark hints stay), every
+rewrite runs over the quote mask and splices through
+``sqlparse._sub_masked`` / ``_splice``, balanced brackets come from
+``sqlparse._match_bracket``, and the Postgres expression dialect is one
+pipeline (``_rewrite_pg_scalar_dialect``) shared by SELECT statements
+and DML fragments.
+
+Split out of engine.py in round 13 (the file had grown to 5.5k lines).
 Reference parity notes live on each method (reference
 tests/pg_regress/sql/*.sql replay through these routes verbatim).
 """
@@ -27,6 +34,7 @@ import re
 import shutil
 from typing import Any, Optional
 
+import pyspark
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,13 +60,18 @@ from pg_mooncake_spark.sqlparse import (
     _expr_refs,
     _find_top_keyword,
     _mask_quoted,
+    _match_bracket,
     _no_gen_on_gen,
     _parse_col_constraints,
     _pg_type_to_spark,
     _render_literal,
     _rewrite_values_defaults,
     _scan_top,
+    _splice,
+    _split_statements,
     _split_top_commas,
+    _strip_comments,
+    _sub_masked,
     _subst_idents,
     _values_spans,
     parse_table_name,
@@ -116,12 +129,9 @@ def _rewrite_pg_regex_ops(query: str) -> str:
     plain ``~``/``!~`` only swap the operator token, so Spark's own
     precedence handles composite patterns like ``col ~ 'a' || v``."""
     masked = _mask_quoted(query)
-    out: list[str] = []
-    prev = 0
+    edits = []
     for m in re.finditer(r"!~\*|!~|~\*|~", masked):
         p = m.start()
-        if p < prev:
-            continue
         op = m.group(0)
         # not part of ~~ / !~~ / ~~* (LIKE family) or a longer token
         if m.end() < len(masked) and masked[m.end()] == "~":
@@ -143,9 +153,9 @@ def _rewrite_pg_regex_ops(query: str) -> str:
             if masked[w + 1:k + 1].upper() in _EXPR_LEAD_KEYWORDS:
                 continue
         if op in ("~", "!~"):
-            out.append(query[prev:p])
-            out.append(" RLIKE " if op == "~" else " NOT RLIKE ")
-            prev = m.end()
+            edits.append(
+                (p, m.end(), " RLIKE " if op == "~" else " NOT RLIKE ")
+            )
             continue
         # ~* / !~* — need the pattern operand to inject (?i)
         j = m.end()
@@ -158,23 +168,14 @@ def _rewrite_pg_regex_ops(query: str) -> str:
             close = masked.find("'", j + 1)
             if close < 0:
                 continue
-            out.append(query[prev:p])
-            out.append(kw)
-            out.append("'(?i)" + query[j + 1:close + 1])
-            prev = close + 1
+            edits.append((p, close + 1, kw + "'(?i)" + query[j + 1:close + 1]))
             continue
         # primary expression: dotted identifier [call] or (...)
-        e = j
-        if masked[e] == "(":
-            depth = 0
-            while e < len(masked):
-                depth += masked[e] == "("
-                depth -= masked[e] == ")"
-                e += 1
-                if depth == 0:
-                    break
-            if depth:
+        if masked[j] == "(":
+            close = _match_bracket(masked, j)
+            if close < 0:
                 continue
+            e = close + 1
         else:
             im = re.match(
                 r'(?:"[^"]*"|[A-Za-z_]\w*)(?:\s*\.\s*(?:"[^"]*"|[A-Za-z_]\w*))*',
@@ -187,23 +188,12 @@ def _rewrite_pg_regex_ops(query: str) -> str:
             while ws < len(masked) and masked[ws].isspace():
                 ws += 1
             if ws < len(masked) and masked[ws] == "(":
-                depth, e = 0, ws
-                while e < len(masked):
-                    depth += masked[e] == "("
-                    depth -= masked[e] == ")"
-                    e += 1
-                    if depth == 0:
-                        break
-                if depth:
+                close = _match_bracket(masked, ws)
+                if close < 0:
                     continue
-        out.append(query[prev:p])
-        out.append(kw)
-        out.append(f"concat('(?i)', {query[j:e]})")
-        prev = e
-    if not out:
-        return query
-    out.append(query[prev:])
-    return "".join(out)
+                e = close + 1
+        edits.append((p, e, f"{kw}concat('(?i)', {query[j:e]})"))
+    return _splice(query, edits)
 
 
 def _rewrite_distinct_on(query: str) -> str:
@@ -242,18 +232,13 @@ def _rewrite_distinct_on(query: str) -> str:
             "rewrite the subquery with row_number() OVER (...)"
         )
     prefix = query[:mm.start()]  # WITH-clause, if any
-    # ON (...) — balanced-paren scan on the mask
-    depth, j = 1, mm.end()
-    while j < len(masked) and depth:
-        depth += masked[j] == "("
-        depth -= masked[j] == ")"
-        j += 1
-    if depth:
+    close = _match_bracket(masked, mm.end() - 1)
+    if close < 0:
         raise ValueError(f"cannot parse DISTINCT ON: {query!r}")
-    on_exprs = [e for e in _split_top_commas(query[mm.end():j - 1]) if e]
+    on_exprs = [e for e in _split_top_commas(query[mm.end():close]) if e]
     if not on_exprs:
         raise ValueError("DISTINCT ON needs at least one expression")
-    rest = query[j:]
+    rest = query[close + 1:]
     for kw in ("UNION", "INTERSECT", "EXCEPT"):
         if _find_top_keyword(rest, kw) >= 0:
             raise ValueError(
@@ -384,6 +369,69 @@ def _rewrite_distinct_on(query: str) -> str:
     return out
 
 
+def _rewrite_pg_srfs(query: str) -> str:
+    """Postgres set-returning functions (round 15): every pg script
+    uses ``generate_series(a, b[, step])`` (ints, dates, timestamps,
+    interval steps) and ``unnest(array)``; both map EXACTLY onto Spark's
+    explode-as-table-function — ``explode(sequence(...))`` /
+    ``explode(...)`` — in both FROM-clause and select-list positions, so
+    the rewrite is textual (string literals untouched; the unaliased
+    output column is Spark's ``col`` rather than Postgres's
+    ``generate_series`` — alias it, as scripts do)."""
+    masked = _mask_quoted(query)
+    edits = []
+    for gm in re.finditer(r"\bgenerate_series\s*\(", masked, re.I):
+        close = _match_bracket(masked, gm.end() - 1)
+        if close < 0:  # unbalanced — let Spark raise the parse error
+            continue
+        cuts = [gm.end() - 1, *_top_commas(query, gm.end(), close), close]
+        args = [f"({query[i + 1:j]})" for i, j in zip(cuts, cuts[1:])]
+        if len(args) == 2:
+            # Two-argument form — integer-typed by Postgres rules
+            # (date/timestamp series require an explicit step).  Spark's
+            # two-arg ``sequence`` infers step −1 when start > stop and
+            # returns a DESCENDING series where Postgres's default step 1
+            # yields zero rows, so guard: ``if(a <= b, sequence(a, b),
+            # array())`` (the empty array coerces to the sequence's
+            # element type).
+            a, b = args
+            rep = f"explode(if({a} <= {b}, sequence({a}, {b}), array()))"
+        elif len(args) == 3:
+            # Three-argument form (round 17) — a range reversed relative
+            # to the explicit step yields Postgres's empty set, where
+            # Spark's ``sequence`` raises.  Step positivity is decided by
+            # ``a + step > a`` so the SAME guard covers numeric steps and
+            # timestamp/interval steps (no sign() on intervals).  ``a =
+            # b`` is never "reversed" — Postgres returns {a} for any
+            # non-zero step — and a ZERO step falls through to
+            # ``sequence``, which errors loudly exactly like Postgres.
+            a, b, st = args
+            rep = (
+                f"explode(if((({a} < {b}) AND (({a} + {st}) < {a})) OR "
+                f"(({a} > {b}) AND (({a} + {st}) > {a})), array(), "
+                f"sequence({a}, {b}, {st})))"
+            )
+        else:
+            rep = f"explode(sequence({query[gm.end():close]}))"
+        edits.append((gm.start(), close + 1, rep))
+    query = _splice(query, edits)
+
+    def _unnest(m):
+        # Postgres's multi-argument ``unnest(a, b, ...)`` zips arrays in
+        # parallel and ``unnest(map)`` produces two columns — neither
+        # maps onto one-column ``explode``, so refuse them loudly
+        close = _match_bracket(m.string, m.end())
+        if close >= 0 and _top_commas(query, m.end() + 1, close):
+            raise ValueError(
+                "unnest() with multiple arguments is not supported "
+                "(Postgres zips arrays in parallel; rewrite as separate "
+                "explode/posexplode calls)"
+            )
+        return "explode"
+
+    return _sub_masked(r"\bunnest\s*(?=\()", _unnest, query)
+
+
 # Postgres type names Spark's cast parser doesn't know (SELECT-side;
 # DDL goes through _pg_type_to_spark).  Bare names only — a
 # parenthesized tail (varchar(10), numeric(12,2)) is handled below.
@@ -438,38 +486,11 @@ def _rewrite_pg_casts_and_arrays(query: str) -> str:
                 parts.append(f"CAST('{el}' AS {spark_t})")
         return f"array({', '.join(parts)})"
 
-    masked = _mask_quoted(query)
-    out: list[str] = []
-    prev = 0
-    for m in re.finditer(
-        r"('[^']*')\s*::\s*(\w+)\s*\[\s*\]", masked, re.I
-    ):
-        rep = _arr_lit(m, query)
-        if rep is None:
-            continue
-        out.append(query[prev:m.start()])
-        out.append(rep)
-        prev = m.end()
-    if out:
-        out.append(query[prev:])
-        query = "".join(out)
-
+    query = _sub_masked(
+        r"('[^']*')\s*::\s*(\w+)\s*\[\s*\]",
+        lambda m: _arr_lit(m, query), query,
+    )
     # ::typename (bare, not followed by a parenthesized tail)
-    def _sub_masked(pattern: str, repl, q: str) -> str:
-        mq = _mask_quoted(q)
-        o, p = [], 0
-        for sm in re.finditer(pattern, mq, re.I):
-            r_ = repl(sm) if callable(repl) else repl
-            if r_ is None:
-                continue
-            o.append(q[p:sm.start()])
-            o.append(r_)
-            p = sm.end()
-        if not o:
-            return q
-        o.append(q[p:])
-        return "".join(o)
-
     if "::" in query:
         query = _sub_masked(
             r"::\s*(\w+)\b(?!\s*[(\[])",
@@ -484,109 +505,67 @@ def _rewrite_pg_casts_and_arrays(query: str) -> str:
     # (round 18): the type-token spans never overlap (each sits at the
     # end of its own paren group), so collect them all first, then
     # splice in one left-to-right pass.
-    if re.search(r"\bCAST\s*\(", _mask_quoted(query), re.I):
-        masked = _mask_quoted(query)
-        spans = []  # (start, end, replacement) of each type token
-        for cm in re.finditer(r"\bCAST\s*\(", masked, re.I):
-            depth, j = 0, cm.end() - 1
-            while j < len(masked):
-                depth += masked[j] == "("
-                depth -= masked[j] == ")"
-                j += 1
-                if depth == 0:
-                    break
-            if depth:
-                continue
-            span = masked[cm.end():j - 1]
-            tm = None
-            for tm2 in re.finditer(r"\bAS\s+(\w+)\s*$", span, re.I):
-                tm = tm2
-            if tm is None:
-                continue
-            name = tm.group(1).lower()
-            if name not in _PG_CAST_NAMES:
-                continue
-            spans.append((
-                cm.end() + tm.start(1), cm.end() + tm.end(1),
-                _PG_CAST_NAMES[name],
-            ))
-        if spans:
-            out, prev = [], 0
-            for s0, e0, rep in sorted(spans):
-                out.append(query[prev:s0])
-                out.append(rep)
-                prev = e0
-            out.append(query[prev:])
-            query = "".join(out)
+    masked = _mask_quoted(query)
+    edits = []
+    for cm in re.finditer(r"\bCAST\s*\(", masked, re.I):
+        close = _match_bracket(masked, cm.end() - 1)
+        if close < 0:
+            continue
+        tm = re.search(r"\bAS\s+(\w+)\s*$", masked[cm.end():close], re.I)
+        if tm is None or tm.group(1).lower() not in _PG_CAST_NAMES:
+            continue
+        edits.append((
+            cm.end() + tm.start(1), cm.end() + tm.end(1),
+            _PG_CAST_NAMES[tm.group(1).lower()],
+        ))
+    query = _splice(query, sorted(edits))
     # ARRAY[...] constructor → array(...)
     while True:
         masked = _mask_quoted(query)
         am = re.search(r"\bARRAY\s*\[", masked, re.I)
         if am is None:
             break
-        depth, j = 0, am.end() - 1
-        while j < len(masked):
-            depth += masked[j] == "["
-            depth -= masked[j] == "]"
-            j += 1
-            if depth == 0:
-                break
-        if depth:
+        close = _match_bracket(masked, am.end() - 1)
+        if close < 0:
             break  # unbalanced — let Spark raise
         query = (
-            query[:am.start()] + "array(" + query[am.end():j - 1] + ")"
-            + query[j:]
+            query[:am.start()] + "array(" + query[am.end():close] + ")"
+            + query[close + 1:]
         )
     # string_to_array(s, 'lit') → split with the delimiter escaped
     # (Spark's split takes a REGEX; Postgres's takes a literal)
-    if re.search(r"\bstring_to_array\s*\(", _mask_quoted(query), re.I):
-        masked = _mask_quoted(query)
-        out, prev = [], 0
-        for sm in re.finditer(
-            r"\bstring_to_array\s*(\()", masked, re.I
-        ):
-            depth, j = 0, sm.start(1)
-            while j < len(masked):
-                depth += masked[j] == "("
-                depth -= masked[j] == ")"
-                j += 1
-                if depth == 0:
-                    break
-            commas = [
-                k for k in range(sm.end(1), j - 1)
-                if masked[k] == "," and query[sm.end(1):k].count("(")
-                == query[sm.end(1):k].count(")")
-            ]
-            lm = re.fullmatch(
-                r"\s*('[^']*')\s*",
-                masked[commas[0] + 1:j - 1] if commas else "",
-            )
-            if not commas or lm is None:
-                continue  # non-literal delimiter: loud unresolved fn
-            d0 = commas[0] + 1 + lm.start(1)
-            delim = query[d0 + 1:commas[0] + 1 + lm.end(1) - 1]
-            esc = re.escape(delim.replace("''", "'")).replace(
-                "'", "''").replace("\\", "\\\\")
-            out.append(query[prev:sm.start()])
-            out.append("split(")
-            out.append(query[sm.end(1):commas[0]])
-            out.append(f", '{esc}')")
-            prev = j
-        if out:
-            out.append(query[prev:])
-            query = "".join(out)
-    # TABLESAMPLE BERNOULLI|SYSTEM (n) → TABLESAMPLE (n PERCENT)
-    if re.search(r"\bTABLESAMPLE\b", _mask_quoted(query), re.I):
-        query = _sub_masked(
-            r"\bTABLESAMPLE\s+(?:BERNOULLI|SYSTEM)\s*\(\s*"
-            r"(\d+(?:\.\d+)?)\s*\)(\s+REPEATABLE\s*\(\s*(\d+)\s*\))?",
-            lambda sm: (
-                f"TABLESAMPLE ({sm.group(1)} PERCENT)"
-                + (f" REPEATABLE ({sm.group(3)})" if sm.group(2) else "")
-            ),
-            query,
+    masked = _mask_quoted(query)
+    edits = []
+    for sm in re.finditer(r"\bstring_to_array\s*\(", masked, re.I):
+        close = _match_bracket(masked, sm.end() - 1)
+        if close < 0:
+            continue
+        commas = _top_commas(query, sm.end(), close)
+        lm = re.fullmatch(
+            r"\s*('[^']*')\s*",
+            masked[commas[0] + 1:close] if commas else "",
         )
-    return query
+        if lm is None:
+            continue  # non-literal delimiter: loud unresolved fn
+        d0 = commas[0] + 1 + lm.start(1)
+        delim = query[d0 + 1:commas[0] + 1 + lm.end(1) - 1]
+        esc = re.escape(delim.replace("''", "'")).replace(
+            "'", "''").replace("\\", "\\\\")
+        edits.append((
+            sm.start(), close + 1,
+            f"split({query[sm.end():commas[0]]}, '{esc}')",
+        ))
+    query = _splice(query, edits)
+    # TABLESAMPLE BERNOULLI|SYSTEM (n) → TABLESAMPLE (n PERCENT)
+    return _sub_masked(
+        r"\bTABLESAMPLE\s+(?:BERNOULLI|SYSTEM)\s*\(\s*"
+        r"(\d+(?:\.\d+)?)\s*\)(\s+REPEATABLE\s*\(\s*(\d+)\s*\))?",
+        lambda sm: (
+            f"TABLESAMPLE ({sm.group(1)} PERCENT)"
+            + (f" REPEATABLE ({sm.group(3)})" if sm.group(2) else "")
+        ),
+        query,
+    )
 
 
 # Postgres to_char/to_date format tokens → Java SimpleDateFormat-style
@@ -657,114 +636,67 @@ def _rewrite_pg_datetime_fns(query: str) -> str:
     string-literal contents are data; a non-literal format stays for
     Spark's loud error."""
     masked = _mask_quoted(query)
-    out: list[str] = []
-    prev = 0
+    edits = []
     for m in re.finditer(
         r"\b(to_char|to_date|to_timestamp)\s*\(", masked, re.I
     ):
-        if m.start() < prev:
+        close = _match_bracket(masked, m.end() - 1)
+        if close < 0:
             continue
-        depth, j = 1, m.end()
-        commas = []
-        while j < len(masked) and depth:
-            c = masked[j]
-            depth += c == "("
-            depth -= c == ")"
-            if c == "," and depth == 1:
-                commas.append(j)
-            j += 1
-        if depth or len(commas) != 1:
+        commas = _top_commas(query, m.end(), close)
+        if len(commas) != 1:
             continue  # 1-arg / 3-arg forms: leave for Spark
-        am = re.fullmatch(
-            r"\s*('[^']*')\s*", masked[commas[0] + 1:j - 1]
-        )
+        am = re.fullmatch(r"\s*('[^']*')\s*", masked[commas[0] + 1:close])
         if am is None:
             continue
         f0 = commas[0] + 1 + am.start(1)
         fmt = query[f0 + 1:commas[0] + 1 + am.end(1) - 1]
         java = _pg_datetime_format(fmt).replace("'", "''")
         fn = m.group(1).lower()
-        out.append(query[prev:m.start()])
-        out.append(
+        edits.append((
+            m.start(), close + 1,
             ("date_format(" if fn == "to_char" else fn + "(")
-            + query[m.end():commas[0]]
-            + f", '{java}')"
-        )
-        prev = j
-    if out:
-        out.append(query[prev:])
-        query = "".join(out)
+            + query[m.end():commas[0]] + f", '{java}')",
+        ))
+    query = _splice(query, edits)
     # EXTRACT(EPOCH FROM x) → fractional epoch seconds
     while True:
         masked = _mask_quoted(query)
         em = re.search(
-            r"\bEXTRACT\s*\(\s*EPOCH\s+FROM\b", masked, re.I
+            r"\bEXTRACT\s*(\()\s*EPOCH\s+FROM\b", masked, re.I
         )
         if em is None:
             break
-        depth = 1
-        j = em.end()
-        while j < len(masked) and depth:
-            depth += masked[j] == "("
-            depth -= masked[j] == ")"
-            j += 1
-        if depth:
+        close = _match_bracket(masked, em.start(1))
+        if close < 0:
             break
-        inner = query[em.end():j - 1]
         query = (
             query[:em.start()]
-            + f"(unix_micros(CAST(({inner}) AS TIMESTAMP)) / 1000000.0)"
-            + query[j:]
+            + f"(unix_micros(CAST(({query[em.end():close]}) AS TIMESTAMP))"
+            " / 1000000.0)"
+            + query[close + 1:]
         )
-    # FETCH FIRST n ROWS ONLY / OFFSET n ROWS
-    masked = _mask_quoted(query)
-    if re.search(r"\bFETCH\s+(?:FIRST|NEXT)\b", masked, re.I):
-        out, prev = [], 0
-        for m in re.finditer(
-            r"\bFETCH\s+(?:FIRST|NEXT)\s+(\d+\s+)?ROWS?\s+ONLY",
-            masked, re.I,
-        ):
-            out.append(query[prev:m.start()])
-            out.append(f"LIMIT {(m.group(1) or '1').strip()}")
-            prev = m.end()
-        out.append(query[prev:])
-        query = "".join(out)
-        masked = _mask_quoted(query)
-    if re.search(r"\bOFFSET\s+\d+\s+ROWS?\b", masked, re.I):
-        out, prev = [], 0
-        for m in re.finditer(
-            r"\bOFFSET\s+(\d+)\s+ROWS?\b", masked, re.I
-        ):
-            out.append(query[prev:m.start()])
-            out.append(f"OFFSET {m.group(1)}")
-            prev = m.end()
-        out.append(query[prev:])
-        query = "".join(out)
-        masked = _mask_quoted(query)
-    # the SQL-standard clause order is OFFSET-then-FETCH; Spark parses
-    # LIMIT-then-OFFSET
-    if re.search(r"\bOFFSET\s+\d+\s+LIMIT\s+\d+", masked, re.I):
-        out, prev = [], 0
-        for m in re.finditer(
-            r"\bOFFSET\s+(\d+)\s+LIMIT\s+(\d+)", masked, re.I
-        ):
-            out.append(query[prev:m.start()])
-            out.append(f"LIMIT {m.group(2)} OFFSET {m.group(1)}")
-            prev = m.end()
-        out.append(query[prev:])
-        query = "".join(out)
-        masked = _mask_quoted(query)
-    if re.search(r"\bgen_random_uuid\s*\(\s*\)", masked, re.I):
-        out, prev = [], 0
-        for m in re.finditer(
-            r"\bgen_random_uuid\s*\(\s*\)", masked, re.I
-        ):
-            out.append(query[prev:m.start()])
-            out.append("uuid()")
-            prev = m.end()
-        out.append(query[prev:])
-        query = "".join(out)
-    return query
+    # FETCH FIRST n ROWS ONLY / OFFSET n ROWS; the SQL-standard clause
+    # order is OFFSET-then-FETCH, Spark parses LIMIT-then-OFFSET
+    query = _sub_masked(
+        r"\bFETCH\s+(?:FIRST|NEXT)\s+(\d+\s+)?ROWS?\s+ONLY",
+        lambda m: f"LIMIT {(m.group(1) or '1').strip()}", query,
+    )
+    query = _sub_masked(
+        r"\bOFFSET\s+(\d+)\s+ROWS?\b", lambda m: f"OFFSET {m.group(1)}",
+        query,
+    )
+    query = _sub_masked(
+        r"\bOFFSET\s+(\d+)\s+LIMIT\s+(\d+)",
+        lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}", query,
+    )
+    return _sub_masked(r"\bgen_random_uuid\s*\(\s*\)", "uuid()", query)
+
+
+def _top_commas(text: str, a: int, b: int) -> list[int]:
+    """Positions in ``text`` of the top-level commas of ``text[a:b]``
+    (an argument list's separators)."""
+    return [a + i for i, c in _scan_top(text[a:b]) if c == ","]
 
 
 def _primary_operand_start(masked: str, k: int) -> int:
@@ -777,16 +709,10 @@ def _primary_operand_start(masked: str, k: int) -> int:
     if k < 0:
         return 0
     if masked[k] == ")":
-        depth = 0
-        while k >= 0:
-            depth += masked[k] == ")"
-            depth -= masked[k] == "("
-            k -= 1
-            if depth == 0:
-                break
+        k = _match_bracket(masked, k) - 1
         while k >= 0 and (masked[k].isalnum() or masked[k] in "_."):
             k -= 1
-        return k + 1
+        return max(k + 1, 0)  # 0 when the ')' is unbalanced
     if masked[k] == "'":
         k -= 1
         while k >= 0 and masked[k] != "'":
@@ -833,18 +759,12 @@ def _lambda_param_context(masked: str, start: int, left: str) -> bool:
         k -= 1
     if k < 0 or masked[k] not in "(,":
         return False
-    if masked[k] == ",":
-        # scan left to the unmatched '(' of the enclosing arg list
-        depth = 0
-        while k >= 0:
-            depth += masked[k] == ")"
-            if masked[k] == "(":
-                if depth == 0:
-                    break
-                depth -= 1
-            k -= 1
-        if k < 0:
-            return False
+    # scan left to the unmatched '(' of the enclosing arg list, hopping
+    # over each closed group
+    while k >= 0 and masked[k] != "(":
+        k = _match_bracket(masked, k) - 1 if masked[k] == ")" else k - 1
+    if k < 0:
+        return False
     # k sits on the call's '(' — read the function name before it
     k -= 1
     while k >= 0 and masked[k].isspace():
@@ -1171,15 +1091,12 @@ def _rewrite_pg_any_all(query: str) -> str:
             return query
         op = m.group(1)
         quant = m.group(2).upper()
-        depth, j = 1, m.end()
-        while j < len(masked) and depth:
-            depth += masked[j] == "("
-            depth -= masked[j] == ")"
-            j += 1
-        if depth:
+        close = _match_bracket(masked, m.end() - 1)
+        if close < 0:
             return query  # unbalanced — let Spark raise the parse error
-        inner = query[m.end():j - 1]
-        lead = masked[m.end():j - 1].lstrip()
+        j = close + 1
+        inner = query[m.end():close]
+        lead = masked[m.end():close].lstrip()
         if re.match(r"(SELECT|WITH|VALUES)\b", lead, re.I):
             if quant in ("ANY", "SOME") and op == "=":
                 query = query[:m.start()] + " IN (" + inner + ")" \
@@ -1249,15 +1166,10 @@ def _rewrite_pg_array_predicates(query: str) -> str:
         while k < len(masked) and masked[k].isspace():
             k += 1
         if k < len(masked) and masked[k] == "(" and k > rs:
-            depth = 0
-            while k < len(masked):
-                depth += masked[k] == "("
-                depth -= masked[k] == ")"
-                k += 1
-                if depth == 0:
-                    break
-            if depth:
+            close = _match_bracket(masked, k)
+            if close < 0:
                 return query
+            k = close + 1
         re_ = k
         rhs = query[rs:re_].strip()
         start = _primary_operand_start(masked, m.start() - 1)
@@ -1327,18 +1239,12 @@ def _json_build_value(arg: str) -> str:
     value; wrapping the inner call in its own to_json would instead
     embed an escaped json STRING)."""
     s = arg.strip()
-    m = _JSON_BUILD_PAT.match(_mask_quoted(s))
+    masked = _mask_quoted(s)
+    m = _JSON_BUILD_PAT.match(masked)
     if m and m.group(1).lower() in _JSON_BUILD_NAMES:
-        masked = _mask_quoted(s)
-        depth, j = 1, m.end()
-        while j < len(masked) and depth:
-            depth += masked[j] == "("
-            depth -= masked[j] == ")"
-            j += 1
-        if depth == 0 and not s[j:].strip():
-            return _json_struct_expr(
-                m.group(1).lower(), s[m.end():j - 1]
-            )
+        close = _match_bracket(masked, m.end() - 1)
+        if close >= 0 and not s[close + 1:].strip():
+            return _json_struct_expr(m.group(1).lower(), s[m.end():close])
     return s
 
 
@@ -1410,14 +1316,10 @@ def _rewrite_pg_json_build(query: str) -> str:
         if m is None:
             return query
         name = m.group(1).lower()
-        depth, j = 1, m.end()
-        while j < len(masked) and depth:
-            depth += masked[j] == "("
-            depth -= masked[j] == ")"
-            j += 1
-        if depth:
+        close = _match_bracket(masked, m.end() - 1)
+        if close < 0:
             return query
-        inner = query[m.end():j - 1]
+        inner = query[m.end():close]
         if name in _JSON_BUILD_NAMES:
             expr = (
                 f"to_json({_json_struct_expr(name, inner)}, "
@@ -1430,24 +1332,16 @@ def _rewrite_pg_json_build(query: str) -> str:
                     "order after dedup is undefined); aggregate over "
                     "a DISTINCT subquery instead"
                 )
-            om = None
-            inner_masked = _mask_quoted(inner)
-            for om2 in re.finditer(
-                r"\bORDER\s+BY\b", inner_masked, re.I
-            ):
-                d = inner_masked[:om2.start()].count("(") \
-                    - inner_masked[:om2.start()].count(")")
-                if d == 0:
-                    om = om2
-                    break
-            if om is None:
+            oi = _find_top_keyword(inner, "ORDER")
+            om = oi >= 0 and re.match(r"ORDER\s+BY\b", inner[oi:], re.I)
+            if not om:
                 val = _json_build_value(inner)
                 expr = (
                     f"to_json(collect_list({val}), {_TO_JSON_OPTS})"
                 )
             else:
-                val = _json_build_value(inner[:om.start()])
-                order = inner[om.end():].strip()
+                val = _json_build_value(inner[:oi])
+                order = inner[oi + om.end():].strip()
                 keys = _split_top_commas(order)
                 if len(keys) != 1:
                     raise ValueError(
@@ -1486,7 +1380,7 @@ def _rewrite_pg_json_build(query: str) -> str:
                 f"to_json(map_from_entries(collect_list(struct("
                 f"CAST(({k}) AS string), ({v})))), {_TO_JSON_OPTS})"
             )
-        query = query[:m.start()] + expr + query[j:]
+        query = query[:m.start()] + expr + query[close + 1:]
 
 
 _JSON_SRF_PAT = re.compile(
@@ -1517,66 +1411,17 @@ def _rewrite_pg_json_srf(query: str) -> str:
         if m is None:
             return query
         name = m.group(1).lower()
-        depth, j = 1, m.end()
-        while j < len(masked) and depth:
-            depth += masked[j] == "("
-            depth -= masked[j] == ")"
-            j += 1
-        if depth:
+        close = _match_bracket(masked, m.end() - 1)
+        if close < 0:
             return query
-        args = query[m.end():j - 1]
+        args = query[m.end():close]
         if "array_elements" in name:
             rep = f"explode(from_json(({args}), 'array<string>'))"
         elif "array_length" in name:
             rep = f"size(from_json(({args}), 'array<string>'))"
         else:
             rep = f"explode(json_object_keys({args}))"
-        query = query[:m.start()] + rep + query[j:]
-
-
-def _rewrite_pg_scalar_dialect(text: str) -> str:
-    """The EXPRESSION-level Postgres dialect passes of the SELECT
-    pipeline, shared with DML fragments (round 18): WHERE conditions,
-    SET expressions, and VALUES rows previously bypassed the rewrites
-    and died on Spark's parser for valid pg spellings
-    (``WHERE v ~ '^a'``, ``WHERE j ->> 's' = 'y'``,
-    ``VALUES ('1'::int4, ...)``).  Same gates and same order as the
-    pipeline; fragments without pg spellings pass through untouched.
-    Statement-level passes (DISTINCT ON, generate_series, catalogs)
-    stay SELECT-only."""
-    if re.search(
-        r"::|\bARRAY\s*\[|\bCAST\s*\(|\bstring_to_array\b|"
-        r"\bTABLESAMPLE\b",
-        _mask_quoted(text), re.I,
-    ):
-        text = _rewrite_pg_casts_and_arrays(text)
-    if _ANY_ALL_PAT.search(_mask_quoted(text)):
-        text = _rewrite_pg_any_all(text)
-    if re.search(r"\bAT\s+TIME\s+ZONE\b", _mask_quoted(text), re.I):
-        text = _rewrite_at_time_zone(text)
-    if re.search(r"->|#>", _mask_quoted(text)):
-        text = _rewrite_pg_json_ops(text)
-    if re.search(r"@>|<@|&&", _mask_quoted(text)):
-        text = _rewrite_pg_array_predicates(text)
-    if re.search(r"@>|<@|\?", _mask_quoted(text)):
-        text = _rewrite_pg_jsonb_predicates(text)
-    if _JSON_BUILD_PAT.search(_mask_quoted(text)):
-        text = _rewrite_pg_json_build(text)
-    if re.search(
-        r"\bjsonb?_array_(?:elements(?:_text)?|length)\s*\(|"
-        r"\bjsonb_object_keys\s*\(",
-        _mask_quoted(text), re.I,
-    ):
-        text = _rewrite_pg_json_srf(text)
-    if re.search(
-        r"\bto_char\s*\(|\bto_date\s*\(|\bto_timestamp\s*\(|"
-        r"\bEXTRACT\s*\(\s*EPOCH|\bgen_random_uuid\b",
-        _mask_quoted(text), re.I,
-    ):
-        text = _rewrite_pg_datetime_fns(text)
-    if "~" in text:
-        text = _rewrite_pg_regex_ops(text)
-    return text
+        query = query[:m.start()] + rep + query[close + 1:]
 
 
 def _rewrite_at_time_zone(query: str) -> str:
@@ -1608,43 +1453,8 @@ def _rewrite_at_time_zone(query: str) -> str:
         if m is None:
             return query
         zone = query[m.start(1):m.end(1)]
-        # backward scan for the operand start
-        k = m.start() - 1
-        while k >= 0 and masked[k].isspace():
-            k -= 1
-        end = k + 1
-        if k >= 0 and masked[k] == ")":
-            depth = 0
-            while k >= 0:
-                depth += masked[k] == ")"
-                depth -= masked[k] == "("
-                k -= 1
-                if depth == 0:
-                    break
-            while k >= 0 and (masked[k].isalnum() or masked[k] in "_."):
-                k -= 1  # a call's function name
-            start = k + 1
-        elif k >= 0 and masked[k] == "'":
-            k -= 1
-            while k >= 0 and masked[k] != "'":
-                k -= 1
-            k -= 1
-            # typed-literal prefix: TIMESTAMP '...' / DATE '...'
-            w = k
-            while w >= 0 and masked[w].isspace():
-                w -= 1
-            we = w
-            while w >= 0 and (masked[w].isalnum() or masked[w] == "_"):
-                w -= 1
-            if masked[w + 1:we + 1].upper() in ("TIMESTAMP", "DATE",
-                                                "TIME"):
-                k = w
-            start = k + 1
-        else:
-            while k >= 0 and (masked[k].isalnum() or masked[k] in '_."'):
-                k -= 1
-            start = k + 1
-        operand = query[start:end].strip()
+        start = _primary_operand_start(masked, m.start() - 1)
+        operand = query[start:m.start()].strip()
         if not operand:
             return query  # nothing to bind — leave for Spark's error
         fn = "to_utc_timestamp"
@@ -1655,6 +1465,110 @@ def _rewrite_at_time_zone(query: str) -> str:
             + f"{fn}({operand}, {zone})"
             + query[m.end():]
         )
+
+
+def _rewrite_pg_operator_calls(query: str) -> str:
+    """psql's search_path-proof operator spelling
+    ``OPERATOR(pg_catalog.~)`` → the bare operator."""
+    return _sub_masked(
+        r"OPERATOR\s*\(\s*pg_catalog\s*\.\s*"
+        r"(!?~~?\*?|[<>=!]{1,2})\s*\)",
+        lambda m: f" {m.group(1)} ", query,
+    )
+
+
+def _strip_inert_collate(query: str) -> str:
+    """Drop ``COLLATE default | "C" | POSIX`` (optionally
+    ``pg_catalog.``-qualified): the database default and the byte-order
+    collations compare the way Spark does.  Any other collation stays
+    for Spark's loud error."""
+    def repl(m):
+        # the quoted spelling is blanked in the mask, so the collation
+        # NAME is re-read from the original text
+        name = query[m.start(1):m.end(1)].strip('"').lower()
+        return "" if name in ("default", "c", "posix") else None
+
+    return _sub_masked(
+        r'\s+COLLATE\s+(?:pg_catalog\s*\.\s*)?("[^"]*"|[A-Za-z_]\w*)',
+        repl, query,
+    )
+
+
+def _rewrite_session_identity(query: str) -> str:
+    """Session-identity functions drivers probe on connect (round 17):
+    ``version()`` answers a PostgreSQL-parseable string (psycopg/JDBC
+    regex "PostgreSQL <major>"); ``current_schema`` /
+    ``current_database`` / ``current_user`` / ``session_user`` answer
+    the engine's identity instead of Spark's."""
+    query = _sub_masked(
+        r"\b(?:pg_catalog\s*\.\s*)?version\s*\(\s*\)",
+        f"'PostgreSQL 17.0 (pg_mooncake_spark on Apache Spark "
+        f"{pyspark.__version__})'",
+        query,
+    )
+    query = _sub_masked(
+        r"\b(?:pg_catalog\s*\.\s*)?current_schema\s*(?:\(\s*\))?(?!\w)",
+        "'public'", query,
+    )
+    query = _sub_masked(
+        r"\b(?:pg_catalog\s*\.\s*)?current_database\s*\(\s*\)",
+        "'mooncake'", query,
+    )
+    return _sub_masked(
+        r"\b(?:current_user|session_user)\b(?!\s*\()", "'mooncake'", query,
+    )
+
+
+# The Postgres EXPRESSION-dialect pipeline: each pass behind a cheap
+# gate over the quote mask, in this order (OPERATOR(...) unwraps before
+# the regex-operator pass sees the ``~``; ARRAY[...] becomes array(...)
+# before the quantified-comparison and predicate passes; the array
+# predicates consume array-shaped ``@>`` before the jsonb pass keeps
+# its string-literal-needle contract).
+_SCALAR_PASSES = (
+    (re.compile(r"\bOPERATOR\s*\(", re.I), _rewrite_pg_operator_calls),
+    (re.compile(r"\bCOLLATE\b", re.I), _strip_inert_collate),
+    (re.compile(
+        r"\b(?:version\s*\(|current_schema|current_database|"
+        r"current_user|session_user)", re.I,
+    ), _rewrite_session_identity),
+    (re.compile(
+        r"::|\bARRAY\s*\[|\bCAST\s*\(|\bstring_to_array\b|"
+        r"\bTABLESAMPLE\b", re.I,
+    ), _rewrite_pg_casts_and_arrays),
+    (_ANY_ALL_PAT, _rewrite_pg_any_all),
+    (re.compile(r"\bAT\s+TIME\s+ZONE\b", re.I), _rewrite_at_time_zone),
+    (re.compile(r"->|#>"), _rewrite_pg_json_ops),
+    (re.compile(r"@>|<@|&&"), _rewrite_pg_array_predicates),
+    (re.compile(r"@>|<@|\?"), _rewrite_pg_jsonb_predicates),
+    (_JSON_BUILD_PAT, _rewrite_pg_json_build),
+    (_JSON_SRF_PAT, _rewrite_pg_json_srf),
+    (re.compile(
+        r"\bto_char\s*\(|\bto_date\s*\(|\bto_timestamp\s*\(|"
+        r"\bEXTRACT\s*\(\s*EPOCH|\bFETCH\s+(?:FIRST|NEXT)|"
+        r"\bOFFSET\s+\d+\s+ROWS?\b|\bgen_random_uuid\b", re.I,
+    ), _rewrite_pg_datetime_fns),
+    (re.compile("~"), _rewrite_pg_regex_ops),
+)
+
+
+def _rewrite_pg_scalar_dialect(text: str) -> str:
+    """The one Postgres expression-dialect pipeline (``_SCALAR_PASSES``)
+    — run on whole SELECT statements by ``_run_select`` and on DML
+    fragments (WHERE conditions, SET expressions, VALUES rows,
+    RETURNING items), so both see the same gates in the same order.
+    Text without pg spellings passes through untouched; the mask is
+    recomputed only after a pass changed the text.  Statement-level
+    passes (row locks, DISTINCT ON, generate_series/unnest, catalog
+    relations, regclass, schema-qualified names, time travel) stay in
+    ``_run_select``."""
+    mask = _mask_quoted(text)
+    for gate, rewrite in _SCALAR_PASSES:
+        if gate.search(mask):
+            new = rewrite(text)
+            if new != text:
+                text, mask = new, _mask_quoted(new)
+    return text
 
 
 # Postgres lock modes, LOCK TABLE's IN ... MODE vocabulary
@@ -1987,7 +1901,12 @@ class SqlRouterMixin:
         (rendered as typed literals — values only, never identifiers,
         exactly the extended-protocol parameter contract); ``PREPARE
         name AS ... / EXECUTE name(args) / DEALLOCATE`` give the same
-        binding as session-scoped SQL statements."""
+        binding as session-scoped SQL statements.
+
+        Comments (``--`` and ``/* */``) are stripped here, once, before
+        ``$n`` binding and any dispatch, so no parser downstream ever
+        sees one; Spark ``/*+ ... */`` hints are kept."""
+        query = _strip_comments(query)
         if params is not None:
             query = _bind_params(query, params)
         txm = _TXN_KIND.match(query)
@@ -2273,77 +2192,6 @@ class SqlRouterMixin:
         )
         if lm and lm.start() in {i for i, _ in _scan_top(query)}:
             query = query[:lm.start()].rstrip()
-        # psql emits search_path-proof operator calls and collations:
-        # ``OPERATOR(pg_catalog.~)`` → the bare operator; ``COLLATE
-        # pg_catalog.default`` is the database default (inert here).
-        # Both rewrites run on masked spans so the words inside a
-        # string literal are DATA, never rewritten.
-        def _masked_sub(pattern: str, repl, q: str) -> str:
-            """Regex-replace over the quote mask; ``repl(match)`` may
-            return None to keep the original span (e.g. a COLLATE
-            naming a collation we don't treat as inert)."""
-            mq = _mask_quoted(q)
-            out, prev = [], 0
-            for sm in re.finditer(pattern, mq, re.I):
-                r_ = repl(sm) if callable(repl) else repl
-                if r_ is None:
-                    continue
-                out.append(q[prev:sm.start()])
-                out.append(r_)
-                prev = sm.end()
-            if not out:
-                return q
-            out.append(q[prev:])
-            return "".join(out)
-
-        if re.search(r"\bOPERATOR\s*\(", _mask_quoted(query), re.I):
-            query = _masked_sub(
-                r"OPERATOR\s*\(\s*pg_catalog\s*\.\s*"
-                r"(!?~~?\*?|[<>=!]{1,2})\s*\)",
-                lambda sm: f" {sm.group(1)} ", query,
-            )
-        if re.search(r"\bCOLLATE\b", _mask_quoted(query), re.I):
-            # the quoted spelling is blanked in the mask, so the
-            # collation NAME is re-read from the original text
-            def _collate_repl(sm):
-                name = query[sm.start(1):sm.end(1)].strip('"').lower()
-                return "" if name in ("default", "c", "posix") else None
-
-            query = _masked_sub(
-                r'\s+COLLATE\s+(?:pg_catalog\s*\.\s*)?'
-                r'("[^"]*"|[A-Za-z_]\w*)',
-                _collate_repl, query,
-            )
-        # Session-identity functions drivers probe on connect (round
-        # 17): version() must answer a PostgreSQL-parseable string
-        # (psycopg/JDBC regex "PostgreSQL <major>"), current_schema /
-        # current_database / current_user answer the engine's identity
-        # instead of Spark's.  Masked spans — the words inside string
-        # literals are data.
-        if re.search(
-            r"\b(?:version\s*\(|current_schema|current_database|"
-            r"current_user|session_user)",
-            _mask_quoted(query), re.I,
-        ):
-            query = _masked_sub(
-                r"\b(?:pg_catalog\s*\.\s*)?version\s*\(\s*\)",
-                "'PostgreSQL 17.0 (pg_mooncake_spark on Apache Spark "
-                + self.spark.version + ")'",
-                query,
-            )
-            query = _masked_sub(
-                r"\b(?:pg_catalog\s*\.\s*)?current_schema\s*(?:\(\s*\))?"
-                r"(?!\w)",
-                "'public'", query,
-            )
-            query = _masked_sub(
-                r"\b(?:pg_catalog\s*\.\s*)?current_database\s*\(\s*\)",
-                "'mooncake'", query,
-            )
-            query = _masked_sub(
-                r"\b(?:current_user|session_user)\b(?!\s*\()",
-                "'mooncake'", query,
-            )
         # 'name'::regclass / CAST('name' AS REGCLASS) resolve to the
         # relation's pg_class oid (SQLAlchemy's modern get_columns
         # resolves the table oid this way); a further ::oid /
@@ -2351,354 +2199,127 @@ class SqlRouterMixin:
         # arguments (nextval('s'::regclass)) are left for the
         # sequence machinery, which resolves names itself.
         if re.search(r"\bregclass\b", _mask_quoted(query), re.I):
-            masked_rc = _mask_quoted(query)
-            out_rc: list[str] = []
-            prev_rc = 0
-            for rm in re.finditer(
-                r"CAST\s*\(\s*('[^']*')\s+AS\s+REGCLASS\s*\)"
-                r"|('[^']*')\s*::\s*regclass",
-                masked_rc, re.I,
-            ):
-                g = 1 if rm.group(1) else 2
-                lit = query[rm.start(g):rm.end(g)]
-                before = masked_rc[:rm.start()].rstrip()
+            def _rel_oid(m):
                 if re.search(r"(?:nextval|currval|setval)\s*\($",
-                             before, re.I):
-                    continue
-                relname = lit[1:-1].replace("''", "'")
+                             m.string[:m.start()].rstrip(), re.I):
+                    return None
+                g = 1 if m.group(1) else 2
+                relname = query[m.start(g) + 1:m.end(g) - 1].replace(
+                    "''", "'"
+                )
                 canon = self._canon(relname)
                 if canon not in self.catalog.list_tables() and \
                         canon not in self.catalog.sequences():
-                    raise ValueError(
-                        f'relation "{relname}" does not exist'
-                    )
-                out_rc.append(query[prev_rc:rm.start()])
-                out_rc.append(str(self._pg_oid("rel", canon)))
-                prev_rc = rm.end()
-            if out_rc:
-                out_rc.append(query[prev_rc:])
-                query = "".join(out_rc)
-            query = _masked_sub(
-                r"::\s*oid\b", "", query,
+                    raise ValueError(f'relation "{relname}" does not exist')
+                return str(self._pg_oid("rel", canon))
+
+            query = _sub_masked(
+                r"CAST\s*\(\s*('[^']*')\s+AS\s+REGCLASS\s*\)"
+                r"|('[^']*')\s*::\s*regclass",
+                _rel_oid, query,
             )
-            query = _masked_sub(
+            query = _sub_masked(r"::\s*oid\b", "", query)
+            query = _sub_masked(
                 r"CAST\s*\(\s*(\d+)\s+AS\s+OID\s*\)",
-                lambda sm: sm.group(1), query,
+                lambda m: m.group(1), query,
             )
-        # Postgres cast spellings / ARRAY constructors / array
-        # literals / string_to_array / TABLESAMPLE (round 17)
+        query = _rewrite_pg_scalar_dialect(query)
+        query = _rewrite_distinct_on(query)
+        query = _rewrite_pg_srfs(query)
+        # ``mooncake.list_tables()`` — the reference's catalog relation
+        # (src/functions.rs:84-116) as a queryable SQL spelling —
+        # ``information_schema.*`` and the pg_catalog relations
+        # psql-style tooling reads: pg_tables / pg_views / pg_indexes
+        # (round 15), and the low-level catalogs ORMs and psql's \d
+        # introspect through (round 17, VERDICT r16 missing #3).
+        # Unqualified pg_* spellings too: pg_catalog is always on the
+        # Postgres search path.  Each becomes a temp view built from the
+        # engine catalog (O(catalog), but only when the statement IS a
+        # catalog query).
+        query = self._sub_catalog_views(
+            r"\bmooncake\s*\.\s*(list_tables)\s*\(\s*\)", query,
+            lambda _: self.list_tables(),
+        )
+        query = self._sub_catalog_views(
+            r"\binformation_schema\s*\.\s*"
+            r"(tables|columns|table_constraints|check_constraints|"
+            r"key_column_usage|referential_constraints)\b",
+            query, self._information_schema_df, "__mooncake_is_",
+        )
+        # ... plus the functions those catalog queries call
         if re.search(
-            r"::|\bARRAY\s*\[|\bCAST\s*\(|\bstring_to_array\b|"
-            r"\bTABLESAMPLE\b",
-            _mask_quoted(query), re.I,
-        ):
-            query = _rewrite_pg_casts_and_arrays(query)
-        # quantified comparisons = ANY / <> ALL / op ANY|ALL over
-        # arrays and subqueries (round 18; after ARRAY[...] rewrote)
-        if _ANY_ALL_PAT.search(_mask_quoted(query)):
-            query = _rewrite_pg_any_all(query)
-        # expr AT TIME ZONE 'zone' (round 17)
-        if re.search(r"\bAT\s+TIME\s+ZONE\b", _mask_quoted(query), re.I):
-            query = _rewrite_at_time_zone(query)
-        # Postgres JSON operators -> / ->> / #> / #>> (round 17)
-        if re.search(r"->|#>", _mask_quoted(query)):
-            query = _rewrite_pg_json_ops(query)
-        # ARRAY predicates @> / <@ / && (round 18; BEFORE the jsonb
-        # pass so array-shaped containment is consumed and the jsonb
-        # pass keeps its string-literal-needle contract)
-        if re.search(r"@>|<@|&&", _mask_quoted(query)):
-            query = _rewrite_pg_array_predicates(query)
-        # jsonb predicates @> / ? / ?| / ?& (round 18; after the ->
-        # rewrite so a chain left operand is already a call, and after
-        # ARRAY[...] became array(...))
-        if re.search(r"@>|<@|\?", _mask_quoted(query)):
-            query = _rewrite_pg_jsonb_predicates(query)
-        # JSON construction / aggregation — json[b]_build_object,
-        # json[b]_build_array, row_to_json, json[b]_agg [ORDER BY],
-        # json[b]_object_agg (round 18)
-        if _JSON_BUILD_PAT.search(_mask_quoted(query)):
-            query = _rewrite_pg_json_build(query)
-        # JSON set-returning / length functions (round 18)
-        if _JSON_SRF_PAT.search(_mask_quoted(query)):
-            query = _rewrite_pg_json_srf(query)
-        # to_char/to_date format literals, EXTRACT(EPOCH), FETCH
-        # FIRST, OFFSET n ROWS, gen_random_uuid (round 17)
-        if re.search(
-            r"\bto_char\s*\(|\bto_date\s*\(|\bto_timestamp\s*\(|"
-            r"\bEXTRACT\s*\(\s*EPOCH|\bFETCH\s+(?:FIRST|NEXT)|"
-            r"\bOFFSET\s+\d+\s+ROWS?\b|\bgen_random_uuid\b",
-            _mask_quoted(query), re.I,
-        ):
-            query = _rewrite_pg_datetime_fns(query)
-        # Postgres regex-match operators ~ / ~* / !~ / !~* (round 17)
-        if "~" in query:
-            query = _rewrite_pg_regex_ops(query)
-        # SELECT DISTINCT ON (...) — Postgres's latest-row-per-key
-        # idiom, rewritten to row_number() over the ON partition
-        if re.search(r"\bDISTINCT\s+ON\b", _mask_quoted(query), re.I):
-            query = _rewrite_distinct_on(query)
-        # Postgres set-returning functions (round 15): every pg script
-        # uses ``generate_series(a, b[, step])`` (ints, dates,
-        # timestamps, interval steps) and ``unnest(array)``; both map
-        # EXACTLY onto Spark's explode-as-table-function —
-        # ``explode(sequence(...))`` / ``explode(...)`` — in both
-        # FROM-clause and select-list positions, so the rewrite is
-        # textual (string literals untouched; the unaliased output
-        # column is Spark's ``col`` rather than Postgres's
-        # ``generate_series`` — alias it, as scripts do).
-        masked_gs = _mask_quoted(query)
-        out, prev = [], 0
-        for gm in re.finditer(r"\bgenerate_series\s*\(", masked_gs, re.I):
-            if gm.start() < prev:
-                continue  # inside a span already copied verbatim
-            depth, j = 1, gm.end()
-            while j < len(masked_gs) and depth:
-                depth += masked_gs[j] == "("
-                depth -= masked_gs[j] == ")"
-                j += 1
-            if depth:  # unbalanced — let Spark raise the parse error
-                continue
-            args = query[gm.end():j - 1]
-            # Top-level comma positions (relative to the arg span) so
-            # the two-argument form can be split.
-            commas, d = [], 0
-            for k in range(gm.end(), j - 1):
-                c = masked_gs[k]
-                d += c in "(["
-                d -= c in ")]"
-                if c == "," and d == 0:
-                    commas.append(k - gm.end())
-            out.append(query[prev:gm.start()])
-            if len(commas) == 1:
-                # Two-argument form — integer-typed by Postgres rules
-                # (date/timestamp series require an explicit step).
-                # Spark's two-arg ``sequence`` infers step −1 when
-                # start > stop and returns a DESCENDING series where
-                # Postgres's default step 1 yields zero rows, so guard:
-                # ``if(a <= b, sequence(a, b), array())`` (the empty
-                # array coerces to the sequence's element type).
-                a, b = args[:commas[0]], args[commas[0] + 1:]
-                out.append(
-                    f"explode(if(({a}) <= ({b}), "
-                    f"sequence(({a}), ({b})), array()))"
-                )
-            elif len(commas) == 2:
-                # Three-argument form (round 17) — a range reversed
-                # relative to the explicit step yields Postgres's empty
-                # set, where Spark's ``sequence`` raises.  Step
-                # positivity is decided by ``a + step > a`` so the SAME
-                # guard covers numeric steps and timestamp/interval
-                # steps (no sign() on intervals).  ``a = b`` is never
-                # "reversed" — Postgres returns {a} for any non-zero
-                # step — and a ZERO step falls through to ``sequence``,
-                # which errors loudly exactly like Postgres does.
-                a = args[:commas[0]]
-                b = args[commas[0] + 1:commas[1]]
-                s = args[commas[1] + 1:]
-                out.append(
-                    f"explode(if(((({a}) < ({b})) AND "
-                    f"((({a}) + ({s})) < ({a}))) OR ((({a}) > ({b})) "
-                    f"AND ((({a}) + ({s})) > ({a}))), array(), "
-                    f"sequence(({a}), ({b}), ({s}))))"
-                )
-            else:
-                out.append("explode(sequence(" + args + "))")
-            prev = j
-        if out:
-            out.append(query[prev:])
-            query = "".join(out)
-        if re.search(r"\bunnest\s*\(", query, re.I):
-            masked_un = _mask_quoted(query)
-            out, prev = [], 0
-            for um in re.finditer(r"\bunnest\s*\(", masked_un, re.I):
-                if um.start() < prev:
-                    continue
-                # Postgres's multi-argument ``unnest(a, b, ...)`` zips
-                # arrays in parallel and ``unnest(map)`` produces two
-                # columns — neither maps onto one-column ``explode``,
-                # so refuse multi-argument spellings loudly instead of
-                # silently changing semantics.
-                depth, j = 1, um.end()
-                while j < len(masked_un) and depth:
-                    c = masked_un[j]
-                    depth += c == "("
-                    depth -= c == ")"
-                    if c == "," and depth == 1:
-                        raise ValueError(
-                            "unnest() with multiple arguments is not"
-                            " supported (Postgres zips arrays in"
-                            " parallel; rewrite as separate"
-                            " explode/posexplode calls)"
-                        )
-                    j += 1
-                out.append(query[prev:um.start()])
-                out.append("explode")
-                prev = um.end() - 1  # keep the '('
-            out.append(query[prev:])
-            query = "".join(out)
-        # ``SELECT * FROM mooncake.list_tables()`` — the reference's
-        # catalog relation (src/functions.rs:84-116) as a queryable SQL
-        # spelling: rewrite top-level occurrences to a temp view over
-        # :meth:`list_tables` (string literals are left alone)
-        lt = [
-            m for m in re.finditer(
-                r"mooncake\.list_tables\s*\(\s*\)", query, re.I
-            )
-        ]
-        if lt:
-            top = {i for i, _ in _scan_top(query)}
-            spans = [m.span() for m in lt if m.start() in top]
-            if spans:
-                self.list_tables().createOrReplaceTempView(
-                    "__mooncake_list_tables"
-                )
-                out, prev = [], 0
-                for s, e in spans:
-                    out.append(query[prev:s])
-                    out.append("__mooncake_list_tables")
-                    prev = e
-                out.append(query[prev:])
-                query = "".join(out)
-        # ``information_schema.tables`` / ``.columns`` — the standard
-        # catalog relations every Postgres client introspects with:
-        # rewrite occurrences outside string literals to temp views
-        # built from the engine catalog (O(catalog), but only when the
-        # statement IS a catalog query)
-        is_hits = [
-            (m.span(), m.group(1).lower())
-            for m in re.finditer(
-                r"\binformation_schema\s*\.\s*"
-                r"(tables|columns|table_constraints|check_constraints|"
-                r"key_column_usage|referential_constraints)\b",
-                _mask_quoted(query), re.I,
-            )
-        ]
-        if is_hits:
-            for rel in {r for _, r in is_hits}:
-                self._information_schema_df(rel).createOrReplaceTempView(
-                    f"__mooncake_is_{rel}"
-                )
-            out, prev = [], 0
-            for (s, e), rel in is_hits:
-                out.append(query[prev:s])
-                out.append(f"__mooncake_is_{rel}")
-                prev = e
-            out.append(query[prev:])
-            query = "".join(out)
-        # pg_catalog relations psql-style tooling reads: pg_tables /
-        # pg_views / pg_indexes (round 15), and the low-level catalogs
-        # ORMs and psql's \d introspect through — pg_class /
-        # pg_namespace / pg_attribute / pg_attrdef / pg_index (round
-        # 17, VERDICT r16 missing #3) — plus the functions those
-        # queries call (format_type, pg_get_expr, ...).  Unqualified
-        # spellings too: pg_catalog is always on the Postgres search
-        # path.
-        if re.search(
-            r"\b(?:pg_catalog\s*\.\s*)?(?:format_type|pg_get_expr|"
-            r"pg_table_is_visible|pg_get_indexdef|"
-            r"pg_get_constraintdef|pg_get_serial_sequence)\s*\(",
+            r"\b(?:format_type|pg_get_expr|pg_table_is_visible|"
+            r"pg_get_indexdef|pg_get_constraintdef|"
+            r"pg_get_serial_sequence)\s*\(",
             _mask_quoted(query), re.I,
         ):
             self._ensure_pg_catalog_fns()
-            query = re.sub(
+            query = _sub_masked(
                 r"\bpg_catalog\s*\.\s*(format_type|pg_get_expr|"
                 r"pg_table_is_visible|pg_get_indexdef|"
                 r"pg_get_constraintdef|pg_get_serial_sequence)\b",
-                r"\1", query, flags=re.I,
+                lambda m: m.group(1), query,
             )
             # pg_get_expr's optional pretty-print flag is inert here
-            query = re.sub(
+            query = _sub_masked(
                 r"\b(pg_get_expr\s*\([^()]*),\s*(?:true|false)\s*\)",
-                r"\1)", query, flags=re.I,
+                lambda m: query[m.start(1):m.end(1)] + ")", query,
             )
-        pc_hits = [
-            (m.span(), m.group(1).lower())
-            for m in re.finditer(
-                r"\b(?:pg_catalog\s*\.\s*)?(pg_tables|pg_views|"
-                r"pg_indexes|pg_class|pg_namespace|pg_attribute|"
-                r"pg_attrdef|pg_index|pg_constraint|pg_type|"
-                r"pg_sequences)\b",
-                _mask_quoted(query), re.I,
-            )
-        ]
-        if pc_hits:
-            for rel in {r for _, r in pc_hits}:
-                df = (
-                    self._pg_catalog_df(rel)
-                    if rel in ("pg_tables", "pg_views", "pg_indexes")
-                    else self._pg_lowlevel_df(rel)
-                )
-                df.createOrReplaceTempView(
-                    f"__mooncake_{rel}"
-                )
-            out, prev = [], 0
-            for (s, e), rel in pc_hits:
-                out.append(query[prev:s])
-                out.append(f"__mooncake_{rel}")
-                prev = e
-            out.append(query[prev:])
-            query = "".join(out)
+        query = self._sub_catalog_views(
+            r"\b(?:pg_catalog\s*\.\s*)?(pg_tables|pg_views|"
+            r"pg_indexes|pg_class|pg_namespace|pg_attribute|"
+            r"pg_attrdef|pg_index|pg_constraint|pg_type|"
+            r"pg_sequences)\b",
+            query,
+            lambda rel: (
+                self._pg_catalog_df(rel)
+                if rel in ("pg_tables", "pg_views", "pg_indexes")
+                else self._pg_lowlevel_df(rel)
+            ),
+        )
         # schema-qualified mirror references (round 17): Spark has no
         # 'public' (or user) namespace, so ``FROM public.t`` /
         # ``JOIN s."T"`` resolve by rewriting the dotted reference in a
         # RELATION position (after FROM/JOIN/TABLE only — a dotted
         # expression like alias.column never names a relation there) to
         # the mirror's sanitized temp-view alias; the token scan below
-        # then registers that view.  Three-part names are left for
-        # Spark's own (loud) resolution.
+        # then registers that view.  Three-part names and function
+        # calls are left for Spark's own (loud) resolution.
         if "." in query:
-            masked_dq = _mask_quoted(query)
-            txn_created_names = set(
-                self._txn.get("created", {})
-            ) if self._txn is not None else set()
-            known_tables = (
-                set(self.catalog.list_tables()) | txn_created_names
+            known_tables = set(self.catalog.list_tables()) | (
+                set(self._txn.get("created", {}))
+                if self._txn is not None else set()
             )
-            out, prev = [], 0
-            for m in re.finditer(
-                r"\b(?:FROM|JOIN|TABLE)\s+"
-                r'("[^"]+"|[A-Za-z_]\w*)\s*\.\s*("[^"]+"|[A-Za-z_]\w*)',
-                masked_dq, re.I,
-            ):
-                after = m.end()
-                while after < len(masked_dq) and masked_dq[after].isspace():
-                    after += 1
-                if after < len(masked_dq) and masked_dq[after] in ".(":
-                    continue  # three-part name or function call
-                cand = query[m.start(1):m.end(2)]
+
+            def _qualified(m):
                 try:
-                    canon = self._canon(cand)
+                    canon = self._canon(query[m.start(1):m.end(2)])
                 except ValueError:
-                    continue
+                    return None
                 if canon not in known_tables:
-                    continue
-                out.append(query[prev:m.start(1)])
-                out.append(self._view_name(canon))
-                prev = m.end(2)
-            if out:
-                out.append(query[prev:])
-                query = "".join(out)
+                    return None
+                return query[m.start():m.start(1)] + self._view_name(canon)
+
+            query = _sub_masked(
+                r"\b(?:FROM|JOIN|TABLE)\s+"
+                r'("[^"]+"|[A-Za-z_]\w*)\s*\.\s*("[^"]+"|[A-Za-z_]\w*\b)'
+                r"(?!\s*[.(])",
+                _qualified, query,
+            )
         # time-travel spelling: ``FROM t FOR VERSION AS OF 3`` /
         # ``FOR [SYSTEM_TIME|TIMESTAMP] AS OF '…'`` (SQL:2011 system
         # versioning; the bare Delta spellings VERSION/TIMESTAMP AS OF
         # also accepted).  Each pinned read registers its own snapshot
         # view — the engine's A10 contract as a SQL surface.
-        tt = []
-        for m in re.finditer(
-            r"\b([A-Za-z_][A-Za-z0-9_]*)\s+(?:FOR\s+)?"
-            r"(VERSION|SYSTEM_TIME|TIMESTAMP)\s+AS\s+OF\s+('[^']*'|\d+)",
-            _mask_quoted(query), re.I,
-        ):
-            tt.append(m)
-        if tt:
+        if re.search(r"\bAS\s+OF\b", query, re.I):
             by_alias_tt: dict[str, str] = {}
             for name in self.catalog.list_tables():
                 by_alias_tt.setdefault(self._view_name(name).lower(), name)
-            out, prev = [], 0
-            for m in tt:
+
+            def _as_of(m):
                 alias, kind = m.group(1).lower(), m.group(2).upper()
                 if alias not in by_alias_tt:
-                    continue  # not a mirror — leave for Spark to judge
+                    return None  # not a mirror — leave for Spark to judge
                 name = by_alias_tt[alias]
                 lit = query[m.start(3):m.end(3)]
                 if kind == "VERSION":
@@ -2707,23 +2328,27 @@ class SqlRouterMixin:
                             f"VERSION AS OF expects an integer, got {lit}"
                         )
                     version = int(lit)
-                    snap = self.table(name, version=version)
                 else:
                     if lit.isdigit():
                         raise ValueError(
                             f"{kind} AS OF expects a quoted timestamp, "
                             f"got {lit}"
                         )
-                    ts = lit[1:-1]
-                    version = self._moontable(name).version_at_timestamp(ts)
-                    snap = self.table(name, version=version)
+                    version = self._moontable(name).version_at_timestamp(
+                        lit[1:-1]
+                    )
                 view = f"__mooncake_asof_{alias}_{version}"
-                snap.createOrReplaceTempView(view)
-                out.append(query[prev:m.start()])
-                out.append(view)
-                prev = m.end()
-            out.append(query[prev:])
-            query = "".join(out)
+                self.table(name, version=version).createOrReplaceTempView(
+                    view
+                )
+                return view
+
+            query = _sub_masked(
+                r"\b([A-Za-z_][A-Za-z0-9_]*)\s+(?:FOR\s+)?"
+                r"(VERSION|SYSTEM_TIME|TIMESTAMP)\s+AS\s+OF\s+"
+                r"('[^']*'|\d+)",
+                _as_of, query,
+            )
         # O(statement) name resolution (VERDICT r10 task 2): resolve and
         # register pinned snapshot views ONLY for mirrors the statement
         # actually references — materializing every registered mirror's
@@ -2793,6 +2418,23 @@ class SqlRouterMixin:
                 alias_l
             )
         return self.spark.sql(query)
+    def _sub_catalog_views(
+        self, pattern: str, query: str, build_df, prefix: str = "__mooncake_"
+    ) -> str:
+        """Replace each catalog-relation spelling ``pattern`` matches
+        outside literals (group 1 names the relation) with the temp
+        view ``prefix + relation``, registered from ``build_df(relation)``
+        once per statement."""
+        made: set[str] = set()
+
+        def repl(m):
+            rel = m.group(1).lower()
+            if rel not in made:
+                build_df(rel).createOrReplaceTempView(prefix + rel)
+                made.add(rel)
+            return prefix + rel
+
+        return _sub_masked(pattern, repl, query)
     def _sql_prepare(
         self, name: str, types: Optional[str], stmt: str
     ) -> DataFrame:
@@ -2904,13 +2546,10 @@ class SqlRouterMixin:
                 ) from None
             for i, (slot, _text) in enumerate(exprs):
                 bound[slot] = f"({_render_literal(row[i])})"
-        out, prev = [], 0
-        for (s, e), n in spans:
-            out.append(stmt[prev:s])
-            out.append(bound[n - 1])
-            prev = e
-        out.append(stmt[prev:])
-        return self._sql_dispatch("".join(out), pin, copy_data)
+        return self._sql_dispatch(
+            _splice(stmt, [(s, e, bound[n - 1]) for (s, e), n in spans]),
+            pin, copy_data,
+        )
     def _sql_deallocate(self, name: str) -> DataFrame:
         """``DEALLOCATE [PREPARE] name | ALL`` — Postgres semantics
         (unknown name errors; ALL is idempotent)."""
@@ -6294,12 +5933,9 @@ class SqlRouterMixin:
         rest = m.group(4).strip()
         # source: parenthesized query or table name, optional alias
         if rest.startswith("("):
-            depth, i = 0, 0
-            for i, c in enumerate(rest):
-                depth += c == "("
-                depth -= c == ")"
-                if depth == 0:
-                    break
+            i = _match_bracket(_mask_quoted(rest), 0)
+            if i < 0:
+                raise ValueError(f"cannot parse MERGE source: {rest!r}")
             src_sql, rest = rest[1:i], rest[i + 1:].strip()
             src_alias = "__merge_src"  # derived table: alias expected
         else:
@@ -6598,16 +6234,9 @@ class SqlRouterMixin:
                     continue
                 # merge_action() → the action tag, substituted outside
                 # string literals only
-                masked = _mask_quoted(item)
-                out, prev = [], 0
-                for am2 in re.finditer(
-                    r"\bmerge_action\s*\(\s*\)", masked, re.I
-                ):
-                    out.append(item[prev:am2.start()])
-                    out.append("__merge_action")
-                    prev = am2.end()
-                out.append(item[prev:])
-                items.append("".join(out))
+                items.append(_sub_masked(
+                    r"\bmerge_action\s*\(\s*\)", "__merge_action", item
+                ))
             ret = ret_src.selectExpr(*items)
         try:
             v = self.apply_changes(name, batch)
@@ -6765,13 +6394,9 @@ class SqlRouterMixin:
                 )
             # matching close-paren of the column list (NOT rindex: a
             # trailing PARTITION BY RANGE (a) clause carries parens too)
-            depth, close = 0, -1
-            for i, c in enumerate(rest):
-                depth += c == "("
-                depth -= c == ")"
-                if depth == 0:
-                    close = i
-                    break
+            close = _match_bracket(_mask_quoted(rest), 0)
+            if close < 0:
+                raise ValueError(f"unbalanced column list: {q!r}")
             tail = rest[close + 1:].strip()
             if tail and not re.match(
                 r"PARTITION\s+BY\s+(RANGE|LIST|HASH)\s*\([^)]*\)\s*$",
@@ -8670,9 +8295,11 @@ class SqlRouterMixin:
         LAST statement's result (None for an empty script).
 
         Handles the script-level syntax :meth:`sql` cannot see from a
-        single statement: top-level ``;`` splitting with quotes honored,
-        ``--`` line and ``/* */`` block comments stripped outside
-        strings, and inline ``COPY ... FROM STDIN;`` payloads (raw lines
+        single statement: ``;`` splitting and comment stripping through
+        the one SQL lexer (``sqlparse._split_statements``: quotes
+        honored, ``--`` line and ``/* */`` block comments stripped,
+        Spark ``/*+ ... */`` hints kept), and inline ``COPY ... FROM
+        STDIN;`` payloads (raw lines
         up to a ``\\.`` terminator, exactly as pg_dump emits them) routed
         to ``sql(..., copy_data=...)``.  Dollar-quoted bodies are not
         supported (no CREATE FUNCTION surface).  Errors propagate — and
@@ -8686,7 +8313,7 @@ class SqlRouterMixin:
 
         script = self._STDIN_BLOCK.sub(_extract, script)
         result: Optional[DataFrame] = None
-        for stmt in self._split_statements(script):
+        for stmt in _split_statements(script):
             if stmt.startswith("\x00STDIN"):
                 idx = int(stmt[6:].rstrip("\x00"))
                 copy_stmt, payload = payloads[idx]
@@ -8694,47 +8321,6 @@ class SqlRouterMixin:
             else:
                 result = self.sql(stmt)
         return result
-    @staticmethod
-    def _split_statements(s: str) -> list[str]:
-        """Split a script on top-level semicolons; string literals and
-        quoted identifiers never split, comments vanish."""
-        stmts: list[str] = []
-        buf: list[str] = []
-        i, n = 0, len(s)
-        while i < n:
-            c = s[i]
-            if c in ("'", '"'):
-                q, j = c, i + 1
-                while j < n:
-                    if s[j] == "\\":
-                        j += 2
-                        continue
-                    if s[j] == q:
-                        if j + 1 < n and s[j + 1] == q:
-                            j += 2
-                            continue
-                        break
-                    j += 1
-                buf.append(s[i : j + 1])
-                i = j + 1
-                continue
-            if s.startswith("--", i):
-                j = s.find("\n", i)
-                i = n if j == -1 else j
-                continue
-            if s.startswith("/*", i):
-                j = s.find("*/", i + 2)
-                i = n if j == -1 else j + 2
-                continue
-            if c == ";":
-                stmts.append("".join(buf))
-                buf = []
-                i += 1
-                continue
-            buf.append(c)
-            i += 1
-        stmts.append("".join(buf))
-        return [t.strip() for t in stmts if t.strip()]
     def _copy_stdout_df(
         self,
         df: DataFrame,
@@ -8970,12 +8556,9 @@ class SqlRouterMixin:
         rest = q[m.end():]
         src_query = None
         if rest.startswith("("):
-            depth = 0
-            for i, ch in enumerate(rest):
-                depth += ch == "("
-                depth -= ch == ")"
-                if depth == 0:
-                    break
+            i = _match_bracket(_mask_quoted(rest), 0)
+            if i < 0:
+                raise ValueError(f"cannot parse COPY statement: {query!r}")
             src_query, rest = rest[1:i], rest[i + 1:].strip()
             t = None
         else:

@@ -1,8 +1,11 @@
 """Pure SQL-text utilities shared by the statement router and the
-lifecycle engine: quoted-region masking, Postgres ``$n`` parameter
-binding, literal rendering, identifier-aware rewrites, top-level
-keyword/comma scanning, column-constraint parsing, Postgres→Spark type
-mapping, and the statement-kind regexes.
+lifecycle engine: the SQL lexer (one quote/comment scanner, see
+``_lex``) and what derives from it — the quote mask, comment
+stripping, statement splitting, top-level keyword/comma scanning, the
+masked-splice primitive ``_sub_masked`` and the bracket matcher —
+plus Postgres ``$n`` parameter binding, literal rendering,
+identifier-aware rewrites, column-constraint parsing, Postgres→Spark
+type mapping, and the statement-kind regexes.
 
 Everything here is stateless string/AST work — no SparkSession, no
 catalog, no I/O — split out of engine.py in round 13 so the statement
@@ -94,37 +97,144 @@ _DESCRIBE_KIND = re.compile(
 _SQL_TABLE = r'((?:"[^"]*"|[A-Za-z_]\w*)(?:\.(?:"[^"]*"|[A-Za-z_]\w*))?)'
 
 
-def _mask_quoted(s: str) -> str:
-    """Return ``s`` with every character inside a quoted region (single-
-    or double-quoted, honoring doubled-quote and backslash escapes)
-    replaced by a space — so positional regex scans (``$n`` parameter
-    markers, identifier rewrites) can run on the mask and never match
-    inside a string literal, while spans map 1:1 back to ``s``."""
-    out = list(s)
+# The SQL lexer: one state machine classifies text into code, quoted
+# and comment spans.  Quotes are '...' and "..." with doubled-quote and
+# backslash escapes (Spark's default string escaping); comments are
+# ``--`` to end of line and (nested) ``/* */`` blocks.  A Spark hint
+# ``/*+ ... */`` is code.  Every quote- or comment-aware helper below
+# derives from these spans.
+_LEX_OPEN = re.compile(r"['\"]|--|/\*(?!\+)")
+_QUOTE_REST = {
+    q: re.compile(rf"(?:[^{q}\\]+|\\.|{q}{q})*({q})?", re.S)
+    for q in ("'", '"')
+}
+_BLOCK_MARK = re.compile(r"/\*|\*/")
+
+
+def _lex(s: str) -> list[tuple[int, int, str]]:
+    """The non-code spans of ``s`` as (start, end, kind), in order:
+    kind is ``quote`` (delimiters included), ``unterminated`` (a quote
+    running to the end of ``s``) or ``comment``."""
+    spans: list[tuple[int, int, str]] = []
     i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            q = c
-            i += 1
-            while i < n:
-                if s[i] == "\\":
-                    out[i] = " "
-                    if i + 1 < n:
-                        out[i + 1] = " "
-                    i += 2
-                    continue
-                if s[i] == q:
-                    if i + 1 < n and s[i + 1] == q:
-                        out[i] = " "
-                        out[i + 1] = " "
-                        i += 2
-                        continue
+    while True:
+        m = _LEX_OPEN.search(s, i)
+        if m is None:
+            return spans
+        a, tok = m.start(), m.group()
+        if tok == "--":
+            e = s.find("\n", a)
+            spans.append((a, n if e < 0 else e, "comment"))
+        elif tok == "/*":
+            depth, e = 0, n
+            for b in _BLOCK_MARK.finditer(s, a):
+                depth += 1 if b.group() == "/*" else -1
+                if depth == 0:
+                    e = b.end()
                     break
-                out[i] = " "
-                i += 1
-        i += 1
+            spans.append((a, e, "comment"))
+        elif (qm := _QUOTE_REST[tok].match(s, a + 1)).group(1):
+            spans.append((a, qm.end(), "quote"))
+        else:
+            spans.append((a, n, "unterminated"))
+        i = spans[-1][1]
+
+
+def _mask_quoted(s: str) -> str:
+    """Return ``s`` with every character inside a quoted region blanked
+    to a space (the quote delimiters stay) and every comment blanked
+    whole — so positional regex scans (``$n`` parameter markers,
+    identifier rewrites) run on the mask and never match inside a
+    literal or comment, while spans map 1:1 back to ``s``."""
+    out, prev = [], 0
+    for a, e, kind in _lex(s):
+        start = a if kind == "comment" else a + 1
+        stop = e - 1 if kind == "quote" else e
+        out.append(s[prev:start])
+        out.append(" " * (stop - start))
+        prev = stop
+    out.append(s[prev:])
     return "".join(out)
+
+
+def _strip_comments(s: str) -> str:
+    """``s`` with each comment replaced by one space (hints stay)."""
+    if "--" not in s and "/*" not in s:
+        return s
+    return _splice(
+        s, [(a, e, " ") for a, e, kind in _lex(s) if kind == "comment"]
+    )
+
+
+def _splice(text: str, edits) -> str:
+    """Apply (start, end, replacement) edits, sorted by start, to
+    ``text``; an edit overlapping an earlier one is dropped."""
+    out, prev = [], 0
+    for s0, e0, rep in edits:
+        if s0 < prev:
+            continue
+        out.append(text[prev:s0])
+        out.append(rep)
+        prev = e0
+    if not out:
+        return text
+    out.append(text[prev:])
+    return "".join(out)
+
+
+def _sub_masked(pattern, repl, text: str) -> str:
+    """Case-insensitive ``re.sub`` over the quote/comment mask of
+    ``text``, spliced into the original — a literal's or comment's
+    contents are never edited.  ``repl`` is a string or ``match -> str
+    | None`` (None keeps the span); the match is over the mask, so
+    groups inside quotes read from ``text`` by position."""
+    edits = []
+    for m in re.finditer(pattern, _mask_quoted(text), re.I):
+        rep = repl(m) if callable(repl) else repl
+        if rep is not None:
+            edits.append((m.start(), m.end(), rep))
+    return _splice(text, edits)
+
+
+def _match_bracket(masked: str, i: int) -> int:
+    """Index of the bracket matching ``masked[i]`` — forward from an
+    opening ``(``/``[``, backward from a closing ``)``/``]`` — or -1
+    when unbalanced.  ``masked`` is quote-masked text, so brackets in
+    literals never count."""
+    c = masked[i]
+    pair = {"(": ")", "[": "]", ")": "(", "]": "["}[c]
+    step = 1 if c in "([" else -1
+    depth, n = 0, len(masked)
+    while 0 <= i < n:
+        ch = masked[i]
+        if ch == c:
+            depth += 1
+        elif ch == pair:
+            depth -= 1
+            if depth == 0:
+                return i
+        i += step
+    return -1
+
+
+def _split_statements(s: str) -> list[str]:
+    """Split a script on ``;`` outside quotes, after stripping its
+    comments (hints stay); blank statements are dropped."""
+    s = _strip_comments(s)
+    cuts = [m.start() for m in re.finditer(";", _mask_quoted(s))]
+    return [t for t in _split_at(s, cuts) if t]
+
+
+def _split_at(s: str, cuts: list[int]) -> list[str]:
+    """The stripped pieces of ``s`` between the ``cuts`` positions."""
+    parts, prev = [], 0
+    for i in cuts:
+        parts.append(s[prev:i].strip())
+        prev = i + 1
+    parts.append(s[prev:].strip())
+    return parts
+
+
 def _render_literal(v: Any) -> str:
     """Render a Python value as a Spark SQL literal — the engine's bind
     step for ``$n`` parameters (Postgres's extended-protocol bind,
@@ -182,34 +292,23 @@ def _bind_params(query: str, params: Any) -> str:
             f"bind message supplies {len(seq)} parameters, but "
             f"statement requires {need}"
         )
-    out, prev = [], 0
-    for (s, e), n in spans:
-        if n < 1:
-            raise ValueError(f"there is no parameter ${n}")
-        out.append(query[prev:s])
-        # parenthesize: a bare negative literal after a '-' operator
-        # would lex as a line comment ("2-$1" bound to -5 → "2--5")
-        out.append(f"({_render_literal(seq[n - 1])})")
-        prev = e
-    out.append(query[prev:])
-    return "".join(out)
+    if min(n for _, n in spans) < 1:
+        raise ValueError("there is no parameter $0")
+    # parenthesize: a bare negative literal after a '-' operator would
+    # lex as a line comment ("2-$1" bound to -5 → "2--5")
+    return _splice(query, [
+        (s, e, f"({_render_literal(seq[n - 1])})") for (s, e), n in spans
+    ])
 def _subst_idents(expr: str, mapping: dict[str, str]) -> str:
     """Replace identifier words in ``expr`` (outside string literals,
     case-insensitive) by ``mapping`` — used to fold UPDATE assignment
     expressions into a CHECK constraint to get its post-image form
     (assignments are simultaneous over the pre-state, so plain
     substitution IS the post-image)."""
-    mask = _mask_quoted(expr)
-    out, prev = [], 0
-    for m in re.finditer(r"[A-Za-z_][A-Za-z0-9_]*", mask):
-        rep = mapping.get(m.group(0).lower())
-        if rep is None:
-            continue
-        out.append(expr[prev:m.start()])
-        out.append(rep)
-        prev = m.end()
-    out.append(expr[prev:])
-    return "".join(out)
+    return _sub_masked(
+        r"[A-Za-z_][A-Za-z0-9_]*",
+        lambda m: mapping.get(m.group(0).lower()), expr,
+    )
 def _expr_refs(expr: str) -> set[str]:
     """Lower-cased identifier words of ``expr`` outside string literals —
     the shared ref-extraction for constraint/generated column matching
@@ -227,11 +326,7 @@ def _no_gen_on_gen(generated: dict[str, str]) -> None:
     column."""
     names = {c.lower() for c in generated}
     for col, expr in generated.items():
-        refs = {
-            w.lower()
-            for w in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", _mask_quoted(expr))
-        }
-        hit = sorted((refs & names) - {col.lower()})
+        hit = sorted((_expr_refs(expr) & names) - {col.lower()})
         if hit:
             raise ValueError(
                 f'cannot use generated column "{hit[0]}" in the '
@@ -281,15 +376,7 @@ def _parse_col_constraints(tail: str) -> tuple[str, dict[str, Any]]:
             )
         gm = re.match(r"GENERATED\s+ALWAYS\s+AS\s*\(", rest, re.I)
         if gm:
-            depth, close = 1, -1
-            for i in range(gm.end(), len(rest)):
-                if rest[i] == "(":
-                    depth += 1
-                elif rest[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
+            close = _match_bracket(_mask_quoted(rest), gm.end() - 1)
             if close < 0:
                 raise ValueError(f"unbalanced GENERATED expression: {rest!r}")
             info["generated"] = rest[gm.end():close].strip()
@@ -313,15 +400,7 @@ def _parse_col_constraints(tail: str) -> tuple[str, dict[str, Any]]:
             after = rest[im.end():].strip()
             opts = ""
             if after.startswith("("):
-                depth, close = 1, -1
-                for i in range(1, len(after)):
-                    if after[i] == "(":
-                        depth += 1
-                    elif after[i] == ")":
-                        depth -= 1
-                        if depth == 0:
-                            close = i
-                            break
+                close = _match_bracket(_mask_quoted(after), 0)
                 if close < 0:
                     raise ValueError(
                         f"unbalanced IDENTITY options: {rest!r}"
@@ -340,15 +419,7 @@ def _parse_col_constraints(tail: str) -> tuple[str, dict[str, Any]]:
             )
         cm = re.match(r"(?:CONSTRAINT\s+(\w+)\s+)?CHECK\s*\(", rest, re.I)
         if cm:
-            depth, close = 1, -1
-            for i in range(cm.end(), len(rest)):
-                if rest[i] == "(":
-                    depth += 1
-                elif rest[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
+            close = _match_bracket(_mask_quoted(rest), cm.end() - 1)
             if close < 0:
                 raise ValueError(f"unbalanced CHECK constraint: {rest!r}")
             info["checks"].append(
@@ -417,25 +488,20 @@ def _rewrite_values_defaults(
     mask = _mask_quoted(values_sql)
     if not re.search(r"\bDEFAULT\b", mask, re.I):
         return values_sql
-    spans = _values_spans(mask)
-    out, prev = [], 0
+    edits = []
     by_name = {f.name: f for f in schema.fields}
-    for s, e, i in spans:
+    for s, e, i in _values_spans(mask):
         if values_sql[s:e].strip().upper() != "DEFAULT":
             continue
         if i >= len(target) or target[i] not in by_name:
             continue  # arity error surfaces downstream with context
         f = by_name[target[i]]
         d = defaults.get(f.name)
-        lit = (
+        edits.append((s, e, (
             f"CAST(({d}) AS {f.dataType.simpleString()})"
             if d else f"CAST(NULL AS {f.dataType.simpleString()})"
-        )
-        out.append(values_sql[prev:s])
-        out.append(lit)
-        prev = e
-    out.append(values_sql[prev:])
-    return "".join(out)
+        )))
+    return _splice(values_sql, edits)
 def _pg_type_to_spark(t: str) -> T.DataType:
     """Resolve a column type as Postgres spells it (reference regress
     DDL: int, text, ...) or as Spark DDL."""
@@ -450,36 +516,21 @@ def _pg_type_to_spark(t: str) -> T.DataType:
         return T._parse_datatype_string(_PG_TYPES[s])
     return T._parse_datatype_string(s)
 def _scan_top(s: str):
-    """Yield (index, char) for characters at top level — outside quoted
-    regions (single-quoted SQL strings, double-quoted strings/
-    identifiers) and parenthesis nesting.  Quotes honor both the
-    doubled-quote escape ('' / \"\") and backslash escapes (Spark's
-    default string escaping), so a comma or keyword inside any literal
-    never splits a clause."""
-    depth = 0
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            q = c
-            i += 1
-            while i < n:
-                if s[i] == "\\":
-                    i += 2
-                    continue
-                if s[i] == q:
-                    if i + 1 < n and s[i + 1] == q:
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            yield i, c
-        i += 1
+    """Yield (index, char) for the code characters of ``s`` at
+    parenthesis depth 0 — never inside a literal, a quoted identifier
+    or a comment, so a comma or keyword there never splits a clause."""
+    depth, prev = 0, 0
+    # the empty sentinel span closes the last run of code
+    for a, e, _ in _lex(s) + [(len(s), len(s), "")]:
+        for i in range(prev, a):
+            c = s[i]
+            if c == "(":
+                depth += 1
+            elif c == ")":
+                depth -= 1
+            elif depth == 0:
+                yield i, c
+        prev = e
 def _find_top_keyword(s: str, word: str) -> int:
     """Index of the first top-level, word-bounded, case-insensitive
     occurrence of ``word`` in ``s``, or -1."""
@@ -496,13 +547,7 @@ def _find_top_keyword(s: str, word: str) -> int:
 def _split_top_commas(s: str) -> list[str]:
     """Split ``s`` on top-level commas (commas inside parens/strings —
     function args, row constructors, literals — do not split)."""
-    cuts = [i for i, c in _scan_top(s) if c == ","]
-    parts, prev = [], 0
-    for i in cuts:
-        parts.append(s[prev:i])
-        prev = i + 1
-    parts.append(s[prev:])
-    return [p.strip() for p in parts]
+    return _split_at(s, [i for i, c in _scan_top(s) if c == ","])
 def parse_table_name(name: str) -> str:
     """Normalize a table identifier the way the reference's ``parse_table``
     does (src/functions.rs:146-163): unquoted identifiers fold to

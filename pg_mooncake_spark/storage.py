@@ -1943,7 +1943,8 @@ class MoonTable:
         """Compact small files (reference mooncake.optimize_table A4).
 
         Rewrites the current snapshot into ``target_partitions`` files
-        (default: spark.sql.shuffle.partitions, or 1 for tiny tables).
+        (default: a quarter of the live file count, clamped to 1..64;
+        1 for an empty table).
 
         ``sort_by`` clusters the rewrite on the given columns
         (repartitionByRange + in-file sort): file pk-stat ranges become

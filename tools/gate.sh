@@ -20,6 +20,9 @@ fi
 echo "== gate: pytest =="
 python -m pytest tests/ -q
 
+echo "== gate: benchmark self-checks =="
+python -m pytest perfbench/tests -q
+
 echo "== gate: differential oracle check ($SF_DIR) =="
 python tools/diffcheck.py "$SF_DIR"
 
