@@ -157,6 +157,11 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         self._guc_originals: dict[str, Optional[str]] = {}
         # logical-view resolution stack (cycle guard)
         self._view_stack: set[str] = set()
+        # temp-view alias -> (DataFrame, the session catalog's raw view
+        # it registered): lets SELECT skip re-registering an unchanged
+        # snapshot (SqlRouterMixin._bind_view)
+        self._view_binds: dict[str, tuple] = {}
+        self._jcatalog = spark._jsparkSession.sessionState().catalog()
         self._txn_replaying = False
         # set when a COMMIT replay failed mid-apply: the transaction IS
         # committed (its manifest exists) but incompletely applied, so

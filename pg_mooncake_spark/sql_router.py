@@ -2338,9 +2338,7 @@ class SqlRouterMixin:
                         lit[1:-1]
                     )
                 view = f"__mooncake_asof_{alias}_{version}"
-                self.table(name, version=version).createOrReplaceTempView(
-                    view
-                )
+                self._bind_view(view, self.table(name, version=version))
                 return view
 
             query = _sub_masked(
@@ -2414,10 +2412,26 @@ class SqlRouterMixin:
                 except Exception:
                     pass
                 continue
-            self.table(name, (pin or {}).get(name)).createOrReplaceTempView(
-                alias_l
-            )
+            self._bind_view(alias_l, self.table(name, (pin or {}).get(name)))
         return self.spark.sql(query)
+
+    def _bind_view(self, alias: str, df: DataFrame) -> None:
+        """``df.createOrReplaceTempView(alias)``, skipped when this engine
+        last bound ``alias`` to this very DataFrame (a memoized snapshot
+        scan, :meth:`MoonTable.read`) and the session catalog still holds
+        that registration (two round trips instead of ~9 ms of
+        re-analysis).  A view replaced or dropped under the alias by
+        anyone else fails the check and is overwritten."""
+        bound = self._view_binds.get(alias)
+        if (
+            bound is not None
+            and bound[0] is df
+            and bound[1].equals(self._jcatalog.getRawTempView(alias))
+        ):
+            return
+        df.createOrReplaceTempView(alias)
+        self._view_binds[alias] = (df, self._jcatalog.getRawTempView(alias))
+
     def _sub_catalog_views(
         self, pattern: str, query: str, build_df, prefix: str = "__mooncake_"
     ) -> str:

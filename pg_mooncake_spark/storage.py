@@ -162,17 +162,36 @@ class MoonTable:
     _COMMIT_CACHE: dict[str, Commit] = {}
     _COMMIT_CACHE_MAX = 8192
 
+    # unexecuted snapshot scans of :meth:`read` (see there for the key).
+    # Committed files are immutable, so the key IS the snapshot: a hit
+    # is plan metadata only, and every action still reads the files.
+    # The key holds the session object, not its applicationId:
+    # newSession() shares the id but not temp views or confs.
+    _SCAN_MEMO: dict[tuple, DataFrame] = {}
+    _SCAN_MEMO_MAX = 256
+
     @classmethod
     def invalidate_caches(cls, path: str) -> None:
         """Purge every process-wide cache entry under ``path``.
 
         Called when a table directory is (re)created or deleted so a
         recreated table at the same deterministic warehouse path never
-        serves the previous incarnation's commits or bloom sidecars."""
+        serves the previous incarnation's commits, bloom sidecars or
+        snapshot scans (:meth:`vacuum` purges the scans too)."""
         prefix = os.path.normpath(path) + os.sep
         for cache in (cls._COMMIT_CACHE, cls._BLOOM_CACHE):
             for k in [k for k in cache if os.path.normpath(k).startswith(prefix)]:
                 del cache[k]
+        cls._purge_scans(path)
+
+    @classmethod
+    def _purge_scans(cls, path: str) -> None:
+        """Drop the memoized snapshot scans of the table at or under
+        ``path`` (by table path or data path)."""
+        root = os.path.normpath(path) + os.sep
+        for k in list(cls._SCAN_MEMO):
+            if any((os.path.normpath(p) + os.sep).startswith(root) for p in k[1:3]):
+                cls._SCAN_MEMO.pop(k, None)
 
     def _read_commit(self, v: int) -> Commit:
         key = os.path.join(self.log_path, f"{v:010d}.json")
@@ -334,9 +353,17 @@ class MoonTable:
         table a key probe plans ≤1 file instead of the snapshot.
         Non-pk or complex predicates skip the pruning and filter only —
         never unsound, just unpruned.
+
+        The unfiltered scan of the (pruned) file set, or the empty
+        DataFrame when no file is left, is memoized in ``_SCAN_MEMO``
+        under (session, table path, data path, schema, pk, the exact
+        (name, v, phys) of every data and delete file); ``where`` is
+        applied after the memo.  A repeated read of an unchanged
+        snapshot therefore returns the SAME DataFrame object and makes
+        no py4j round trip.  :meth:`invalidate_caches` (drop, recreate)
+        and :meth:`vacuum` purge the entries of their path.
         """
         files, dels, first = self._snapshot_full(version)
-        schema = T.StructType.fromJson(json.loads(first.schema))
         if where and files:
             pruned = self._pk_stat_candidates(files, where)
             if pruned is not None:
@@ -348,10 +375,21 @@ class MoonTable:
                 # table plans O(1) files instead of every stat-admitted
                 # candidate
                 files = self._bloom_prune_literal(files, where)
-        if not files:
-            df = self.spark.createDataFrame([], schema)
-            return df.filter(where) if where else df
-        df = self._scan(files, schema, dels, pk=list(first.primary_key or []))
+        pk = list(first.primary_key or [])
+        key = (
+            self.spark, self.path, self.data_path, first.schema, tuple(pk),
+            _file_key(files), _file_key(dels) if files else (),
+        )
+        df = self._SCAN_MEMO.get(key)
+        if df is None:
+            schema = T.StructType.fromJson(json.loads(first.schema))
+            if files:
+                df = self._scan(files, schema, dels, pk=pk)
+            else:
+                df = self.spark.createDataFrame([], schema)
+            if len(self._SCAN_MEMO) >= self._SCAN_MEMO_MAX:
+                self._SCAN_MEMO.clear()
+            self._SCAN_MEMO[key] = df
         return df.filter(where) if where else df
 
     def changes(
@@ -437,21 +475,11 @@ class MoonTable:
         ]
         out_cols = [f.name for f in out_fields]
         parts: list[DataFrame] = []
-
-        def vmap(pieces: list[dict]) -> DataFrame:
-            return F.broadcast(
-                self.spark.createDataFrame(
-                    [(os.path.basename(d["name"]), d["v"]) for d in pieces],
-                    f"__file string, {VERSION_COL} long",
-                )
-            )
-
         if ins_pieces:
             df = self._read_files(ins_pieces, schema, add_file_col=True)
             parts.append(
-                df.join(vmap(ins_pieces), "__file").withColumn(
-                    CHANGE_TYPE_COL, F.lit("insert")
-                )
+                df.join(self._version_map(ins_pieces, VERSION_COL), "__file")
+                .withColumn(CHANGE_TYPE_COL, F.lit("insert"))
             )
         if chg_pieces:
             cschema = T.StructType(
@@ -459,7 +487,9 @@ class MoonTable:
                 + [T.StructField(CHANGE_TYPE_COL, T.StringType(), True)]
             )
             df = self._read_files(chg_pieces, cschema, add_file_col=True)
-            parts.append(df.join(vmap(chg_pieces), "__file"))
+            parts.append(
+                df.join(self._version_map(chg_pieces, VERSION_COL), "__file")
+            )
         if not parts:
             return self.spark.createDataFrame([], T.StructType(out_fields))
         out = parts[0]
@@ -535,15 +565,20 @@ class MoonTable:
         Files that predate a column rename store their data under the
         old physical name (descriptor ``phys``: logical → physical, set
         by :meth:`_snapshot_full`); files group by rename era and each
-        group scans with its own physical schema, aliased back to the
-        logical names — the moontable analog of Iceberg's resolve-by-
-        field-id.  Rename eras are few (renames are rare DDL), so this
-        is a handful of unioned scans at worst, one in the common case.
+        group scans with its own physical schema — the moontable analog
+        of Iceberg's resolve-by-field-id.  The current era's read schema
+        already carries the logical names, so its scan is returned as
+        it is; an older era is renamed positionally with one ``toDF``.
+        ``add_file_col`` appends the file's base name as ``__file``.
+        Rename eras are few (renames are rare DDL), so this is a handful
+        of unioned scans at worst, one in the common case.  Every call
+        builds a new plan; :meth:`read` memoizes its result per file set.
         """
         groups: dict[tuple, list[dict]] = {}
         for d in files:
             key = tuple(sorted((d.get("phys") or {}).items()))
             groups.setdefault(key, []).append(d)
+        names = [f.name for f in schema.fields]
         parts = []
         for key, fs in groups.items():
             phys = dict(key)
@@ -556,21 +591,28 @@ class MoonTable:
             gdf = self.spark.read.schema(read_schema).parquet(
                 *[os.path.join(self.data_path, d["name"]) for d in fs]
             )
-            cols = [
-                F.col(phys.get(f.name, f.name)).alias(f.name)
-                for f in schema.fields
-            ]
+            if phys:
+                gdf = gdf.toDF(*names)
             if add_file_col:
-                cols.append(
-                    F.element_at(
-                        F.split(F.input_file_name(), "/"), -1
-                    ).alias("__file")
+                gdf = gdf.withColumn(
+                    "__file", F.element_at(F.split(F.input_file_name(), "/"), -1)
                 )
-            parts.append(gdf.select(*cols))
+            parts.append(gdf)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _version_map(self, files: list[dict], col: str) -> DataFrame:
+        """Broadcast (``__file`` → commit version ``col``) map of
+        ``files``, to join onto a :meth:`_read_files` scan made with
+        ``add_file_col``."""
+        return F.broadcast(
+            self.spark.createDataFrame(
+                [(os.path.basename(d["name"]), int(d.get("v") or 0)) for d in files],
+                f"__file string, {col} long",
+            )
+        )
 
     def _scan(
         self,
@@ -581,14 +623,17 @@ class MoonTable:
     ) -> DataFrame:
         """Scan ``files`` with merge-on-read equality deletes folded in.
 
-        One parquet scan (per rename era); when tombstones are active,
-        the scan joins a tiny broadcast (file → commit version) map and
-        left-joins the tombstone keys reduced to (pk, max delete
+        One parquet scan of the data files and one of the delete files
+        (each per rename era); when tombstones are active, each scan
+        joins a tiny broadcast (file → commit version) map, and the data
+        rows left-join the tombstone keys reduced to (pk, max delete
         version): a row survives iff its file's version ≥ every
         tombstoning delete's version (Iceberg sequence-number rule).
         Tombstone volume is O(deleted keys since last optimize) — the
         join stays small and AQE broadcasts it; no tombstones → the
-        plain scan, zero extra operators."""
+        plain scan, zero extra operators.  Not memoized here: the merge
+        path persists and unpersists its own scan of the touched files;
+        :meth:`read` memoizes the snapshot scan."""
         if not dels:
             return self._read_files(files, schema)
         df = self._read_files(files, schema, add_file_col=True)
@@ -599,19 +644,14 @@ class MoonTable:
         pk_schema = T.StructType(
             [f for f in schema.fields if f.name in set(pk)]
         )
-        tomb = None
-        for d in dels:
-            t = self._read_files([d], pk_schema).withColumn(
-                "__dv", F.lit(int(d["v"])).cast("long")
-            )
-            tomb = t if tomb is None else tomb.unionByName(t)
-        tomb = tomb.groupBy(*pk).agg(F.max("__dv").alias("__dv"))
-        fmap = self.spark.createDataFrame(
-            [(d["name"], int(d.get("v") or 0)) for d in files],
-            "__file string, __fv long",
+        tomb = (
+            self._read_files(dels, pk_schema, add_file_col=True)
+            .join(self._version_map(dels, "__dv"), "__file")
+            .groupBy(*pk)
+            .agg(F.max("__dv").alias("__dv"))
         )
         return (
-            df.join(F.broadcast(fmap), "__file")
+            df.join(self._version_map(files, "__fv"), "__file")
             .join(tomb, on=list(pk), how="left")
             .filter(F.col("__dv").isNull() | (F.col("__fv") >= F.col("__dv")))
             .select(*[F.col(f.name) for f in schema.fields])
@@ -2009,6 +2049,9 @@ class MoonTable:
 
         snap_files, snap_dels, _ = self._snapshot_full(None)
         live = {d["name"] for d in snap_files} | {d["name"] for d in snap_dels}
+        # a memoized scan of a pre-vacuum snapshot would only fail at
+        # execution; rebuilt, it fails at plan time as it always did
+        self._purge_scans(self.path)
         removed = 0
         now = _time.time()
         # pending change files: finalize any whose commit landed, then
@@ -2190,6 +2233,15 @@ def _footer_stats(md: Any, cols: list[str], types: dict) -> dict[str, tuple]:
         else:
             out[c] = (lo, hi)
     return out
+
+
+def _file_key(files: list[dict]) -> tuple:
+    """The exact identity of a file list for ``MoonTable._SCAN_MEMO``:
+    (name, commit version, sorted logical → physical map) per file."""
+    return tuple(
+        (d["name"], d.get("v"), tuple(sorted((d.get("phys") or {}).items())))
+        for d in files
+    )
 
 
 def _plain(v: Any, side: Optional[str] = None) -> Any:
