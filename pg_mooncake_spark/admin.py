@@ -36,29 +36,10 @@ _SET_CONFIG_RE = re.compile(
 class AdminMixin:
     """Admin statement handlers, mixed into the SQL router."""
 
-    def _sql_admin_statement(self, query: str) -> Optional[DataFrame]:
-        """Route one statement if it is an admin/namespace statement;
-        None otherwise (caller continues)."""
-        scm = _SET_CONFIG_RE.match(query)
-        if scm:
-            return self._sql_set_config(scm)
-        m = re.match(
-            r"^\s*CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?"
-            r'("[^"]+"|[A-Za-z_]\w*)\s*(?:AUTHORIZATION\s+[\w"]+\s*)?'
-            r";?\s*$",
-            query, re.I,
-        )
-        if m:
-            return self._sql_create_schema(bool(m.group(1)), m.group(2))
-        m = re.match(
-            r"^\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?(.+?)"
-            r"\s*(\bCASCADE)?\s*(?:\bRESTRICT)?\s*;?\s*$",
-            query, re.I | re.S,
-        )
-        if m:
-            return self._sql_drop_schema(
-                bool(m.group(1)), m.group(2), bool(m.group(3))
-            )
+    # Handlers in the router's statement table (sql_router._STATEMENTS):
+    # each parses its own statement; None hands it to Spark.
+
+    def _sql_create_extension(self, query: str, *_) -> Optional[DataFrame]:
         m = re.match(
             r"^\s*CREATE\s+EXTENSION\s+(IF\s+NOT\s+EXISTS\s+)?"
             r'("[^"]+"|[A-Za-z_]\w*)'
@@ -66,57 +47,51 @@ class AdminMixin:
             r"(?:\s+VERSION\s+\S+)?(?:\s+CASCADE)?\s*;?\s*$",
             query, re.I,
         )
-        if m:
-            name = m.group(2).strip('"').lower()
-            if not self.catalog.named_set_add(_EXTENSIONS, name):
-                if not m.group(1):
-                    raise ValueError(
-                        f'extension "{name}" already exists'
-                    )
-            else:
-                self._seq_txn_log("ext_create", name)
-            return self._dml_result("CREATE EXTENSION", name, 1)
+        if not m:
+            return None
+        name = m.group(2).strip('"').lower()
+        if not self.catalog.named_set_add(_EXTENSIONS, name):
+            if not m.group(1):
+                raise ValueError(f'extension "{name}" already exists')
+        else:
+            self._seq_txn_log("ext_create", name)
+        return self._dml_result("CREATE EXTENSION", name, 1)
+
+    def _sql_drop_extension(self, query: str, *_) -> Optional[DataFrame]:
         m = re.match(
             r"^\s*DROP\s+EXTENSION\s+(IF\s+EXISTS\s+)?"
             r'("[^"]+"|[A-Za-z_]\w*)\s*(?:CASCADE|RESTRICT)?\s*;?\s*$',
             query, re.I,
         )
-        if m:
-            name = m.group(2).strip('"').lower()
-            if not self.catalog.named_set_remove(_EXTENSIONS, name):
-                if not m.group(1):
-                    raise ValueError(
-                        f'extension "{name}" does not exist'
-                    )
-            else:
-                self._seq_txn_log("ext_drop", name)
-            return self._dml_result("DROP EXTENSION", name, 1)
-        m = re.match(
-            r"^\s*ALTER\s+SCHEMA\s+(\"[^\"]+\"|[A-Za-z_]\w*)\s+"
-            r"OWNER\s+TO\s+[\w\"]+\s*;?\s*$",
-            query, re.I,
-        )
-        if m:
-            name = self._schema_fold(m.group(1))
-            if name not in self._known_schemas():
-                raise ValueError(f'schema "{name}" does not exist')
-            return self._dml_result("ALTER SCHEMA", name, 0)
+        if not m:
+            return None
+        name = m.group(2).strip('"').lower()
+        if not self.catalog.named_set_remove(_EXTENSIONS, name):
+            if not m.group(1):
+                raise ValueError(f'extension "{name}" does not exist')
+        else:
+            self._seq_txn_log("ext_drop", name)
+        return self._dml_result("DROP EXTENSION", name, 1)
+
+    def _sql_alter_view_owner(self, query: str, *_) -> Optional[DataFrame]:
+        """``ALTER [MATERIALIZED] VIEW v OWNER TO r`` — validated-inert."""
         m = re.match(
             r"^\s*ALTER\s+(VIEW|MATERIALIZED\s+VIEW)\s+([\w.\"]+)\s+"
             r"OWNER\s+TO\s+[\w\"]+\s*;?\s*$",
             query, re.I,
         )
-        if m:
-            name = parse_table_name(m.group(2))
-            if name not in self.catalog.list_tables():
-                raise ValueError(f'relation "{name}" does not exist')
-            return self._dml_result("ALTER", name, 0)
-        if re.match(r"^\s*(GRANT|REVOKE)\b", query, re.I):
-            # single-session engine: no roles to grant to — inert, same
-            # class as LOCK TABLE (pg_dump emits one per object)
-            word = query.strip().split()[0].upper()
-            return self._txn_result(word, "privilege statement (inert)")
-        return None
+        if not m:
+            return None
+        name = parse_table_name(m.group(2))
+        if name not in self.catalog.list_tables():
+            raise ValueError(f'relation "{name}" does not exist')
+        return self._dml_result("ALTER", name, 0)
+
+    def _sql_grant(self, query: str, *_) -> DataFrame:
+        """GRANT / REVOKE: single-session engine, no roles to grant to —
+        inert, same class as LOCK TABLE (pg_dump emits one per object)."""
+        word = query.strip().split()[0].upper()
+        return self._txn_result(word, "privilege statement (inert)")
 
     # ----------------------------------------------------------- schemas
 
@@ -138,10 +113,16 @@ class AdminMixin:
                 out.add(s.rsplit(".", 1)[0])
         return out
 
-    def _sql_create_schema(
-        self, if_not_exists: bool, tok: str
-    ) -> DataFrame:
-        name = self._schema_fold(tok)
+    def _sql_create_schema(self, query: str, *_) -> Optional[DataFrame]:
+        m = re.match(
+            r"^\s*CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?"
+            r'("[^"]+"|[A-Za-z_]\w*)\s*(?:AUTHORIZATION\s+[\w"]+\s*)?'
+            r";?\s*$",
+            query, re.I,
+        )
+        if not m:
+            return None
+        if_not_exists, name = bool(m.group(1)), self._schema_fold(m.group(2))
         if name in self._known_schemas():
             if if_not_exists:
                 return self._dml_result("CREATE SCHEMA", name, 0)
@@ -150,9 +131,17 @@ class AdminMixin:
         self._seq_txn_log("schema_create", name)
         return self._dml_result("CREATE SCHEMA", name, 1)
 
-    def _sql_drop_schema(
-        self, if_exists: bool, names: str, cascade: bool
-    ) -> DataFrame:
+    def _sql_drop_schema(self, query: str, *_) -> Optional[DataFrame]:
+        m = re.match(
+            r"^\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?(.+?)"
+            r"\s*(\bCASCADE)?\s*(?:\bRESTRICT)?\s*;?\s*$",
+            query, re.I | re.S,
+        )
+        if not m:
+            return None
+        if_exists, names, cascade = (
+            bool(m.group(1)), m.group(2), bool(m.group(3))
+        )
         last, n = "?", 0
         for raw in names.split(","):
             raw = raw.strip()
@@ -190,31 +179,34 @@ class AdminMixin:
             last, n = name, n + 1
         return self._dml_result("DROP SCHEMA", last, n)
 
+    def _sql_alter_schema(self, query: str, *_) -> Optional[DataFrame]:
+        """``ALTER SCHEMA s OWNER TO r`` — validated-inert."""
+        m = re.match(
+            r"^\s*ALTER\s+SCHEMA\s+(\"[^\"]+\"|[A-Za-z_]\w*)\s+"
+            r"OWNER\s+TO\s+[\w\"]+\s*;?\s*$",
+            query, re.I,
+        )
+        if not m:
+            return None
+        name = self._schema_fold(m.group(1))
+        if name not in self._known_schemas():
+            raise ValueError(f'schema "{name}" does not exist')
+        return self._dml_result("ALTER SCHEMA", name, 0)
+
     # -------------------------------------------------------- set_config
 
-    def _sql_set_config(self, m: "re.Match") -> DataFrame:
+    def _sql_set_config(self, query: str) -> Optional[DataFrame]:
         """``SELECT pg_catalog.set_config(name, value, is_local)`` — the
         function spelling of SET/SET LOCAL that opens every verbatim
         pg_dump (``set_config('search_path', '', false)``).  Routes
-        through the same GUC machinery; returns the new value."""
-        raw = m.group(1)
-        name = self._guc_canon(raw)
-        if not self._guc_known(name):
-            raise ValueError(
-                f'unrecognized configuration parameter "{raw}"'
-            )
-        value: Optional[str] = (
-            m.group(2).replace("''", "'") if m.group(2) is not None
-            else None
-        )
-        is_local = m.group(3).lower() == "true"
-        if value is not None:
-            value = self._guc_validate(name, value)
-        if not (is_local and self._txn is None):
-            # SET LOCAL outside a block: warning + no effect (Postgres)
-            if self._txn is not None:
-                self._guc_txn_track(name, is_local, value)
-            self._guc_set(name, value)
+        through the same GUC machinery; returns the new value.  None for
+        any other SELECT."""
+        m = _SET_CONFIG_RE.match(query)
+        if m is None:
+            return None
+        name = self._guc_name(m.group(1))
+        value = None if m.group(2) is None else m.group(2).replace("''", "'")
+        self._guc_assign(name, value, m.group(3).lower() == "true")
         col = (m.group(4) or "set_config").strip('"')
         return self.spark.createDataFrame(
             [(self._guc_effective(name),)], f"`{col}` string"

@@ -2746,7 +2746,9 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         would silently drop/miss columns — exactly the invalidation the
         old blanket refusal protected against.  Tables created in the
         block refuse too (their storage does not exist to alter; ALTER
-        the CREATE statement instead)."""
+        the CREATE statement instead).  A read-only block refuses
+        first."""
+        self._txn_check_writable(name)
         if name in self._txn.get("created", {}):
             raise self._txn_abort(ValueError(
                 f"ALTER TABLE on {name!r} is not supported inside the "
@@ -2802,7 +2804,6 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         constraint name is the applied-marker, matching the create/drop
         convention).  ``overlay_df`` updates read-your-writes so later
         SELECTs in the block see the post-ALTER shape."""
-        self._txn_check_writable(name)
         self._txn_alter_gate(name)
         self._moontable(name)  # unknown-table error first, like Postgres
         if overlay_df is not None:

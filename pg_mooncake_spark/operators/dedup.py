@@ -565,7 +565,8 @@ def simhash(
     vote sums run over the materialized hash column (``bits`` cheap
     passes instead of per-token 64-wide array allocations).  Same
     votes, same integer sums, same sign rule — bit-identical (pinned in
-    tests against the Column spelling, incl. null/empty text)."""
+    tests/test_opt_r19.py against the Column spelling over adversarial
+    docs, incl. null and empty text; null text fingerprints to '')."""
     toks = F.array_distinct(F.split(F.col(text_col), " "))
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
     b1 = df.select(
@@ -628,6 +629,10 @@ def simhash_banded_pairs(
     lower max_hamming, prefer fewer/wider bands; for a higher one at
     corpus scale, widen the fingerprint (e.g. 128-bit via two xxhash64
     seeds) instead of shrinking bands below ~8 bits.
+
+    NULL text: its fingerprint is '', conv('') packs to NULL and NULL
+    bands never join, so two or more NULL-text documents yield no pairs
+    (pinned in tests/test_opt_r19.py).
     """
     if bands <= max_hamming:
         raise ValueError(

@@ -152,18 +152,15 @@ class SequencesMixin:
                     self.catalog.seq_update(
                         name, last_value=lv, is_called=ic
                     )
-                elif op == "schema_create":
-                    from pg_mooncake_spark.admin import _SCHEMAS
-                    self.catalog.named_set_remove(_SCHEMAS, name)
-                elif op == "schema_drop":
-                    from pg_mooncake_spark.admin import _SCHEMAS
-                    self.catalog.named_set_add(_SCHEMAS, name)
-                elif op == "ext_create":
-                    from pg_mooncake_spark.admin import _EXTENSIONS
-                    self.catalog.named_set_remove(_EXTENSIONS, name)
-                elif op == "ext_drop":
-                    from pg_mooncake_spark.admin import _EXTENSIONS
-                    self.catalog.named_set_add(_EXTENSIONS, name)
+                elif op in ("schema_create", "schema_drop",
+                            "ext_create", "ext_drop"):
+                    from pg_mooncake_spark.admin import _EXTENSIONS, _SCHEMAS
+                    kind, what = op.split("_")
+                    key = _SCHEMAS if kind == "schema" else _EXTENSIONS
+                    if what == "create":
+                        self.catalog.named_set_remove(key, name)
+                    else:
+                        self.catalog.named_set_add(key, name)
                 elif op == "spec":
                     # ALTER COLUMN on a block-created table: restore the
                     # staged CREATE spec (name = table canon here)
@@ -354,49 +351,18 @@ class SequencesMixin:
         return (t, c)
 
     # --------------------------------------------------------- statements
+    # Handlers in the router's statement table (sql_router._STATEMENTS):
+    # each parses its own statement; None hands it to Spark.
 
-    def _sql_sequence_statement(self, query: str) -> Optional[DataFrame]:
-        """Route one statement if it is sequence DDL or a standalone
-        sequence-function SELECT; None otherwise (caller continues)."""
-        if not re.search(
-            r"\b(SEQUENCE|nextval|currval|setval|lastval)\b", query, re.I
-        ):
-            return None
+    def _sql_create_sequence(self, query: str, *_) -> Optional[DataFrame]:
         m = re.match(
             r"^\s*CREATE\s+SEQUENCE\s+(IF\s+NOT\s+EXISTS\s+)?"
             r"([\w.\"]+)\s*(.*?);?\s*$",
             query, re.I | re.S,
         )
-        if m:
-            return self._sql_create_sequence(
-                bool(m.group(1)), m.group(2), m.group(3)
-            )
-        m = re.match(
-            r"^\s*ALTER\s+SEQUENCE\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s+"
-            r"(.*?);?\s*$",
-            query, re.I | re.S,
-        )
-        if m:
-            return self._sql_alter_sequence(
-                bool(m.group(1)), m.group(2), m.group(3)
-            )
-        m = re.match(
-            r"^\s*DROP\s+SEQUENCE\s+(IF\s+EXISTS\s+)?(.+?)"
-            r"\s*(?:\b(?:CASCADE|RESTRICT))?\s*;?\s*$",
-            query, re.I | re.S,
-        )
-        if m:
-            return self._sql_drop_sequence(bool(m.group(1)), m.group(2))
-        fm = _SEQ_FN_STMT_RE.match(query)
-        if fm:
-            return self._sql_sequence_function(
-                fm.group(1).lower(), fm.group(2), fm.group(3)
-            )
-        return None
-
-    def _sql_create_sequence(
-        self, if_not_exists: bool, raw: str, opts: str
-    ) -> DataFrame:
+        if not m:
+            return None
+        if_not_exists, raw, opts = bool(m.group(1)), m.group(2), m.group(3)
         name = self._seq_canon(raw)
         if name in self.catalog.sequences():
             if if_not_exists:
@@ -407,9 +373,15 @@ class SequencesMixin:
         self._seq_txn_log("create", name)
         return self._dml_result("CREATE SEQUENCE", name, 1)
 
-    def _sql_alter_sequence(
-        self, if_exists: bool, raw: str, opts: str
-    ) -> DataFrame:
+    def _sql_alter_sequence(self, query: str, *_) -> Optional[DataFrame]:
+        m = re.match(
+            r"^\s*ALTER\s+SEQUENCE\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s+"
+            r"(.*?);?\s*$",
+            query, re.I | re.S,
+        )
+        if not m:
+            return None
+        if_exists, raw, opts = bool(m.group(1)), m.group(2), m.group(3)
         try:
             name = self._seq_resolve(raw)
         except ValueError:
@@ -456,7 +428,15 @@ class SequencesMixin:
         self.catalog.seq_put(name, new_state)
         return self._dml_result("ALTER SEQUENCE", name, 1)
 
-    def _sql_drop_sequence(self, if_exists: bool, names: str) -> DataFrame:
+    def _sql_drop_sequence(self, query: str, *_) -> Optional[DataFrame]:
+        m = re.match(
+            r"^\s*DROP\s+SEQUENCE\s+(IF\s+EXISTS\s+)?(.+?)"
+            r"\s*(?:\b(?:CASCADE|RESTRICT))?\s*;?\s*$",
+            query, re.I | re.S,
+        )
+        if not m:
+            return None
+        if_exists, names = bool(m.group(1)), m.group(2)
         last, n = "?", 0
         for raw in names.split(","):
             raw = raw.strip()
@@ -485,9 +465,14 @@ class SequencesMixin:
             last, n = name, n + 1
         return self._dml_result("DROP SEQUENCE", last, n)
 
-    def _sql_sequence_function(
-        self, fn: str, args: str, alias: Optional[str]
-    ) -> DataFrame:
+    def _sql_sequence_function(self, query: str) -> Optional[DataFrame]:
+        """``SELECT [pg_catalog.]nextval|currval|setval|lastval(...)
+        [AS alias]`` standing alone (the pg_dump spellings); None for
+        any other SELECT."""
+        fm = _SEQ_FN_STMT_RE.match(query)
+        if fm is None:
+            return None
+        fn, args, alias = fm.group(1).lower(), fm.group(2), fm.group(3)
         col = alias.strip('"') if alias else fn
         parts = [a.strip() for a in args.split(",")] if args.strip() else []
 

@@ -2,7 +2,7 @@
 the lifecycle engine.
 
 ``SqlRouterMixin`` carries :meth:`sql` (the user entry point), the
-statement-kind dispatch, and every per-statement parser/compiler —
+statement dispatch, and every per-statement parser/compiler —
 DML (INSERT/UPDATE/DELETE/MERGE + ON CONFLICT, join-DML), DDL (CREATE/
 DROP/TRUNCATE/ALTER incl. constraints and generated columns), COPY,
 CALL procedures, transaction blocks + savepoints, PREPARE/EXECUTE,
@@ -12,6 +12,14 @@ every effect goes through the lifecycle methods the host class
 (``MooncakeEngine``) provides — create_table/insert/update_where/
 delete_where/apply_changes/optimize_table/... — and the shared session
 state (``_txn``, ``_prepared``, ``_gucs``) initialized by the host.
+
+The statement table ``_STATEMENTS`` (leading keyword(s) → kind and
+handler) is the only place a statement's kind is decided: :meth:`sql`
+(including the transaction-control words an aborted block still runs),
+EXECUTE's re-dispatch of a bound statement and EXPLAIN all look a
+statement up there, and each handler parses its own arguments —
+returning None hands the statement to Spark.  The admin and sequence
+mixins contribute handlers to it; neither classifies statements.
 
 All SQL text handling goes through the one lexer in ``sqlparse``:
 :meth:`sql` strips comments once at entry (Spark hints stay), every
@@ -40,21 +48,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_mooncake_spark.sqlparse import (
-    _DML_KIND,
-    _DDL_KIND,
-    _CALL_KIND,
-    _TXN_KIND,
-    _COPY_KIND,
-    _EXPLAIN_KIND,
-    _PREPARE_KIND,
-    _EXECUTE_KIND,
-    _DEALLOCATE_KIND,
-    _SHOW_TABLES_KIND,
-    _SET_KIND,
-    _RESET_KIND,
-    _SHOW_GUC_KIND,
+    _CALL_RE,
+    _PREPARE_RE,
+    _EXECUTE_RE,
+    _DEALLOCATE_RE,
+    _SET_RE,
+    _RESET_RE,
+    _SHOW_GUC_RE,
     _SHOW_SPARK_WORDS,
-    _DESCRIBE_KIND,
+    _DESCRIBE_RE,
     _SQL_TABLE,
     _bind_params,
     _expr_refs,
@@ -93,11 +95,109 @@ _PLAIN_LITERAL = re.compile(
 )
 
 _CURSOR_FWD_ONLY_MSG = "cursor can only scan forward"
+# FETCH/MOVE directions → (kind, n) for a lone word, and → (kind with a
+# count, kind for ALL) before a count
+_FETCH_WORDS = {
+    "NEXT": ("fwd", 1), "PRIOR": ("bwd", 1), "FIRST": ("abs", 1),
+    "LAST": ("abs", -1), "ALL": ("all_fwd", 0), "FORWARD": ("fwd", 1),
+    "BACKWARD": ("bwd", 1),
+}
+_FETCH_COUNTED = {
+    "ABSOLUTE": ("abs", None), "RELATIVE": ("rel", None),
+    "FORWARD": ("fwd", "all_fwd"), "BACKWARD": ("bwd", "all_bwd"),
+}
 
-_DECLARE_KIND = re.compile(r"^\s*DECLARE\b", re.I)
-_FETCH_MOVE_KIND = re.compile(r"^\s*(FETCH|MOVE)\b", re.I)
-_CLOSE_KIND = re.compile(r"^\s*CLOSE\b", re.I)
-_LOCK_KIND = re.compile(r"^\s*LOCK\b", re.I)
+# The statement table: the only place a statement's kind is decided.
+# Key: the statement's leading keyword(s), upper-cased, single-spaced
+# (comments are already stripped, so one anchored match finds them); no
+# key is a word-prefix of another, so the first hit is the only one.
+# Value: (kind, handler).  The handler is a router/admin/sequences
+# method called as handler(query, pin, copy_data); it parses its own
+# arguments and returns a DataFrame, or None for "not mine" — the
+# statement then goes to Spark through _run_select, as does a statement
+# with no entry or with an empty handler.  kind TXN runs even in an
+# aborted transaction block; under EXPLAIN, READ statements are planned
+# and every other entry is an engine route, described and not executed.
+_STATEMENTS: dict[str, tuple[str, str]] = {
+    key: (kind, handler)
+    for kind, routes in {
+        "READ": {
+            "SELECT": "_sql_select", "WITH": "", "VALUES": "", "TABLE": "",
+            "(": "",
+        },
+        "TXN": dict.fromkeys(
+            "BEGIN START COMMIT END ROLLBACK ABORT SAVEPOINT RELEASE".split(),
+            "_sql_txn",
+        ),
+        "DML": dict.fromkeys("INSERT UPDATE DELETE MERGE".split(), "_sql_dml"),
+        "COPY": {"COPY": "_sql_copy"},
+        "CALL": {"CALL": "_sql_call"},
+        "DDL": {
+            "CREATE TABLE": "_sql_create_table",
+            "DROP TABLE": "_sql_drop_table",
+            "TRUNCATE": "_sql_truncate",
+            "ALTER TABLE": "_sql_alter_table",
+            "CREATE INDEX": "_sql_create_index",
+            "CREATE UNIQUE INDEX": "_sql_create_index",
+            "DROP INDEX": "_sql_drop_index",
+            "COMMENT ON": "_sql_comment",
+            "CREATE VIEW": "_sql_create_view",
+            "CREATE OR REPLACE VIEW": "_sql_create_view",
+            "DROP VIEW": "_sql_drop_view",
+            "ALTER VIEW": "_sql_alter_view_owner",
+            "ALTER MATERIALIZED VIEW": "_sql_alter_view_owner",
+            "CREATE MATERIALIZED VIEW": "_sql_create_matview",
+            "DROP MATERIALIZED VIEW": "_sql_drop_matview",
+            "REFRESH MATERIALIZED VIEW": "_sql_refresh_matview",
+            "CREATE SEQUENCE": "_sql_create_sequence",
+            "ALTER SEQUENCE": "_sql_alter_sequence",
+            "DROP SEQUENCE": "_sql_drop_sequence",
+            "CREATE SCHEMA": "_sql_create_schema",
+            "DROP SCHEMA": "_sql_drop_schema",
+            "ALTER SCHEMA": "_sql_alter_schema",
+            "CREATE EXTENSION": "_sql_create_extension",
+            "DROP EXTENSION": "_sql_drop_extension",
+            "GRANT": "_sql_grant", "REVOKE": "_sql_grant",
+        },
+        "MAINTENANCE": {
+            "VACUUM": "_sql_maintenance", "ANALYZE": "_sql_maintenance",
+            "CLUSTER": "_sql_cluster", "REINDEX": "_sql_reindex",
+        },
+        "SESSION": {
+            "SET": "_sql_set", "RESET": "_sql_reset", "SHOW": "_sql_show",
+            "DISCARD": "_sql_discard", "PREPARE": "_sql_prepare",
+            "EXECUTE": "_sql_execute", "DEALLOCATE": "_sql_deallocate",
+            "DECLARE": "_sql_declare_cursor", "FETCH": "_sql_fetch_move",
+            "MOVE": "_sql_fetch_move", "CLOSE": "_sql_close_cursor",
+            "LOCK": "_sql_lock", "EXPLAIN": "_sql_explain",
+            "DESCRIBE": "_sql_describe", "DESC": "_sql_describe",
+        },
+    }.items()
+    for key, handler in routes.items()
+}
+# up to four leading words (the longest key), or a leading "("
+_LEAD_WORDS = re.compile(
+    r"\s*(\w+|\()(?:\s+(\w+)(?:\s+(\w+)(?:\s+(\w+))?)?)?"
+)
+# cheap pre-check before the top-level INTO scan of a SELECT
+_INTO_WORD = re.compile(r"\bINTO\b", re.I)
+
+
+def _statement(query: str) -> tuple[str, str, str]:
+    """``(key, kind, handler)`` of the ``_STATEMENTS`` entry ``query``
+    starts with; ``("", "SPARK", "")`` when it starts with none."""
+    m = _LEAD_WORDS.match(query)
+    if m is not None:
+        key = ""
+        for w in m.groups():
+            if w is None:
+                break
+            key = f"{key} {w.upper()}" if key else w.upper()
+            entry = _STATEMENTS.get(key)
+            if entry is not None:
+                return (key, *entry)
+    return ("", "SPARK", "")
+
 
 # keywords that can directly precede a PREFIX operator (so a ``~``
 # after one of these is Postgres's bitwise NOT, not a regex match)
@@ -1865,37 +1965,44 @@ class SqlRouterMixin:
         executes (the reference's pg_duckdb interception analog — here the
         'interception' is just name resolution; Catalyst is the executor).
 
-        DML, DDL, and CALL statements route to the mirror-maintenance
-        paths — the complete statement surface the reference's regress
-        corpus exercises (reference tests/pg_regress/sql/sanity.sql and
-        partitioned_table.sql replay statement-for-statement,
+        The statement's leading keyword(s) pick its route from the one
+        statement table, ``_STATEMENTS`` — the reference's regress
+        corpus replays through it statement-for-statement (reference
+        tests/pg_regress/sql/sanity.sql and partitioned_table.sql,
         tests/test_regress_replay.py):
 
-        - ``INSERT INTO t [AS a] [(cols)] VALUES ... | SELECT ...``
-          → :meth:`insert` (positional matching, unlisted columns
-          NULL); with ``ON CONFLICT [(pk)] DO NOTHING | DO UPDATE SET
-          ... [WHERE]`` → the Postgres upsert on one CDC batch;
-        - ``UPDATE t [AS a] SET ... [FROM items] [WHERE]`` →
-          :meth:`update_where`, or the join-update compile path;
-        - ``DELETE FROM t [AS a] [USING items] [WHERE]`` →
-          :meth:`delete_where`, or the join-delete compile path;
-        - ``MERGE INTO ...`` → :meth:`_sql_merge` (ordered
-          first-match-wins WHEN clauses, NOT MATCHED BY SOURCE);
-        - ``CREATE TABLE`` (defs/CTAS) / ``DROP`` / ``TRUNCATE`` /
-          ``ALTER RENAME|ADD|DROP COLUMN`` → :meth:`_sql_ddl`;
-        - ``CALL mooncake.<proc>(...)`` → :meth:`_sql_call`
-          (create_table from a mirror source creates a FOLLOWER).
+        - reads: ``SELECT`` (plus ``set_config()``, a standalone
+          ``nextval/currval/setval/lastval`` and ``SELECT ... INTO``),
+          ``WITH``, ``VALUES``, ``TABLE``, ``(`` → Spark SQL;
+        - DML: ``INSERT [ON CONFLICT]`` / ``UPDATE [FROM]`` /
+          ``DELETE [USING]`` / ``MERGE`` → :meth:`_sql_dml` (one CDC
+          batch each), ``COPY`` → :meth:`_sql_copy`, ``CALL
+          mooncake.<proc>(...)`` → :meth:`_sql_call`;
+        - DDL: ``CREATE/DROP/ALTER TABLE``, ``TRUNCATE``, ``CREATE
+          [UNIQUE] INDEX`` / ``DROP INDEX``, ``COMMENT ON``, ``CREATE
+          [OR REPLACE] VIEW`` / ``DROP VIEW``, ``CREATE/DROP/REFRESH
+          MATERIALIZED VIEW``, ``ALTER [MATERIALIZED] VIEW ... OWNER
+          TO``, ``CREATE/ALTER/DROP SEQUENCE``, ``CREATE/DROP/ALTER
+          SCHEMA``, ``CREATE/DROP EXTENSION``, ``GRANT`` / ``REVOKE``;
+        - maintenance: ``VACUUM``, ``ANALYZE``, ``CLUSTER``, ``REINDEX``;
+        - session: ``SET`` / ``RESET`` / ``SHOW`` / ``DISCARD``,
+          ``PREPARE`` / ``EXECUTE`` / ``DEALLOCATE``, ``DECLARE`` /
+          ``FETCH`` / ``MOVE`` / ``CLOSE``, ``LOCK``, ``EXPLAIN``,
+          ``DESCRIBE``;
+        - transaction control: ``BEGIN`` / ``START TRANSACTION`` /
+          ``COMMIT`` / ``END`` / ``ROLLBACK [TO]`` / ``ABORT`` /
+          ``SAVEPOINT`` / ``RELEASE`` → :meth:`_sql_txn`.
+
+        Anything else (``CREATE TEMP VIEW``, ``CACHE TABLE``, ...) and
+        the Spark spellings a handler declines (``DECLARE VARIABLE``,
+        ``ANALYZE TABLE``, multi-word ``SHOW``, ``DESCRIBE`` / ``DROP
+        VIEW`` of a non-mirror, a ``CALL`` outside ``mooncake.``) go to
+        Spark SQL.
 
         DML/DDL return a one-row DataFrame (statement, table, version);
         attached exports, materialized views, and follower mirrors stay
-        current exactly as with the method API.
-
-        ``BEGIN`` / ``COMMIT`` / ``ROLLBACK`` open a flat transaction
-        block (:meth:`_sql_txn`): DML inside it stages against an
-        in-session overlay (reads — SELECT and DML compilation — see
-        the transaction's own writes), nothing touches any mirror until
-        COMMIT, and ROLLBACK leaves no trace.  A failed statement
-        aborts the block, Postgres-style.
+        current exactly as with the method API.  A failed statement
+        aborts an open transaction block, Postgres-style.
 
         ``params`` binds Postgres ``$1..$n`` markers to Python values
         (rendered as typed literals — values only, never identifiers,
@@ -1909,266 +2016,149 @@ class SqlRouterMixin:
         query = _strip_comments(query)
         if params is not None:
             query = _bind_params(query, params)
-        txm = _TXN_KIND.match(query)
-        if txm:
-            return self._sql_txn(query, txm.group(1).upper())
-        if self._txn is not None and self._txn["aborted"]:
+        _, kind, handler = _statement(query)
+        if kind == "TXN" or self._txn is None:
+            return self._sql_dispatch(query, handler, pin, copy_data)
+        if self._txn["aborted"]:
             raise ValueError(
                 "current transaction is aborted, commands ignored until "
                 "end of transaction block (issue ROLLBACK)"
             )
-        if self._txn is not None:
-            # Postgres: ANY failed statement poisons the open block (not
-            # only the ones that reach staging — parse errors and unknown
-            # tables too); ROLLBACK TO a savepoint un-poisons it
-            try:
-                return self._sql_dispatch(query, pin, copy_data)
-            except Exception as e:
-                raise self._txn_abort(e)
-        return self._sql_dispatch(query, pin, copy_data)
+        # Postgres: ANY failed statement poisons the open block (not
+        # only the ones that reach staging — parse errors and unknown
+        # tables too); ROLLBACK TO a savepoint un-poisons it
+        try:
+            return self._sql_dispatch(query, handler, pin, copy_data)
+        except Exception as e:
+            raise self._txn_abort(e)
+
     def _sql_dispatch(
         self,
         query: str,
+        handler: str,
         pin: Optional[dict[str, int]],
         copy_data: Optional[Any],
     ) -> DataFrame:
-        # sequence DDL + standalone sequence-function SELECTs (round
-        # 16): CREATE/ALTER/DROP SEQUENCE and the pg_dump spellings
-        # SELECT pg_catalog.setval('s', n, true) / SELECT nextval('s')
-        seq_df = self._sql_sequence_statement(query)
-        if seq_df is not None:
-            return seq_df
-        # admin/namespace statements (round 16): CREATE/DROP SCHEMA,
-        # CREATE/DROP EXTENSION, set_config(), OWNER TO, GRANT/REVOKE —
-        # the rest of a verbatim pg_dump preamble/postamble
-        adm_df = self._sql_admin_statement(query)
-        if adm_df is not None:
-            return adm_df
-        kind = _DML_KIND.match(query)
-        if kind:
-            return self._sql_dml(query, kind.group(1).upper(), pin=pin)
-        ddl = _DDL_KIND.match(query)
-        if ddl:
-            word = next(g for g in ddl.groups() if g).upper()
-            # CREATE/DROP TABLE, TRUNCATE, and (round 15) ALTER ADD
-            # COLUMN / ADD CHECK stage transactionally on UNTOUCHED
-            # tables — each ALTER shape in _sql_ddl decides (the
-            # staged-batch invalidation hazard only exists when the
-            # target already has staged changes in the block)
-            return self._sql_ddl(query, word, pin=pin)
-        call = _CALL_KIND.match(query)
-        if call:
-            proc = call.group(1).lower()
-            if self._txn is not None and proc not in (
-                "drop_table", "load_files"
-            ):
-                # the procedures with transactional semantics stage
-                # (drop_table ≡ DROP TABLE, load_files ≡ COPY FROM —
-                # round 15, VERDICT r14 missing #3); the maintenance
-                # ones refuse the way Postgres refuses VACUUM in a
-                # transaction block
-                self._txn["aborted"] = True
-                raise ValueError(
-                    f"CALL mooncake.{proc} is not supported inside a "
-                    "transaction block (maintenance procedure, like "
-                    "VACUUM); COMMIT or ROLLBACK first"
-                )
-            return self._sql_call(proc, call.group(2))
-        if _COPY_KIND.match(query):
-            return self._sql_copy(query, copy_data=copy_data)
-        if _EXPLAIN_KIND.match(query):
-            return self._sql_explain(query, pin)
-        pm = _PREPARE_KIND.match(query)
-        if pm:
-            return self._sql_prepare(
-                pm.group(1), pm.group(2), pm.group(3)
+        """Run ``query`` through its ``_STATEMENTS`` handler; with no
+        handler, or one that declines (None), Spark SQL runs it."""
+        if handler:
+            df = getattr(self, handler)(query, pin, copy_data)
+            if df is not None:
+                return df
+        return self._run_select(query, pin)
+
+    def _sql_select(
+        self, query: str, pin: Optional[dict[str, int]], _copy_data=None
+    ) -> Optional[DataFrame]:
+        """The SELECT shapes the engine runs itself: ``set_config()``,
+        a standalone sequence function, and Postgres ``SELECT ... INTO
+        [TEMP] [TABLE] t FROM ...`` — CTAS spelled inline, rebuilt as
+        the plain SELECT with the INTO clause excised and routed to
+        create_table.  Any other SELECT is Spark's (None)."""
+        df = self._sql_set_config(query)
+        if df is None:
+            df = self._sql_sequence_function(query)
+        if df is not None or not _INTO_WORD.search(query):
+            return df
+        qq = query.strip().rstrip(";")
+        ii = _find_top_keyword(qq, "INTO")
+        if ii < 0:
+            return None
+        im = re.match(
+            r"INTO\s+(?:(?:TEMPORARY|TEMP|UNLOGGED)\s+)?"
+            r"(?:TABLE\s+)?([\w.\"]+)\s*",
+            qq[ii:], re.I,
+        )
+        if not im:
+            raise ValueError(f"cannot parse SELECT INTO: {query!r}")
+        t = im.group(1).strip('"')
+        if self._txn is not None:
+            raise ValueError(
+                "SELECT INTO (DDL) is not supported inside a "
+                "transaction block"
             )
-        em = _EXECUTE_KIND.match(query)
-        if em:
-            return self._sql_execute(em.group(1), em.group(2), pin, copy_data)
-        dm = _DEALLOCATE_KIND.match(query)
-        if dm:
-            return self._sql_deallocate(dm.group(1))
-        sm = _SET_KIND.match(query)
-        if sm:
-            return self._sql_set(sm, query)
-        rsm = _RESET_KIND.match(query)
-        if rsm:
-            return self._sql_reset(rsm.group(1))
-        dsm = re.match(
-            r"^\s*DISCARD\s+(ALL|PLANS|SEQUENCES|TEMPORARY|TEMP)\s*;?\s*$",
-            query, re.I,
-        )
-        if dsm:
-            return self._sql_discard(dsm.group(1).upper())
-        if _DECLARE_KIND.match(query) and not re.match(
-            r"^\s*DECLARE\s+(?:OR\s+REPLACE\s+)?VARIABLE\b"
-            r"(?!\s+(?:BINARY\s+|INSENSITIVE\s+|ASENSITIVE\s+"
-            r"|NO\s+SCROLL\s+|SCROLL\s+)*CURSOR\b)",
-            query, re.I,
-        ):
-            # DECLARE [OR REPLACE] VARIABLE is Spark's own session
-            # variable DDL — falls through; everything else DECLAREd is
-            # a Postgres cursor (including one unwisely named
-            # "variable", which the lookahead spots by its CURSOR
-            # keyword)
-            return self._sql_declare_cursor(query, pin)
-        fm = _FETCH_MOVE_KIND.match(query)
-        if fm:
-            return self._sql_fetch_move(query, fm.group(1).upper())
-        if _CLOSE_KIND.match(query):
-            return self._sql_close_cursor(query)
-        if _LOCK_KIND.match(query):
-            return self._sql_lock(query)
-        if re.match(r"^\s*CREATE\s+(?:UNIQUE\s+)?INDEX\b", query, re.I):
-            return self._sql_create_index(query)
-        if re.match(r"^\s*DROP\s+INDEX\b", query, re.I):
-            return self._sql_drop_index(query)
-        if re.match(r"^\s*REINDEX\b", query, re.I):
-            return self._sql_reindex(query)
-        if re.match(r"^\s*COMMENT\s+ON\b", query, re.I):
-            return self._sql_comment(query)
-        mv = re.match(
-            rf"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?"
-            rf"{_SQL_TABLE}\s+AS\s+(.*?);?\s*$",
-            query, re.I | re.S,
-        )
-        if mv:
-            # keep quoting intact: parse_table_name preserves quoted case
-            return self._sql_create_matview(
-                bool(mv.group(1)), mv.group(2), mv.group(3)
-            )
-        mv = re.match(
-            rf"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?"
-            rf"{_SQL_TABLE}\s*;?\s*$",
-            query, re.I,
-        )
-        if mv:
-            return self._sql_drop_matview(bool(mv.group(1)), mv.group(2))
-        mv = re.match(
-            rf"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(?:CONCURRENTLY\s+)?"
-            rf"{_SQL_TABLE}\s*;?\s*$",
-            query, re.I,
-        )
-        if mv:
-            return self._sql_refresh_matview(mv.group(1))
-        vm = re.match(
-            rf"^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+{_SQL_TABLE}\s*"
-            rf"(?:\(([^)]*)\)\s*)?AS\s+(.*?);?\s*$",
-            query, re.I | re.S,
-        )
-        if vm:
-            # Postgres CREATE VIEW persists in the catalog; the Spark
-            # TEMP/TEMPORARY VIEW spellings do not match and pass through
-            cols = (
-                [c.strip().strip('"') for c in vm.group(3).split(",")]
-                if vm.group(3) else None
-            )
-            return self._sql_create_view(
-                bool(vm.group(1)), vm.group(2).strip('"'),
-                vm.group(4).strip(), cols,
-            )
+        name = parse_table_name(t)
+        if name in self.catalog.list_tables():
+            raise ValueError(f'relation "{name}" already exists')
+        sel = qq[:ii] + qq[ii + im.end():]
+        src = self._run_select(sel, pin)
+        self.create_table(t, source_df=src)
+        return self._dml_result("SELECT INTO", t, 1)
+
+    def _sql_drop_view(self, query: str, *_) -> Optional[DataFrame]:
+        """``DROP VIEW [IF EXISTS] v`` of a catalog view; a name the
+        catalog does not know is Spark's (temp views)."""
         vm = re.match(
             r"^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.\"]+)\s*;?\s*$",
             query, re.I,
         )
-        if vm:
-            name = parse_table_name(vm.group(2).strip('"'))
-            entry = self.catalog.list_tables().get(name)
-            if entry is not None:
-                kind = (entry.get("table_config") or {}).get("kind")
-                if kind != "logical_view":
-                    # Postgres: DROP VIEW on a table/matview errors; it
-                    # must never fall through and silently drop the
-                    # engine's internal resolution temp view instead
-                    raise ValueError(
-                        f'"{name}" is not a view '
-                        "(use DROP TABLE / drop_table)"
-                    )
-                self.catalog.drop(name)
-                # resolution may have left session temp views
-                self._drop_resolution_views(name)
-                return self._dml_result("DROP VIEW", name, 1)
-            # not a catalog relation — Spark temp views drop below
+        if not vm:
+            return None
+        name = parse_table_name(vm.group(2).strip('"'))
+        entry = self.catalog.list_tables().get(name)
+        if entry is None:
+            return None
+        kind = (entry.get("table_config") or {}).get("kind")
+        if kind != "logical_view":
+            # Postgres: DROP VIEW on a table/matview errors; it must
+            # never fall through and silently drop the engine's
+            # internal resolution temp view instead
+            raise ValueError(
+                f'"{name}" is not a view (use DROP TABLE / drop_table)'
+            )
+        self.catalog.drop(name)
+        # resolution may have left session temp views
+        self._drop_resolution_views(name)
+        return self._dml_result("DROP VIEW", name, 1)
+
+    def _sql_cluster(self, query: str, *_) -> Optional[DataFrame]:
+        """``CLUSTER [VERBOSE] t [USING idx]`` — Postgres physically
+        orders the heap by an index; the analogue is a sort-clustered
+        optimize on the primary key (disjoint file stat ranges →
+        maximum scan pruning)."""
         cm = re.match(
             r"^\s*CLUSTER\s+(?:VERBOSE\s+)?([\w.\"]+)"
             r"(?:\s+USING\s+\w+)?\s*;?\s*$",
             query, re.I,
         )
-        if cm:
-            # Postgres CLUSTER physically orders the heap by an index;
-            # the analogue is a sort-clustered optimize on the primary
-            # key (disjoint file stat ranges → maximum scan pruning)
-            t = cm.group(1).strip('"')
-            pk = self._moontable(t).primary_key()
-            if not pk:
-                raise ValueError(
-                    f"there is no previously clustered index for table "
-                    f'"{self._canon(t)}" (CLUSTER needs a primary key here)'
-                )
-            v = self.optimize_table(t, "sort:" + ",".join(pk))
-            return self._dml_result("CLUSTER", t, v)
-        # ANALYZE TABLE is Spark's own spelling — passes through below
-        mm = re.match(
-            r"^\s*(VACUUM|ANALYZE(?!\s+TABLE\b))\b(.*)$", query, re.I | re.S
-        )
-        if mm:
-            if self._txn is not None:
-                self._txn["aborted"] = True
-                raise ValueError(
-                    f"{mm.group(1).upper()} cannot run inside a "
-                    "transaction block"
-                )
-            return self._sql_maintenance(
-                mm.group(1).upper(), mm.group(2).strip()
+        if not cm:
+            return None
+        t = cm.group(1).strip('"')
+        pk = self._moontable(t).primary_key()
+        if not pk:
+            raise ValueError(
+                f"there is no previously clustered index for table "
+                f'"{self._canon(t)}" (CLUSTER needs a primary key here)'
             )
-        if _SHOW_TABLES_KIND.match(query):
+        v = self.optimize_table(t, "sort:" + ",".join(pk))
+        return self._dml_result("CLUSTER", t, v)
+
+    def _sql_show(self, query: str, *_) -> Optional[DataFrame]:
+        """``SHOW TABLES`` lists the mirrors; ``SHOW <guc> | ALL |
+        TIME ZONE`` reads a setting.  Spark's multi-word SHOW spellings
+        (SHOW DATABASES / VIEWS / PARTITIONS t ...) are Spark's."""
+        if re.match(r"^\s*SHOW\s+TABLES\s*;?\s*$", query, re.I):
             return self.list_tables().select(
                 F.col("table").alias("table_name")
             )
-        shm = _SHOW_GUC_KIND.match(query)
-        if shm and (
-            shm.group(1).split()[0].upper() not in _SHOW_SPARK_WORDS
-        ):
+        shm = _SHOW_GUC_RE.match(query)
+        if shm and shm.group(1).split()[0].upper() not in _SHOW_SPARK_WORDS:
             return self._sql_show_guc(shm.group(1))
-        desc = _DESCRIBE_KIND.match(query)
-        if desc:
-            try:
-                name = self._canon(desc.group(1).replace('"', ""))
-            except ValueError:
-                name = None
-            if name is not None and name in self.catalog.list_tables():
-                return self._describe_table(name)
-            # not a mirror — Spark's own DESCRIBE (temp views, etc.)
-        if re.match(r"^\s*SELECT\b", query, re.I):
-            qq = query.strip().rstrip(";")
-            ii = _find_top_keyword(qq, "INTO")
-            if ii >= 0:
-                # Postgres ``SELECT ... INTO [TEMP] [TABLE] t FROM ...``
-                # — CTAS spelled inline.  Rebuild the plain SELECT with
-                # the INTO clause excised and route to create_table.
-                im = re.match(
-                    r"INTO\s+(?:(?:TEMPORARY|TEMP|UNLOGGED)\s+)?"
-                    r"(?:TABLE\s+)?([\w.\"]+)\s*",
-                    qq[ii:], re.I,
-                )
-                if not im:
-                    raise ValueError(f"cannot parse SELECT INTO: {query!r}")
-                t = im.group(1).strip('"')
-                if self._txn is not None:
-                    self._txn["aborted"] = True
-                    raise ValueError(
-                        "SELECT INTO (DDL) is not supported inside a "
-                        "transaction block"
-                    )
-                name = parse_table_name(t)
-                if name in self.catalog.list_tables():
-                    raise ValueError(f'relation "{name}" already exists')
-                sel = qq[:ii] + qq[ii + im.end():]
-                src = self._run_select(sel, pin)
-                self.create_table(t, source_df=src)
-                return self._dml_result("SELECT INTO", t, 1)
-        return self._run_select(query, pin)
+        return None
+
+    def _sql_describe(self, query: str, *_) -> Optional[DataFrame]:
+        """``DESC[RIBE] [TABLE] <mirror>``; any other name is Spark's
+        own DESCRIBE (temp views, etc.)."""
+        desc = _DESCRIBE_RE.match(query)
+        if not desc:
+            return None
+        try:
+            name = self._canon(desc.group(1).replace('"', ""))
+        except ValueError:
+            return None
+        if name not in self.catalog.list_tables():
+            return None
+        return self._describe_table(name)
     def _run_select(
         self, query: str, pin: Optional[dict[str, int]]
     ) -> DataFrame:
@@ -2449,15 +2439,17 @@ class SqlRouterMixin:
             return prefix + rel
 
         return _sub_masked(pattern, repl, query)
-    def _sql_prepare(
-        self, name: str, types: Optional[str], stmt: str
-    ) -> DataFrame:
+    def _sql_prepare(self, query: str, *_) -> Optional[DataFrame]:
         """``PREPARE name [(types)] AS statement`` — session-scoped, the
         Postgres semantics: re-PREPARE of a live name errors; binding is
         by value, so the type LIST's only effect is its length (it
         governs EXECUTE arity — a declared parameter the body never
         references is legal).  The statement body is stored verbatim;
         ``$n`` markers bind at EXECUTE time."""
+        pm = _PREPARE_RE.match(query)
+        if pm is None:
+            return None
+        name, types, stmt = pm.groups()
         key = name.lower()
         if key in self._prepared:
             raise ValueError(f'prepared statement "{key}" already exists')
@@ -2489,11 +2481,10 @@ class SqlRouterMixin:
         )
     def _sql_execute(
         self,
-        name: str,
-        args_sql: Optional[str],
+        query: str,
         pin: Optional[dict[str, int]],
         copy_data: Optional[Any],
-    ) -> DataFrame:
+    ) -> Optional[DataFrame]:
         """``EXECUTE name(args)`` — evaluate each argument expression
         ONCE (Postgres's extended-protocol bind: parameters are values,
         not expression splices), then substitute the rendered literal
@@ -2506,6 +2497,10 @@ class SqlRouterMixin:
         argument referencing a target-table column must error (Postgres
         rejects column references in bind parameters) instead of being
         silently spliced into the statement's scope."""
+        em = _EXECUTE_RE.match(query)
+        if em is None:
+            return None  # EXECUTE IMMEDIATE is Spark's
+        name, args_sql = em.groups()
         key = name.lower()
         if key not in self._prepared:
             raise ValueError(f'prepared statement "{key}" does not exist')
@@ -2560,13 +2555,15 @@ class SqlRouterMixin:
                 ) from None
             for i, (slot, _text) in enumerate(exprs):
                 bound[slot] = f"({_render_literal(row[i])})"
-        return self._sql_dispatch(
-            _splice(stmt, [(s, e, bound[n - 1]) for (s, e), n in spans]),
-            pin, copy_data,
-        )
-    def _sql_deallocate(self, name: str) -> DataFrame:
+        stmt = _splice(stmt, [(s, e, bound[n - 1]) for (s, e), n in spans])
+        return self._sql_dispatch(stmt, _statement(stmt)[2], pin, copy_data)
+    def _sql_deallocate(self, query: str, *_) -> Optional[DataFrame]:
         """``DEALLOCATE [PREPARE] name | ALL`` — Postgres semantics
         (unknown name errors; ALL is idempotent)."""
+        dm = _DEALLOCATE_RE.match(query)
+        if dm is None:
+            return None
+        name = dm.group(1)
         if name.upper() == "ALL":
             dropped = sorted(self._prepared)
             self._prepared.clear()
@@ -2673,63 +2670,67 @@ class SqlRouterMixin:
                 self._guc_set(name, ent["committed"])
             else:
                 self._guc_set(name, ent["prior"])
-    def _sql_set(self, m: "re.Match", query: str) -> DataFrame:
-        scope = (m.group(1) or "SESSION").upper()
-        if m.group(2):
-            raw, value_text = "timezone", m.group(3)
-        else:
-            raw, value_text = m.group(4), m.group(5)
+    def _guc_name(self, raw: str) -> str:
+        """Canonical name of a known setting; an unknown one refuses."""
         name = self._guc_canon(raw)
         if not self._guc_known(name):
             raise ValueError(
                 f'unrecognized configuration parameter "{raw.strip()}"'
             )
-        t = value_text.strip().rstrip(";").strip()
-        if t.startswith("'") and t.endswith("'") and len(t) >= 2:
-            value: Optional[str] = t[1:-1].replace("''", "'")
-        elif t.upper() == "DEFAULT":
-            value = None
-        else:
-            value = t
+        return name
+
+    def _guc_assign(
+        self, name: str, value: Optional[str], local: bool
+    ) -> None:
+        """SET [LOCAL] (None = DEFAULT): validate, then apply, tracked in
+        an open block.  Postgres: SET LOCAL outside a block is a WARNING
+        and NO effect; applying it for the rest of the session would
+        diverge a replayed pg script."""
         if value is not None:
             value = self._guc_validate(name, value)
-        if scope == "LOCAL" and self._txn is None:
-            # Postgres: "SET LOCAL can only be used in transaction
-            # blocks" — a WARNING and NO effect; applying it for the
-            # rest of the session would diverge a replayed pg script
-            return self.spark.createDataFrame(
-                [("SET", name, self._guc_effective(name))],
-                "statement string, parameter string, value string",
-            )
+        if local and self._txn is None:
+            return
         if self._txn is not None:
-            self._guc_txn_track(name, scope == "LOCAL", value)
+            self._guc_txn_track(name, local, value)
         self._guc_set(name, value)
+
+    def _guc_row(self, stmt: str, param: str, value) -> DataFrame:
         return self.spark.createDataFrame(
-            [("SET", name, self._guc_effective(name))],
+            [(stmt, param, value)],
             "statement string, parameter string, value string",
         )
-    def _sql_reset(self, raw: str) -> DataFrame:
-        if raw.strip().upper() == "ALL":
-            for name in sorted(self._gucs):
-                if self._txn is not None:
-                    self._guc_txn_track(name, False, None)
-                self._guc_set(name, None)
-            return self.spark.createDataFrame(
-                [("RESET", "ALL", None)],
-                "statement string, parameter string, value string",
-            )
-        name = self._guc_canon(raw)
-        if not self._guc_known(name):
-            raise ValueError(
-                f'unrecognized configuration parameter "{raw.strip()}"'
-            )
-        if self._txn is not None:
-            self._guc_txn_track(name, False, None)
-        self._guc_set(name, None)
-        return self.spark.createDataFrame(
-            [("RESET", name, self._guc_effective(name))],
-            "statement string, parameter string, value string",
+
+    def _sql_set(self, query: str, *_) -> Optional[DataFrame]:
+        m = _SET_RE.match(query)
+        if m is None:
+            return None
+        raw, text = (
+            ("timezone", m.group(3)) if m.group(2)
+            else (m.group(4), m.group(5))
         )
+        name = self._guc_name(raw)
+        t = text.strip().rstrip(";").strip()
+        if t.startswith("'") and t.endswith("'") and len(t) >= 2:
+            value: Optional[str] = t[1:-1].replace("''", "'")
+        else:
+            value = None if t.upper() == "DEFAULT" else t
+        self._guc_assign(name, value, (m.group(1) or "").upper() == "LOCAL")
+        return self._guc_row("SET", name, self._guc_effective(name))
+
+    def _sql_reset(self, query: str, *_) -> Optional[DataFrame]:
+        rsm = _RESET_RE.match(query)
+        if rsm is None:
+            return None
+        raw = rsm.group(1)
+        all_ = raw.strip().upper() == "ALL"
+        for name in sorted(self._gucs) if all_ else [self._guc_name(raw)]:
+            if self._txn is not None:
+                self._guc_txn_track(name, False, None)
+            self._guc_set(name, None)
+        if all_:
+            return self._guc_row("RESET", "ALL", None)
+        return self._guc_row("RESET", name, self._guc_effective(name))
+
     def _sql_show_guc(self, raw: str) -> DataFrame:
         from pyspark.sql import types as T_
 
@@ -2742,16 +2743,12 @@ class SqlRouterMixin:
                 [(n, self._guc_effective(n)) for n in names],
                 "name string, setting string",
             )
-        name = self._guc_canon(raw)
-        if not self._guc_known(name):
-            raise ValueError(
-                f'unrecognized configuration parameter "{raw.strip()}"'
-            )
+        name = self._guc_name(raw)
         schema = T_.StructType([T_.StructField(name, T_.StringType())])
         return self.spark.createDataFrame(
             [(self._guc_effective(name),)], schema
         )
-    def _sql_discard(self, what: str) -> DataFrame:
+    def _sql_discard(self, query: str, *_) -> Optional[DataFrame]:
         """Postgres ``DISCARD ALL | PLANS | SEQUENCES | TEMP[ORARY]`` —
         the client-library session-reset spelling (connection poolers
         issue DISCARD ALL between checkouts).  ALL maps to
@@ -2760,6 +2757,13 @@ class SqlRouterMixin:
         discards the session's currval/lastval state (round 16 — real
         sequences now); TEMP drops the engine's pinned resolution temp
         views (they re-pin lazily)."""
+        dsm = re.match(
+            r"^\s*DISCARD\s+(ALL|PLANS|SEQUENCES|TEMPORARY|TEMP)\s*;?\s*$",
+            query, re.I,
+        )
+        if dsm is None:
+            return None
+        what = dsm.group(1).upper()
         if what == "ALL":
             if self._txn is not None:
                 raise self._txn_abort(ValueError(
@@ -2774,10 +2778,7 @@ class SqlRouterMixin:
         elif what in ("TEMP", "TEMPORARY"):
             for t in self.catalog.list_tables():
                 self._drop_resolution_views(t)
-        return self.spark.createDataFrame(
-            [("DISCARD", what, None)],
-            "statement string, parameter string, value string",
-        )
+        return self._guc_row("DISCARD", what, None)
 
     # ------------------------------------------------------------ cursors
 
@@ -2788,8 +2789,8 @@ class SqlRouterMixin:
         return tok[1:-1] if tok.startswith('"') else tok.lower()
 
     def _sql_declare_cursor(
-        self, query: str, pin: Optional[dict[str, int]]
-    ) -> DataFrame:
+        self, query: str, pin: Optional[dict[str, int]], _copy_data=None
+    ) -> Optional[DataFrame]:
         """``DECLARE name [BINARY] [[A|IN]SENSITIVE] [[NO] SCROLL]
         CURSOR [{WITH|WITHOUT} HOLD] FOR select`` — the Postgres cursor
         statement family (DECLARE/FETCH/MOVE/CLOSE; every psql script
@@ -2811,7 +2812,18 @@ class SqlRouterMixin:
         declared inside a transaction block; WITH HOLD survives COMMIT
         (the pinned plan stays valid — old snapshot files outlive the
         commit) but dies with a ROLLBACK of the creating block; a
-        duplicate name refuses."""
+        duplicate name refuses.
+
+        ``DECLARE [OR REPLACE] VARIABLE`` is Spark's own session
+        variable DDL (None); a cursor unwisely named "variable" is
+        still a cursor — the lookahead spots its CURSOR keyword."""
+        if re.match(
+            r"^\s*DECLARE\s+(?:OR\s+REPLACE\s+)?VARIABLE\b"
+            r"(?!\s+(?:BINARY\s+|INSENSITIVE\s+|ASENSITIVE\s+"
+            r"|NO\s+SCROLL\s+|SCROLL\s+)*CURSOR\b)",
+            query, re.I,
+        ):
+            return None
         m = re.match(
             r'^\s*DECLARE\s+("[^"]+"|[A-Za-z_]\w*)\s+'
             r"((?:BINARY\s+|INSENSITIVE\s+|ASENSITIVE\s+|"
@@ -2835,13 +2847,13 @@ class SqlRouterMixin:
             )
         if name in self._cursors:
             raise ValueError(f'cursor "{name}" already exists')
-        head = body.split(None, 1)[0].upper() if body else ""
-        if head == "TABLE":
-            body = "SELECT * FROM " + body.split(None, 1)[1]
-        elif head not in ("SELECT", "WITH", "VALUES"):
+        lead, kind, _ = _statement(body)
+        if kind != "READ":
             raise ValueError(
                 f"DECLARE CURSOR body must be a SELECT: {body!r}"
             )
+        if lead == "TABLE":
+            body = "SELECT * FROM " + body.split(None, 1)[1]
         df = self._run_select(body, pin)  # analyzes NOW (Postgres plans
         # the query at DECLARE; name/typo errors surface here)
         self._cursor_seq += 1
@@ -2852,7 +2864,7 @@ class SqlRouterMixin:
             "DECLARE CURSOR", f"cursor {name} declared"
         )
 
-    def _sql_fetch_move(self, query: str, word: str) -> DataFrame:
+    def _sql_fetch_move(self, query: str, *_) -> DataFrame:
         """``FETCH [direction [FROM|IN]] name`` returns the fetched rows
         as a DataFrame in the cursor's schema (empty past either end);
         ``MOVE`` repositions identically and reports the row count it
@@ -2860,6 +2872,7 @@ class SqlRouterMixin:
         LAST, ABSOLUTE n, RELATIVE n, count, ALL, FORWARD [n|ALL],
         BACKWARD [n|ALL]; backward motion on a NO SCROLL cursor refuses
         with Postgres's message."""
+        word = _statement(query)[0]
         m = re.match(
             rf"^\s*{word}\s+(.+?)\s*;?\s*$", query, re.I | re.S
         )
@@ -2900,37 +2913,17 @@ class SqlRouterMixin:
         if not u:
             return ("fwd", 1)
         if len(u) == 1:
-            w = u[0]
-            if w == "NEXT":
-                return ("fwd", 1)
-            if w == "PRIOR":
-                return ("bwd", 1)
-            if w == "FIRST":
-                return ("abs", 1)
-            if w == "LAST":
-                return ("abs", -1)
-            if w == "ALL":
-                return ("all_fwd", 0)
-            if w == "FORWARD":
-                return ("fwd", 1)
-            if w == "BACKWARD":
-                return ("bwd", 1)
-            return ("fwd", _int(w))
-        if len(u) == 2:
-            a, b = u
-            if a == "ABSOLUTE":
-                return ("abs", _int(b))
-            if a == "RELATIVE":
-                return ("rel", _int(b))
-            if a == "FORWARD":
-                return ("all_fwd", 0) if b == "ALL" else ("fwd", _int(b))
-            if a == "BACKWARD":
-                return ("all_bwd", 0) if b == "ALL" else ("bwd", _int(b))
+            return _FETCH_WORDS.get(u[0]) or ("fwd", _int(u[0]))
+        if len(u) == 2 and u[0] in _FETCH_COUNTED:
+            kind, all_kind = _FETCH_COUNTED[u[0]]
+            if u[1] == "ALL" and all_kind:
+                return (all_kind, 0)
+            return (kind, _int(u[1]))
         raise ValueError(
             f"cannot parse FETCH/MOVE direction in: {query!r}"
         )
 
-    def _sql_close_cursor(self, query: str) -> DataFrame:
+    def _sql_close_cursor(self, query: str, *_) -> DataFrame:
         """``CLOSE name | ALL`` — drop cursor state (the underlying
         iterator is abandoned; no further Spark jobs launch)."""
         m = re.match(
@@ -2949,7 +2942,7 @@ class SqlRouterMixin:
         del self._cursors[name]
         return self._txn_result("CLOSE", f"cursor {name} closed")
 
-    def _sql_lock(self, query: str) -> DataFrame:
+    def _sql_lock(self, query: str, *_) -> DataFrame:
         """``LOCK [TABLE] [ONLY] t [, ...] [IN <mode> MODE] [NOWAIT]``
         — a Postgres concurrency statement with nothing to lock in a
         single-session engine: the statement validates the way Postgres
@@ -3024,7 +3017,7 @@ class SqlRouterMixin:
             cons["indexes"] = idx
             self._set_constraints(t, cons)
 
-    def _sql_create_index(self, query: str) -> DataFrame:
+    def _sql_create_index(self, query: str, *_) -> DataFrame:
         """``CREATE [UNIQUE] INDEX [CONCURRENTLY] [IF NOT EXISTS]
         [name] ON [ONLY] t [USING method] (col | (expr) [ASC|DESC|NULLS
         ...], ...) [INCLUDE (...)] [WITH (...)] [WHERE pred]`` — the
@@ -3134,7 +3127,7 @@ class SqlRouterMixin:
         self._register_index(canon, iname, spec)
         return self._dml_result("CREATE INDEX", t, 1)
 
-    def _sql_drop_index(self, query: str) -> DataFrame:
+    def _sql_drop_index(self, query: str, *_) -> DataFrame:
         """``DROP INDEX [CONCURRENTLY] [IF EXISTS] name [, ...]
         [CASCADE|RESTRICT]`` — removes catalog entries; stages inside a
         transaction block (inert metadata, same as CREATE INDEX)."""
@@ -3171,7 +3164,7 @@ class SqlRouterMixin:
             -1 if self._txn is not None else dropped,
         )
 
-    def _sql_comment(self, query: str) -> DataFrame:
+    def _sql_comment(self, query: str, *_) -> DataFrame:
         """``COMMENT ON TABLE|VIEW|MATERIALIZED VIEW|COLUMN|INDEX|
         CONSTRAINT ... IS 'text' | NULL`` — pg_dump emits one per
         documented object, so dump replay needs the statement.  The
@@ -3294,7 +3287,7 @@ class SqlRouterMixin:
         cons["comments"] = com
         self._set_constraints(t, cons)
 
-    def _sql_reindex(self, query: str) -> DataFrame:
+    def _sql_reindex(self, query: str, *_) -> DataFrame:
         """``REINDEX [(opts)] {INDEX|TABLE|SCHEMA|DATABASE|SYSTEM}
         [CONCURRENTLY] name`` — validated acknowledgment (there is no
         b-tree to rebuild; the statement exists so maintenance scripts
@@ -3374,20 +3367,22 @@ class SqlRouterMixin:
                 del self._cursors[name]
 
     def _sql_explain(
-        self, query: str, pin: Optional[dict[str, int]]
+        self, query: str, pin: Optional[dict[str, int]], _copy_data=None
     ) -> DataFrame:
         """``EXPLAIN [ANALYZE] [VERBOSE|EXTENDED|FORMATTED|CODEGEN|COST]
         <statement>`` — the Postgres spelling over Spark's plan dump.
 
-        SELECT-shaped statements resolve mirror views exactly as a real
-        run would, then return Catalyst's plan one line per row (column
-        ``query_plan``, the Postgres column).  Default mode is
-        ``formatted``; VERBOSE maps to extended.  ``EXPLAIN ANALYZE``
-        additionally EXECUTES the statement (Postgres contract) and
-        appends an ``Execution: N rows in T ms`` tail line.  DML / DDL /
-        CALL / COPY statements describe their compiled route WITHOUT
-        executing (EXPLAIN of a write is read-only unless ANALYZE —
-        and ANALYZE of a write is refused rather than half-applied)."""
+        The statement table classifies the inner statement; EXPLAIN
+        never runs one it does not plan.  A READ (SELECT / WITH / VALUES
+        / TABLE / ``(``) resolves mirror views exactly as a real run
+        would and returns Catalyst's plan one line per row (column
+        ``query_plan``, the Postgres column); ``EXPLAIN ANALYZE`` also
+        EXECUTES it (Postgres contract) and appends an ``Execution: N
+        rows in T ms`` line.  A statement without an entry is planned by
+        Spark's own ``EXPLAIN <mode>``, which does not run a command.
+        Every other entry is an engine route, described and not
+        executed; ANALYZE of it is refused rather than half-applied.
+        Default mode is ``formatted``; VERBOSE maps to extended."""
         m = re.match(
             r"^\s*EXPLAIN\s+((?:(?:ANALYZE|VERBOSE|EXTENDED|FORMATTED|"
             r"CODEGEN|COST)\s+)*)(.*)$",
@@ -3401,27 +3396,20 @@ class SqlRouterMixin:
         if not inner:
             raise ValueError("EXPLAIN: empty statement")
         analyze = "ANALYZE" in opts
-        route = None
-        if _DML_KIND.match(inner):
-            route = ("DML", _DML_KIND.match(inner).group(1).upper())
-        elif _DDL_KIND.match(inner):
-            route = ("DDL", next(g for g in _DDL_KIND.match(inner).groups() if g).upper())
-        elif _CALL_KIND.match(inner):
-            route = ("CALL", _CALL_KIND.match(inner).group(1).lower())
-        elif _COPY_KIND.match(inner):
-            route = ("COPY", "COPY")
-        if route is not None:
-            if analyze:
-                raise ValueError(
-                    "EXPLAIN ANALYZE of a write statement is not "
-                    "supported: it would execute the write"
-                )
-            kind, word = route
+        key, kind, handler = _statement(inner)
+        if analyze and kind != "READ":
+            raise ValueError(
+                "EXPLAIN ANALYZE of a write statement is not "
+                "supported: it would execute the write"
+            )
+        if kind not in ("READ", "SPARK"):
+            detail = (
+                "compiled to one apply_changes CDC batch (exports / "
+                "materialized views / followers sync in the same call)"
+                if kind == "DML" else f"handled by {handler}"
+            )
             lines = [
-                f"Mooncake {kind} route: {word}",
-                "  compiled to one apply_changes CDC batch "
-                "(exports / materialized views / followers sync in the "
-                "same call); not executed",
+                f"Mooncake {kind} route: {key}", f"  {detail}; not executed",
             ]
             return self.spark.createDataFrame(
                 [(ln,) for ln in lines], "query_plan string"
@@ -3431,10 +3419,15 @@ class SqlRouterMixin:
             mode = "codegen"
         if "COST" in opts:
             mode = "cost"
-        df = self._run_select(inner, pin)
-        plan = df._jdf.queryExecution().explainString(
-            self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-        )
+        if kind == "SPARK":
+            # Spark's EXPLAIN plans a command without running it
+            plan = self._run_select(f"EXPLAIN {mode} {inner}", pin).first()[0]
+        else:
+            df = self._run_select(inner, pin)
+            plan = df._jdf.queryExecution().explainString(
+                self.spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                .fromString(mode)
+            )
         lines = [(ln,) for ln in plan.rstrip("\n").split("\n")]
         if analyze:
             import time as _time
@@ -3451,29 +3444,35 @@ class SqlRouterMixin:
         if s.startswith("array<"):
             return self._pg_type_name(dt.elementType) + "[]"
         return self._SPARK_TO_PG.get(s, s)
-    def _sql_create_view(
-        self,
-        replace: bool,
-        name: str,
-        select_sql: str,
-        columns: Optional[list[str]] = None,
-    ) -> DataFrame:
-        """``CREATE [OR REPLACE] VIEW name AS select`` — a LOGICAL view
-        persisted in the engine catalog (Postgres semantics: views
-        outlive the session, unlike Spark temp views).  The stored SQL
-        re-plans against the CURRENT base tables on every read — always
-        fresh, zero maintenance state (contrast
+    def _sql_create_view(self, query: str, *_) -> Optional[DataFrame]:
+        """``CREATE [OR REPLACE] VIEW name [(cols)] AS select`` — a
+        LOGICAL view persisted in the engine catalog (Postgres
+        semantics: views outlive the session, unlike Spark temp views).
+        The stored SQL re-plans against the CURRENT base tables on every
+        read — always fresh, zero maintenance state (contrast
         :meth:`create_materialized_view`, which folds the change feed).
         Name resolution is the mirror machinery itself: the view name
         resolves through :meth:`table`, nested views resolve
         recursively with a cycle guard."""
+        vm = re.match(
+            rf"^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+{_SQL_TABLE}\s*"
+            rf"(?:\(([^)]*)\)\s*)?AS\s+(.*?);?\s*$",
+            query, re.I | re.S,
+        )
+        if vm is None:
+            return None
+        replace, name = bool(vm.group(1)), vm.group(2).strip('"')
+        select_sql = vm.group(4).strip()
+        columns = (
+            [c.strip().strip('"') for c in vm.group(3).split(",")]
+            if vm.group(3) else None
+        )
         if self._txn is not None:
-            self._txn["aborted"] = True
             raise ValueError(
                 "CREATE VIEW (DDL) is not supported inside a "
                 "transaction block"
             )
-        if not re.match(r"(SELECT|WITH|VALUES)\b", select_sql, re.I):
+        if _statement(select_sql)[1] != "READ":
             raise ValueError(
                 f"CREATE VIEW body must be a SELECT: {select_sql!r}"
             )
@@ -3605,17 +3604,23 @@ class SqlRouterMixin:
             )
         return base, group_by, aggs, where
 
-    def _sql_create_matview(
-        self, if_not_exists: bool, name: str, sel: str
-    ) -> DataFrame:
+    def _sql_create_matview(self, query: str, *_) -> Optional[DataFrame]:
         """``CREATE MATERIALIZED VIEW [IF NOT EXISTS] name AS SELECT
         ... FROM mirror [WHERE ...] GROUP BY ...`` — the Postgres
         matview spelling over :meth:`create_materialized_view`: the
         view is INCREMENTALLY maintained from the base's change feed on
         every commit (Postgres matviews go stale until REFRESH; here
         REFRESH MATERIALIZED VIEW exists but is normally a no-op)."""
+        mv = re.match(
+            rf"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?"
+            rf"{_SQL_TABLE}\s+AS\s+(.*?);?\s*$",
+            query, re.I | re.S,
+        )
+        if mv is None:
+            return None
+        # keep quoting intact: parse_table_name preserves quoted case
+        if_not_exists, name, sel = bool(mv.group(1)), mv.group(2), mv.group(3)
         if self._txn is not None:
-            self._txn["aborted"] = True
             raise ValueError(
                 "CREATE MATERIALIZED VIEW (DDL) is not supported inside "
                 "a transaction block"
@@ -3639,9 +3644,16 @@ class SqlRouterMixin:
         )
         return self._dml_result("CREATE MATERIALIZED VIEW", canon, 1)
 
-    def _sql_drop_matview(self, if_exists: bool, name: str) -> DataFrame:
+    def _sql_drop_matview(self, query: str, *_) -> Optional[DataFrame]:
+        mv = re.match(
+            rf"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?"
+            rf"{_SQL_TABLE}\s*;?\s*$",
+            query, re.I,
+        )
+        if mv is None:
+            return None
+        if_exists, name = bool(mv.group(1)), mv.group(2)
         if self._txn is not None:
-            self._txn["aborted"] = True
             raise ValueError(
                 "DROP MATERIALIZED VIEW (DDL) is not supported inside "
                 "a transaction block"
@@ -3662,13 +3674,20 @@ class SqlRouterMixin:
         self.drop_table(canon)
         return self._dml_result("DROP MATERIALIZED VIEW", canon, 1)
 
-    def _sql_refresh_matview(self, name: str) -> DataFrame:
+    def _sql_refresh_matview(self, query: str, *_) -> Optional[DataFrame]:
         """``REFRESH MATERIALIZED VIEW [CONCURRENTLY] name`` — folds any
         unapplied base changes.  The engine refreshes views inside every
         commit, so this is normally a no-op returning the current base
         version — but it IS the recovery path when a base was written by
         a session that crashed between the merge and the view fold."""
-        canon = self._canon(name)
+        mv = re.match(
+            rf"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(?:CONCURRENTLY\s+)?"
+            rf"{_SQL_TABLE}\s*;?\s*$",
+            query, re.I,
+        )
+        if mv is None:
+            return None
+        canon = self._canon(mv.group(1))
         entry = self.catalog.get(canon)
         if (entry.get("table_config") or {}).get("kind") != "mview":
             raise ValueError(
@@ -3677,7 +3696,7 @@ class SqlRouterMixin:
         v = self.refresh_materialized_view(canon)
         return self._dml_result("REFRESH MATERIALIZED VIEW", canon, v)
 
-    def _sql_maintenance(self, kind: str, rest: str) -> DataFrame:
+    def _sql_maintenance(self, query: str, *_) -> Optional[DataFrame]:
         """``VACUUM [(opts)] [FULL|FREEZE|VERBOSE|ANALYZE] [t[, t2]]``
         and ``ANALYZE [VERBOSE] [t [(cols)]]`` — the Postgres
         maintenance spellings a replayed pg script contains.
@@ -3690,7 +3709,18 @@ class SqlRouterMixin:
         per-file stat envelopes, bloom sidecars, and zone maps are
         maintained transactionally on EVERY commit (storage.py
         _stage_files), so there is never a stale-stats state to repair —
-        the statement exists so habitual `VACUUM ANALYZE` scripts run."""
+        the statement exists so habitual `VACUUM ANALYZE` scripts run.
+        ``ANALYZE TABLE`` is Spark's own spelling (None)."""
+        mm = re.match(
+            r"^\s*(VACUUM|ANALYZE(?!\s+TABLE\b))\b(.*)$", query, re.I | re.S
+        )
+        if mm is None:
+            return None
+        kind, rest = mm.group(1).upper(), mm.group(2).strip()
+        if self._txn is not None:
+            raise ValueError(
+                f"{kind} cannot run inside a transaction block"
+            )
         if rest.startswith("("):
             close = rest.index(")")
             rest = rest[close + 1:].strip()
@@ -4399,7 +4429,7 @@ class SqlRouterMixin:
             "column_name string, ordinal_position int, data_type string, "
             "is_nullable string, column_default string",
         )
-    def _sql_txn(self, query: str, word: str) -> DataFrame:
+    def _sql_txn(self, query: str, *_) -> DataFrame:
         """Flat ``BEGIN .. COMMIT/ROLLBACK`` blocks — the reference's
         transactional-DML contract (reference CHANGELOG.md:22: inserts/
         updates/deletes replicate transactionally) re-expressed for a
@@ -4438,6 +4468,7 @@ class SqlRouterMixin:
         failed block (the statement's main use in Postgres scripts),
         ``RELEASE`` keeps the changes and destroys the savepoint and
         every later one."""
+        word = _statement(query)[0]
         q = query.strip().rstrip(";").strip()
         if word == "SAVEPOINT":
             m2 = re.match(r"SAVEPOINT\s+([A-Za-z_][A-Za-z0-9_]*)$", q, re.I)
@@ -4499,14 +4530,7 @@ class SqlRouterMixin:
                 ))
             name = m2.group(1).lower()
             sps = self._txn["savepoints"]
-            idx = next(
-                (i for i in range(len(sps) - 1, -1, -1)
-                 if sps[i][0] == name), None,
-            )
-            if idx is None:
-                raise self._txn_abort(ValueError(
-                    f"savepoint {name!r} does not exist"
-                ))
+            idx = self._txn_savepoint(name)
             # keep the changes; destroy this savepoint and every later
             # one — an older shadowed same-name savepoint resurfaces
             del sps[idx:]
@@ -4558,14 +4582,7 @@ class SqlRouterMixin:
                     "COMMIT", "no transaction in progress"
                 )
             if self._txn["aborted"]:
-                txn, self._txn = self._txn, None
-                self._guc_txn_unwind(txn, committed=False)
-                self._txn_close_cursors(txn, committed=False)
-                self._seq_txn_unwind(txn)
-                self._txn_unregister_created_views(
-                    set(txn.get("created", {}))
-                    | set(txn.get("dropped", set()))
-                )
+                self._txn_discard()
                 return self._txn_result(
                     "ROLLBACK", "aborted transaction rolled back"
                 )
@@ -4592,14 +4609,7 @@ class SqlRouterMixin:
                 )
             name = m2.group(1).lower()
             sps = self._txn["savepoints"]
-            idx = next(
-                (i for i in range(len(sps) - 1, -1, -1)
-                 if sps[i][0] == name), None,
-            )
-            if idx is None:
-                raise self._txn_abort(ValueError(
-                    f"savepoint {name!r} does not exist"
-                ))
+            idx = self._txn_savepoint(name)
             (_, length, overlay, sp_gucs, sp_track,
              sp_created, sp_dropped, sp_altered, sp_cursor_seq,
              sp_seq_undo_len) = sps[idx]
@@ -4628,25 +4638,36 @@ class SqlRouterMixin:
             return self._txn_result(
                 "ROLLBACK", f"rolled back to savepoint {name}"
             )
-        txn, self._txn = self._txn, None
-        if txn is not None:
-            self._guc_txn_unwind(txn, committed=False)
-            self._txn_close_cursors(txn, committed=False)
-            self._seq_txn_unwind(txn)
-            self._txn_unregister_created_views(
-                set(txn.get("created", {}))
-                | set(txn.get("dropped", set()))
-            )
+        open_block = self._txn is not None
+        if open_block:
+            self._txn_discard()
         return self._txn_result(
             "ROLLBACK",
-            "transaction discarded" if txn is not None
+            "transaction discarded" if open_block
             else "no transaction in progress",
         )
+
+    def _txn_savepoint(self, name: str) -> int:
+        """Index of the newest savepoint called ``name`` (a re-used name
+        shadows the older one); a missing one aborts the block."""
+        sps = self._txn["savepoints"]
+        for i in range(len(sps) - 1, -1, -1):
+            if sps[i][0] == name:
+                return i
+        raise self._txn_abort(ValueError(f"savepoint {name!r} does not exist"))
+
+    def _txn_discard(self) -> None:
+        """End the open block without applying it: unwind its GUCs,
+        cursors, sequence DDL and staged-table views."""
+        txn, self._txn = self._txn, None
+        self._guc_txn_unwind(txn, committed=False)
+        self._txn_close_cursors(txn, committed=False)
+        self._seq_txn_unwind(txn)
+        self._txn_unregister_created_views(
+            set(txn.get("created", {})) | set(txn.get("dropped", set()))
+        )
     def _sql_dml(
-        self,
-        query: str,
-        kind: str,
-        pin: Optional[dict[str, int]] = None,
+        self, query: str, pin: Optional[dict[str, int]] = None, *_
     ) -> DataFrame:
         """Route one SQL DML statement to the engine's maintenance paths
         (see :meth:`sql`).  The parser is deliberately bounded: the
@@ -4659,6 +4680,7 @@ class SqlRouterMixin:
         (the SELECT resolves pinned snapshots); UPDATE/DELETE always
         act on the current state, so a pin there is an error rather
         than a silent no-op."""
+        kind = _statement(query)[0]
         q = query.strip().rstrip(";").strip()
         if pin and kind in ("UPDATE", "DELETE"):
             raise ValueError(
@@ -6259,14 +6281,13 @@ class SqlRouterMixin:
                 raise ValueError(_MERGE_MULTI_MATCH_MSG) from None
             raise
         return ret if ret is not None else self._dml_result("MERGE", t, v)
-    def _sql_ddl(
-        self, query: str, kind: str, pin: Optional[dict[str, int]] = None
+    def _sql_create_table(
+        self, query: str, pin: Optional[dict[str, int]] = None, *_
     ) -> DataFrame:
-        """Route one SQL DDL statement to the engine's lifecycle API —
-        completing the statement surface the reference's regress corpus
-        runs (reference tests/pg_regress/sql/sanity.sql:1,7 and
-        partitioned_table.sql wrap the DML in CREATE TABLE / DROP
-        TABLE).  Bounded shapes (anything else raises):
+        """``CREATE TABLE`` — the reference's regress corpus wraps its
+        DML in CREATE TABLE / DROP TABLE (reference
+        tests/pg_regress/sql/sanity.sql:1,7, partitioned_table.sql).
+        Bounded shapes (anything else raises):
 
         - ``CREATE TABLE [IF NOT EXISTS] t (col type [PRIMARY KEY|NOT
           NULL|DEFAULT expr|CHECK (expr)], ..., [PRIMARY KEY (a, b)],
@@ -6281,477 +6302,482 @@ class SqlRouterMixin:
           enforcing.
         - ``CREATE TABLE t AS SELECT ...`` (CTAS) → create_table with
           the query result as backfill (no primary key: append-only).
-        - ``DROP TABLE [IF EXISTS] t[, t2 ...]`` → :meth:`drop_table`.
-        - ``TRUNCATE [TABLE] t`` → delete of every row (exports/views
-          follow, same as DELETE without WHERE).
-        - ``ALTER TABLE t RENAME COLUMN a TO b`` → :meth:`rename_column`.
-        - ``ALTER TABLE t ADD COLUMN [IF NOT EXISTS] c type`` →
-          :meth:`add_column` (schema-evolving commit; exports widen in
-          step).
-        - ``ALTER TABLE t DROP COLUMN [IF EXISTS] c`` →
-          :meth:`drop_column` (schema-narrowing commit; exports drop by
-          field-id / column mapping — nothing rewritten)."""
+        - ``CREATE TABLE x (LIKE t [INCLUDING ...])`` and ``PARTITION
+          OF`` (a recorded no-op)."""
         q = query.strip().rstrip(";").strip()
-        if kind == "CREATE":
-            m = re.match(
-                rf"CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?{_SQL_TABLE}\s*(.*)$",
-                q, re.I | re.S,
+        m = re.match(
+            rf"CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?{_SQL_TABLE}\s*(.*)$",
+            q, re.I | re.S,
+        )
+        if not m:
+            raise ValueError(f"cannot parse CREATE TABLE: {q!r}")
+        if_not_exists, t, rest = bool(m.group(1)), m.group(2), m.group(3).strip()
+        name = parse_table_name(t)
+        in_txn = self._txn is not None
+        exists = (
+            name in self._txn.get("created", {})
+            or (
+                name in self.catalog.list_tables()
+                and name not in self._txn.get("dropped", set())
             )
-            if not m:
-                raise ValueError(f"cannot parse CREATE TABLE: {q!r}")
-            if_not_exists, t, rest = bool(m.group(1)), m.group(2), m.group(3).strip()
-            name = parse_table_name(t)
-            in_txn = self._txn is not None
-            exists = (
-                name in self._txn.get("created", {})
-                or (
-                    name in self.catalog.list_tables()
-                    and name not in self._txn.get("dropped", set())
-                )
-            ) if in_txn else name in self.catalog.list_tables()
-            if exists:
-                if if_not_exists:
-                    return self._dml_result("CREATE", t, 0)
-                raise ValueError(f"mirror {name!r} already registered")
-            if re.match(r"AS\s+(SELECT|WITH)\b", rest, re.I):
-                src = self.sql(re.sub(r"^AS\s+", "", rest, flags=re.I), pin=pin)
-                if in_txn:
-                    # CTAS in a block: the SELECT already resolved
-                    # against the overlay (read-your-writes); stage the
-                    # create + its backfill in statement order
-                    self._txn_stage_create(
-                        name, src.schema, None, None, False,
-                        backfill_df=src,
-                    )
-                    return self._dml_result("CREATE", t, -1)
-                self.create_table(t, source_df=src)
-                return self._dml_result("CREATE", t, 1)
-            if re.match(r"PARTITION\s+OF\b", rest, re.I):
-                # heap-side physical partitioning (reference
-                # partitioned_table.sql:2-3): the mirror is one logical
-                # table — child-partition DDL is a recorded no-op
+        ) if in_txn else name in self.catalog.list_tables()
+        if exists:
+            if if_not_exists:
                 return self._dml_result("CREATE", t, 0)
-            lk = re.match(
-                r"\(\s*LIKE\s+([\w.\"]+)\s*"
-                r"((?:INCLUDING\s+\w+\s*|EXCLUDING\s+\w+\s*)*)\)\s*$",
-                rest, re.I,
-            )
-            if lk:
-                # ``CREATE TABLE x (LIKE t [INCLUDING ...])`` — the app
-                # scaffold statement.  Schema always copies; INCLUDING
-                # DEFAULTS / CONSTRAINTS / INDEXES / ALL copy the named
-                # constraint classes (identity/sequence defaults are
-                # NOT copied — Postgres creates a fresh sequence only
-                # under INCLUDING IDENTITY, which refuses loudly here
-                # rather than silently sharing the source's sequence)
-                src_canon = self._canon(lk.group(1))
-                src_schema = self._moontable(src_canon).schema()
-                opts = {
-                    w.upper()
-                    for w in re.findall(
-                        r"(?:INCLUDING)\s+(\w+)", lk.group(2), re.I
-                    )
-                }
-                if "IDENTITY" in opts:
-                    raise ValueError(
-                        "CREATE TABLE (LIKE ... INCLUDING IDENTITY) is "
-                        "not supported; add the identity column with "
-                        "ALTER COLUMN ... ADD GENERATED afterwards"
-                    )
-                src_cons = dict(self._constraints(src_canon) or {})
-                new_cons: dict[str, Any] = {}
-                if {"DEFAULTS", "ALL"} & opts:
-                    new_cons["defaults"] = {
-                        c: e
-                        for c, e in (src_cons.get("defaults") or {}).items()
-                        if not self._seq_default_target(e)
-                    }
-                if {"CONSTRAINTS", "ALL"} & opts:
-                    for k2 in ("not_null", "checks", "not_validated"):
-                        if src_cons.get(k2):
-                            new_cons[k2] = src_cons[k2]
-                if {"GENERATED", "ALL"} & opts and src_cons.get("generated"):
-                    new_cons["generated"] = src_cons["generated"]
-                if {"INDEXES", "ALL"} & opts and src_cons.get("indexes"):
-                    # index names are schema-wide unique: re-key
-                    new_cons["indexes"] = {
-                        f"{name.replace('.', '_')}_{iname}": spec
-                        for iname, spec in src_cons["indexes"].items()
-                    }
-                new_cons = {k2: v for k2, v in new_cons.items() if v}
-                # INCLUDING INDEXES/ALL copies the pk (in Postgres the
-                # pk IS an index); without it the copy is keyless
-                like_pk = (
-                    self._moontable(src_canon).primary_key()
-                    if {"INDEXES", "ALL"} & opts else None
+            raise ValueError(f"mirror {name!r} already registered")
+        if re.match(r"AS\s+(SELECT|WITH)\b", rest, re.I):
+            src = self.sql(re.sub(r"^AS\s+", "", rest, flags=re.I), pin=pin)
+            if in_txn:
+                # CTAS in a block: the SELECT already resolved
+                # against the overlay (read-your-writes); stage the
+                # create + its backfill in statement order
+                self._txn_stage_create(
+                    name, src.schema, None, None, False,
+                    backfill_df=src,
                 )
-                if in_txn:
-                    self._txn_stage_create(
-                        name, src_schema, like_pk,
-                        {"constraints": new_cons} if new_cons else None,
-                        True,
-                    )
-                    return self._dml_result("CREATE", t, -1)
-                self.create_table(
-                    t,
-                    source_df=self.spark.createDataFrame([], src_schema),
-                    primary_key=like_pk,
-                    change_feed=True,
-                    table_config=(
-                        {"constraints": new_cons} if new_cons else None
-                    ),
-                )
-                return self._dml_result("CREATE", t, 1)
-            if not rest.startswith("("):
-                raise ValueError(
-                    f"CREATE TABLE needs (column defs) or AS SELECT: {q!r}"
-                )
-            # matching close-paren of the column list (NOT rindex: a
-            # trailing PARTITION BY RANGE (a) clause carries parens too)
-            close = _match_bracket(_mask_quoted(rest), 0)
-            if close < 0:
-                raise ValueError(f"unbalanced column list: {q!r}")
-            tail = rest[close + 1:].strip()
-            if tail and not re.match(
-                r"PARTITION\s+BY\s+(RANGE|LIST|HASH)\s*\([^)]*\)\s*$",
-                tail, re.I,
-            ):
-                raise ValueError(f"unsupported CREATE TABLE suffix: {tail!r}")
-            fields: list[T.StructField] = []
-            pk: list[str] = []
-            not_null: list[str] = []
-            checks: list[list[str]] = []  # [name, expr_sql]
-            defaults: dict[str, str] = {}
-            generated: dict[str, str] = {}
-            # (col, storage_type, identity_kind|None, identity_opts) for
-            # serial / GENERATED ... AS IDENTITY columns — each gets an
-            # owned sequence + a nextval default below
-            seq_cols: list[tuple[str, str, Optional[str], str]] = []
-            for part in _split_top_commas(rest[1:close]):
-                part = part.strip()
-                cm = re.match(
-                    r"PRIMARY\s+KEY\s*\(([^)]*)\)\s*$", part, re.I
-                )
-                if cm:  # table-level constraint — same identifier
-                    # folding as column defs: quoted keeps case
-                    for c in cm.group(1).split(","):
-                        c = c.strip()
-                        pk.append(
-                            c.strip('"') if c.startswith('"') else c.lower()
-                        )
-                    continue
-                tm = re.match(
-                    r"(?:CONSTRAINT\s+(\w+)\s+)?CHECK\s*\((.*)\)\s*$",
-                    part, re.I | re.S,
-                )
-                if tm:  # table-level CHECK
-                    checks.append([tm.group(1), tm.group(2).strip()])
-                    continue
-                dm = re.match(
-                    r'\s*("[^"]+"|[A-Za-z_]\w*)\s+(.*)$', part, re.S
-                )
-                if not dm:
-                    raise ValueError(f"cannot parse column def: {part!r}")
-                col = dm.group(1).strip('"')
-                # Postgres folding: quoted identifiers keep case,
-                # unquoted fold to lowercase
-                if not dm.group(1).startswith('"'):
-                    col = col.lower()
-                type_sql, info = _parse_col_constraints(dm.group(2).strip())
-                # serial/bigserial/smallserial: integer storage + an
-                # owned sequence default + implied NOT NULL (Postgres)
-                ts_norm = re.sub(r"\s+", " ", type_sql.strip().lower())
-                if ts_norm in SERIAL_TYPES:
-                    type_sql = SERIAL_TYPES[ts_norm]
-                    info["not_null"] = True
-                    seq_cols.append((col, type_sql, None, ""))
-                if info["identity"] is not None:
-                    ikind, iopts = info["identity"]
-                    st = _SEQ_TYPE_ALIASES.get(ts_norm)
-                    if st is None:
-                        raise ValueError(
-                            f'identity column "{col}" must be smallint/'
-                            f"integer/bigint, got {type_sql!r}"
-                        )
-                    seq_cols.append((col, st, ikind, iopts))
-                fields.append(
-                    T.StructField(col, _pg_type_to_spark(type_sql), True)
-                )
-                if info["is_pk"]:
-                    pk.append(col)
-                if info["not_null"]:
-                    not_null.append(col)
-                if info["default"] is not None:
-                    defaults[col] = info["default"]
-                if info["generated"] is not None:
-                    generated[col] = info["generated"]
-                for cons_name, expr in info["checks"]:
-                    checks.append([cons_name, expr])
-            # Postgres auto-names: <table>_<col?>_check, numbered dups
-            auto = 0
-            tbl_slug = parse_table_name(t).replace(".", "_")
-            for ck in checks:
-                if ck[0] is None:
-                    auto += 1
-                    ck[0] = (
-                        f"{tbl_slug}_check"
-                        if auto == 1 else f"{tbl_slug}_check{auto}"
-                    )
-            created_seqs: list[str] = []
-            identity: dict[str, str] = {}
-            for col, storage, ikind, iopts in seq_cols:
-                sname = self._seq_create_owned(name, col, storage, iopts)
-                created_seqs.append(sname)
-                defaults[col] = f"nextval('{sname}')"
-                if ikind is not None:
-                    identity[col] = ikind
-            constraints: dict[str, Any] = {}
-            if not_null or pk:
-                # PRIMARY KEY implies NOT NULL, Postgres semantics
-                constraints["not_null"] = sorted({*not_null, *pk})
-            if checks:
-                constraints["checks"] = checks
-            if defaults:
-                constraints["defaults"] = defaults
-            if generated:
-                _no_gen_on_gen(generated)
-                constraints["generated"] = generated
-            if identity:
-                constraints["identity"] = identity
-            schema = T.StructType(fields)
-            empty = self.spark.createDataFrame([], schema)
-            try:
-                # Postgres errors on a bad constraint expression at
-                # CREATE, not at first write: one analysis pass (no
-                # job) per expr.  The whole tail is covered by the
-                # implicit-sequence cleanup: a failing CHECK here must
-                # not leak a serial column's just-created sequence.
-                for what, e_ in [
-                    *[("DEFAULT", x) for x in defaults.values()],
-                    *[("GENERATED", x) for x in generated.values()],
-                    *[("CHECK", x[1]) for x in checks],
-                ]:
-                    if what == "DEFAULT" and self._seq_default_target(e_):
-                        # nextval(...) is engine-evaluated, not a Spark
-                        # expression; check the sequence exists instead
-                        self._seq_resolve(self._seq_default_target(e_))
-                        continue
-                    self._analysis_check_expr(None, what, e_, schema=schema)
-                # change_feed on by default for SQL-created tables — the
-                # wal_level=logical analog: DML commits persist an
-                # O(batch) change file so the table can be followed
-                # (CALL mooncake.create_table), fed to views, and
-                # repaired from; appends derive their feed rows for
-                # free either way
-                if in_txn:
-                    self._txn_stage_create(
-                        name, schema, pk or None,
-                        {"constraints": constraints} if constraints else None,
-                        True,
-                    )
-                    return self._dml_result("CREATE", t, -1)
-                self.create_table(
-                    t, source_df=empty, primary_key=pk or None,
-                    change_feed=True,
-                    table_config=(
-                        {"constraints": constraints} if constraints else None
-                    ),
-                )
-            except Exception:
-                if not in_txn:  # in a block the undo log handles these
-                    for sname in created_seqs:
-                        try:
-                            self.catalog.seq_drop(sname)
-                        except KeyError:
-                            pass
-                raise
+                return self._dml_result("CREATE", t, -1)
+            self.create_table(t, source_df=src)
             return self._dml_result("CREATE", t, 1)
-        if kind == "DROP":
-            m = re.match(r"DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(.*)$", q, re.I | re.S)
-            if not m:
-                raise ValueError(f"cannot parse DROP TABLE: {q!r}")
-            if_exists = bool(m.group(1))
-            names_sql = m.group(2).strip()
-            cm = re.search(r"\s+(CASCADE|RESTRICT)\s*$", names_sql, re.I)
-            cascade = bool(cm and cm.group(1).upper() == "CASCADE")
-            if cm:
-                names_sql = names_sql[:cm.start()]
-            last = "?"
-            for t in _split_top_commas(names_sql):
-                last = t
-                try:
-                    canon_t = self._canon(t)
-                    # FOREIGN KEY dependents (round 17): Postgres
-                    # refuses to drop a referenced parent without
-                    # CASCADE; CASCADE drops the dependent CONSTRAINTS
-                    # (never the referencing tables)
-                    deps = [
-                        (other, cn)
-                        for other in self.catalog.list_tables()
-                        if other != canon_t
-                        for cn, fk in (
-                            (self._constraints(other) or {})
-                            .get("foreign_keys") or {}
-                        ).items()
-                        if fk.get("ref_table") == canon_t
-                    ]
-                    if deps and not cascade:
-                        other, cn = deps[0]
-                        raise ValueError(
-                            f'cannot drop table "{canon_t}" because '
-                            f'other objects depend on it: constraint '
-                            f'"{cn}" on table "{other}" (use DROP '
-                            "TABLE ... CASCADE)"
-                        )
-                    if self._txn is not None:
-                        if deps:
-                            raise ValueError(
-                                "DROP TABLE ... CASCADE onto foreign-"
-                                "key dependents is not supported inside "
-                                "a transaction block; COMMIT first"
-                            )
-                        self._txn_stage_drop(canon_t)
-                    else:
-                        for other, cn in deps:
-                            oc = self._constraints(other) or {}
-                            fks = dict(oc.get("foreign_keys") or {})
-                            fks.pop(cn, None)
-                            oc["foreign_keys"] = fks
-                            self._set_constraints(other, oc)
-                        self.drop_table(t)
-                except KeyError:
-                    if not if_exists:
-                        raise
-                else:
-                    # OWNED BY cascade: implicit serial/identity
-                    # sequences fall with their table (undo-logged in a
-                    # block, so ROLLBACK restores them)
-                    self._seq_drop_owned(self._canon(t))
-            return self._dml_result("DROP", last, 0)
-        if kind == "TRUNCATE":
-            # multi-table + the Postgres modifiers (round 15): ONLY is
-            # inert (no inheritance), CONTINUE IDENTITY is the default,
-            # RESTART IDENTITY restarts the tables' owned sequences
-            # (round 16 — sequences exist now), CASCADE is inert (no
-            # foreign keys reference a mirror)
-            m = re.match(
-                r"TRUNCATE\s+(?:TABLE\s+)?(.+?)\s*"
-                r"(?:\b(RESTART)\s+IDENTITY|\bCONTINUE\s+IDENTITY)?\s*"
-                r"(?:\b(CASCADE|RESTRICT))?\s*$",
-                q, re.I | re.S,
+        if re.match(r"PARTITION\s+OF\b", rest, re.I):
+            # heap-side physical partitioning (reference
+            # partitioned_table.sql:2-3): the mirror is one logical
+            # table — child-partition DDL is a recorded no-op
+            return self._dml_result("CREATE", t, 0)
+        lk = re.match(
+            r"\(\s*LIKE\s+([\w.\"]+)\s*"
+            r"((?:INCLUDING\s+\w+\s*|EXCLUDING\s+\w+\s*)*)\)\s*$",
+            rest, re.I,
+        )
+        if lk:
+            # ``CREATE TABLE x (LIKE t [INCLUDING ...])`` — the app
+            # scaffold statement.  Schema always copies; INCLUDING
+            # DEFAULTS / CONSTRAINTS / INDEXES / ALL copy the named
+            # constraint classes (identity/sequence defaults are
+            # NOT copied — Postgres creates a fresh sequence only
+            # under INCLUDING IDENTITY, which refuses loudly here
+            # rather than silently sharing the source's sequence)
+            src_canon = self._canon(lk.group(1))
+            src_schema = self._moontable(src_canon).schema()
+            opts = {
+                w.upper()
+                for w in re.findall(
+                    r"(?:INCLUDING)\s+(\w+)", lk.group(2), re.I
+                )
+            }
+            if "IDENTITY" in opts:
+                raise ValueError(
+                    "CREATE TABLE (LIKE ... INCLUDING IDENTITY) is "
+                    "not supported; add the identity column with "
+                    "ALTER COLUMN ... ADD GENERATED afterwards"
+                )
+            src_cons = dict(self._constraints(src_canon) or {})
+            new_cons: dict[str, Any] = {}
+            if {"DEFAULTS", "ALL"} & opts:
+                new_cons["defaults"] = {
+                    c: e
+                    for c, e in (src_cons.get("defaults") or {}).items()
+                    if not self._seq_default_target(e)
+                }
+            if {"CONSTRAINTS", "ALL"} & opts:
+                for k2 in ("not_null", "checks", "not_validated"):
+                    if src_cons.get(k2):
+                        new_cons[k2] = src_cons[k2]
+            if {"GENERATED", "ALL"} & opts and src_cons.get("generated"):
+                new_cons["generated"] = src_cons["generated"]
+            if {"INDEXES", "ALL"} & opts and src_cons.get("indexes"):
+                # index names are schema-wide unique: re-key
+                new_cons["indexes"] = {
+                    f"{name.replace('.', '_')}_{iname}": spec
+                    for iname, spec in src_cons["indexes"].items()
+                }
+            new_cons = {k2: v for k2, v in new_cons.items() if v}
+            # INCLUDING INDEXES/ALL copies the pk (in Postgres the
+            # pk IS an index); without it the copy is keyless
+            like_pk = (
+                self._moontable(src_canon).primary_key()
+                if {"INDEXES", "ALL"} & opts else None
             )
-            if not m:
-                raise ValueError(f"cannot parse TRUNCATE: {q!r}")
-            tr_cascade = bool(
-                m.group(3) and m.group(3).upper() == "CASCADE"
+            if in_txn:
+                self._txn_stage_create(
+                    name, src_schema, like_pk,
+                    {"constraints": new_cons} if new_cons else None,
+                    True,
+                )
+                return self._dml_result("CREATE", t, -1)
+            self.create_table(
+                t,
+                source_df=self.spark.createDataFrame([], src_schema),
+                primary_key=like_pk,
+                change_feed=True,
+                table_config=(
+                    {"constraints": new_cons} if new_cons else None
+                ),
             )
-            # Keep each element's raw spelling (minus the inert ONLY
-            # prefix / descendant-``*`` suffix) — _canon/parse_table_name
-            # fold quoted and schema-qualified identifiers properly; a
-            # blanket strip('"') would mangle ``"s"."t"``.
-            tables = [
-                re.sub(r"^ONLY\s+", "", x.strip(), flags=re.I)
-                .rstrip("* \t").strip()
-                for x in _split_top_commas(m.group(1))
-            ]
-            if not tables or not all(tables):
-                raise ValueError(f"cannot parse TRUNCATE: {q!r}")
-            restart_identity = bool(m.group(2))
-            # FOREIGN KEY rule (round 17, the Postgres semantics): a
-            # referenced parent truncates only when every referencing
-            # table is truncated in the SAME statement — or CASCADE
-            # pulls the referencing tables in (transitively)
-            canon_set = {self._canon(x) for x in tables}
-            frontier = list(canon_set)
-            while frontier:
-                cur = frontier.pop()
-                for other in self.catalog.list_tables():
-                    if other in canon_set:
-                        continue
+            return self._dml_result("CREATE", t, 1)
+        if not rest.startswith("("):
+            raise ValueError(
+                f"CREATE TABLE needs (column defs) or AS SELECT: {q!r}"
+            )
+        # matching close-paren of the column list (NOT rindex: a
+        # trailing PARTITION BY RANGE (a) clause carries parens too)
+        close = _match_bracket(_mask_quoted(rest), 0)
+        if close < 0:
+            raise ValueError(f"unbalanced column list: {q!r}")
+        tail = rest[close + 1:].strip()
+        if tail and not re.match(
+            r"PARTITION\s+BY\s+(RANGE|LIST|HASH)\s*\([^)]*\)\s*$",
+            tail, re.I,
+        ):
+            raise ValueError(f"unsupported CREATE TABLE suffix: {tail!r}")
+        fields: list[T.StructField] = []
+        pk: list[str] = []
+        not_null: list[str] = []
+        checks: list[list[str]] = []  # [name, expr_sql]
+        defaults: dict[str, str] = {}
+        generated: dict[str, str] = {}
+        # (col, storage_type, identity_kind|None, identity_opts) for
+        # serial / GENERATED ... AS IDENTITY columns — each gets an
+        # owned sequence + a nextval default below
+        seq_cols: list[tuple[str, str, Optional[str], str]] = []
+        for part in _split_top_commas(rest[1:close]):
+            part = part.strip()
+            cm = re.match(
+                r"PRIMARY\s+KEY\s*\(([^)]*)\)\s*$", part, re.I
+            )
+            if cm:  # table-level constraint — same identifier
+                # folding as column defs: quoted keeps case
+                for c in cm.group(1).split(","):
+                    c = c.strip()
+                    pk.append(
+                        c.strip('"') if c.startswith('"') else c.lower()
+                    )
+                continue
+            tm = re.match(
+                r"(?:CONSTRAINT\s+(\w+)\s+)?CHECK\s*\((.*)\)\s*$",
+                part, re.I | re.S,
+            )
+            if tm:  # table-level CHECK
+                checks.append([tm.group(1), tm.group(2).strip()])
+                continue
+            dm = re.match(
+                r'\s*("[^"]+"|[A-Za-z_]\w*)\s+(.*)$', part, re.S
+            )
+            if not dm:
+                raise ValueError(f"cannot parse column def: {part!r}")
+            col = dm.group(1).strip('"')
+            # Postgres folding: quoted identifiers keep case,
+            # unquoted fold to lowercase
+            if not dm.group(1).startswith('"'):
+                col = col.lower()
+            type_sql, info = _parse_col_constraints(dm.group(2).strip())
+            # serial/bigserial/smallserial: integer storage + an
+            # owned sequence default + implied NOT NULL (Postgres)
+            ts_norm = re.sub(r"\s+", " ", type_sql.strip().lower())
+            if ts_norm in SERIAL_TYPES:
+                type_sql = SERIAL_TYPES[ts_norm]
+                info["not_null"] = True
+                seq_cols.append((col, type_sql, None, ""))
+            if info["identity"] is not None:
+                ikind, iopts = info["identity"]
+                st = _SEQ_TYPE_ALIASES.get(ts_norm)
+                if st is None:
+                    raise ValueError(
+                        f'identity column "{col}" must be smallint/'
+                        f"integer/bigint, got {type_sql!r}"
+                    )
+                seq_cols.append((col, st, ikind, iopts))
+            fields.append(
+                T.StructField(col, _pg_type_to_spark(type_sql), True)
+            )
+            if info["is_pk"]:
+                pk.append(col)
+            if info["not_null"]:
+                not_null.append(col)
+            if info["default"] is not None:
+                defaults[col] = info["default"]
+            if info["generated"] is not None:
+                generated[col] = info["generated"]
+            for cons_name, expr in info["checks"]:
+                checks.append([cons_name, expr])
+        # Postgres auto-names: <table>_<col?>_check, numbered dups
+        auto = 0
+        tbl_slug = parse_table_name(t).replace(".", "_")
+        for ck in checks:
+            if ck[0] is None:
+                auto += 1
+                ck[0] = (
+                    f"{tbl_slug}_check"
+                    if auto == 1 else f"{tbl_slug}_check{auto}"
+                )
+        created_seqs: list[str] = []
+        identity: dict[str, str] = {}
+        for col, storage, ikind, iopts in seq_cols:
+            sname = self._seq_create_owned(name, col, storage, iopts)
+            created_seqs.append(sname)
+            defaults[col] = f"nextval('{sname}')"
+            if ikind is not None:
+                identity[col] = ikind
+        constraints: dict[str, Any] = {}
+        if not_null or pk:
+            # PRIMARY KEY implies NOT NULL, Postgres semantics
+            constraints["not_null"] = sorted({*not_null, *pk})
+        if checks:
+            constraints["checks"] = checks
+        if defaults:
+            constraints["defaults"] = defaults
+        if generated:
+            _no_gen_on_gen(generated)
+            constraints["generated"] = generated
+        if identity:
+            constraints["identity"] = identity
+        schema = T.StructType(fields)
+        empty = self.spark.createDataFrame([], schema)
+        try:
+            # Postgres errors on a bad constraint expression at
+            # CREATE, not at first write: one analysis pass (no
+            # job) per expr.  The whole tail is covered by the
+            # implicit-sequence cleanup: a failing CHECK here must
+            # not leak a serial column's just-created sequence.
+            for what, e_ in [
+                *[("DEFAULT", x) for x in defaults.values()],
+                *[("GENERATED", x) for x in generated.values()],
+                *[("CHECK", x[1]) for x in checks],
+            ]:
+                if what == "DEFAULT" and self._seq_default_target(e_):
+                    # nextval(...) is engine-evaluated, not a Spark
+                    # expression; check the sequence exists instead
+                    self._seq_resolve(self._seq_default_target(e_))
+                    continue
+                self._analysis_check_expr(None, what, e_, schema=schema)
+            # change_feed on by default for SQL-created tables — the
+            # wal_level=logical analog: DML commits persist an
+            # O(batch) change file so the table can be followed
+            # (CALL mooncake.create_table), fed to views, and
+            # repaired from; appends derive their feed rows for
+            # free either way
+            if in_txn:
+                self._txn_stage_create(
+                    name, schema, pk or None,
+                    {"constraints": constraints} if constraints else None,
+                    True,
+                )
+                return self._dml_result("CREATE", t, -1)
+            self.create_table(
+                t, source_df=empty, primary_key=pk or None,
+                change_feed=True,
+                table_config=(
+                    {"constraints": constraints} if constraints else None
+                ),
+            )
+        except Exception:
+            if not in_txn:  # in a block the undo log handles these
+                for sname in created_seqs:
+                    try:
+                        self.catalog.seq_drop(sname)
+                    except KeyError:
+                        pass
+            raise
+        return self._dml_result("CREATE", t, 1)
+    def _sql_drop_table(self, query: str, *_) -> DataFrame:
+        """``DROP TABLE [IF EXISTS] t[, t2 ...] [CASCADE|RESTRICT]`` →
+        :meth:`drop_table`."""
+        q = query.strip().rstrip(";").strip()
+        m = re.match(r"DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(.*)$", q, re.I | re.S)
+        if not m:
+            raise ValueError(f"cannot parse DROP TABLE: {q!r}")
+        if_exists = bool(m.group(1))
+        names_sql = m.group(2).strip()
+        cm = re.search(r"\s+(CASCADE|RESTRICT)\s*$", names_sql, re.I)
+        cascade = bool(cm and cm.group(1).upper() == "CASCADE")
+        if cm:
+            names_sql = names_sql[:cm.start()]
+        last = "?"
+        for t in _split_top_commas(names_sql):
+            last = t
+            try:
+                canon_t = self._canon(t)
+                # FOREIGN KEY dependents (round 17): Postgres
+                # refuses to drop a referenced parent without
+                # CASCADE; CASCADE drops the dependent CONSTRAINTS
+                # (never the referencing tables)
+                deps = [
+                    (other, cn)
+                    for other in self.catalog.list_tables()
+                    if other != canon_t
                     for cn, fk in (
                         (self._constraints(other) or {})
                         .get("foreign_keys") or {}
-                    ).items():
-                        if fk.get("ref_table") == cur:
-                            if not tr_cascade:
-                                raise ValueError(
-                                    f'cannot truncate a table referenced '
-                                    f'in a foreign key constraint '
-                                    f'("{other}" references "{cur}" via '
-                                    f'"{cn}"); TRUNCATE both together or '
-                                    "use TRUNCATE ... CASCADE"
-                                )
-                            canon_set.add(other)
-                            tables.append(other)
-                            frontier.append(other)
-                            break
-            last, v = "?", 0
-            for t in tables:
-                last = t
+                    ).items()
+                    if fk.get("ref_table") == canon_t
+                ]
+                if deps and not cascade:
+                    other, cn = deps[0]
+                    raise ValueError(
+                        f'cannot drop table "{canon_t}" because '
+                        f'other objects depend on it: constraint '
+                        f'"{cn}" on table "{other}" (use DROP '
+                        "TABLE ... CASCADE)"
+                    )
                 if self._txn is not None:
-                    # whole-table: stages without the row-addressed DML
-                    # path's primary-key requirement (pk-less tables
-                    # TRUNCATE fine in autocommit and must in a block too)
-                    self._txn_stage_truncate(self._canon(t))
-                    v = -1
+                    if deps:
+                        raise ValueError(
+                            "DROP TABLE ... CASCADE onto foreign-"
+                            "key dependents is not supported inside "
+                            "a transaction block; COMMIT first"
+                        )
+                    self._txn_stage_drop(canon_t)
                 else:
-                    v = self.delete_where(t, "true")
-                if restart_identity:
-                    # Postgres: RESTART IDENTITY resets owned sequences
-                    # to their START value; unlike plain setval this IS
-                    # undone by ROLLBACK (PG runs it as ALTER SEQUENCE
-                    # RESTART) — hence the 'setpos' undo entry
-                    canon = self._canon(t)
-                    for sname, st in self.catalog.sequences().items():
-                        owner = self._seq_owner(st)
-                        if owner and owner[0] == canon:
-                            self._seq_txn_log(
-                                "setpos", sname,
-                                (st["last_value"], st["is_called"]),
-                            )
-                            self.catalog.seq_update(
-                                sname, last_value=st["start"],
-                                is_called=False,
-                            )
-            return self._dml_result("TRUNCATE", last, v)
-        # ALTER — pg_dump qualifies with ONLY (no-inheritance marker;
-        # inert here, a mirror is one logical table): normalize once so
-        # every ALTER shape below accepts the dump spelling
-        q = re.sub(r"^(ALTER\s+TABLE)\s+ONLY\b", r"\1", q, flags=re.I)
+                    for other, cn in deps:
+                        oc = self._constraints(other) or {}
+                        fks = dict(oc.get("foreign_keys") or {})
+                        fks.pop(cn, None)
+                        oc["foreign_keys"] = fks
+                        self._set_constraints(other, oc)
+                    self.drop_table(t)
+            except KeyError:
+                if not if_exists:
+                    raise
+            else:
+                # OWNED BY cascade: implicit serial/identity
+                # sequences fall with their table (undo-logged in a
+                # block, so ROLLBACK restores them)
+                self._seq_drop_owned(self._canon(t))
+        return self._dml_result("DROP", last, 0)
+    def _sql_truncate(self, query: str, *_) -> DataFrame:
+        """``TRUNCATE [TABLE] t[, ...]`` → a delete of every row
+        (exports/views follow, same as DELETE without WHERE)."""
+        q = query.strip().rstrip(";").strip()
+        # multi-table + the Postgres modifiers (round 15): ONLY is
+        # inert (no inheritance), CONTINUE IDENTITY is the default,
+        # RESTART IDENTITY restarts the tables' owned sequences
+        # (round 16 — sequences exist now), CASCADE is inert (no
+        # foreign keys reference a mirror)
         m = re.match(
-            rf"ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?{_SQL_TABLE}\s+"
-            r"OWNER\s+TO\s+[\w\"]+\s*$",
-            q, re.I,
+            r"TRUNCATE\s+(?:TABLE\s+)?(.+?)\s*"
+            r"(?:\b(RESTART)\s+IDENTITY|\bCONTINUE\s+IDENTITY)?\s*"
+            r"(?:\b(CASCADE|RESTRICT))?\s*$",
+            q, re.I | re.S,
         )
+        if not m:
+            raise ValueError(f"cannot parse TRUNCATE: {q!r}")
+        tr_cascade = bool(
+            m.group(3) and m.group(3).upper() == "CASCADE"
+        )
+        # Keep each element's raw spelling (minus the inert ONLY
+        # prefix / descendant-``*`` suffix) — _canon/parse_table_name
+        # fold quoted and schema-qualified identifiers properly; a
+        # blanket strip('"') would mangle ``"s"."t"``.
+        tables = [
+            re.sub(r"^ONLY\s+", "", x.strip(), flags=re.I)
+            .rstrip("* \t").strip()
+            for x in _split_top_commas(m.group(1))
+        ]
+        if not tables or not all(tables):
+            raise ValueError(f"cannot parse TRUNCATE: {q!r}")
+        restart_identity = bool(m.group(2))
+        # FOREIGN KEY rule (round 17, the Postgres semantics): a
+        # referenced parent truncates only when every referencing
+        # table is truncated in the SAME statement — or CASCADE
+        # pulls the referencing tables in (transitively)
+        canon_set = {self._canon(x) for x in tables}
+        frontier = list(canon_set)
+        while frontier:
+            cur = frontier.pop()
+            for other in self.catalog.list_tables():
+                if other in canon_set:
+                    continue
+                for cn, fk in (
+                    (self._constraints(other) or {})
+                    .get("foreign_keys") or {}
+                ).items():
+                    if fk.get("ref_table") == cur:
+                        if not tr_cascade:
+                            raise ValueError(
+                                f'cannot truncate a table referenced '
+                                f'in a foreign key constraint '
+                                f'("{other}" references "{cur}" via '
+                                f'"{cn}"); TRUNCATE both together or '
+                                "use TRUNCATE ... CASCADE"
+                            )
+                        canon_set.add(other)
+                        tables.append(other)
+                        frontier.append(other)
+                        break
+        last, v = "?", 0
+        for t in tables:
+            last = t
+            if self._txn is not None:
+                # whole-table: stages without the row-addressed DML
+                # path's primary-key requirement (pk-less tables
+                # TRUNCATE fine in autocommit and must in a block too)
+                self._txn_stage_truncate(self._canon(t))
+                v = -1
+            else:
+                v = self.delete_where(t, "true")
+            if restart_identity:
+                # Postgres: RESTART IDENTITY resets owned sequences
+                # to their START value; unlike plain setval this IS
+                # undone by ROLLBACK (PG runs it as ALTER SEQUENCE
+                # RESTART) — hence the 'setpos' undo entry
+                canon = self._canon(t)
+                for sname, st in self.catalog.sequences().items():
+                    owner = self._seq_owner(st)
+                    if owner and owner[0] == canon:
+                        self._seq_txn_log(
+                            "setpos", sname,
+                            (st["last_value"], st["is_called"]),
+                        )
+                        self.catalog.seq_update(
+                            sname, last_value=st["start"],
+                            is_called=False,
+                        )
+        return self._dml_result("TRUNCATE", last, v)
+    def _sql_alter_table(self, query: str, *_) -> DataFrame:
+        """``ALTER TABLE [IF EXISTS] [ONLY] t <action>``.  The target is
+        parsed once: ONLY (pg_dump's no-inheritance marker) is inert —
+        a mirror is one logical table — and IF EXISTS skips a missing
+        table for every action, as Postgres does.  Actions: OWNER TO
+        (validated-inert), SET SCHEMA, RENAME TO, RENAME COLUMN, ADD
+        COLUMN [IF NOT EXISTS] (:meth:`add_column`, a schema-evolving
+        commit; exports widen in step), DROP COLUMN [IF EXISTS]
+        (:meth:`drop_column`; exports drop by field id / column
+        mapping), ADD PRIMARY KEY / UNIQUE / FOREIGN KEY / CHECK,
+        VALIDATE / DROP CONSTRAINT and ALTER [COLUMN]; SET ACCESS METHOD
+        refuses."""
+        q = query.strip().rstrip(";").strip()
+        m = re.match(
+            rf"ALTER\s+TABLE\s+(IF\s+EXISTS\s+)?(?:ONLY\s+)?"
+            rf"{_SQL_TABLE}\s+(.*)$",
+            q, re.I | re.S,
+        )
+        if not m:
+            raise ValueError(f"unsupported ALTER statement: {q!r}")
+        t, rest = m.group(2), m.group(3)
+        if m.group(1):
+            try:
+                self._moontable(t)
+            except KeyError:  # Postgres: a NOTICE, and nothing happens
+                return self._dml_result("ALTER", t, 0)
+        canon = self._canon(t)
+        m = re.match(r"OWNER\s+TO\s+[\w\"]+\s*$", rest, re.I)
         if m:
             # pg_dump emits one per table; no roles in a single-session
             # engine — validated-inert (unknown-table error is real)
-            t = m.group(1)
             self._moontable(t)
             return self._dml_result("ALTER", t, 0)
-        m = re.match(
-            rf"ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?{_SQL_TABLE}\s+"
-            r'SET\s+SCHEMA\s+("[^"]+"|[A-Za-z_]\w*)\s*$',
-            q, re.I,
-        )
+        m = re.match(r'SET\s+SCHEMA\s+("[^"]+"|[A-Za-z_]\w*)\s*$', rest, re.I)
         if m:
             # namespace move = a rename into the schema (the storage
             # path is an opaque handle either way)
             self._no_txn("ALTER TABLE SET SCHEMA")
-            t = m.group(1)
-            canon = self._canon(t)
-            sch = self._schema_fold(m.group(2))
+            sch = self._schema_fold(m.group(1))
             if sch not in self._known_schemas():
                 raise ValueError(f'schema "{sch}" does not exist')
             base_name = canon.rsplit(".", 1)[-1]
             new = f"{sch}.{base_name}"
             self.rename_table(t, new)
             return self._dml_result("ALTER", new, 1)
-        m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+SET\s+ACCESS\s+METHOD\s+"
-            r"(\w+)\s*$",
-            q, re.I,
-        )
+        m = re.match(r"SET\s+ACCESS\s+METHOD\s+(\w+)\s*$", rest, re.I)
         if m:
             # The reference's columnstore tables are selected by table
             # ACCESS METHOD (``USING columnstore``; CHANGELOG.md:8 adds
@@ -6759,21 +6785,16 @@ class SqlRouterMixin:
             # every mirror IS columnar parquet — so switching a mirror's
             # AM is not applicable here; refuse loudly (a silent no-op
             # would let a migration script believe it converted a table)
-            t, am = m.group(1), m.group(2)
-            self._canon(t)  # unknown-table error first, like Postgres
+            am = m.group(1)
             raise ValueError(
                 f"ALTER TABLE ... SET ACCESS METHOD {am}: not applicable "
                 "— mirrors are always columnar (parquet); to change the "
                 "storage of the data, CREATE a new table from this one "
                 "or attach an export (delta/iceberg)"
             )
-        m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+RENAME\s+TO\s+"
-            r'("[^"]+"|[\w.]+)\s*$',
-            q, re.I,
-        )
+        m = re.match(r'RENAME\s+TO\s+("[^"]+"|[\w.]+)\s*$', rest, re.I)
         if m:
-            t, new = m.group(1), m.group(2).strip('"')
+            new = m.group(1).strip('"')
             if self._txn is not None:
                 # stage on an UNTOUCHED table (round 16, VERDICT r15
                 # missing #5): metadata-only, so the staged-batch
@@ -6782,8 +6803,6 @@ class SqlRouterMixin:
                 # the table answers to its OLD name (the staged rename
                 # is invisible to reads — loud unknown-table on the new
                 # name, never a silent wrong answer).
-                canon = self._canon(t)
-                self._txn_check_writable(canon)
                 self._txn_alter_gate(canon)
                 new_canon = parse_table_name(new)
                 if (
@@ -6800,20 +6819,16 @@ class SqlRouterMixin:
             self.rename_table(t, new)
             return self._dml_result("ALTER", new, 1)
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+RENAME\s+COLUMN\s+"
-            r'("[^"]+"|\w+)\s+TO\s+("[^"]+"|\w+)\s*$',
-            q, re.I,
+            r'RENAME\s+COLUMN\s+("[^"]+"|\w+)\s+TO\s+("[^"]+"|\w+)\s*$',
+            rest, re.I,
         )
         if m:
-            t = m.group(1)
-            old, new = m.group(2).strip('"'), m.group(3).strip('"')
+            old, new = m.group(1).strip('"'), m.group(2).strip('"')
             if self._txn is not None:
                 # stage on an UNTOUCHED table (round 16): metadata-only
                 # rename — existence checks at stage time, the real
                 # propagation (mirror rename-era commit + exports) at
                 # COMMIT replay
-                canon = self._canon(t)
-                self._txn_check_writable(canon)
                 self._txn_alter_gate(canon)
                 names = [
                     f.name for f in self._moontable(t).schema().fields
@@ -6836,13 +6851,12 @@ class SqlRouterMixin:
             v = self.rename_column(t, old, new)
             return self._dml_result("ALTER", t, v)
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+ADD\s+COLUMN\s+"
-            r'(IF\s+NOT\s+EXISTS\s+)?("[^"]+"|\w+)\s+(.+?)\s*$',
-            q, re.I | re.S,
+            r'ADD\s+COLUMN\s+(IF\s+NOT\s+EXISTS\s+)?("[^"]+"|\w+)\s+(.+?)\s*$',
+            rest, re.I | re.S,
         )
         if m:
-            t, if_not_exists = m.group(1), bool(m.group(2))
-            col = m.group(3).strip('"')
+            if_not_exists = bool(m.group(1))
+            col = m.group(2).strip('"')
             existing = [f.name for f in self._moontable(t).schema().fields]
             if self._txn is not None:
                 # columns staged by earlier ALTERs in this block count
@@ -6850,7 +6864,7 @@ class SqlRouterMixin:
                 # ITS statement, not silently at replay)
                 existing = existing + [
                     s["col"] for n, k, s in self._txn["staged"]
-                    if n == self._canon(t) and k == "alter"
+                    if n == canon and k == "alter"
                     and s.get("op") == "add_column"
                 ]
             if col in existing:
@@ -6863,19 +6877,18 @@ class SqlRouterMixin:
                 # autocommit path raises before writing fires here at
                 # STAGE time, so a bad ALTER aborts its own statement
                 self._txn_stage_add_column(
-                    self._canon(t), col, m.group(4).strip()
+                    canon, col, m.group(3).strip()
                 )
                 return self._dml_result("ALTER", t, -1)
-            v = self._sql_add_column(t, col, m.group(4).strip())
+            v = self._sql_add_column(t, col, m.group(3).strip())
             return self._dml_result("ALTER", t, v)
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+DROP\s+COLUMN\s+"
-            r'(IF\s+EXISTS\s+)?("[^"]+"|\w+)\s*$',
-            q, re.I,
+            r'DROP\s+COLUMN\s+(IF\s+EXISTS\s+)?("[^"]+"|\w+)\s*$',
+            rest, re.I,
         )
         if m:
-            t, if_exists = m.group(1), bool(m.group(2))
-            col = m.group(3).strip('"')
+            if_exists = bool(m.group(1))
+            col = m.group(2).strip('"')
             existing = [f.name for f in self._moontable(t).schema().fields]
             if col not in existing:
                 if if_exists:
@@ -6885,19 +6898,18 @@ class SqlRouterMixin:
             # refuses like Postgres; a referencING column drops its
             # constraint with it (Postgres's auto-drop of dependent
             # constraints)
-            canon_dc = self._canon(t)
             for other in self.catalog.list_tables():
                 for cn, fk in (
                     (self._constraints(other) or {})
                     .get("foreign_keys") or {}
                 ).items():
                     if (
-                        fk.get("ref_table") == canon_dc
+                        fk.get("ref_table") == canon
                         and col in (fk.get("ref_cols") or [])
                     ):
                         raise ValueError(
                             f'cannot drop column "{col}" of table '
-                            f'"{canon_dc}" because foreign key '
+                            f'"{canon}" because foreign key '
                             f'constraint "{cn}" on table "{other}" '
                             "depends on it (drop the constraint first)"
                         )
@@ -6921,8 +6933,6 @@ class SqlRouterMixin:
                 # among the table's ALTERs in the block — an earlier
                 # staged ALTER could reference the column and would
                 # only fail at COMMIT replay, past the commit point
-                canon = self._canon(t)
-                self._txn_check_writable(canon)
                 self._txn_alter_gate(canon)
                 if any(
                     n == canon and k2 == "alter"
@@ -6941,7 +6951,7 @@ class SqlRouterMixin:
                 self._seq_drop_owned(canon, col)  # undo-logged
                 return self._dml_result("ALTER", t, -1)
             v = self.drop_column(t, col)
-            self._seq_drop_owned(self._canon(t), col)
+            self._seq_drop_owned(canon, col)
             if child_fk_drops:
                 cons = self._constraints(t) or {}
                 fks = dict(cons.get("foreign_keys") or {})
@@ -6952,52 +6962,48 @@ class SqlRouterMixin:
             return self._dml_result("ALTER", t, v)
         # --- post-data constraint shapes a real pg_dump replays ---
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+ADD\s+"
-            r"(?:CONSTRAINT\s+(\w+)\s+)?PRIMARY\s+KEY\s*\(([^)]*)\)\s*$",
-            q, re.I,
+            r"ADD\s+(?:CONSTRAINT\s+(\w+)\s+)?PRIMARY\s+KEY\s*\(([^)]*)\)\s*$",
+            rest, re.I,
         )
         if m:
             return self._sql_add_primary_key(
-                m.group(1), m.group(2), m.group(3)
+                t, m.group(1), m.group(2)
             )
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+ADD\s+"
-            r"(?:CONSTRAINT\s+(\w+)\s+)?UNIQUE\s*\(([^)]*)\)\s*"
+            r"ADD\s+(?:CONSTRAINT\s+(\w+)\s+)?UNIQUE\s*\(([^)]*)\)\s*"
             r"(?:INCLUDE\s*\([^)]*\)\s*)?$",
-            q, re.I,
+            rest, re.I,
         )
         if m:
             # same contract as CREATE UNIQUE INDEX: loud refusal unless
             # the restore opted into recording it unenforced
-            t, cname, cols_sql = m.group(1), m.group(2), m.group(3)
+            cname, cols_sql = m.group(1), m.group(2)
             idx = cname or (
-                f"{self._canon(t).replace('.', '_')}_"
+                f"{canon.replace('.', '_')}_"
                 f"{cols_sql.split(',')[0].strip().strip(chr(34))}_key"
             )
             return self._sql_create_index(
                 f'CREATE UNIQUE INDEX "{idx}" ON {t} ({cols_sql})'
             )
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+ADD\s+"
-            r"(?:CONSTRAINT\s+(\w+)\s+)?(FOREIGN\s+KEY\s*\(.+)$",
-            q, re.I | re.S,
+            r"ADD\s+(?:CONSTRAINT\s+(\w+)\s+)?(FOREIGN\s+KEY\s*\(.+)$",
+            rest, re.I | re.S,
         )
         if m:
             # validate-then-record (round 17): one referential-integrity
             # scan, then a catalog record — the r16 PRIMARY KEY pattern
             return self._sql_add_foreign_key(
-                m.group(1), m.group(2), m.group(3).rstrip()
+                t, m.group(1), m.group(2).rstrip()
             )
         # --- constraint lifecycle (round 12; Postgres error spellings) ---
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+ADD\s+"
-            r"(?:CONSTRAINT\s+(\w+)\s+)?CHECK\s*\((.*)\)\s*"
+            r"ADD\s+(?:CONSTRAINT\s+(\w+)\s+)?CHECK\s*\((.*)\)\s*"
             r"(NOT\s+VALID)?\s*$",
-            q, re.I | re.S,
+            rest, re.I | re.S,
         )
         if m:
-            t, cname = m.group(1), m.group(2)
-            expr, not_valid = m.group(3).strip(), bool(m.group(4))
+            cname = m.group(1)
+            expr, not_valid = m.group(2).strip(), bool(m.group(3))
             if self._txn is not None:
                 # stage on an untouched table: name/duplicate checks,
                 # expression analysis, and the validation scan all run
@@ -7008,8 +7014,6 @@ class SqlRouterMixin:
                 # earlier in the block count as taken — auto-naming
                 # stays collision-free and a duplicated explicit name
                 # errors at ITS statement
-                canon = self._canon(t)
-                self._txn_check_writable(canon)
                 self._txn_alter_gate(canon)
                 cname = self._add_check_constraint(
                     t, cname, expr, not_valid, dry_run=True,
@@ -7023,14 +7027,9 @@ class SqlRouterMixin:
                 return self._dml_result("ALTER", t, -1)
             self._add_check_constraint(t, cname, expr, not_valid)
             return self._dml_result("ALTER", t, 1)
-        m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+VALIDATE\s+CONSTRAINT\s+"
-            r"(\w+)\s*$",
-            q, re.I,
-        )
+        m = re.match(r"VALIDATE\s+CONSTRAINT\s+(\w+)\s*$", rest, re.I)
         if m:
-            t, cname = m.group(1), m.group(2)
-            name = self._canon(t)
+            cname = m.group(1)
             fks = self._effective_fks(t)
             if cname in fks:
                 # NOT VALID foreign keys validate here — Postgres's
@@ -7041,8 +7040,7 @@ class SqlRouterMixin:
                 if self._txn is not None:
                     # gates FIRST — a refused statement must not pay
                     # the validation scan (review r15 finding 7)
-                    self._txn_check_writable(name)
-                    self._txn_alter_gate(name)
+                    self._txn_alter_gate(canon)
                 self._scan_foreign_key(
                     t, cname, fk["cols"], fk["ref_table"],
                     fk["ref_cols"], match=fk.get("match"),
@@ -7050,7 +7048,7 @@ class SqlRouterMixin:
                 fk["validated"] = True
                 if self._txn is not None:
                     self._txn_stage_alter(
-                        name, {"op": "add_fk", "cname": cname, "fk": fk}
+                        canon, {"op": "add_fk", "cname": cname, "fk": fk}
                     )
                     return self._dml_result("ALTER", t, -1)
                 cons = self._constraints(t) or {}
@@ -7065,12 +7063,11 @@ class SqlRouterMixin:
                 # staged batch), so the validation scan runs HERE and
                 # COMMIT replay is metadata-only.  Constraints added or
                 # dropped earlier in the block count (read-your-writes).
-                self._txn_check_writable(name)
-                self._txn_alter_gate(name)
+                self._txn_alter_gate(canon)
                 checks, nv = self._txn_effective_checks(t)
                 if cname not in checks:
                     raise ValueError(
-                        f'constraint "{cname}" of relation "{name}" '
+                        f'constraint "{cname}" of relation "{canon}" '
                         "does not exist"
                     )
                 if cname not in nv:
@@ -7084,17 +7081,17 @@ class SqlRouterMixin:
                 if bad:
                     raise ValueError(
                         f'check constraint "{cname}" of relation '
-                        f'"{name}" is violated by some row'
+                        f'"{canon}" is violated by some row'
                     )
                 self._txn_stage_alter(
-                    name, {"op": "validate_check", "cname": cname}
+                    canon, {"op": "validate_check", "cname": cname}
                 )
                 return self._dml_result("ALTER", t, -1)
             cons = self._constraints(t) or {}
             by_name = {n: e for n, e in cons.get("checks", [])}
             if cname not in by_name:
                 raise ValueError(
-                    f'constraint "{cname}" of relation "{name}" '
+                    f'constraint "{cname}" of relation "{canon}" '
                     "does not exist"
                 )
             if cname in cons.get("not_validated", []):
@@ -7106,7 +7103,7 @@ class SqlRouterMixin:
                 if bad:
                     raise ValueError(
                         f'check constraint "{cname}" of relation '
-                        f'"{name}" is violated by some row'
+                        f'"{canon}" is violated by some row'
                     )
                 cons["not_validated"] = [
                     n for n in cons["not_validated"] if n != cname
@@ -7114,23 +7111,20 @@ class SqlRouterMixin:
                 self._set_constraints(t, cons)
             return self._dml_result("ALTER", t, 1)
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+DROP\s+CONSTRAINT\s+"
-            r"(IF\s+EXISTS\s+)?(\w+)\s*$",
-            q, re.I,
+            r"DROP\s+CONSTRAINT\s+(IF\s+EXISTS\s+)?(\w+)\s*$",
+            rest, re.I,
         )
         if m:
-            t, if_exists, cname = m.group(1), bool(m.group(2)), m.group(3)
-            name = self._canon(t)
+            if_exists, cname = bool(m.group(1)), m.group(2)
             if self._txn is not None:
                 # stage on an untouched table (round 15): metadata-only
                 # at replay; existence resolves against the block's
                 # staged ALTERs too (an ADD CONSTRAINT two statements
                 # earlier is droppable in the same block)
-                self._txn_check_writable(name)
-                self._txn_alter_gate(name)
+                self._txn_alter_gate(canon)
                 if cname in self._effective_fks(t):
                     self._txn_stage_alter(
-                        name, {"op": "drop_fk", "cname": cname}
+                        canon, {"op": "drop_fk", "cname": cname}
                     )
                     return self._dml_result("ALTER", t, -1)
                 checks, _ = self._txn_effective_checks(t)
@@ -7138,11 +7132,11 @@ class SqlRouterMixin:
                     if if_exists:
                         return self._dml_result("ALTER", t, 0)
                     raise ValueError(
-                        f'constraint "{cname}" of relation "{name}" '
+                        f'constraint "{cname}" of relation "{canon}" '
                         "does not exist"
                     )
                 self._txn_stage_alter(
-                    name, {"op": "drop_check", "cname": cname}
+                    canon, {"op": "drop_check", "cname": cname}
                 )
                 return self._dml_result("ALTER", t, -1)
             cons = self._constraints(t) or {}
@@ -7157,14 +7151,14 @@ class SqlRouterMixin:
             ):
                 # a UNIQUE constraint is index-backed: dropping the
                 # constraint drops its index, as in Postgres
-                self._unregister_index(name, cname)
+                self._unregister_index(canon, cname)
                 return self._dml_result("ALTER", t, 1)
             checks = cons.get("checks", [])
             if cname not in {n for n, _ in checks}:
                 if if_exists:
                     return self._dml_result("ALTER", t, 0)
                 raise ValueError(
-                    f'constraint "{cname}" of relation "{name}" '
+                    f'constraint "{cname}" of relation "{canon}" '
                     "does not exist"
                 )
             cons["checks"] = [c for c in checks if c[0] != cname]
@@ -7174,12 +7168,11 @@ class SqlRouterMixin:
             self._set_constraints(t, cons)
             return self._dml_result("ALTER", t, 1)
         m = re.match(
-            rf"ALTER\s+TABLE\s+{_SQL_TABLE}\s+ALTER\s+(?:COLUMN\s+)?"
-            r'("[^"]+"|\w+)\s+(.*)$',
-            q, re.I | re.S,
+            r'ALTER\s+(?:COLUMN\s+)?("[^"]+"|\w+)\s+(.*)$',
+            rest, re.I | re.S,
         )
         if m:
-            t, col, action = m.group(1), m.group(2).strip('"'), m.group(3)
+            col, action = m.group(1).strip('"'), m.group(2)
             if self._txn is not None:
                 # stage on an untouched table (round 15): every refusal
                 # and the SET NOT NULL null-scan run at STAGE time (the
@@ -7188,26 +7181,25 @@ class SqlRouterMixin:
                 # (``_txn_replaying``).  A column added by a staged ADD
                 # COLUMN in this block refuses here — put its
                 # constraints in the ADD COLUMN tail instead.
-                name = self._canon(t)
-                self._txn_check_writable(name)
-                if name in self._txn.get("created", {}):
+                self._txn_check_writable(canon)
+                if canon in self._txn.get("created", {}):
                     # metadata-only shapes on a table created EARLIER IN
                     # THIS BLOCK (the pg_dump identity restore shape:
                     # CREATE TABLE; ALTER COLUMN ADD GENERATED ... in
                     # one --single-transaction) mutate the staged spec
                     return self._txn_alter_created_column(
-                        name, t, col, action.strip()
+                        canon, t, col, action.strip()
                     )
-                self._txn_alter_gate(name)
+                self._txn_alter_gate(canon)
                 self._sql_alter_column(t, col, action.strip(), dry_run=True)
                 self._txn_stage_alter(
-                    name,
+                    canon,
                     {"op": "alter_column", "col": col,
                      "action": action.strip()},
                 )
                 return self._dml_result("ALTER", t, -1)
             return self._sql_alter_column(t, col, action.strip())
-        raise ValueError(f"unsupported {kind} statement: {q!r}")
+        raise ValueError(f"unsupported ALTER statement: {q!r}")
     def _sql_alter_column_type(
         self, t: str, col: str, type_sql: str, using: Optional[str],
         dry_run: bool = False,
@@ -7641,7 +7633,6 @@ class SqlRouterMixin:
                         self._txn["staged"][i] = (n, k, new_spec)
                         break
                 return self._dml_result("ALTER", t, -1)
-            self._txn_check_writable(canon)
             self._txn_alter_gate(canon)
             self._txn_stage_alter(
                 canon, {"op": "add_fk", "cname": cname, "fk": fk}
@@ -7767,7 +7758,6 @@ class SqlRouterMixin:
         if not self._txn_replaying:
             _scan_pk(self.table(t))
         if self._txn is not None:
-            self._txn_check_writable(canon)
             self._txn_alter_gate(canon)
             self._txn_stage_alter(
                 canon, {"op": "add_pk", "cols": cols}
@@ -8276,7 +8266,6 @@ class SqlRouterMixin:
         the block see the column, DEFAULT/GENERATED fill included), and
         the verbatim tail replays through the real ALTER path at
         COMMIT."""
-        self._txn_check_writable(name)
         self._txn_alter_gate(name)
         self._sql_add_column(name, col, tail, dry_run=True)
         type_sql, info = _parse_col_constraints(tail)
@@ -8538,7 +8527,9 @@ class SqlRouterMixin:
                 for n in names
             ]
         )
-    def _sql_copy(self, query: str, copy_data: Optional[Any] = None) -> DataFrame:
+    def _sql_copy(
+        self, query: str, _pin=None, copy_data: Optional[Any] = None
+    ) -> DataFrame:
         """``COPY`` — the Postgres bulk path (reference CHANGELOG.md:22
         lists COPY among the replicated operations).  Bounded shapes:
 
@@ -8741,7 +8732,7 @@ class SqlRouterMixin:
             [("COPY", t if t is not None else "(query)", 0)],
             "statement string, table string, version long",
         )
-    def _sql_call(self, proc: str, args_sql: str) -> DataFrame:
+    def _sql_call(self, query: str, *_) -> Optional[DataFrame]:
         """``CALL mooncake.<proc>(...)`` — the reference's literal
         procedure syntax (reference tests/pg_regress/sql/sanity.sql:2
         runs ``CALL mooncake.create_table('c', 'r')``), so its regress
@@ -8754,9 +8745,24 @@ class SqlRouterMixin:
           the source location is read as in :meth:`create_table`.
         - ``create_snapshot(dst)``, ``optimize_table(dst [, mode])``,
           ``drop_table(dst)``, ``load_files(dst, path [, fmt])``.
+
+        Any other CALL is Spark's (None).  Inside a transaction block
+        only the procedures with transactional semantics stage
+        (drop_table ≡ DROP TABLE, load_files ≡ COPY FROM); the
+        maintenance ones refuse the way Postgres refuses VACUUM there.
         """
         import json as _json
 
+        call = _CALL_RE.match(query)
+        if call is None:
+            return None
+        proc, args_sql = call.group(1).lower(), call.group(2)
+        if self._txn is not None and proc not in ("drop_table", "load_files"):
+            raise ValueError(
+                f"CALL mooncake.{proc} is not supported inside a "
+                "transaction block (maintenance procedure, like "
+                "VACUUM); COMMIT or ROLLBACK first"
+            )
         args: list[Any] = []
         for part in _split_top_commas(args_sql) if args_sql.strip() else []:
             p = part.strip()

@@ -5,7 +5,7 @@ stripping, statement splitting, top-level keyword/comma scanning, the
 masked-splice primitive ``_sub_masked`` and the bracket matcher —
 plus Postgres ``$n`` parameter binding, literal rendering,
 identifier-aware rewrites, column-constraint parsing, Postgres→Spark
-type mapping, and the statement-kind regexes.
+type mapping, and the argument regexes of the session statements.
 
 Everything here is stateless string/AST work — no SparkSession, no
 catalog, no I/O — split out of engine.py in round 13 so the statement
@@ -45,42 +45,32 @@ _PG_TYPES = {
     "timestamp without time zone": "timestamp",
 }
 
-_DML_KIND = re.compile(r"^\s*(INSERT|UPDATE|DELETE|MERGE)\b", re.I)
-# TABLE statements only: CREATE/DROP VIEW, CREATE FUNCTION etc. fall
-# through to spark.sql untouched
-_DDL_KIND = re.compile(
-    r"^\s*(CREATE)\s+TABLE\b|^\s*(DROP)\s+TABLE\b"
-    r"|^\s*(TRUNCATE)\b|^\s*(ALTER)\s+TABLE\b",
-    re.I,
+# argument parsers of the statements the router's table sends here
+# (sql_router._STATEMENTS decides the statement kind; these only parse)
+_CALL_RE = re.compile(
+    r"^\s*CALL\s+mooncake\.(\w+)\s*\((.*)\)\s*;?\s*$", re.I | re.S
 )
-_CALL_KIND = re.compile(r"^\s*CALL\s+mooncake\.(\w+)\s*\((.*)\)\s*;?\s*$", re.I | re.S)
-_TXN_KIND = re.compile(
-    r"^\s*(BEGIN|START|COMMIT|END|ROLLBACK|ABORT|SAVEPOINT|RELEASE)\b", re.I
-)
-_COPY_KIND = re.compile(r"^\s*COPY\b", re.I)
-_EXPLAIN_KIND = re.compile(r"^\s*EXPLAIN\b", re.I)
-_PREPARE_KIND = re.compile(
+_PREPARE_RE = re.compile(
     # the type list may itself contain parens (numeric(10,2))
     r"^\s*PREPARE\s+(\w+)\s*(?:\(((?:[^()]|\([^()]*\))*)\))?\s+AS\s+(.*?);?\s*$",
     re.I | re.S,
 )
-_EXECUTE_KIND = re.compile(
+_EXECUTE_RE = re.compile(
     r"^\s*EXECUTE\s+(\w+)\s*(?:\((.*)\))?\s*;?\s*$", re.I | re.S
 )
-_DEALLOCATE_KIND = re.compile(
+_DEALLOCATE_RE = re.compile(
     r"^\s*DEALLOCATE\s+(?:PREPARE\s+)?(\w+|ALL)\s*;?\s*$", re.I
 )
-_SHOW_TABLES_KIND = re.compile(r"^\s*SHOW\s+TABLES\s*;?\s*$", re.I)
-_SET_KIND = re.compile(
+_SET_RE = re.compile(
     r"^\s*SET\s+(?:(SESSION|LOCAL)\s+)?"
     r"(?:(TIME\s+ZONE)\s+(.+?)|([A-Za-z_][\w.]*)\s*(?:TO|=)\s*(.+?))"
     r"\s*;?\s*$",
     re.I | re.S,
 )
-_RESET_KIND = re.compile(
+_RESET_RE = re.compile(
     r"^\s*RESET\s+(ALL|TIME\s+ZONE|[A-Za-z_][\w.]*)\s*;?\s*$", re.I
 )
-_SHOW_GUC_KIND = re.compile(
+_SHOW_GUC_RE = re.compile(
     r"^\s*SHOW\s+(ALL|TIME\s+ZONE|[A-Za-z_][\w.]*)\s*;?\s*$", re.I
 )
 # Spark's own multi-word SHOW spellings must keep passing through to
@@ -89,7 +79,7 @@ _SHOW_SPARK_WORDS = frozenset(
     "DATABASES SCHEMAS VIEWS FUNCTIONS PARTITIONS COLUMNS TBLPROPERTIES "
     "CREATE CATALOGS NAMESPACES TABLES TABLE".split()
 )
-_DESCRIBE_KIND = re.compile(
+_DESCRIBE_RE = re.compile(
     r"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?([\w\".]+)\s*;?\s*$", re.I
 )
 # a table identifier as it appears in a statement: bare/qualified name or

@@ -142,6 +142,42 @@ def test_winnowing_staged_matches_column_spelling(spark):
     assert sorted(map(str, old)) == sorted(map(str, new))
 
 
+def test_simhash_staged_matches_column_spelling(spark):
+    """The staged simhash must equal simhash_fingerprint (the Column
+    form the streaming dedup job uses) bit for bit, incl. null and
+    empty text."""
+    from pyspark.sql import functions as F
+
+    from pg_mooncake_spark.operators.dedup import (
+        simhash,
+        simhash_fingerprint,
+    )
+
+    d = spark.createDataFrame(ADVERSARIAL_DOCS, "doc_id long, text string")
+    old = d.select(
+        "doc_id", simhash_fingerprint("text").alias("simhash_bits")
+    ).collect()
+    new = simhash(d, "text", "doc_id").collect()
+    assert sorted(map(str, old)) == sorted(map(str, new))
+    assert {r.doc_id: r.simhash_bits for r in new}[3] == ""
+
+
+def test_simhash_null_texts_never_pair(spark):
+    """Null text fingerprints to '', which packs to a NULL value whose
+    NULL bands never join: two null documents are not near-duplicates."""
+    from pg_mooncake_spark.operators.dedup import (
+        simhash,
+        simhash_banded_pairs,
+    )
+
+    d = spark.createDataFrame(
+        [(1, None), (2, None), (3, None), (4, "a b c d"), (5, "a b c d")],
+        "doc_id long, text string",
+    )
+    pairs = simhash_banded_pairs(simhash(d, "text", "doc_id"), "doc_id")
+    assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(4, 5)]
+
+
 def test_repetition_staged_matches_inline_spelling(spark):
     from pyspark.sql import functions as F
 

@@ -116,6 +116,24 @@ class TestOwnershipInert:
         with pytest.raises(ValueError):
             eng.sql("ALTER SCHEMA no_such OWNER TO app_user")
 
+    def test_alter_table_if_exists_skips_missing(self, eng):
+        # Postgres skips a missing table for every action (pg_dump
+        # --clean --if-exists spells ALTER TABLE IF EXISTS ONLY)
+        for stmt in (
+            "ALTER TABLE IF EXISTS missing OWNER TO bob",
+            "ALTER TABLE IF EXISTS missing SET SCHEMA public",
+            "ALTER TABLE IF EXISTS ONLY missing OWNER TO bob",
+            "ALTER TABLE IF EXISTS ONLY missing ADD COLUMN c int",
+            "ALTER TABLE IF EXISTS ONLY public.missing "
+            "DROP CONSTRAINT c_pk",
+        ):
+            assert eng.sql(stmt).collect()[0].version == 0, stmt
+        eng.sql("CREATE TABLE ie (id int PRIMARY KEY)")
+        eng.sql("ALTER TABLE IF EXISTS ONLY ie ADD COLUMN c int")
+        assert "c" in eng.table("ie").columns
+        with pytest.raises(KeyError):
+            eng.sql("ALTER TABLE ONLY missing ADD COLUMN c int")
+
     def test_grant_revoke_inert(self, eng):
         eng.sql("GRANT ALL ON SCHEMA public TO PUBLIC")
         eng.sql("REVOKE ALL ON SCHEMA public FROM PUBLIC")

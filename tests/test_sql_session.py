@@ -174,6 +174,80 @@ def test_explain_write_does_not_execute(eng, cust):
         eng.sql("EXPLAIN ANALYZE DELETE FROM c_ew WHERE c_custkey > 0")
 
 
+def test_explain_never_executes_a_statement(eng, spark, cust):
+    """EXPLAIN plans a read, describes an engine route and lets Spark's
+    own EXPLAIN plan a Spark command — none of them runs."""
+    eng.create_table("c_en", source_df=cust, primary_key=["c_custkey"])
+    spark.sql("CREATE OR REPLACE TEMP VIEW tv_en AS SELECT 1 AS x")
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    try:
+        rows = eng.sql("EXPLAIN DROP VIEW tv_en").collect()
+        assert rows[0].query_plan == "Mooncake DDL route: DROP VIEW"
+        assert rows[-1].query_plan.endswith("not executed")
+        assert spark.catalog.tableExists("tv_en")
+        eng.sql(f"EXPLAIN SET {conf} = 3").collect()
+        assert spark.conf.get(conf) == before
+        eng.sql("EXPLAIN CACHE TABLE tv2_en AS SELECT 1").collect()
+        assert not spark.catalog.tableExists("tv2_en")
+        for stmt in (
+            "CREATE INDEX c_en_name ON c_en (c_name)",
+            "VACUUM c_en",
+            "CREATE MATERIALIZED VIEW mv_en AS SELECT c_name, "
+            "count(*) AS n FROM c_en GROUP BY c_name",
+        ):
+            rows = eng.sql(f"EXPLAIN {stmt}").collect()
+            assert rows[0].query_plan.startswith("Mooncake "), stmt
+            assert rows[-1].query_plan.endswith("not executed"), stmt
+        assert set(eng.catalog.list_tables()) == {"c_en"}
+        assert not eng._index_registry()
+    finally:
+        spark.conf.set(conf, before)
+        spark.catalog.dropTempView("tv_en")
+        spark.catalog.dropTempView("tv2_en")
+
+
+def test_explain_analyze_executes_reads_only(eng, spark):
+    spark.sql("CREATE OR REPLACE TEMP VIEW tv_ea AS SELECT 1 AS x")
+    try:
+        for stmt in ("DROP VIEW tv_ea", "CACHE TABLE tv2_ea AS SELECT 1"):
+            with pytest.raises(ValueError, match="would execute the write"):
+                eng.sql(f"EXPLAIN ANALYZE {stmt}")
+        assert spark.catalog.tableExists("tv_ea")
+        assert not spark.catalog.tableExists("tv2_ea")
+        for stmt, n in (
+            ("VALUES (1), (2)", 2),
+            ("WITH a AS (SELECT 1 AS x) SELECT * FROM a", 1),
+            ("TABLE tv_ea", 1),
+            ("(SELECT 1 UNION ALL SELECT 2)", 2),
+        ):
+            rows = eng.sql(f"EXPLAIN ANALYZE {stmt}").collect()
+            assert rows[-1].query_plan.startswith(f"Execution: {n} rows")
+    finally:
+        spark.catalog.dropTempView("tv_ea")
+
+
+def test_statement_table_is_prefix_free_and_resolves():
+    """No key of the statement table is a word-prefix of another (so the
+    shortest matching prefix is the only one), and every handler it
+    names exists on the engine."""
+    from pg_mooncake_spark.sql_router import _STATEMENTS, _statement
+
+    for k in _STATEMENTS:
+        assert not [o for o in _STATEMENTS if o.startswith(k + " ")], k
+    for _kind, handler in _STATEMENTS.values():
+        assert not handler or callable(getattr(MooncakeEngine, handler))
+    assert _statement("  select 1") == ("SELECT", "READ", "_sql_select")
+    assert _statement("create unique  index i ON t (a)")[0] == (
+        "CREATE UNIQUE INDEX"
+    )
+    assert _statement("(SELECT 1)")[:2] == ("(", "READ")
+    assert _statement("CREATE OR REPLACE TEMP VIEW v AS SELECT 1") == (
+        "", "SPARK", ""
+    )
+    assert _statement("COMMIT;")[1] == "TXN"
+
+
 # ------------------------------------- SHOW / DESCRIBE / information_schema
 
 
