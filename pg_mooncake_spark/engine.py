@@ -1146,6 +1146,31 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
             return {item.lower()}
         return set(_expr_refs(item))
 
+    def _write_check_on(self, guc: str) -> bool:
+        """False while COMMIT replays a block (its statements were
+        checked at stage time) or when the ``mooncake.skip_*_write_checks``
+        escape hatch ``guc`` is on."""
+        return not self._txn_replaying and self._guc_effective(
+            guc
+        ).lower() not in ("on", "true", "1", "yes")
+
+    def _unique_guard_indexes(self, dst: str) -> dict:
+        """The validated unique indexes an append to ``dst`` is checked
+        against ({} when none applies)."""
+        if not self._write_check_on("mooncake.skip_unique_write_checks"):
+            return {}
+        return self._effective_unique_indexes(dst)
+
+    def _fk_guard_fks(self, dst: str) -> dict:
+        """The validated foreign keys an append to ``dst`` is checked
+        against ({} when none applies)."""
+        if not self._write_check_on("mooncake.skip_fk_write_checks"):
+            return {}
+        return {
+            n: fk for n, fk in self._effective_fks(dst).items()
+            if fk.get("validated")
+        }
+
     def _guard_unique_append(
         self, dst: str, df: DataFrame, existing: Optional[DataFrame] = None
     ) -> None:
@@ -1177,17 +1202,14 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         it (``_txn_replaying``) — same atomicity contract as
         :meth:`_guard_followed_append`.  Documented divergence: UPDATE /
         MERGE / apply_changes images are not re-checked — enforcement
-        covers the append paths where accidental duplicates enter
-        during restores and ETL; ON CONFLICT arbitrates instead of
-        refusing (Postgres upsert semantics)."""
-        if self._txn_replaying:
-            return
-        idxs = self._effective_unique_indexes(dst)
+        covers inserted rows: the append paths where accidental
+        duplicates enter during restores and ETL, and the I rows of
+        every SQL DML batch (MERGE's NOT MATCHED inserts, ON CONFLICT's
+        fresh rows).  Under ON CONFLICT only the arbiter index
+        arbitrates (a conflicting row updates or is skipped); every
+        other validated index refuses, as in Postgres."""
+        idxs = self._unique_guard_indexes(dst)
         if not idxs:
-            return
-        if self._guc_effective(
-            "mooncake.skip_unique_write_checks"
-        ).lower() in ("on", "true", "1", "yes"):
             return
         batch_cols = {c.lower() for c in df.columns}
         schema_cols = {
@@ -1258,17 +1280,8 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         recorded-not-executed (TRUNCATE has its own referenced-parent
         rule); UPDATE images on the child are not re-checked —
         documented divergence, same scope as the unique guard."""
-        if self._txn_replaying:
-            return
-        fks = {
-            n: fk for n, fk in self._effective_fks(dst).items()
-            if fk.get("validated")
-        }
+        fks = self._fk_guard_fks(dst)
         if not fks:
-            return
-        if self._guc_effective(
-            "mooncake.skip_fk_write_checks"
-        ).lower() in ("on", "true", "1", "yes"):
             return
         batch_cols = {c.lower() for c in df.columns}
         dst_canon = self._canon(dst)

@@ -43,7 +43,7 @@ import shutil
 from typing import Any, Optional
 
 import pyspark
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,6 +82,114 @@ from pg_mooncake_spark.sequences import _SEQ_TYPE_ALIASES, SERIAL_TYPES
 from pg_mooncake_spark.storage import OP_COL, MoonTable
 
 _MERGE_MULTI_MATCH_MSG = "MERGE: a target row matched multiple source rows"
+_UPDATE_FROM_MULTI_MATCH_MSG = (
+    "UPDATE ... FROM: a target row matched multiple source rows"
+)
+_ON_CONFLICT_TWICE_MSG = (
+    "INSERT ON CONFLICT DO UPDATE cannot affect row a second time"
+)
+# the in-job raise_error messages of the SQL DML batches: whichever of
+# the pin and the apply evaluates them, they surface as ValueError
+_DML_JOB_ERRORS = (
+    _MERGE_MULTI_MATCH_MSG, _UPDATE_FROM_MULTI_MATCH_MSG,
+    _ON_CONFLICT_TWICE_MSG,
+)
+
+
+class UnknownTableError(KeyError, ValueError):
+    """A statement names a table that does not exist: a KeyError like
+    every unknown-mirror lookup, and a ValueError like every other
+    refusal of the statement."""
+
+    def __str__(self) -> str:
+        return str(self.args[0]) if self.args else ""
+
+
+# the leading words of the ALTER TABLE actions _sql_alter_table handles:
+# on a missing table these raise the unknown-table error, any other
+# action the unsupported-statement one
+_ALTER_ACTION_WORDS = re.compile(
+    r"(?:OWNER|SET|RENAME|ADD|DROP|VALIDATE|ALTER)\b", re.I
+)
+
+
+def _tvl(sql_cond: str) -> Column:
+    """A SQL condition under three-valued logic: UNKNOWN is false."""
+    return F.coalesce(F.expr(sql_cond).cast("boolean"), F.lit(False))
+
+
+def _op_unless(bad: Column, msg: str, op: str) -> Column:
+    """The ``__op`` value ``op``, raising ``msg`` in-job where ``bad``
+    holds.  Riding the op column, the check survives column pruning;
+    raise_error's NullType casts to string."""
+    return F.when(
+        bad, F.raise_error(F.lit(msg)).cast("string")
+    ).otherwise(F.lit(op))
+
+
+def _row_form_assignments(cols_sql: str, rhs: str) -> dict[str, str]:
+    """Expand Postgres's multi-column UPDATE row form (round 18):
+
+    - ``SET (a, b) = (SELECT x, y FROM ...)`` — the sub-SELECT's
+      projection is wrapped in one ``named_struct`` scalar subquery
+      and each target column reads its field (`__c0`, `__c1`, ...);
+      a per-item trailing alias is dropped (Postgres ignores them
+      here).  Catalyst's subquery reuse dedupes the repeated
+      scalar-subquery text; Postgres's one-row-per-target rule maps
+      to Spark's more-than-one-row scalar-subquery error.
+    - ``SET (a, b) = (1, 2)`` — a plain row literal splits into
+      per-column assignments.
+
+    Arity mismatches raise Postgres's spelling."""
+    cols = [c.strip().strip('"') for c in cols_sql.split(",") if c.strip()]
+    inner = rhs.strip()[1:-1].strip()
+    if re.match(r"SELECT\b", inner, re.I):
+        pm = re.match(r"SELECT\s+(.*)$", inner, re.I | re.S)
+        body = pm.group(1)
+        fi = _find_top_keyword(body, "FROM")
+        proj, tail = (body[:fi], body[fi:]) if fi >= 0 else (body, "")
+        items = [
+            re.sub(r"\s+AS\s+(\"[^\"]+\"|\w+)\s*$", "", i.strip(), flags=re.I)
+            for i in _split_top_commas(proj) if i.strip()
+        ]
+        if len(items) != len(cols):
+            raise ValueError(
+                "number of columns does not match number of values "
+                f"in SET ({cols_sql.strip()}) = (SELECT ...)"
+            )
+        struct = ", ".join(f"'__c{i}', ({e})" for i, e in enumerate(items))
+        sub = f"(SELECT named_struct({struct}) {tail})"
+        return {c: f"({sub}).__c{i}" for i, c in enumerate(cols)}
+    items = [i.strip() for i in _split_top_commas(inner) if i.strip()]
+    if len(items) != len(cols):
+        raise ValueError(
+            "number of columns does not match number of values in "
+            f"SET ({cols_sql.strip()}) = (...)"
+        )
+    return dict(zip(cols, items))
+
+
+def _set_assignments(set_sql: str, row_form: bool = False) -> dict[str, str]:
+    """Parse a SET list of ``[alias.]col = expr`` items (UPDATE, MERGE's
+    UPDATE SET, ON CONFLICT DO UPDATE) into {column: expression}; the
+    optional qualifier is dropped.  ``row_form`` also accepts UPDATE's
+    ``(a, b) = (...)`` items."""
+    out: dict[str, str] = {}
+    for part in _split_top_commas(set_sql):
+        rowm = row_form and re.match(
+            r"\s*\(\s*([^()]*?)\s*\)\s*=\s*(\(.*\))\s*$", part, re.S
+        )
+        if rowm:
+            out.update(_row_form_assignments(rowm.group(1), rowm.group(2)))
+            continue
+        am = re.match(
+            r'\s*(?:\w+\.)?("[^"]+"|[A-Za-z_]\w*)\s*=\s*(.+)$', part, re.S
+        )
+        if not am:
+            raise ValueError(f"cannot parse SET clause: {part!r}")
+        out[am.group(1).strip('"')] = am.group(2).strip()
+    return out
+
 
 # EXECUTE argument texts that ARE literals — substituted without a
 # round-trip evaluation (see _sql_execute): NULL/booleans, signed
@@ -2017,16 +2125,18 @@ class SqlRouterMixin:
         if params is not None:
             query = _bind_params(query, params)
         _, kind, handler = _statement(query)
-        if kind == "TXN" or self._txn is None:
+        if self._txn is None:
             return self._sql_dispatch(query, handler, pin, copy_data)
-        if self._txn["aborted"]:
+        if self._txn["aborted"] and kind != "TXN":
             raise ValueError(
                 "current transaction is aborted, commands ignored until "
                 "end of transaction block (issue ROLLBACK)"
             )
         # Postgres: ANY failed statement poisons the open block (not
-        # only the ones that reach staging — parse errors and unknown
-        # tables too); ROLLBACK TO a savepoint un-poisons it
+        # only the ones that reach staging — parse errors, unknown
+        # tables and failed transaction-control statements too);
+        # COMMIT/ROLLBACK still end an aborted block, and ROLLBACK TO a
+        # savepoint un-poisons it
         try:
             return self._sql_dispatch(query, handler, pin, copy_data)
         except Exception as e:
@@ -4524,10 +4634,10 @@ class SqlRouterMixin:
                     "RELEASE can only be used in transaction blocks"
                 )
             if self._txn["aborted"]:
-                raise self._txn_abort(ValueError(
+                raise ValueError(
                     "current transaction is aborted, commands ignored "
                     "until end of transaction block"
-                ))
+                )
             name = m2.group(1).lower()
             sps = self._txn["savepoints"]
             idx = self._txn_savepoint(name)
@@ -4649,12 +4759,12 @@ class SqlRouterMixin:
 
     def _txn_savepoint(self, name: str) -> int:
         """Index of the newest savepoint called ``name`` (a re-used name
-        shadows the older one); a missing one aborts the block."""
+        shadows the older one)."""
         sps = self._txn["savepoints"]
         for i in range(len(sps) - 1, -1, -1):
             if sps[i][0] == name:
                 return i
-        raise self._txn_abort(ValueError(f"savepoint {name!r} does not exist"))
+        raise ValueError(f"savepoint {name!r} does not exist")
 
     def _txn_discard(self) -> None:
         """End the open block without applying it: unwind its GUCs,
@@ -4728,15 +4838,9 @@ class SqlRouterMixin:
             if cond != "true":
                 # pg dialect spellings in the DML WHERE (round 18)
                 cond = _rewrite_pg_scalar_dialect(cond)
-            if using_sql is not None:
-                return self._sql_delete_using(
-                    t, tgt_alias, using_sql, cond, returning=returning
-                )
-            if self._cond_has_subquery(cond):
-                # DataFrame.where cannot evaluate subqueries — compile
-                # through the join-DML machinery (round 18)
-                return self._sql_delete_subquery(
-                    t, tgt_alias, cond, returning=returning
+            if using_sql is not None or self._cond_has_subquery(cond):
+                return self._sql_join_dml(
+                    t, tgt_alias, cond, returning, from_sql=using_sql
                 )
             if returning is not None:
                 # pre-image capture, pinned BEFORE the delete mutates
@@ -4773,27 +4877,7 @@ class SqlRouterMixin:
                         t, rest[wi + len("WHERE"):].strip()
                     )
                     rest = rest[:wi]
-            assignments: dict[str, str] = {}
-            for part in _split_top_commas(rest):
-                rowm = re.match(
-                    r"\s*\(\s*([^()]*?)\s*\)\s*=\s*(\(.*\))\s*$",
-                    part, re.S,
-                )
-                if rowm:
-                    # Postgres row-form: SET (a, b) = (SELECT x, y ...)
-                    # or SET (a, b) = (1, 2)  (round 18)
-                    for c, e in self._row_form_assignments(
-                        rowm.group(1), rowm.group(2)
-                    ).items():
-                        assignments[c] = e
-                    continue
-                am = re.match(
-                    r'\s*(?:\w+\.)?("[^"]+"|[A-Za-z_]\w*)\s*=\s*(.+)$',
-                    part, re.S,
-                )
-                if not am:
-                    raise ValueError(f"cannot parse SET clause: {part!r}")
-                assignments[am.group(1).strip('"')] = am.group(2).strip()
+            assignments = _set_assignments(rest, row_form=True)
             # pg dialect spellings in the WHERE and SET expressions
             # (round 18; bare DEFAULT passes through untouched)
             if cond != "true":
@@ -4802,19 +4886,16 @@ class SqlRouterMixin:
                 c: _rewrite_pg_scalar_dialect(e)
                 for c, e in assignments.items()
             }
-            if from_sql is not None:
-                return self._sql_update_from(
-                    t, tgt_alias, assignments, from_sql.strip(), cond,
-                    returning=returning,
-                )
-            if self._cond_has_subquery(cond) or any(
-                self._cond_has_subquery(e) for e in assignments.values()
+            if from_sql is not None or any(
+                self._cond_has_subquery(e)
+                for e in (cond, *assignments.values())
             ):
-                # a subquery in the WHERE or in a SET expression
-                # (``SET c = (SELECT ...)``, correlated included) —
-                # both compile through the one-SELECT path (round 18)
-                return self._sql_update_subquery(
-                    t, tgt_alias, assignments, cond, returning=returning
+                # a FROM list, or a subquery in the WHERE or in a SET
+                # expression (``SET c = (SELECT ...)``, correlated
+                # included) — DataFrame.where cannot evaluate those
+                return self._sql_join_dml(
+                    t, tgt_alias, cond, returning, assignments,
+                    from_sql and from_sql.strip(),
                 )
             if returning is not None:
                 # capture affected keys pre-update, apply through the
@@ -5034,26 +5115,9 @@ class SqlRouterMixin:
             return self._sql_insert_on_conflict(
                 t, tgt_alias, df, conflict_sql, returning=returning
             )
-        if returning is not None:
-            # the inserted images (generated columns recomputed exactly
-            # as the insert path will, schema column order, cast to the
-            # table schema the way the stored rows are conformed —
-            # RETURNING must reflect stored values), pinned before the
-            # append so an INSERT ... SELECT reading its own target
-            # can't double-see
-            images = self._apply_generated(t, df).select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-            ret = self._returning_df(
-                images, returning
-            ).localCheckpoint(eager=True)
-            self.insert(t, df)
-            return ret
-        v = self.insert(t, df)
-        return self._dml_result("INSERT", t, v)
+        # pinned before the append when RETURNING is asked for, so an
+        # INSERT ... SELECT reading its own target can't double-see
+        return self._apply_dml_batch(self._canon(t), df, "INSERT", returning)
 
     def _returning_df(self, df: DataFrame, returning: str) -> DataFrame:
         """Project a RETURNING expression list (``*`` or expressions
@@ -5176,211 +5240,6 @@ class SqlRouterMixin:
                 f'({", ".join(pk)})=({vals}) already exists)'
             )
 
-    def _on_conflict_unique(
-        self,
-        name: str,
-        tgt_alias: Optional[str],
-        df: DataFrame,
-        iname: str,
-        ucols: list[str],
-        uwhere: Optional[str],
-        action: str,
-        returning: Optional[str],
-    ) -> DataFrame:
-        """``INSERT ... ON CONFLICT (unique-index cols) DO ...`` —
-        arbitration on a validated unique index instead of the pk
-        (round 18).  Semantics differ from the pk path in exactly the
-        ways Postgres's btree semantics dictate:
-
-        - NULLS DISTINCT: a proposed key with any NULL component never
-          conflicts (plain — not null-safe — equality; each NULL-key
-          row is its own arbitration group, so two NULL-key rows both
-          insert);
-        - a PARTIAL index arbitrates only rows satisfying its WHERE,
-          on both sides — ineligible proposed rows always insert;
-        - fresh rows are probed for primary-key duplicates
-          (:meth:`_probe_fresh_pk`) — Postgres raises the pkey
-          violation, and the pk-keyed apply_changes would otherwise
-          silently upsert; other validated unique indexes are enforced
-          by the insert guard on the DO NOTHING path and by the same
-          guard logic Postgres applies (violation → error) via
-          _guard_unique_append on DO UPDATE's fresh rows;
-        - DO UPDATE assignments to primary-key columns refuse
-          (documented divergence: Postgres allows them, but the
-          pk-keyed CDC batch cannot re-address a row)."""
-        from pyspark.sql import Window
-
-        mt = self._moontable(name)
-        schema = mt.schema()
-        names = [f.name for f in schema.fields]
-        pk = mt.primary_key()
-        df = df.withColumn("__seq", F.monotonically_increasing_id())
-        nn = F.col(f"`{ucols[0]}`").isNotNull()
-        for c in ucols[1:]:
-            nn = nn & F.col(f"`{c}`").isNotNull()
-        elig = nn
-        if uwhere:
-            elig = elig & F.coalesce(
-                F.expr(uwhere).cast("boolean"), F.lit(False)
-            )
-        df = df.withColumn("__elig", elig)
-        # each ineligible row forms its own arbitration group
-        grp = F.when(F.col("__elig"), F.lit(0)).otherwise(F.col("__seq"))
-        w = Window.partitionBy(
-            *[F.col(f"`{c}`") for c in ucols], grp
-        ).orderBy("__seq")
-        wc = Window.partitionBy(*[F.col(f"`{c}`") for c in ucols], grp)
-        df = (
-            df.withColumn("__rn", F.row_number().over(w))
-            .withColumn("__nk", F.count(F.lit(1)).over(wc))
-        )
-        existing = self.table(name)
-        ex_arb = existing.where(uwhere) if uwhere else existing
-        helper = ["__seq", "__elig", "__rn", "__nk"]
-        if re.match(r"NOTHING$", action, re.I):
-            first = df.filter(F.col("__rn") == 1)
-            prop = first.filter(F.col("__elig")).drop(*helper) \
-                .alias("__proposed")
-            exk = ex_arb.select(*ucols).alias("__existing")
-            cond = None
-            for k in ucols:
-                c = F.col(f"__proposed.`{k}`") == F.col(f"__existing.`{k}`")
-                cond = c if cond is None else (cond & c)
-            fresh = prop.join(exk, cond, "left_anti").unionByName(
-                first.filter(~F.col("__elig")).drop(*helper)
-            )
-            fresh = fresh.localCheckpoint(eager=True)
-            self._probe_fresh_pk(name, fresh)
-            if returning is not None:
-                images = self._apply_generated(name, fresh).select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in schema.fields
-                    ]
-                )
-                ret = self._returning_df(images, returning)
-                self.insert(name, fresh)
-                return ret
-            v = self.insert(name, fresh)
-            return self._dml_result("INSERT", name, v)
-        um = re.match(r"UPDATE\s+SET\s+(.*)$", action, re.I | re.S)
-        assert um is not None
-        set_sql = um.group(1)
-        wi = _find_top_keyword(set_sql, "WHERE")
-        upd_cond = "true"
-        if wi >= 0:
-            set_sql, upd_cond = set_sql[:wi], set_sql[wi + 5:].strip()
-        assignments: dict[str, str] = {}
-        for part in _split_top_commas(set_sql):
-            pm = re.match(
-                r'\s*("[^"]+"|[A-Za-z_]\w*)\s*=\s*(.+)$', part, re.S
-            )
-            if not pm:
-                raise ValueError(f"cannot parse SET clause: {part!r}")
-            assignments[pm.group(1).strip('"')] = pm.group(2).strip()
-        pk_hits = sorted(set(assignments) & set(pk or []))
-        if pk_hits:
-            raise ValueError(
-                "ON CONFLICT DO UPDATE may not assign primary-key "
-                f"column(s) {pk_hits} of {name!r} when arbitrating on "
-                f'unique index "{iname}" (the pk-keyed CDC batch '
-                "cannot re-address a row)"
-            )
-        gen_hits = sorted(
-            set(assignments)
-            & set((self._constraints(name) or {}).get("generated") or {})
-        )
-        if gen_hits:
-            raise ValueError(
-                f'column "{gen_hits[0]}" can only be updated to DEFAULT '
-                f'(generated column on "{name}")'
-            )
-        alias = tgt_alias or name.split(".")[-1]
-        ex = ex_arb.alias(alias)
-        prop_e = df.filter(F.col("__elig")).alias("excluded")
-        cond = None
-        for k in ucols:
-            c = F.col(f"{alias}.`{k}`") == F.col(f"excluded.`{k}`")
-            cond = c if cond is None else (cond & c)
-        matched = ex.join(prop_e, cond, "inner")
-        dup_msg = (
-            "INSERT ON CONFLICT DO UPDATE cannot affect row a second time"
-        )
-        u = matched.filter(
-            F.coalesce(F.expr(upd_cond).cast("boolean"), F.lit(False))
-        ).select(
-            *[
-                F.expr(assignments[c]).cast(schema[c].dataType).alias(c)
-                if c in assignments
-                else F.col(f"{alias}.{c}").alias(c)
-                for c in names
-            ],
-            F.lit("U").alias(OP_COL),
-        )
-        # Postgres's 'second time' arbitration error precedes every
-        # other check (and must win over the unique guard's duplicate
-        # error on the not-yet-deduped fresh rows)
-        if df.filter(
-            F.col("__elig") & (F.col("__nk") > 1)
-        ).limit(1).count():
-            raise ValueError(dup_msg)
-        fresh_rows = prop_e.join(ex, cond, "left_anti").drop(*helper) \
-            .unionByName(df.filter(~F.col("__elig")).drop(*helper))
-        # Postgres checks the fresh inserts against the pkey and every
-        # OTHER unique index too — probe before anything lands
-        fresh_pin = fresh_rows.localCheckpoint(eager=True)
-        self._probe_fresh_pk(name, fresh_pin)
-        self._guard_unique_on_conflict(name, fresh_pin, iname)
-        fresh = fresh_pin.select(
-            *[F.col(c) for c in names], F.lit("I").alias(OP_COL)
-        )
-        viol = df.filter(F.col("__nk") > 1).select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in names],
-            F.when(
-                F.col("__nk") > 1,
-                F.raise_error(F.lit(dup_msg)).cast("string"),
-            ).otherwise(F.lit("I")).alias(OP_COL),
-        )
-        batch = u.unionByName(fresh).unionByName(viol)
-        affected = None
-        if returning is not None:
-            try:
-                batch = batch.localCheckpoint(eager=True)
-            except Exception as e:
-                if dup_msg in str(e):
-                    raise ValueError(dup_msg) from None
-                raise
-            affected = batch
-        try:
-            v = self.apply_changes(name, batch)
-        except Exception as e:
-            if dup_msg in str(e):
-                raise ValueError(dup_msg) from None
-            raise
-        if affected is not None:
-            images = self._apply_generated(
-                name, affected.drop(OP_COL)
-            ).select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-            return self._returning_df(images, returning)
-        return self._dml_result("INSERT", name, v)
-
-    def _guard_unique_on_conflict(
-        self, name: str, fresh: DataFrame, arb_iname: str
-    ) -> None:
-        """The DO UPDATE path writes through apply_changes, which the
-        insert-time unique guard does not cover — run the same probes
-        over the FRESH rows.  The arbiter index is included but cannot
-        fire (its eligible fresh rows were anti-joined against existing
-        and intra-batch duplicates already raised the 'second time'
-        error); every OTHER validated unique index errors exactly as
-        Postgres does when the non-conflicting inserts violate it."""
-        self._guard_unique_append(name, fresh)
-
     def _sql_insert_on_conflict(
         self,
         t: str,
@@ -5389,43 +5248,48 @@ class SqlRouterMixin:
         conflict_sql: str,
         returning: Optional[str] = None,
     ) -> DataFrame:
-        """``INSERT ... ON CONFLICT [(pk cols)] DO NOTHING | DO UPDATE
-        SET ... [WHERE cond] [RETURNING ...]`` — the Postgres upsert,
-        routed onto ONE apply_changes CDC batch (exports/views sync
-        once).
+        """``INSERT ... ON CONFLICT [target] DO NOTHING | DO UPDATE SET
+        ... [WHERE cond] [RETURNING ...]`` — the Postgres upsert, one
+        batch through :meth:`_apply_dml_batch`.
 
-        RETURNING follows Postgres exactly: DO NOTHING returns only the
-        rows actually inserted (conflict-skipped rows are silent);
-        DO UPDATE returns the post-images of inserted AND updated rows,
-        but not rows the DO UPDATE WHERE left unchanged
-        (reference CHANGELOG.md:22 — transactional INSERT contract).
+        The arbiter (:meth:`_resolve_conflict_target`) is the primary
+        key — a bare target, the pk column set or ``<table>_pkey`` — or
+        (round 18, VERDICT r17 missing #2) a VALIDATED unique index on
+        plain columns.  They differ only where Postgres's btree
+        semantics do:
 
-        - the conflict target may be the primary key OR (round 18,
-          VERDICT r17 missing #2) any VALIDATED unique index on plain
-          columns — ``(cols)`` resolves against the recorded indexes
-          (order-insensitive column-set match; a partial index needs
-          the target's ``WHERE`` to match its predicate, Postgres's
-          inference rule), and ``ON CONSTRAINT name`` resolves a
-          unique index by name.  A target matching nothing raises
-          Postgres's 'no unique or exclusion constraint matching the
-          ON CONFLICT specification'.  A bare (absent) target
-          arbitrates on the primary key, as before.  Non-pk
-          arbitration routes through :meth:`_on_conflict_unique`;
-        - DO NOTHING keeps the FIRST proposed row per key (matching
-          Postgres's row-at-a-time insert order) and drops keys already
-          present — one window + one left-anti join;
-        - DO UPDATE builds U images from existing-row × proposed-row
-          pairs (``excluded.col`` references the proposed row, the
-          table name/alias references the existing row, same as
-          Postgres), I rows from unmatched keys; a key proposed twice
-          raises in-job, matching Postgres's 'cannot affect row a
-          second time' error; the optional WHERE leaves failing rows
-          unchanged."""
+        - the pk arbiter matches with null-safe equality and every row
+          is eligible (ADVICE r10: the engine does not enforce NOT NULL
+          on pk columns, and a null-unsafe match would let a NULL-key
+          row blind-insert every time);
+        - a unique index matches with plain equality: a proposed key
+          with a NULL component never conflicts (NULLS DISTINCT — each
+          such row is its own arbitration group), and a PARTIAL index
+          arbitrates only rows satisfying its WHERE, on both sides.
+          Its fresh rows are probed for primary-key duplicates
+          (:meth:`_probe_fresh_pk`): Postgres raises the pkey
+          violation, and the pk-keyed apply would silently upsert.
+
+        Rows arbitrate in proposal order, as Postgres inserts row by
+        row: DO NOTHING keeps the FIRST proposed row per key and drops
+        keys already present.  DO UPDATE builds U images from
+        existing × proposed pairs (``excluded.col`` is the proposed
+        row, the table name or alias the existing one) where the
+        optional WHERE holds, and I rows from unmatched keys; a key
+        proposed twice raises 'cannot affect row a second time' in-job
+        — before the DO UPDATE WHERE filters anything, and before any
+        other check.  DO UPDATE may not assign a primary-key column
+        (documented divergence: the pk-keyed CDC batch cannot
+        re-address a row).
+
+        RETURNING follows Postgres: DO NOTHING returns the rows
+        inserted, DO UPDATE the post-images of inserted and updated
+        rows, never rows skipped or left unchanged by the WHERE
+        (reference CHANGELOG.md:22)."""
         name = self._canon(t)
         mt = self._moontable(name)
-        schema = mt.schema()
+        schema, pk = mt.schema(), mt.primary_key()
         names = [f.name for f in schema.fields]
-        pk = mt.primary_key()
         if not pk:
             raise ValueError(
                 f"INSERT ON CONFLICT needs a primary key on {name!r}"
@@ -5445,348 +5309,270 @@ class SqlRouterMixin:
         arb = self._resolve_conflict_target(
             name, pk, cm.group(1), cm.group(3), cm.group(4)
         )
-        if arb is not None:
-            iname, ucols, uwhere = arb
-            return self._on_conflict_unique(
-                name, tgt_alias, df, iname, ucols, uwhere, action,
-                returning,
-            )
-        # intra-batch ordering: Postgres inserts row by row, so the
-        # FIRST proposed row per key wins for DO NOTHING and a second
-        # one is an error for DO UPDATE
-        from pyspark.sql import Window
-
+        iname, keys, where = arb if arb is not None else (None, pk, None)
         df = df.withColumn("__seq", F.monotonically_increasing_id())
-        w = Window.partitionBy(*pk).orderBy("__seq")
-        wc = Window.partitionBy(*pk)
-        df = (
-            df.withColumn("__rn", F.row_number().over(w))
-            .withColumn("__nk", F.count(F.lit(1)).over(wc))
-        )
-        existing = self.table(name)
-        if re.match(r"NOTHING$", action, re.I):
-            # null-safe anti-join (ADVICE r10): the engine does not
-            # enforce NOT NULL on pk columns, and a name-list join's
-            # null-unsafe equality would let a NULL-key proposed row
-            # bypass conflict detection and blind-insert every time
-            first = (
-                df.filter(F.col("__rn") == 1)
-                .drop("__seq", "__rn", "__nk")
-                .alias("__proposed")
+        part = [F.col(f"`{k}`") for k in keys]
+        elig = F.lit(True)
+        if arb is not None:
+            for k in keys:
+                elig = elig & F.col(f"`{k}`").isNotNull()
+            if where:
+                elig = elig & _tvl(where)
+            part.append(
+                F.when(F.col("__elig"), F.lit(0)).otherwise(F.col("__seq"))
             )
-            ex_keys = existing.select(*pk).alias("__existing")
-            anti = None
-            for k in pk:
-                c = F.col(f"__proposed.{k}").eqNullSafe(
-                    F.col(f"__existing.{k}")
+        df = (
+            df.withColumn("__elig", elig)
+            .withColumn("__rn", F.row_number().over(
+                Window.partitionBy(*part).orderBy("__seq")
+            ))
+            .withColumn("__nk", F.count(F.lit(1)).over(
+                Window.partitionBy(*part)
+            ))
+        )
+        helper = ["__seq", "__elig", "__rn", "__nk"]
+
+        def _matches(left: str, right: str) -> Column:
+            cond = None
+            for k in keys:
+                a, b = F.col(f"{left}.`{k}`"), F.col(f"{right}.`{k}`")
+                c = a.eqNullSafe(b) if arb is None else a == b
+                cond = c if cond is None else (cond & c)
+            return cond
+
+        existing = self.table(name)
+        if where:
+            existing = existing.where(where)
+        if re.match(r"NOTHING$", action, re.I):
+            first = df.filter(F.col("__rn") == 1)
+            fresh = (
+                first.filter(F.col("__elig")).drop(*helper).alias("__p")
+                .join(
+                    existing.select(*keys).alias("__e"),
+                    _matches("__p", "__e"), "left_anti",
                 )
-                anti = c if anti is None else (anti & c)
-            fresh = first.join(ex_keys, anti, "left_anti")
-            if returning is not None:
-                # pin the arbitration result ONCE and both insert and
-                # return from the pinned frame (review r15 finding 4:
-                # monotonically_increasing_id is nondeterministic across
-                # evaluations, so re-running the window+anti-join for
-                # the insert could store a different duplicate than the
-                # one RETURNING reported).  Inserted images only
-                # (Postgres: skipped conflicts are not returned),
-                # generated columns recomputed, cast to stored types.
-                fresh = fresh.localCheckpoint(eager=True)
-                images = self._apply_generated(name, fresh).select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in schema.fields
-                    ]
+            )
+            if arb is not None:
+                fresh = fresh.unionByName(
+                    first.filter(~F.col("__elig")).drop(*helper)
                 )
-                ret = self._returning_df(images, returning)
-                self.insert(t, fresh)
-                return ret
-            v = self.insert(t, fresh)
-            return self._dml_result("INSERT", t, v)
-        um = re.match(r"UPDATE\s+SET\s+(.*)$", action, re.I | re.S)
-        assert um is not None
-        set_sql = um.group(1)
-        wi = _find_top_keyword(set_sql, "WHERE")
+            return self._apply_dml_batch(
+                name, fresh, "INSERT", returning, probe_pk=arb is not None
+            )
+        set_sql = re.match(r"UPDATE\s+SET\s+(.*)$", action, re.I | re.S)[1]
         upd_cond = "true"
+        wi = _find_top_keyword(set_sql, "WHERE")
         if wi >= 0:
             set_sql, upd_cond = set_sql[:wi], set_sql[wi + 5:].strip()
-        assignments: dict[str, str] = {}
-        for part in _split_top_commas(set_sql):
-            pm = re.match(
-                r'\s*("[^"]+"|[A-Za-z_]\w*)\s*=\s*(.+)$', part, re.S
-            )
-            if not pm:
-                raise ValueError(f"cannot parse SET clause: {part!r}")
-            assignments[pm.group(1).strip('"')] = pm.group(2).strip()
-        pk_hits = sorted(set(assignments) & set(pk))
-        if pk_hits:
-            raise ValueError(
-                f"ON CONFLICT DO UPDATE may not assign primary-key "
-                f"column(s) {pk_hits} of {name!r}"
-            )
-        gen_hits = sorted(
-            set(assignments)
-            & set((self._constraints(name) or {}).get("generated") or {})
+        assignments = _set_assignments(set_sql)
+        self._refuse_key_assignments(
+            name, pk, assignments, "ON CONFLICT DO UPDATE",
+            "" if arb is None else
+            f' when arbitrating on unique index "{iname}" (the pk-keyed '
+            "CDC batch cannot re-address a row)",
         )
-        if gen_hits:
-            raise ValueError(
-                f'column "{gen_hits[0]}" can only be updated to DEFAULT '
-                f'(generated column on "{name}")'
-            )
         alias = tgt_alias or name.split(".")[-1]
         ex = existing.alias(alias)
-        proposed = df.alias("excluded")
-        cond = None
-        for k in pk:
-            c = F.col(f"{alias}.{k}").eqNullSafe(F.col(f"excluded.{k}"))
-            cond = c if cond is None else (cond & c)
-        matched = ex.join(proposed, cond, "inner")
-        dup_msg = (
-            "INSERT ON CONFLICT DO UPDATE cannot affect row a second time"
-        )
-        u = matched.filter(
-            F.coalesce(F.expr(upd_cond).cast("boolean"), F.lit(False))
-        ).select(
-            *[
-                F.expr(assignments[c]).cast(schema[c].dataType).alias(c)
-                if c in assignments
-                else F.col(f"{alias}.{c}").alias(c)
-                for c in names
-            ],
+        prop = df.filter(F.col("__elig")).alias("excluded")
+        cond = _matches(alias, "excluded")
+        u = ex.join(prop, cond, "inner").filter(_tvl(upd_cond)).select(
+            *self._image_cols(schema, alias, assignments),
             F.lit("U").alias(OP_COL),
         )
-        fresh = proposed.join(ex, cond, "left_anti").select(
-            *[F.col(c) for c in names], F.lit("I").alias(OP_COL)
-        )
-        # Postgres raises 'cannot affect row a second time' for ANY key
-        # proposed twice — arbitration happens before the DO UPDATE
-        # WHERE, so a duplicate whose rows all fail the WHERE still
-        # errors.  A guard attached to the filtered U rows disappears
-        # with them (ADVICE r10), so the violation check is its own
-        # branch over the UNFILTERED proposed rows, unioned into the
-        # batch: zero rows when clean, raises in-job otherwise.
-        viol = df.filter(F.col("__nk") > 1).select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in names],
-            F.when(
-                F.col("__nk") > 1,
-                F.raise_error(F.lit(dup_msg)).cast("string"),
-            ).otherwise(F.lit("I")).alias(OP_COL),
-        )
-        batch = u.unionByName(fresh).unionByName(viol)
-        affected = None
-        if returning is not None:
-            # pin the batch ONCE and apply the PINNED frame (review r15
-            # finding 3: applying the lazy twin re-evaluates the whole
-            # conflict join — 2x cost, and a nondeterministic SET
-            # expression could store values differing from what
-            # RETURNING reported).  The duplicate-key arbitration error
-            # must still win over RETURNING: the viol branch raises
-            # during this checkpoint, before anything is returned.
-            try:
-                batch = batch.localCheckpoint(eager=True)
-            except Exception as e:
-                if dup_msg in str(e):
-                    raise ValueError(dup_msg) from None
-                raise
-            affected = batch
-        try:
-            v = self.apply_changes(name, batch)
-        except Exception as e:
-            if dup_msg in str(e):
-                raise ValueError(dup_msg) from None
-            raise
-        if affected is not None:
-            # post-images exactly as stored: generated-column recompute
-            # + schema conform cast, same as the real apply path
-            images = self._apply_generated(
-                name, affected.drop(OP_COL)
-            ).select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
+        fresh = prop.join(ex, cond, "left_anti").drop(*helper)
+        if arb is not None:
+            fresh = fresh.unionByName(
+                df.filter(~F.col("__elig")).drop(*helper)
             )
-            return self._returning_df(images, returning)
-        return self._dml_result("INSERT", t, v)
-    def _sql_update_from(
+        fresh = fresh.select(*names, F.lit("I").alias(OP_COL))
+        # Postgres raises for ANY key proposed twice, whatever the DO
+        # UPDATE WHERE says — so the check is its own branch over the
+        # unfiltered proposed rows (ADVICE r10): zero rows when clean
+        twice = df.filter(F.col("__nk") > 1).select(
+            *[F.col(c).cast(schema[c].dataType).alias(c) for c in names],
+            _op_unless(F.col("__nk") > 1, _ON_CONFLICT_TWICE_MSG, "I")
+            .alias(OP_COL),
+        )
+        return self._apply_dml_batch(
+            name, u.unionByName(fresh).unionByName(twice), "INSERT",
+            returning, probe_pk=arb is not None,
+        )
+
+    def _sql_join_dml(
         self,
         t: str,
         tgt_alias: Optional[str],
-        assignments: dict[str, str],
-        from_sql: str,
         cond: str,
-        returning: Optional[str] = None,
+        returning: Optional[str],
+        assignments: Optional[dict[str, str]] = None,
+        from_sql: Optional[str] = None,
     ) -> DataFrame:
-        """``UPDATE t [AS a] SET ... FROM <from items> WHERE ...`` —
-        the Postgres join-update, compiled as one SELECT over the
-        registered views (so subqueries, joins, and temp views all work
-        in the FROM list) funneled into one apply_changes batch of U
-        images.  Deliberate deviation from Postgres: a target row
-        matching MULTIPLE source rows raises in-job instead of updating
-        with an unpredictable one — silent nondeterminism has no place
-        in a CDC engine."""
+        """UPDATE (``assignments``) or DELETE (``assignments`` None)
+        compiled as ONE SELECT over the registered views::
+
+            SELECT <post-image | target row> FROM <target view> AS a
+                   [, <FROM / USING items>] WHERE cond
+
+        It serves ``UPDATE t [AS a] SET ... FROM ...``, ``DELETE FROM t
+        [AS a] USING ...``, and plain UPDATE/DELETE whose WHERE or SET
+        holds a subquery (``IN (SELECT ...)``, ``EXISTS``, scalar;
+        round 18, VERDICT r17 missing #3), which ``DataFrame.where``
+        cannot evaluate.  Catalyst plans the join and the subqueries;
+        both see the pre-statement snapshot, as in Postgres.  With a
+        FROM/USING list a target row can meet several source rows:
+        DELETE selects DISTINCT target rows (deleted once), and UPDATE
+        raises in-job — a deliberate deviation from Postgres, which
+        updates with an unpredictable one.  Assignments evaluate over
+        the pre-state; NOT NULL / CHECK / generated columns fire in
+        the apply path."""
         name = self._canon(t)
         mt = self._moontable(name)
-        schema = mt.schema()
-        names = [f.name for f in schema.fields]
-        pk = mt.primary_key()
+        schema, pk = mt.schema(), mt.primary_key()
+        stmt = "DELETE" if assignments is None else "UPDATE"
+        what = (
+            f"{stmt} with a subquery predicate" if from_sql is None
+            else "DELETE ... USING" if assignments is None
+            else "UPDATE ... FROM"
+        )
         if not pk:
-            raise ValueError(f"UPDATE ... FROM needs a primary key on {name!r}")
+            raise ValueError(f"{what} needs a primary key on {name!r}")
+        alias = tgt_alias or name.split(".")[-1]
+        assignments = assignments or {}
+        self._refuse_key_assignments(name, pk, assignments, what)
+        items = [
+            f"({assignments[c]}) AS `{c}`" if c in assignments
+            else f"{alias}.`{c}` AS `{c}`"
+            for c in schema.fieldNames()
+        ]
+        rel, distinct, op = f"{self._view_name(name)} AS {alias}", "", \
+            F.lit(stmt[0])
+        if from_sql is not None:
+            rel += f", {from_sql}"
+            if stmt == "DELETE":
+                distinct = "DISTINCT "
+            else:
+                items.append(
+                    "COUNT(*) OVER (PARTITION BY "
+                    f"{', '.join(f'{alias}.`{k}`' for k in pk)}) AS __match_n"
+                )
+                op = _op_unless(
+                    F.col("__match_n") > 1, _UPDATE_FROM_MULTI_MATCH_MSG, "U"
+                )
+        rows = self.sql(
+            f"SELECT {distinct}{', '.join(items)} FROM {rel} WHERE {cond}"
+        )
+        batch = rows.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema],
+            op.alias(OP_COL),
+        )
+        return self._apply_dml_batch(name, batch, stmt, returning)
+
+    def _refuse_key_assignments(
+        self,
+        name: str,
+        pk: list[str],
+        assignments: dict[str, str],
+        what: str,
+        hint: str = "",
+    ) -> None:
+        """Refuse a join-shaped SET list that assigns a primary-key
+        column (the pk-keyed CDC batch would upsert under the new key
+        and strand the old row — ADVICE r9 #2) or a generated column
+        (recomputed on write)."""
         pk_hits = sorted(set(assignments) & set(pk))
         if pk_hits:
             raise ValueError(
-                f"UPDATE ... FROM may not assign primary-key column(s) "
-                f"{pk_hits} of {name!r}"
+                f"{what} may not assign primary-key column(s) {pk_hits} "
+                f"of {name!r}{hint}"
             )
-        gen_hits = sorted(
-            set(assignments)
-            & set((self._constraints(name) or {}).get("generated") or {})
-        )
+        gen = (self._constraints(name) or {}).get("generated") or {}
+        gen_hits = sorted(set(assignments) & set(gen))
         if gen_hits:
             raise ValueError(
                 f'column "{gen_hits[0]}" can only be updated to DEFAULT '
                 f'(generated column on "{name}")'
             )
-        alias = tgt_alias or name.split(".")[-1]
-        proj = ", ".join(
-            f"({assignments[c]}) AS {c}" if c in assignments
-            else f"{alias}.{c} AS {c}"
-            for c in names
-        )
-        pk_list = ", ".join(f"{alias}.{k}" for k in pk)
-        sel = (
-            f"SELECT {proj}, COUNT(*) OVER (PARTITION BY {pk_list}) AS "
-            f"__match_n FROM {self._view_name(name)} AS {alias}, "
-            f"{from_sql} WHERE {cond}"
-        )
-        rows = self.sql(sel)
-        dup_msg = "UPDATE ... FROM: a target row matched multiple source rows"
-        op = F.when(
-            F.col("__match_n") > 1,
-            F.raise_error(F.lit(dup_msg)).cast("string"),
-        ).otherwise(F.lit("U"))
-        batch = rows.select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in names],
-            op.alias(OP_COL),
-        )
-        if returning is not None:
-            # pin the U images ONCE (pre-apply: the lazy plan reads the
-            # target view, which the apply mutates); the multi-match
-            # raise_error fires here, mapped to the same ValueError
-            try:
-                batch = batch.localCheckpoint(eager=True)
-            except Exception as e:
-                if dup_msg in str(e):
-                    raise ValueError(dup_msg) from None
-                raise
-        try:
-            v = self.apply_changes(name, batch)
-        except Exception as e:
-            if dup_msg in str(e):
-                raise ValueError(dup_msg) from None
-            raise
-        if returning is not None:
-            # post-images exactly as stored: the real apply path runs
-            # generated-column recompute + the schema conform cast —
-            # mirror both over the pinned batch
-            images = self._apply_generated(name, batch.drop(OP_COL)).select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-            return self._returning_df(images, returning)
-        return self._dml_result("UPDATE", t, v)
-    def _sql_delete_using(
-        self,
-        t: str,
-        tgt_alias: Optional[str],
-        using_sql: str,
-        cond: str,
-        returning: Optional[str] = None,
-    ) -> DataFrame:
-        """``DELETE FROM t [AS a] USING <from items> WHERE ...`` — the
-        Postgres join-delete: target rows with at least one match in
-        the USING product are deleted (DISTINCT over the target row, so
-        multiple matches delete once), one apply_changes batch of D
-        keys."""
-        name = self._canon(t)
-        mt = self._moontable(name)
-        schema = mt.schema()
-        names = [f.name for f in schema.fields]
-        if not mt.primary_key():
-            raise ValueError(f"DELETE ... USING needs a primary key on {name!r}")
-        alias = tgt_alias or name.split(".")[-1]
-        proj = ", ".join(f"{alias}.{c} AS {c}" for c in names)
-        sel = (
-            f"SELECT DISTINCT {proj} FROM {self._view_name(name)} AS "
-            f"{alias}, {using_sql} WHERE {cond}"
-        )
-        rows = self.sql(sel)
-        batch = rows.select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in names],
-            F.lit("D").alias(OP_COL),
-        )
-        if returning is not None:
-            # pin the pre-images before the apply mutates the target
-            batch = batch.localCheckpoint(eager=True)
-        v = self.apply_changes(name, batch)
-        if returning is not None:
-            return self._returning_df(batch.drop(OP_COL), returning)
-        return self._dml_result("DELETE", t, v)
 
     @staticmethod
-    def _row_form_assignments(cols_sql: str, rhs: str) -> dict[str, str]:
-        """Expand Postgres's multi-column UPDATE row form (round 18):
-
-        - ``SET (a, b) = (SELECT x, y FROM ...)`` — the sub-SELECT's
-          projection is wrapped in one ``named_struct`` scalar subquery
-          and each target column reads its field (`__c0`, `__c1`, ...);
-          a per-item trailing alias is dropped (Postgres ignores them
-          here).  Catalyst's subquery reuse dedupes the repeated
-          scalar-subquery text; Postgres's one-row-per-target rule maps
-          to Spark's more-than-one-row scalar-subquery error.
-        - ``SET (a, b) = (1, 2)`` — a plain row literal splits into
-          per-column assignments.
-
-        Arity mismatches raise Postgres's spelling."""
-        cols = [
-            c.strip().strip('"') for c in cols_sql.split(",") if c.strip()
+    def _image_cols(
+        schema: T.StructType, alias: str, assignments: dict[str, str]
+    ) -> list[Column]:
+        """The row image of a target row ``alias`` after ``assignments``
+        (none: the row as it is), cast to the table schema."""
+        return [
+            (
+                F.expr(assignments[f.name]) if f.name in assignments
+                else F.col(f"{alias}.`{f.name}`")
+            ).cast(f.dataType).alias(f.name)
+            for f in schema.fields
         ]
-        inner = rhs.strip()[1:-1].strip()
-        if re.match(r"SELECT\b", inner, re.I):
-            pm = re.match(r"SELECT\s+(.*)$", inner, re.I | re.S)
-            body = pm.group(1)
-            fi = _find_top_keyword(body, "FROM")
-            proj, tail = (
-                (body[:fi], body[fi:]) if fi >= 0 else (body, "")
-            )
-            items = [
-                re.sub(
-                    r"\s+AS\s+(\"[^\"]+\"|\w+)\s*$", "", i.strip(),
-                    flags=re.I,
+
+    def _apply_dml_batch(
+        self,
+        name: str,
+        batch: DataFrame,
+        stmt: str,
+        returning: Optional[str],
+        probe_pk: bool = False,
+    ) -> DataFrame:
+        """The one writer of the SQL DML statements.  ``batch`` is a CDC
+        batch (rows carry ``__op``; one apply_changes) or plain rows (a
+        blind append through :meth:`insert`, which runs the append
+        guards itself).
+
+        A CDC batch's I rows pass the same write-path checks as an
+        INSERT's rows: the fresh-pk probe when ``probe_pk`` (non-pk ON
+        CONFLICT arbitration), then the validated unique-index and
+        foreign-key guards, which inside a block read the overlay
+        (``table()`` serves it).  Updated images are not re-checked
+        (the documented divergence of :meth:`_guard_unique_append`).
+        The batch is pinned once, and only when RETURNING or a check
+        reads it; the checks run after the pin, so an in-job error
+        (:data:`_DML_JOB_ERRORS`, raised as ValueError) wins over a
+        guard's.  Returns the ``_dml_result`` row, or the RETURNING
+        list over the stored images — generated columns recomputed and
+        cast to the table schema, as the apply stores them; a MERGE
+        adds ``__merge_action``.  The RETURNING rows are pinned before
+        the write, so a failing RETURNING writes nothing."""
+        cdc = OP_COL in batch.columns
+        guarded = cdc and bool(
+            self._unique_guard_indexes(name) or self._fk_guard_fks(name)
+        )
+        try:
+            ret = None
+            if returning is not None or guarded or probe_pk:
+                batch = batch.localCheckpoint(eager=True)
+            if returning is not None:
+                act = [
+                    F.when(F.col(OP_COL) == "I", "INSERT")
+                    .when(F.col(OP_COL) == "U", "UPDATE")
+                    .otherwise("DELETE").alias("__merge_action")
+                ] if stmt == "MERGE" else []
+                images = self._apply_generated(name, batch).select(
+                    *[
+                        F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
+                        for f in self._moontable(name).schema().fields
+                    ],
+                    *act,
                 )
-                for i in _split_top_commas(proj) if i.strip()
-            ]
-            if len(items) != len(cols):
-                raise ValueError(
-                    "number of columns does not match number of values "
-                    f"in SET ({cols_sql.strip()}) = (SELECT ...)"
+                ret = self._returning_df(images, returning).localCheckpoint(
+                    eager=True
                 )
-            struct = ", ".join(
-                f"'__c{i}', ({e})" for i, e in enumerate(items)
-            )
-            sub = f"(SELECT named_struct({struct}) {tail})"
-            return {
-                c: f"({sub}).__c{i}" for i, c in enumerate(cols)
-            }
-        items = [i.strip() for i in _split_top_commas(inner) if i.strip()]
-        if len(items) != len(cols):
-            raise ValueError(
-                "number of columns does not match number of values in "
-                f"SET ({cols_sql.strip()}) = (...)"
-            )
-        return dict(zip(cols, items))
+            fresh = batch.filter(F.col(OP_COL) == "I").drop(OP_COL) \
+                if cdc else batch
+            if probe_pk:
+                self._probe_fresh_pk(name, fresh)
+            if guarded:
+                self._guard_unique_append(name, fresh)
+                self._guard_fk_append(name, fresh)
+            v = self.apply_changes(name, batch) if cdc \
+                else self.insert(name, batch)
+        except Exception as e:
+            msg = next((m for m in _DML_JOB_ERRORS if m in str(e)), None)
+            if msg is None:
+                raise
+            raise ValueError(msg) from None
+        return ret if ret is not None else self._dml_result(stmt, name, v)
 
     @staticmethod
     def _cond_has_subquery(cond: str) -> bool:
@@ -5797,120 +5583,6 @@ class SqlRouterMixin:
         return bool(
             re.search(r"\(\s*SELECT\b", _mask_quoted(cond), re.I)
         )
-
-    def _sql_update_subquery(
-        self,
-        t: str,
-        tgt_alias: Optional[str],
-        assignments: dict[str, str],
-        cond: str,
-        returning: Optional[str] = None,
-    ) -> DataFrame:
-        """Plain ``UPDATE t SET ... WHERE <predicate with subquery>``
-        (round 18, VERDICT r17 missing #3): ``IN (SELECT ...)``,
-        ``EXISTS (...)``, and scalar subqueries appear constantly in
-        Postgres apps, but the plain path compiles its WHERE through
-        ``DataFrame.where``, where Spark refuses subquery expressions.
-        This path compiles the statement as ONE SELECT over the
-        registered views — Catalyst plans the subquery as a left-semi /
-        anti / scalar-subquery join — producing the U post-images,
-        applied as one CDC batch: the ``UPDATE ... FROM`` machinery
-        minus the source product (each target row appears at most
-        once, so no multi-match guard is needed).  Subqueries see the
-        pre-update snapshot, Postgres semantics.  Same documented
-        scope as UPDATE ... FROM: assignments evaluate over the
-        pre-state; NOT NULL / CHECK / generated columns fire in the
-        apply path."""
-        name = self._canon(t)
-        mt = self._moontable(name)
-        schema = mt.schema()
-        names = [f.name for f in schema.fields]
-        if not mt.primary_key():
-            raise ValueError(
-                "UPDATE with a subquery predicate needs a primary key "
-                f"on {name!r}"
-            )
-        pk_hits = sorted(set(assignments) & set(mt.primary_key()))
-        if pk_hits:
-            raise ValueError(
-                "UPDATE with a subquery predicate may not assign "
-                f"primary-key column(s) {pk_hits} of {name!r}"
-            )
-        gen_hits = sorted(
-            set(assignments)
-            & set((self._constraints(name) or {}).get("generated") or {})
-        )
-        if gen_hits:
-            raise ValueError(
-                f'column "{gen_hits[0]}" can only be updated to DEFAULT '
-                f'(generated column on "{name}")'
-            )
-        alias = tgt_alias or name.split(".")[-1]
-        proj = ", ".join(
-            f"({assignments[c]}) AS {c}" if c in assignments
-            else f"{alias}.{c} AS {c}"
-            for c in names
-        )
-        sel = (
-            f"SELECT {proj} FROM {self._view_name(name)} AS {alias} "
-            f"WHERE {cond}"
-        )
-        batch = self.sql(sel).select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in names],
-            F.lit("U").alias(OP_COL),
-        )
-        if returning is not None:
-            # pin the U images before the apply mutates the target
-            batch = batch.localCheckpoint(eager=True)
-        v = self.apply_changes(name, batch)
-        if returning is not None:
-            images = self._apply_generated(name, batch.drop(OP_COL)).select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-            return self._returning_df(images, returning)
-        return self._dml_result("UPDATE", t, v)
-
-    def _sql_delete_subquery(
-        self,
-        t: str,
-        tgt_alias: Optional[str],
-        cond: str,
-        returning: Optional[str] = None,
-    ) -> DataFrame:
-        """Plain ``DELETE FROM t WHERE <predicate with subquery>`` —
-        the delete twin of :meth:`_sql_update_subquery`: one SELECT of
-        the doomed rows over the registered views (subquery planned by
-        Catalyst), one apply_changes batch of D keys.  Subqueries see
-        the pre-delete snapshot — ``DELETE FROM t WHERE k IN (SELECT k
-        FROM t ...)`` self-references consistently."""
-        name = self._canon(t)
-        mt = self._moontable(name)
-        schema = mt.schema()
-        names = [f.name for f in schema.fields]
-        if not mt.primary_key():
-            raise ValueError(
-                "DELETE with a subquery predicate needs a primary key "
-                f"on {name!r}"
-            )
-        alias = tgt_alias or name.split(".")[-1]
-        proj = ", ".join(f"{alias}.{c} AS {c}" for c in names)
-        sel = (
-            f"SELECT {proj} FROM {self._view_name(name)} AS {alias} "
-            f"WHERE {cond}"
-        )
-        batch = self.sql(sel).select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in names],
-            F.lit("D").alias(OP_COL),
-        )
-        if returning is not None:
-            batch = batch.localCheckpoint(eager=True)
-        v = self.apply_changes(name, batch)
-        if returning is not None:
-            return self._returning_df(batch.drop(OP_COL), returning)
-        return self._dml_result("DELETE", t, v)
 
     def _sql_merge(
         self,
@@ -5952,7 +5624,9 @@ class SqlRouterMixin:
         NOT-MATCHED inserts come from a left-anti join.  Everything is
         expressed as DataFrame joins Catalyst plans (broadcast/AQE apply
         as usual) — at 100 TB the cost profile is apply_changes', which
-        is stats→bloom→exact-probe bounded.
+        is stats→bloom→exact-probe bounded.  The batch goes through
+        :meth:`_apply_dml_batch`, so inserted rows pass the unique-index
+        and foreign-key guards an INSERT's rows do.
 
         Per the SQL standard, a source row may match at most one WHEN
         MATCHED action and each target row at most one source row; the
@@ -6020,16 +5694,7 @@ class SqlRouterMixin:
                 raise ValueError(
                     f"{ctx} action must be UPDATE SET or DELETE: {action!r}"
                 )
-            assignments: dict[str, str] = {}
-            for part in _split_top_commas(um.group(1)):
-                pm = re.match(
-                    r'\s*(?:\w+\.)?("[^"]+"|[A-Za-z_]\w*)\s*=\s*(.+)$',
-                    part, re.S,
-                )
-                if not pm:
-                    raise ValueError(f"cannot parse SET clause: {part!r}")
-                assignments[pm.group(1).strip('"')] = pm.group(2).strip()
-            return ("U", assignments)
+            return ("U", _set_assignments(um.group(1)))
 
         while rest:
             wm = re.match(
@@ -6088,131 +5753,63 @@ class SqlRouterMixin:
         src_df = self.sql(src_sql, pin=pin).alias(src_alias)
         cond = F.expr(on_cond)
         names = [f.name for f in schema.fields]
-
-        gen_cols = set((self._constraints(name) or {}).get("generated") or {})
         for kind, _extra, assignments in matched_clauses + by_source_clauses:
-            if kind == "U" and assignments:
-                pk_hits = sorted(set(assignments) & set(pk))
-                if pk_hits:
-                    # ADVICE r9 #2: a pk rewrite would upsert under the NEW
-                    # key via apply_changes and strand the old-key row.
-                    raise ValueError(
-                        f"MERGE UPDATE SET may not assign primary-key "
-                        f"column(s) {pk_hits} of {name!r}; delete and "
-                        f"re-insert instead"
-                    )
-                gen_hits = sorted(set(assignments) & gen_cols)
-                if gen_hits:
-                    raise ValueError(
-                        f'column "{gen_hits[0]}" can only be updated to '
-                        f'DEFAULT (generated column on "{name}")'
-                    )
+            if kind == "U":
+                self._refuse_key_assignments(
+                    name, pk, assignments, "MERGE UPDATE SET",
+                    "; delete and re-insert instead",
+                )
 
-        def _tvl(sql_cond: str) -> Column:
-            # three-valued logic: UNKNOWN does not fire the clause
-            return F.coalesce(F.expr(sql_cond).cast("boolean"), F.lit(False))
+        def _first_match(rows: DataFrame, conds: list[str]):
+            # clause i fires where its condition holds and no earlier
+            # same-kind clause's does (UNKNOWN neither fires nor
+            # suppresses later clauses)
+            earlier = F.lit(False)
+            for c in conds:
+                yield rows.filter(_tvl(c) & ~earlier)
+                earlier = earlier | _tvl(c)
 
-        parts: list[DataFrame] = []
-        matched = tgt_df.join(src_df, cond, "inner")
+        # WHEN MATCHED and NOT MATCHED BY SOURCE act on target rows: one
+        # U/D projection, each with its own op column
+        upd_del: list[tuple[DataFrame, list, Any]] = []
         if matched_clauses:
             # SQL standard: each target row may be MODIFIED by at most
             # one source row.  Enforced inside the branch job itself
-            # (VERDICT r9 task 7 — previously a separate eager aggregate
-            # job over the matched set): a window count of action-firing
-            # rows per pk, and raise_error where it exceeds 1.  Costs at
-            # most ONE extra exchange (hash by pk for the window — often
-            # reused from the join), zero extra jobs, and matches
-            # Delta/DuckDB semantics exactly: duplicates that fire no
-            # WHEN MATCHED clause modify nothing and are legal.
-            from pyspark.sql import Window
-
-            fires = None
+            # (VERDICT r9 task 7): a window count of action-firing rows
+            # per pk, raising where it exceeds 1 — at most ONE extra
+            # exchange (often reused from the join), zero extra jobs,
+            # Delta/DuckDB semantics: duplicates that fire no WHEN
+            # MATCHED clause modify nothing and are legal.
+            fires = F.lit(False)
             for _kind, extra, _a in matched_clauses:
-                g = _tvl(extra)
-                fires = g if fires is None else (fires | g)
+                fires = fires | _tvl(extra)
             w = Window.partitionBy(*[F.col(f"{tgt_alias}.{k}") for k in pk])
-            matched = matched.withColumn(
+            matched = tgt_df.join(src_df, cond, "inner").withColumn(
                 "__match_n", F.count(F.when(fires, F.lit(1))).over(w)
             )
-
-        def _op_guarded(tag: str) -> Column:
-            # attached to the op column so column pruning can never drop
-            # the check; NullType from raise_error casts to string
-            return (
-                F.when(
-                    F.col("__match_n") > 1,
-                    F.raise_error(
-                        F.lit(_MERGE_MULTI_MATCH_MSG)
-                    ).cast("string"),
-                )
-                .otherwise(F.lit(tag))
-            )
-
-        earlier: list[str] = []
-        for kind, extra, assignments in matched_clauses:
-            gate = _tvl(extra)
-            for prev in earlier:
-                gate = gate & ~_tvl(prev)
-            earlier.append(extra)
-            rows = matched.filter(gate)
-            if kind == "U":
-                assert assignments is not None
-                u = rows.select(
-                    *[
-                        F.expr(assignments[c]).cast(schema[c].dataType)
-                        .alias(c)
-                        if c in assignments
-                        else F.col(f"{tgt_alias}.{c}").alias(c)
-                        for c in names
-                    ],
-                    _op_guarded("U").alias(OP_COL),
-                )
-                parts.append(u)
-            else:
-                d = rows.select(
-                    *[F.col(f"{tgt_alias}.{c}").alias(c) for c in names],
-                    _op_guarded("D").alias(OP_COL),
-                )
-                parts.append(d)
+            upd_del.append((matched, matched_clauses, lambda op: _op_unless(
+                F.col("__match_n") > 1, _MERGE_MULTI_MATCH_MSG, op
+            )))
         if by_source_clauses:
             # SQL:2023 NOT MATCHED BY SOURCE: target rows with no source
-            # match — one left-anti join, then the same ordered
-            # first-match-wins gating.  No multi-match guard needed:
-            # the anti-join emits each target row at most once.
-            unmatched_tgt = tgt_df.join(src_df, cond, "left_anti")
-            earlier_ns: list[str] = []
-            for kind, extra, assignments in by_source_clauses:
-                gate = _tvl(extra)
-                for prev in earlier_ns:
-                    gate = gate & ~_tvl(prev)
-                earlier_ns.append(extra)
-                rows = unmatched_tgt.filter(gate)
-                if kind == "U":
-                    assert assignments is not None
-                    u = rows.select(
-                        *[
-                            F.expr(assignments[c]).cast(schema[c].dataType)
-                            .alias(c)
-                            if c in assignments
-                            else F.col(f"{tgt_alias}.{c}").alias(c)
-                            for c in names
-                        ]
-                    )
-                    parts.append(u.withColumn(OP_COL, F.lit("U")))
-                else:
-                    d = rows.select(
-                        *[F.col(f"{tgt_alias}.{c}").alias(c) for c in names]
-                    )
-                    parts.append(d.withColumn(OP_COL, F.lit("D")))
+            # match — the anti-join emits each at most once, so no
+            # multi-match guard
+            upd_del.append((
+                tgt_df.join(src_df, cond, "left_anti"), by_source_clauses,
+                F.lit,
+            ))
+        parts: list[DataFrame] = []
+        for rows, clauses, op in upd_del:
+            fired = _first_match(rows, [c[1] for c in clauses])
+            for (kind, _extra, assignments), hit in zip(clauses, fired):
+                parts.append(hit.select(
+                    *self._image_cols(schema, tgt_alias, assignments or {}),
+                    op(kind).alias(OP_COL),
+                ))
         if ins_clauses:
             unmatched = src_df.join(tgt_df, cond, "left_anti")
-            earlier_i: list[str] = []
-            for extra, cols, values_sql in ins_clauses:
-                gate = _tvl(extra)
-                for prev in earlier_i:
-                    gate = gate & ~_tvl(prev)
-                earlier_i.append(extra)
-                fired = unmatched.filter(gate)
+            fired = _first_match(unmatched, [c[0] for c in ins_clauses])
+            for (_extra, cols, values_sql), hit in zip(ins_clauses, fired):
                 exprs = _split_top_commas(values_sql)
                 target_cols = cols if cols is not None else names
                 if len(exprs) != len(target_cols):
@@ -6221,66 +5818,33 @@ class SqlRouterMixin:
                         f"for {len(target_cols)} columns {target_cols}"
                     )
                 by_col = dict(zip(target_cols, exprs))
-                i_df = fired.select(
+                parts.append(hit.select(
                     *[
-                        F.expr(by_col[c]).cast(schema[c].dataType).alias(c)
-                        if c in by_col
-                        else F.lit(None).cast(schema[c].dataType).alias(c)
+                        F.expr(by_col.get(c, "NULL"))
+                        .cast(schema[c].dataType).alias(c)
                         for c in names
-                    ]
-                )
-                parts.append(i_df.withColumn(OP_COL, F.lit("I")))
+                    ],
+                    F.lit("I").alias(OP_COL),
+                ))
         if not parts:
             raise ValueError(f"MERGE has no actionable WHEN clause: {q!r}")
         batch = parts[0]
         for p in parts[1:]:
             batch = batch.unionByName(p)
-        ret: Optional[DataFrame] = None
         if returning is not None:
             # PG17 ``MERGE ... RETURNING``: one row per action taken —
-            # exactly this CDC batch (U rows are post-images, D rows
-            # pre-images, I rows the new rows).  Checkpoint the batch
-            # ONCE (the multi-match guard embedded in the op column
-            # fires HERE, before anything applies), project the
-            # RETURNING list over it, and feed the SAME checkpoint to
-            # apply_changes so the merge joins never recompute.
-            try:
-                batch = batch.localCheckpoint(eager=True)
-            except Exception as e:
-                if _MERGE_MULTI_MATCH_MSG in str(e):
-                    raise ValueError(_MERGE_MULTI_MATCH_MSG) from None
-                raise
-            act = (
-                F.when(F.col(OP_COL) == "I", "INSERT")
-                .when(F.col(OP_COL) == "U", "UPDATE")
-                .otherwise("DELETE")
+            # the batch itself.  ``*`` is the target's columns, never
+            # the action pseudo-column; merge_action() reads it
+            # (substituted outside string literals only)
+            returning = ", ".join(
+                ", ".join(f"`{c}`" for c in names) if i.strip() == "*"
+                else _sub_masked(
+                    r"\bmerge_action\s*\(\s*\)", "__merge_action", i.strip()
+                )
+                for i in _split_top_commas(returning) if i.strip()
             )
-            ret_src = batch.select(
-                *[F.col(c) for c in names], act.alias("__merge_action")
-            )
-            items: list[str] = []
-            for item in _split_top_commas(returning):
-                item = item.strip()
-                if not item:
-                    continue
-                if item == "*":
-                    # Postgres: * expands to the target's columns, never
-                    # the action pseudo-column
-                    items.extend(names)
-                    continue
-                # merge_action() → the action tag, substituted outside
-                # string literals only
-                items.append(_sub_masked(
-                    r"\bmerge_action\s*\(\s*\)", "__merge_action", item
-                ))
-            ret = ret_src.selectExpr(*items)
-        try:
-            v = self.apply_changes(name, batch)
-        except Exception as e:  # surface the in-job guard as ValueError
-            if _MERGE_MULTI_MATCH_MSG in str(e):
-                raise ValueError(_MERGE_MULTI_MATCH_MSG) from None
-            raise
-        return ret if ret is not None else self._dml_result("MERGE", t, v)
+        return self._apply_dml_batch(name, batch, "MERGE", returning)
+
     def _sql_create_table(
         self, query: str, pin: Optional[dict[str, int]] = None, *_
     ) -> DataFrame:
@@ -6753,17 +6317,18 @@ class SqlRouterMixin:
         if not m:
             raise ValueError(f"unsupported ALTER statement: {q!r}")
         t, rest = m.group(2), m.group(3)
-        if m.group(1):
-            try:
-                self._moontable(t)
-            except KeyError:  # Postgres: a NOTICE, and nothing happens
+        try:
+            self._moontable(t)  # sees tables staged in the open block
+        except KeyError as e:
+            if m.group(1):  # Postgres: a NOTICE, and nothing happens
                 return self._dml_result("ALTER", t, 0)
+            if not _ALTER_ACTION_WORDS.match(rest):
+                raise ValueError(f"unsupported ALTER statement: {q!r}")
+            raise UnknownTableError(*e.args) from None
         canon = self._canon(t)
-        m = re.match(r"OWNER\s+TO\s+[\w\"]+\s*$", rest, re.I)
-        if m:
+        if re.match(r"OWNER\s+TO\s+[\w\"]+\s*$", rest, re.I):
             # pg_dump emits one per table; no roles in a single-session
-            # engine — validated-inert (unknown-table error is real)
-            self._moontable(t)
+            # engine — validated-inert
             return self._dml_result("ALTER", t, 0)
         m = re.match(r'SET\s+SCHEMA\s+("[^"]+"|[A-Za-z_]\w*)\s*$', rest, re.I)
         if m:

@@ -96,8 +96,17 @@ def test_topk_per_group_order_and_single_exchange(spark, queries):
     # QueryExecution and the post-execution plan double-prints exchanges
     df = queries["topk_per_group"](spark, SF_DIR)
     assert I.exchange_count(df) == 1
-    plan = I.plan_text(df, "simple")
-    assert "rangepartitioning(o_custkey" in plan
+    plan = re.sub(r"#\d+L?", "", I.plan_text(df, "simple"))
+    # the one exchange ranges on o_custkey alone ...
+    ranges = re.findall(r"rangepartitioning\(([^)]*?), \d+\)", plan)
+    assert ranges == ["o_custkey ASC NULLS FIRST"], ranges
+    # ... and the window sorts each partition by (o_custkey,
+    # o_totalprice DESC, o_orderkey) — within a customer that IS rn
+    # order, so the output order rests on these keys
+    order = "o_totalprice DESC NULLS LAST, o_orderkey ASC NULLS FIRST"
+    assert f"[o_custkey], [{order}]" in plan, plan
+    sorts = re.findall(r"Sort \[([^\]]*)\]", plan)
+    assert sorts == [f"o_custkey ASC NULLS FIRST, {order}"], sorts
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from pg_mooncake_spark.engine import MooncakeEngine
+from pg_mooncake_spark.sql_router import UnknownTableError
 
 from tests.conftest import SF_DIR
 
@@ -153,6 +154,25 @@ def test_alter_set_access_method_refuses_loudly(eng, spark):
         eng.sql("ALTER TABLE am_t SET ACCESS METHOD columnstore")
     with pytest.raises(ValueError):  # unknown table errors first
         eng.sql("ALTER TABLE no_such SET ACCESS METHOD heap")
+
+
+def test_alter_unknown_table_errors_before_any_action(eng):
+    for action in (
+        "SET ACCESS METHOD heap", "OWNER TO bob", "ADD COLUMN c int",
+        "RENAME TO other", "DROP COLUMN c",
+    ):
+        with pytest.raises(UnknownTableError, match="unknown mirror"):
+            eng.sql(f"ALTER TABLE no_such {action}")
+        row = eng.sql(f"ALTER TABLE IF EXISTS no_such {action}").collect()
+        assert row[0].version == 0
+    # the lookup sees the open block: a table dropped there is unknown
+    eng.sql("CREATE TABLE gone (k int PRIMARY KEY)")
+    eng.sql("BEGIN")
+    eng.sql("DROP TABLE gone")
+    with pytest.raises(UnknownTableError, match="dropped"):
+        eng.sql("ALTER TABLE gone OWNER TO bob")
+    eng.sql("ROLLBACK")
+    assert eng.sql("ALTER TABLE gone OWNER TO bob").collect()[0].version == 0
 
 
 def test_discard_spellings(eng, spark):

@@ -465,6 +465,26 @@ def test_savepoint_shadowing_postgres_semantics(eng):
     assert eng.sql("SELECT count(*) AS n FROM svs").collect()[0].n == 0
 
 
+@pytest.mark.parametrize("bad", [
+    "SAVEPOINT 1bad", "RELEASE nosuch", "ROLLBACK TO nosuch", "BEGIN bogus",
+])
+def test_failed_transaction_control_aborts_the_block(eng, bad):
+    # Postgres aborts an open block on ANY error, transaction-control
+    # statements included; COMMIT and ROLLBACK still end the block
+    eng.sql("CREATE TABLE tcx (id bigint PRIMARY KEY)")
+    for end in ("COMMIT", "ROLLBACK"):
+        eng.sql("BEGIN")
+        eng.sql("INSERT INTO tcx VALUES (1)")
+        with pytest.raises(ValueError):
+            eng.sql(bad)
+        assert eng._txn["aborted"]
+        with pytest.raises(ValueError, match="transaction is aborted"):
+            eng.sql("INSERT INTO tcx VALUES (2)")
+        eng.sql(end)
+        assert eng._txn is None
+        assert eng.table("tcx").count() == 0
+
+
 def test_logical_views_persist_and_track_base(eng, cust, spark, warehouse):
     from pg_mooncake_spark.engine import MooncakeEngine
 

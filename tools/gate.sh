@@ -3,8 +3,8 @@
 # in-progress refactor be the round snapshot.  Run from the repo root
 # BEFORE the final commit of a round:
 #
-#   bash tools/gate.sh            # full: pytest + full differential gate
-#   bash tools/gate.sh --quick    # smoke: pytest + sf0.001 gate
+#   bash tools/gate.sh            # full: whole suite (-m "") + sf0.01 gate
+#   bash tools/gate.sh --quick    # smoke: fast tier + sf0.001 gate
 #
 # Exits non-zero if anything is red — in that case commit the last green
 # state instead.
@@ -13,12 +13,14 @@ cd "$(dirname "$0")/.."
 export PYTHONPATH="$PWD"
 
 SF_DIR=/root/testdata/sf0.01
+TIER=(-m "")  # pytest.ini deselects the slow tier by default
 if [[ "${1:-}" == "--quick" ]]; then
   SF_DIR=/root/testdata/sf0.001
+  TIER=()
 fi
 
 echo "== gate: pytest =="
-python -m pytest tests/ -q
+python -m pytest tests/ "${TIER[@]}" -q
 
 echo "== gate: benchmark self-checks =="
 python -m pytest perfbench/tests -q
