@@ -53,7 +53,7 @@ from pg_mooncake_spark.sqlparse import (  # noqa: F401  (re-exported: tests
     _values_spans,
     parse_table_name,
 )
-from pg_mooncake_spark.storage import OP_COL, MoonTable
+from pg_mooncake_spark.storage import OP_COL, MoonTable, is_pinned, pin_batch
 
 
 def _path_slug(canonical: str) -> str:
@@ -682,6 +682,11 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         mt = self._moontable(dst)
         entry = self.catalog.get(dst)
         prior_ev, prior_latest = entry.get("export_version"), mt.latest_version()
+        # evaluate the batch's source plan ONCE: the merge and the export
+        # sync below both read this Arrow-backed twin (a batch over the
+        # driver bound stays as it is: merge caches it, the export sync
+        # checkpoints it)
+        changes = pin_batch(changes)
         v = mt.merge(
             changes,
             source_version=source_version,
@@ -1035,8 +1040,10 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         # three derived jobs (key scan, emptiness probe, append) and,
         # inside a streaming foreachBatch, re-executing the micro-batch
         # plan per job both recomputes upstream work and is not
-        # guaranteed to replay identical rows for every source
-        changes = changes.localCheckpoint(eager=True)
+        # guaranteed to replay identical rows for every source.  A batch
+        # apply_changes pinned as Arrow is already that materialization.
+        if not is_pinned(changes):
+            changes = changes.localCheckpoint(eager=True)
         mask_ops = ("I", "U", "D") if upsert_inserts else ("U", "D")
         keys = changes.filter(F.col(OP_COL).isin(*mask_ops)).select(*pk)
         # align to the mirror schema (null-filling columns the batch

@@ -5639,8 +5639,20 @@ class SqlRouterMixin:
         if not m:
             raise ValueError(f"cannot parse MERGE statement: {q!r}")
         t = m.group(1)
-        tgt_alias = m.group(2) or m.group(3) or self._canon(t)
+        tgt_alias = m.group(2) or m.group(3)
         rest = m.group(4).strip()
+        if not tgt_alias:
+            # unaliased target: named by its last name part, as UPDATE
+            # and DELETE name theirs; a column qualified by the whole
+            # schema-qualified name (``s.t.col``) is rewritten to it
+            tgt_alias = self._canon(t).split(".")[-1]
+            qm = re.fullmatch(r"(\w+)\.(\w+)", t)
+            if qm:
+                rest = _sub_masked(
+                    rf"(?<![\w.]){qm.group(1)}\s*\.\s*{qm.group(2)}"
+                    r"\s*\.\s*(?=[A-Za-z_`])",
+                    f"{tgt_alias}.", rest,
+                )
         # source: parenthesized query or table name, optional alias
         if rest.startswith("("):
             i = _match_bracket(_mask_quoted(rest), 0)

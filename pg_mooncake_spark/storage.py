@@ -33,6 +33,7 @@ import os
 import re
 import time
 import uuid
+import weakref
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
@@ -573,6 +574,8 @@ class MoonTable:
         Rename eras are few (renames are rare DDL), so this is a handful
         of unioned scans at worst, one in the common case.  Every call
         builds a new plan; :meth:`read` memoizes its result per file set.
+        The file list crosses py4j as one string (:func:`_jpaths`), so
+        the build costs the same round trips for 1 file or 1000.
         """
         groups: dict[tuple, list[dict]] = {}
         for d in files:
@@ -588,9 +591,10 @@ class MoonTable:
                     for f in schema.fields
                 ]
             )
-            gdf = self.spark.read.schema(read_schema).parquet(
-                *[os.path.join(self.data_path, d["name"]) for d in fs]
-            )
+            reader = self.spark.read.schema(read_schema)
+            gdf = reader._df(reader._jreader.parquet(_jpaths(
+                self.spark, [os.path.join(self.data_path, d["name"]) for d in fs]
+            )))
             if phys:
                 gdf = gdf.toDF(*names)
             if add_file_col:
@@ -686,7 +690,10 @@ class MoonTable:
         is also built on the driver from the staged files' pk columns and
         persisted as an immutable ``_index/`` sidecar — MERGE's candidate
         pruning tests batch keys against it driver-side instead of
-        scanning the file (functions/bloom.py)."""
+        scanning the file (functions/bloom.py).  A driver-side merge
+        writes its one data file with pyarrow instead
+        (:meth:`_write_data_arrow`) and describes it with the same
+        :func:`_footer_stats` and :meth:`_describe`."""
         import pyarrow.parquet as pq
 
         from pg_mooncake_spark.functions import bloom as B
@@ -727,35 +734,97 @@ class MoonTable:
         descriptors: list[dict] = []
         for fname, md in footers.items():
             new_name = f"part-{uuid.uuid4().hex}.parquet"
-            st = stats[fname]
-            desc = {
-                "name": new_name,
-                "rows": md.num_rows,
-                "stats": {
-                    k: [_plain(st[k][0], "lo"), _plain(st[k][1], "hi")]
-                    for k in stat_cols
-                },
-            }
-            h = None
+            pk_tab = None
             if bloomable:
                 with pq.ParquetFile(os.path.join(staging, fname)) as pf:
-                    h = B.arrow_key_hashes(pf.read(columns=list(pk)), pk)
+                    pk_tab = pf.read(columns=list(pk))
             os.rename(os.path.join(staging, fname), os.path.join(self.data_path, new_name))
-            if h is not None:
-                m = B.bloom_m_for(md.num_rows)
-                side = f"bloom-{new_name}.bin"
-                self.backend.mkdirs(os.path.join(self.path, _INDEX_DIR))
-                self.backend.write_atomic(
-                    os.path.join(self.path, _INDEX_DIR, side),
-                    B.serialize(B.build_bitmap(h, m), m),
-                )
-                desc["bloom"] = side
-            descriptors.append(desc)
+            descriptors.append(
+                self._describe(new_name, md.num_rows, stats[fname], stat_cols, pk, pk_tab)
+            )
         # clean staging remnants (zero-row files included)
         for f in os.listdir(staging):
             os.remove(os.path.join(staging, f))
         os.rmdir(staging)
         return descriptors
+
+    def _describe(
+        self,
+        name: str,
+        rows: int,
+        stats: dict,
+        stat_cols: list[str],
+        pk: Optional[list[str]],
+        pk_tab: Any = None,
+    ) -> dict:
+        """Commit descriptor of one placed data file: row count, min/max
+        ``stats`` of ``stat_cols`` and, when ``pk_tab`` (the file's pk
+        columns as Arrow) is given and no key is NULL, a bloom sidecar
+        built from it.  Shared by the Spark-written and the
+        driver-written files of a commit."""
+        from pg_mooncake_spark.functions import bloom as B
+
+        desc = {
+            "name": name,
+            "rows": rows,
+            "stats": {
+                k: [_plain(stats[k][0], "lo"), _plain(stats[k][1], "hi")]
+                for k in stat_cols
+            },
+        }
+        h = B.arrow_key_hashes(pk_tab, pk) if pk_tab is not None else None
+        if h is not None:
+            m = B.bloom_m_for(rows)
+            side = f"bloom-{name}.bin"
+            self.backend.mkdirs(os.path.join(self.path, _INDEX_DIR))
+            self.backend.write_atomic(
+                os.path.join(self.path, _INDEX_DIR, side),
+                B.serialize(B.build_bitmap(h, m), m),
+            )
+            desc["bloom"] = side
+        return desc
+
+    def _put_arrow(self, tab: Any, dest: str) -> Any:
+        """Write the Arrow table ``tab`` as ONE parquet file at ``dest``
+        (written in a ``_staging_`` dir, which :meth:`vacuum` leaves
+        alone during its grace window, then renamed); returns its
+        footer."""
+        import pyarrow.parquet as pq
+
+        staging = os.path.join(self.data_path, f"_staging_{uuid.uuid4().hex}")
+        os.makedirs(staging)
+        src = os.path.join(staging, "part.parquet")
+        pq.write_table(tab, src, store_schema=False)
+        md = pq.read_metadata(src)
+        os.rename(src, dest)
+        os.rmdir(staging)
+        return md
+
+    def _write_data_arrow(
+        self, tab: Any, pk: list[str], schema: T.StructType
+    ) -> list[dict]:
+        """Driver-side twin of :meth:`_stage_files` for an O(batch) Arrow
+        table: one data file (none for zero rows), described with the
+        same footer stats and bloom sidecar.  Pk columns whose footer
+        carries no usable min/max (a long string pyarrow leaves
+        unstatted) take them from the Arrow table; the driver path only
+        admits pk types whose Arrow order is Spark's."""
+        import pyarrow.compute as pc
+
+        from pg_mooncake_spark.functions import bloom as B
+
+        if not tab.num_rows:
+            return []
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        md = self._put_arrow(tab, os.path.join(self.data_path, name))
+        types = {f.name: f.dataType for f in schema.fields}
+        stats = _footer_stats(md, pk, types)
+        for k in pk:
+            if k not in stats:
+                mm = pc.min_max(tab.column(k)).as_py()
+                stats[k] = (mm["min"], mm["max"])
+        pk_tab = tab.select(pk) if B.supported_pk_types(schema, pk) else None
+        return [self._describe(name, tab.num_rows, stats, pk, pk, pk_tab)]
 
     def _stage_delete_files(
         self, keys_df: DataFrame, pk: list[str]
@@ -789,8 +858,10 @@ class MoonTable:
         """Persist one commit's change rows (table columns +
         CHANGE_TYPE_COL) as parquet under ``_changes/``; returns file
         names relative to the changes dir.  A CDC batch's change set is
-        O(batch), so a single coalesced writer task keeps the driver out
-        of the data path while the file count stays 1.
+        O(batch), so a single coalesced writer task keeps the file count
+        at 1.  A driver-side merge classifies its change set on Arrow
+        and writes the same file (same columns, pending name) with
+        pyarrow (:meth:`_merge_on_driver`).
 
         The commit version is embedded as a physical column so a
         STREAMING consumer of the ``_changes/`` directory
@@ -1052,12 +1123,27 @@ class MoonTable:
         3. commit — one atomic log entry removing touched files and adding
            rewritten ones.
 
+        Two ways to run it, one result.  The batch is pinned ONCE
+        (:func:`pin_batch`: ``limit(B + 1).toArrow()``, B =
+        ``_DRIVER_MAX_ROWS``).  When it has at most B rows and no repeated
+        key, its pk types compare in Arrow as in Spark
+        (:func:`_driver_pk_types`) and the stat- and bloom-pruned
+        candidate files hold at most B rows, the
+        whole merge runs on the driver with pyarrow
+        (:meth:`_merge_on_driver`) — the pin is its only Spark job.
+        Otherwise the Spark plan above runs, over the Arrow-backed batch
+        when it was pinned.
+
         Semantics match logical-replication apply in the reference's
         moonlink sync (reference tests/pg_regress/sql/sanity.sql:3-5
         I/U/D flow): I and U both upsert (replace if the key exists,
         insert if absent — so replayed/duplicate inserts are idempotent),
         D is a no-op for absent keys.  A batch must carry at most one
         change per key (CDC microbatches are key-compacted upstream).
+        Nothing enforces it: a batch that repeats a key evicts every
+        stored image of the key and stores each of its I/U rows, and it
+        runs the Spark plan, since the driver path's change
+        classification assumes one change per key.
 
         ``strategy``: 'cow' always rewrites touched files; 'mor' commits
         merge-on-read instead — upserts append, changed keys land in an
@@ -1149,6 +1235,18 @@ class MoonTable:
                         "recreate the mirror to change its schema"
                     )
             work_schema = T.StructType(new_fields)
+        changes = pin_batch(changes)
+        batch = _PINNED.get(changes)
+        if batch is not None and _driver_pk_types(work_schema, pk):
+            batch = _arrow_conform(batch, work_schema, extra=[OP_COL])
+            if batch is not None and not _repeats_keys(batch, pk):
+                files, dels, _ = self._snapshot_full(None)
+                v = self._merge_on_driver(
+                    batch, pk, work_schema, evolved, files, dels, strategy,
+                    mor_threshold, source_version, commit_props,
+                )
+                if v is not None:
+                    return v
         changes = changes.cache()
         scan_cached = None
         try:
@@ -1179,11 +1277,7 @@ class MoonTable:
             cols = [f.name for f in work_schema.fields]
             upserts = changes.filter(F.col(OP_COL).isin("I", "U")).select(*cols)
 
-            use_mor = strategy == "mor" or (
-                strategy == "auto"
-                and len(files) >= 4
-                and len(touched) / len(files) > mor_threshold
-            )
+            use_mor = _use_mor(strategy, mor_threshold, files, touched)
             v = self.latest_version() + 1
             props = dict(commit_props) if commit_props else None
             # with the change feed on, a CoW merge has TWO consumers of
@@ -1203,65 +1297,240 @@ class MoonTable:
                         scan_df=scan_cached,
                     ),
                 }
-            if use_mor and touched:
+            if use_mor:
                 # merge-on-read: append upserts, tombstone every changed
                 # key; the tombstone (commit v) applies only to files
                 # with version < v, so the upserts just appended survive
                 add = self._stage_files(upserts, pk)
-                del_descr = self._stage_delete_files(ud_keys, pk)
-                self._commit_with_changes(
-                    Commit(
-                        version=v,
-                        op="merge-mor",
-                        add=add,
-                        deletes=del_descr,
-                        schema=(
-                            json.dumps(work_schema.jsonValue())
-                            if evolved
-                            else None
-                        ),
-                        source_version=source_version,
-                        props=props,
-                    )
-                )
-                return v
-
-            if touched:
-                # scanning OLD files with the (possibly evolved) schema
-                # null-fills columns the files predate; _scan folds any
-                # live tombstones so a rewrite (new file version) cannot
-                # resurrect previously MOR-deleted rows
-                current = (
-                    scan_cached
-                    if scan_cached is not None
-                    else self._scan(touched, work_schema, dels)
-                )
-                survivors = current.join(ud_keys, on=pk, how="left_anti")
-                new_data = survivors.unionByName(upserts)
+                deletes = self._stage_delete_files(ud_keys, pk)
+                remove: list[dict] = []
             else:
-                new_data = upserts
-
-            add = self._stage_files(new_data, pk) if new_data is not None else []
-            self._commit_with_changes(
-                Commit(
-                    version=v,
-                    op="merge",
-                    add=add,
-                    remove=[d["name"] for d in touched],
-                    schema=(
-                        json.dumps(work_schema.jsonValue())
-                        if evolved
-                        else None
-                    ),
-                    source_version=source_version,
-                    props=props,
-                )
+                if touched:
+                    # scanning OLD files with the (possibly evolved)
+                    # schema null-fills columns the files predate; _scan
+                    # folds any live tombstones so a rewrite (new file
+                    # version) cannot resurrect previously MOR-deleted
+                    # rows
+                    current = (
+                        scan_cached
+                        if scan_cached is not None
+                        else self._scan(touched, work_schema, dels)
+                    )
+                    survivors = current.join(ud_keys, on=pk, how="left_anti")
+                    new_data = survivors.unionByName(upserts)
+                else:
+                    new_data = upserts
+                add, deletes, remove = self._stage_files(new_data, pk), [], touched
+            return self._commit_merge(
+                v, use_mor, add, deletes, remove,
+                work_schema if evolved else None, source_version, props,
             )
-            return v
         finally:
             if scan_cached is not None:
                 scan_cached.unpersist()
             changes.unpersist()
+
+    def _commit_merge(
+        self,
+        v: int,
+        use_mor: bool,
+        add: list[dict],
+        deletes: list[dict],
+        remove: list[dict],
+        evolved_schema: Optional[T.StructType],
+        source_version: Optional[int],
+        props: Optional[dict],
+    ) -> int:
+        """The one log entry of a merge (either path): ``merge-mor`` adds
+        upserts and tombstones, ``merge`` replaces the touched files."""
+        self._commit_with_changes(
+            Commit(
+                version=v,
+                op="merge-mor" if use_mor else "merge",
+                add=add,
+                remove=[d["name"] for d in remove],
+                deletes=deletes,
+                schema=(
+                    json.dumps(evolved_schema.jsonValue())
+                    if evolved_schema is not None
+                    else None
+                ),
+                source_version=source_version,
+                props=props,
+            )
+        )
+        return v
+
+    def _merge_on_driver(
+        self,
+        batch: Any,
+        pk: list[str],
+        schema: T.StructType,
+        evolved: bool,
+        files: list[dict],
+        dels: list[dict],
+        strategy: str,
+        mor_threshold: float,
+        source_version: Optional[int],
+        commit_props: Optional[dict],
+    ) -> Optional[int]:
+        """:meth:`merge` for a pinned batch whose candidate files are
+        driver-sized, with pyarrow and no Spark job; None (nothing
+        written) when the stat- and bloom-pruned candidates hold more
+        than ``_DRIVER_MAX_ROWS`` rows, or a descriptor has no count.
+
+        ``batch`` is the pinned batch as Arrow in the table's Arrow
+        schema plus ``__op``, with no repeated non-NULL key.  Candidates
+        are read whole (:func:`_read_arrow`: rename eras, NULL-filled
+        columns a file predates, widened types).  A file holding a batch
+        key is touched, tombstones or not, as in
+        :meth:`_probe_by_keys`; a touched row is live when its file's
+        version is ≥ the highest tombstone version of its key (the
+        :meth:`_scan` rule).  Live rows with a batch key are the
+        pre-images, the other live rows of a touched file the CoW
+        survivors.  The change feed is classified as in
+        :meth:`_merge_change_files`; each of the upsert (or CoW), the
+        tombstone and the change file is written once by
+        :meth:`_put_arrow`, never with zero rows."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from pg_mooncake_spark.functions import bloom as B
+
+        keys = batch.select(pk)
+        live_keys = keys.filter(_keyed_mask(keys, pk))
+        bounds = {}
+        for k in pk:
+            mm = pc.min_max(keys.column(k)).as_py()
+            bounds[f"min_{k}"], bounds[f"max_{k}"] = mm["min"], mm["max"]
+        candidates = [d for d in files if _intersects(d, pk, bounds)]
+        if candidates and any(d.get("bloom") for d in candidates):
+            # NULL keys match nothing, so the non-NULL keys prune soundly
+            candidates = self._bloom_filter_candidates(
+                candidates, B.arrow_key_hashes(live_keys, pk)
+            )
+        if any(d.get("rows") is None for d in candidates) or (
+            sum(d["rows"] for d in candidates) > self._DRIVER_MAX_ROWS
+        ):
+            return None
+        cols = [f.name for f in schema.fields]
+        tschema = batch.select(cols).schema
+        try:
+            parts = [
+                _read_arrow(
+                    os.path.join(self.data_path, d["name"]), tschema, d.get("phys")
+                )
+                for d in candidates
+            ]
+            found = pa.concat_tables(parts) if parts else tschema.empty_table()
+            file_of = np.repeat(
+                np.arange(len(candidates)), [t.num_rows for t in parts]
+            ).astype(np.int64)
+            hit_files = np.unique(file_of[_match(found, live_keys, pk)[0]])
+            touched = [candidates[i] for i in hit_files]
+            use_mor = _use_mor(strategy, mor_threshold, files, touched)
+            feed = self.change_feed_enabled()
+            # touched rows: which are live, and the batch row of each
+            in_touched = np.isin(file_of, hit_files)
+            rows = found.filter(pa.array(in_touched))
+            fv = np.array(
+                [d["v"] for d in candidates], dtype=np.int64
+            )[file_of[in_touched]]
+            alive = (
+                self._tombstone_alive(rows, fv, dels, pk, tschema)
+                if touched and (feed or not use_mor)
+                else np.ones(rows.num_rows, dtype=bool)
+            )
+        except pa.ArrowException:
+            return None  # a stored type pyarrow cannot convert: Spark path
+        ops = np.asarray(batch.column(OP_COL).to_pylist(), dtype=object)
+        is_up = (ops == "I") | (ops == "U")
+        ri, bi = _match(rows, keys, pk)
+        pre, pre_b = ri[alive[ri]], bi[alive[ri]]
+
+        v = self.latest_version() + 1
+        props = dict(commit_props) if commit_props else None
+        if feed:
+            existing = np.zeros(batch.num_rows, dtype=bool)
+            existing[pre_b[is_up[pre_b]]] = True
+            post = batch.filter(pa.array(is_up & existing)).select(cols)
+            pieces = [
+                (rows.take(pre[ops[pre_b] == "D"]), "delete"),
+                (rows.take(pre[is_up[pre_b]]), "update_preimage"),
+                (post, "update_postimage"),
+                (batch.filter(pa.array(is_up & ~existing)).select(cols), "insert"),
+            ]
+            chg = pa.concat_tables(
+                [
+                    t.append_column(
+                        CHANGE_TYPE_COL, pa.array([ct] * t.num_rows, pa.string())
+                    )
+                    for t, ct in pieces
+                ]
+            )
+            chg = chg.append_column(
+                VERSION_COL, pa.array(np.full(chg.num_rows, v), pa.int64())
+            )
+            names: list[str] = []
+            if chg.num_rows:
+                name = f"chg-{uuid.uuid4().hex}.parquet"
+                ch_dir = os.path.join(self.data_path, _CHANGES_DIR)
+                os.makedirs(ch_dir, exist_ok=True)
+                # pending until the commit lands (_stage_change_files)
+                self._put_arrow(chg, os.path.join(ch_dir, "." + _PENDING_PREFIX + name))
+                names.append(name)
+            props = {**(props or {}), "change_files": names}
+
+        upserts = batch.filter(pa.array(is_up)).select(cols)
+        if use_mor:
+            add = self._write_data_arrow(upserts, pk, schema)
+            tomb = keys.group_by(pk).aggregate([])
+            name = f"del-{uuid.uuid4().hex}.parquet"
+            md = self._put_arrow(tomb, os.path.join(self.data_path, name))
+            deletes, remove = [{"name": name, "rows": md.num_rows}], []
+        else:
+            in_batch = np.zeros(rows.num_rows, dtype=bool)
+            in_batch[ri] = True
+            survivors = rows.filter(pa.array(alive & ~in_batch))
+            add = self._write_data_arrow(
+                pa.concat_tables([survivors, upserts]), pk, schema
+            )
+            deletes, remove = [], touched
+        return self._commit_merge(
+            v, use_mor, add, deletes, remove,
+            schema if evolved else None, source_version, props,
+        )
+
+    def _tombstone_alive(
+        self, rows: Any, fv: Any, dels: list[dict], pk: list[str], tschema: Any
+    ) -> Any:
+        """Boolean mask over ``rows`` (read from files of versions
+        ``fv``): True where no tombstone of a LATER version holds the
+        row's key — :meth:`_scan`'s rule.  Only delete files newer than
+        the oldest row's file can remove anything, so only those are
+        read (pk columns only)."""
+        import numpy as np
+        import pyarrow as pa
+
+        alive = np.ones(rows.num_rows, dtype=bool)
+        later = [d for d in dels if len(fv) and d["v"] > fv.min()]
+        if not later:
+            return alive
+        pk_schema = pa.schema([tschema.field(k) for k in pk])
+        tombs = [
+            _read_arrow(os.path.join(self.data_path, d["name"]), pk_schema, d.get("phys"))
+            for d in later
+        ]
+        dv = np.repeat(
+            np.array([d["v"] for d in later], dtype=np.int64),
+            [t.num_rows for t in tombs],
+        )
+        ri, ti = _match(rows, pa.concat_tables(tombs), pk)
+        max_dv = np.zeros(rows.num_rows, dtype=np.int64)
+        np.maximum.at(max_dv, ri, dv[ti])
+        alive[ri] = fv[ri] >= max_dv[ri]
+        return alive
 
     def _merge_change_files(
         self,
@@ -1333,7 +1602,11 @@ class MoonTable:
     # sound; a steady-state sync loop probes from memory with zero I/O
     _BLOOM_CACHE: dict[str, Optional[tuple]] = {}
     _BLOOM_CACHE_MAX = 8192
-    _BLOOM_MAX_KEYS = 100_000
+    # the driver bound: a merge batch of at most this many rows is pinned
+    # as Arrow, and merges on the driver when its candidate files hold
+    # at most this many rows too (:meth:`merge`); it also caps the batch
+    # key collect of :meth:`_bloom_prune`
+    _DRIVER_MAX_ROWS = 100_000
 
     def _bloom_prune(
         self,
@@ -1355,7 +1628,7 @@ class MoonTable:
         contains some key (expected hit fraction 1−(1−1/F)^N), so the
         filter would save nothing and hashing the keys is pure overhead
         — measured at sf0.1 (then a worker-side hash job): +0.6 s per
-        merge for a 32→29 prune.  Also skipped past _BLOOM_MAX_KEYS (the
+        merge for a 32→29 prune.  Also skipped past _DRIVER_MAX_ROWS (the
         key collect is O(batch); the probe scan's per-file parallelism
         wins anyway).
 
@@ -1366,7 +1639,7 @@ class MoonTable:
             len(candidates) <= 1
             or n_keys == 0
             or n_keys >= len(candidates)
-            or n_keys > self._BLOOM_MAX_KEYS
+            or n_keys > self._DRIVER_MAX_ROWS
             or not any(d.get("bloom") for d in candidates)
         ):
             return candidates
@@ -2233,6 +2506,199 @@ def _footer_stats(md: Any, cols: list[str], types: dict) -> dict[str, tuple]:
         else:
             out[c] = (lo, hi)
     return out
+
+
+# Arrow-pinned merge batches: DataFrame → its rows as Arrow, or None when
+# the batch is over the driver bound (pinning was tried, nothing kept).
+# Weak keys: an entry lives exactly as long as the frame it describes.
+_PINNED: "weakref.WeakKeyDictionary[DataFrame, Any]" = weakref.WeakKeyDictionary()
+
+
+def pin_batch(df: DataFrame) -> DataFrame:
+    """Evaluate a merge batch ONCE.  When it has at most
+    ``MoonTable._DRIVER_MAX_ROWS`` rows (one job:
+    ``limit(B + 1).toArrow()``) return an Arrow-backed twin — a
+    ``LocalRelation``, so later plans over it run no job to re-read the
+    batch and every consumer sees the same rows — else ``df`` itself.
+    Idempotent; a bound of 0 pins nothing and runs no job."""
+    bound = MoonTable._DRIVER_MAX_ROWS
+    if df in _PINNED or bound <= 0:
+        return df
+    try:
+        _arrow_schema(df.schema)
+    except TypeError:  # a column type Arrow cannot carry
+        _PINNED[df] = None
+        return df
+    tab = _arrow_conform(df.limit(bound + 1).toArrow(), df.schema)
+    if tab is None or tab.num_rows > bound:
+        _PINNED[df] = None
+        return df
+    out = df.sparkSession.createDataFrame(tab, schema=df.schema)
+    _PINNED[out] = tab
+    return out
+
+
+def is_pinned(df: DataFrame) -> bool:
+    """True for an Arrow-backed batch :func:`pin_batch` returned."""
+    return _PINNED.get(df) is not None
+
+
+def _driver_pk_types(schema: T.StructType, pk: list[str]) -> bool:
+    """Key types whose Arrow comparison and hashing agree with Spark's:
+    the bloom-indexable ones, strings only under the binary collation
+    (the condition :func:`_footer_stats` makes too)."""
+    from pg_mooncake_spark.functions import bloom as B
+
+    types = {f.name: f.dataType for f in schema.fields}
+    return B.supported_pk_types(schema, pk) and all(
+        getattr(types[k], "collation", "UTF8_BINARY") == "UTF8_BINARY" for k in pk
+    )
+
+
+def _arrow_schema(schema: T.StructType) -> Any:
+    """The one Arrow schema driver-side merges read and write a table
+    in: pyspark's type mapping, every top-level field nullable (as in a
+    Spark file scan), ``TimestampType`` as ``timestamp[us, tz=UTC]`` and
+    ``TimestampNTZType`` as naive ``timestamp[us]``.  Never ``ns``: the
+    session reads ns parquet timestamps back as LONG."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
+
+
+def _arrow_cast(col: Any, typ: Any) -> Any:
+    """``col`` as Arrow type ``typ``.  Timestamps first take Spark's
+    unit (a Spark INT96 file reads as naive ``ns``); a naive stored
+    timestamp of a ``TimestampType`` column is a UTC instant, so the
+    zone is attached without a shift."""
+    import pyarrow as pa
+
+    if col.type == typ:
+        return col
+    if pa.types.is_timestamp(col.type) and pa.types.is_timestamp(typ):
+        col = col.cast(pa.timestamp("us", col.type.tz), safe=False)
+    return col.cast(typ)
+
+
+def _arrow_conform(
+    tab: Any, schema: T.StructType, extra: Optional[list[str]] = None
+) -> Any:
+    """``tab`` with the columns of ``schema`` in order (plus ``extra``
+    columns as they are), cast to :func:`_arrow_schema`; None when a
+    column cannot be converted."""
+    import pyarrow as pa
+
+    try:
+        fields = list(_arrow_schema(schema)) + [
+            tab.schema.field(c) for c in extra or []
+        ]
+        return pa.table(
+            [_arrow_cast(tab.column(f.name), f.type) for f in fields],
+            schema=pa.schema(fields),
+        )
+    except (pa.ArrowException, TypeError):
+        return None
+
+
+def _read_arrow(path: str, schema: Any, phys: Optional[dict]) -> Any:
+    """One parquet file as the Arrow ``schema``, resolved as
+    :meth:`MoonTable._read_files` resolves it: a column is stored under
+    its rename-era physical name (``phys``), a column the file predates
+    reads as NULL, a narrower stored type is cast up."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    phys = phys or {}
+    with pq.ParquetFile(path) as pf:
+        have = set(pf.schema_arrow.names)
+        stored = {
+            f.name: phys.get(f.name, f.name)
+            for f in schema
+            if phys.get(f.name, f.name) in have
+        }
+        tab = pf.read(columns=list(stored.values()))
+    return pa.table(
+        [
+            _arrow_cast(tab.column(stored[f.name]), f.type)
+            if f.name in stored
+            else pa.nulls(tab.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def _match(left: Any, right: Any, pk: list[str]) -> tuple:
+    """Index arrays (i, j): every pair of ``left`` row i and ``right``
+    row j equal on all ``pk`` columns.  A hash join of the key columns
+    and row numbers only; a NULL key matches nothing, as in Spark's
+    equi-join."""
+    import numpy as np
+    import pyarrow as pa
+
+    def numbered(t: Any, col: str) -> Any:
+        return t.select(pk).append_column(
+            col, pa.array(np.arange(t.num_rows, dtype=np.int64))
+        )
+
+    j = numbered(left, "__i").join(
+        numbered(right, "__j"), keys=list(pk), join_type="inner"
+    )
+    return (
+        j.column("__i").to_numpy().astype(np.int64),
+        j.column("__j").to_numpy().astype(np.int64),
+    )
+
+
+def _keyed_mask(keys: Any, pk: list[str]) -> Any:
+    """Arrow boolean mask: rows whose every pk column is non-NULL."""
+    import pyarrow.compute as pc
+
+    mask = pc.is_valid(keys.column(pk[0]))
+    for k in pk[1:]:
+        mask = pc.and_(mask, pc.is_valid(keys.column(k)))
+    return mask
+
+
+def _repeats_keys(batch: Any, pk: list[str]) -> bool:
+    """True when a full non-NULL key occurs more than once in the batch
+    (a NULL key addresses no row, so NULL-key rows never repeat one)."""
+    keyed = batch.select(pk).filter(_keyed_mask(batch, pk))
+    return keyed.group_by(pk).aggregate([]).num_rows < keyed.num_rows
+
+
+def _use_mor(
+    strategy: str, mor_threshold: float, files: list[dict], touched: list[dict]
+) -> bool:
+    """Merge-on-read (tombstones + appended upserts) instead of a
+    copy-on-write rewrite: forced by ``strategy='mor'``, or under
+    'auto' when most files would be rewritten."""
+    return bool(touched) and (
+        strategy == "mor"
+        or (
+            strategy == "auto"
+            and len(files) >= 4
+            and len(touched) / len(files) > mor_threshold
+        )
+    )
+
+
+# per py4j gateway: the compiled JVM Pattern that splits a joined path list
+_PATH_SPLITTERS: "weakref.WeakKeyDictionary[Any, Any]" = weakref.WeakKeyDictionary()
+
+
+def _jpaths(spark: SparkSession, paths: list[str]) -> Any:
+    """The Scala ``Seq[String]`` of ``paths`` for a JVM reader call, in
+    a constant number of py4j round trips: the list crosses as ONE
+    newline-joined string and is split JVM-side.  (pyspark's own
+    conversion sends one ``ArrayList.add`` per path.)"""
+    gw = spark.sparkContext._gateway
+    pat = _PATH_SPLITTERS.get(gw)
+    if pat is None:
+        pat = _PATH_SPLITTERS[gw] = spark._jvm.java.util.regex.Pattern.compile("\n")
+    jlist = pat.splitAsStream("\n".join(paths)).toList()
+    return spark._jvm.PythonUtils.toSeq(jlist)
 
 
 def _file_key(files: list[dict]) -> tuple:

@@ -82,8 +82,9 @@ def no_python_worker(spark, monkeypatch):
 def test_commit_path_runs_no_python_worker(
     spark, tmp_path, monkeypatch, no_python_worker
 ):
-    """append, a bloom-engaged merge (many files, few keys), optimize
-    and an MV refresh all commit without a Python worker pass."""
+    """append, a bloom-engaged change-feed merge on the driver path
+    (many files, few keys), a Spark-path merge, optimize and an MV
+    refresh all commit without a Python worker pass."""
     eng = MooncakeEngine(spark, str(tmp_path / "wh"))
     src = spark.range(0, 2000).select(
         "id", (F.col("id") % 5).cast("string").alias("v")
@@ -102,10 +103,28 @@ def test_commit_path_runs_no_python_worker(
         return out
 
     monkeypatch.setattr(MoonTable, "_bloom_filter_candidates", spy)
-    eng.apply_changes(
-        "b", spark.createDataFrame([(3, "u", "U"), (1999, None, "D")], CHANGES)
+    on_driver = []
+    orig_driver = MoonTable._merge_on_driver
+
+    def driver_spy(self, *a, **kw):
+        v = orig_driver(self, *a, **kw)
+        on_driver.append(v is not None)
+        return v
+
+    monkeypatch.setattr(MoonTable, "_merge_on_driver", driver_spy)
+    v = eng.apply_changes(
+        "b", spark.createDataFrame(
+            [(3, "u", "U"), (1999, None, "D"), (7000, "n", "I")], CHANGES
+        )
     )
     assert pruned and pruned[0][1] < pruned[0][0], "bloom pruning not engaged"
+    assert on_driver[:1] == [True], "the merge left the driver path"
+    kinds = sorted(r["_change_type"] for r in mt.changes(v, v).collect())
+    assert kinds == ["delete", "insert", "update_postimage", "update_preimage"]
+    bound = MoonTable._DRIVER_MAX_ROWS
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", 0)  # the Spark plan
+    eng.apply_changes("b", spark.createDataFrame([(4, "s", "U")], CHANGES))
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
     eng.optimize_table("b")
     eng.refresh_materialized_view("mv")
     got = {r["v"]: r["n"] for r in eng.materialized_view("mv").collect()}

@@ -40,6 +40,14 @@ SCHEMA = T.StructType(
 )
 
 
+@pytest.fixture(params=[MoonTable._DRIVER_MAX_ROWS, 0], ids=["driver", "spark"])
+def merge_path(request, monkeypatch):
+    """Both merge paths: the driver bound as shipped (these batches and
+    tables fit it, so merges run on the driver) and 0 (the Spark plan)."""
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", request.param)
+    return request.param
+
+
 def _dedup_batch(ops):
     """Keep one change per key (the moontable MERGE contract: CDC
     microbatches are key-compacted upstream — last op wins)."""
@@ -56,7 +64,7 @@ def _dedup_batch(ops):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_merge_matches_model(spark, tmp_path_factory, script):
+def test_merge_matches_model(spark, tmp_path_factory, script, merge_path):
     path = str(tmp_path_factory.mktemp("mt") / "t")
     mt = MoonTable(spark, path)
     mt.create(SCHEMA, primary_key=["k"])
@@ -162,7 +170,7 @@ def test_merge_scattered_keys_rewrites_only_containing_files(spark, tmp_path):
     assert len(got) == 1000
 
 
-def test_mor_merge_and_delete_tombstones(spark, tmp_path):
+def test_mor_merge_and_delete_tombstones(spark, tmp_path, merge_path):
     """VERDICT r7 task 4: merge-on-read DML.  A batch touching one key
     in EVERY file commits O(batch) bytes (append + tombstone, zero
     rewrites); reads fold tombstones with sequence semantics
@@ -351,7 +359,9 @@ def test_vacuum_reclaims_orphaned_staging(spark, tmp_path):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_change_feed_replay_reconstructs_state(spark, tmp_path_factory, script):
+def test_change_feed_replay_reconstructs_state(
+    spark, tmp_path_factory, script, merge_path
+):
     """The feed's fundamental invariant, for ARBITRARY merge
     interleavings: applying the change feed's net images in commit order
     onto an empty model reproduces exactly the final table state, and
@@ -397,7 +407,9 @@ def test_change_feed_replay_reconstructs_state(spark, tmp_path_factory, script):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_view_maintenance_invariant(spark, tmp_path_factory, script):
+def test_view_maintenance_invariant(
+    spark, tmp_path_factory, script, merge_path
+):
     """Incremental view maintenance ≡ from-scratch aggregation for
     ARBITRARY merge interleavings (per-batch refresh, like the engine's
     apply path)."""

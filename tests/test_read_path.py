@@ -108,6 +108,22 @@ class TestPy4jBudget:
         assert n[0] <= 40, f"first read after a write built with {n[0]} py4j calls"
         assert [(r.id, r.status) for r in df.collect()] == [(3, "X")]
 
+    def test_scan_build_is_independent_of_the_file_count(self, spark, tmp_path):
+        mt = MoonTable(spark, str(tmp_path / "t"))
+        mt.create(SCHEMA, primary_key=["id"])
+        mt.append(spark.range(0, 400).selectExpr("id", "CAST(id AS STRING) AS v")
+                  .repartition(16))
+        files, _ = mt._snapshot(None)
+        assert len(files) == 16
+        mt._read_files(files, SCHEMA)  # warm the per-gateway helpers
+        counts = []
+        for fs in (files[:1], files[:2], files):
+            with _py4j_calls(spark) as n:
+                df = mt._read_files(fs, SCHEMA)
+            counts.append(n[0])
+            assert df.count() == sum(d["rows"] for d in fs)
+        assert counts[0] == counts[1] == counts[2], counts
+
 
 class TestMemoSoundness:
     def test_drop_recreate_serves_new_incarnation(self, spark, warehouse):

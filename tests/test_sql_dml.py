@@ -127,6 +127,24 @@ class TestSqlMerge:
         assert r["statement"] == "MERGE"
         assert _rows(eng) == [(1, "a", 1.0), (2, "B2", 7.0), (9, "i", 9.0)]
 
+    def test_schema_qualified_target_without_alias(self, eng):
+        """An unaliased ``s1.t`` target is named ``t`` in the statement
+        (as UPDATE names it); ``s1.t.col`` resolves too."""
+        eng.sql("CREATE SCHEMA s1")
+        eng.sql("CREATE TABLE s1.t (id int PRIMARY KEY, v text)")
+        eng.sql("INSERT INTO s1.t VALUES (1, 'a'), (2, 'b')")
+        eng.sql(
+            "MERGE INTO s1.t USING (SELECT 1 AS id, 'x' AS v) src "
+            "ON s1.t.id = src.id WHEN MATCHED THEN UPDATE SET v = src.v"
+        )
+        eng.sql(
+            "MERGE INTO s1.t USING (SELECT 3 AS id, 'c' AS v) src "
+            "ON t.id = src.id WHEN MATCHED THEN DELETE "
+            "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (src.id, src.v)"
+        )
+        rows = eng.sql("SELECT id, v FROM s1.t ORDER BY id").collect()
+        assert [tuple(r) for r in rows] == [(1, "x"), (2, "b"), (3, "c")]
+
     def test_subquery_source_with_alias(self, eng, spark):
         spark.createDataFrame(
             [(1, "z"), (7, "q")], "k long, v string"

@@ -59,10 +59,17 @@ df = spark.range(0, 400).selectExpr("id", "cast(id % 7 as string) AS v")
 mt = MoonTable(spark, sys.argv[2] + "/t")
 mt.create(df.schema, primary_key=["id"], change_feed=True)
 mt.append(df.repartition(8))
-mt.merge(spark.createDataFrame(
+# a driver-path merge (pyarrow writes its files): Spark must read the
+# change file back with no package on the workers
+v = mt.merge(spark.createDataFrame(
     [(3, "u", "U"), (399, None, "D"), (1000, "n", "I")],
     "id long, v string, __op string",
 ))
+kinds = {}
+for r in mt.changes(v, v).collect():
+    kinds[r["_change_type"]] = kinds.get(r["_change_type"], 0) + 1
+assert kinds == {"delete": 1, "insert": 1, "update_preimage": 1,
+                 "update_postimage": 1}, kinds
 mt.optimize()
 got = {r["id"]: r["v"] for r in mt.read().collect()}
 assert len(got) == 400 and got[3] == "u" and got[1000] == "n" and 399 not in got
