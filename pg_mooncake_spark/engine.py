@@ -683,9 +683,8 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         entry = self.catalog.get(dst)
         prior_ev, prior_latest = entry.get("export_version"), mt.latest_version()
         # evaluate the batch's source plan ONCE: the merge and the export
-        # sync below both read this Arrow-backed twin (a batch over the
-        # driver bound stays as it is: merge caches it, the export sync
-        # checkpoints it)
+        # sync below both read what the pin holds (an Arrow-backed twin,
+        # or a local checkpoint of a batch over the driver bound)
         changes = pin_batch(changes)
         v = mt.merge(
             changes,
@@ -1041,7 +1040,7 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         # inside a streaming foreachBatch, re-executing the micro-batch
         # plan per job both recomputes upstream work and is not
         # guaranteed to replay identical rows for every source.  A batch
-        # apply_changes pinned as Arrow is already that materialization.
+        # apply_changes pinned is already that materialization.
         if not is_pinned(changes):
             changes = changes.localCheckpoint(eager=True)
         mask_ops = ("I", "U", "D") if upsert_inserts else ("U", "D")

@@ -1124,15 +1124,15 @@ class MoonTable:
            rewritten ones.
 
         Two ways to run it, one result.  The batch is pinned ONCE
-        (:func:`pin_batch`: ``limit(B + 1).toArrow()``, B =
-        ``_DRIVER_MAX_ROWS``).  When it has at most B rows and no repeated
-        key, its pk types compare in Arrow as in Spark
-        (:func:`_driver_pk_types`) and the stat- and bloom-pruned
-        candidate files hold at most B rows, the
-        whole merge runs on the driver with pyarrow
-        (:meth:`_merge_on_driver`) — the pin is its only Spark job.
-        Otherwise the Spark plan above runs, over the Arrow-backed batch
-        when it was pinned.
+        (:func:`pin_batch`: one job, ``limit(B + 1).toArrow()`` over a
+        local checkpoint, B = ``_DRIVER_MAX_ROWS``).  When it has at
+        most B rows and no repeated key, its pk types compare in Arrow
+        as in Spark (:func:`_driver_pk_types`) and the stat- and
+        bloom-pruned candidate files, with the tombstones that can
+        remove their rows, hold at most B rows, the whole merge runs on
+        the driver with pyarrow (:meth:`_merge_on_driver`) — the pin is
+        its only Spark job.  Otherwise the Spark plan above runs, over
+        the Arrow-backed batch or the checkpoint the pin left.
 
         Semantics match logical-replication apply in the reference's
         moonlink sync (reference tests/pg_regress/sql/sanity.sql:3-5
@@ -1152,8 +1152,10 @@ class MoonTable:
         reference README.md:13-14); 'auto' (default) picks MOR when the
         touched-file fraction exceeds ``mor_threshold`` — the regime
         where copy-on-write approaches a full-table rewrite even with
-        exact probing (one changed key in most files).  Tombstones fold
-        away on the next :meth:`optimize`.
+        exact probing (one changed key in most files) — or, on a table
+        of fewer than 4 files, when the touched files hold more than
+        ``1 / mor_threshold`` rows per changed key (:func:`_use_mor`).
+        Tombstones fold away on the next :meth:`optimize`.
         """
         pk = self.primary_key()
         if not pk:
@@ -1277,7 +1279,10 @@ class MoonTable:
             cols = [f.name for f in work_schema.fields]
             upserts = changes.filter(F.col(OP_COL).isin("I", "U")).select(*cols)
 
-            use_mor = _use_mor(strategy, mor_threshold, files, touched)
+            use_mor = _use_mor(
+                strategy, mor_threshold, files, touched,
+                int(key_bounds["__nkeys"]),
+            )
             v = self.latest_version() + 1
             props = dict(commit_props) if commit_props else None
             # with the change feed on, a CoW merge has TWO consumers of
@@ -1376,8 +1381,9 @@ class MoonTable:
     ) -> Optional[int]:
         """:meth:`merge` for a pinned batch whose candidate files are
         driver-sized, with pyarrow and no Spark job; None (nothing
-        written) when the stat- and bloom-pruned candidates hold more
-        than ``_DRIVER_MAX_ROWS`` rows, or a descriptor has no count.
+        written) when the stat- and bloom-pruned candidates and the
+        delete files newer than the oldest of them hold more than
+        ``_DRIVER_MAX_ROWS`` rows together, or a descriptor has no count.
 
         ``batch`` is the pinned batch as Arrow in the table's Arrow
         schema plus ``__op``, with no repeated non-NULL key.  Candidates
@@ -1410,8 +1416,14 @@ class MoonTable:
             candidates = self._bloom_filter_candidates(
                 candidates, B.arrow_key_hashes(live_keys, pk)
             )
-        if any(d.get("rows") is None for d in candidates) or (
-            sum(d["rows"] for d in candidates) > self._DRIVER_MAX_ROWS
+        # the driver reads the candidates and every tombstone that can
+        # remove one of their rows (a delete file newer than the oldest)
+        oldest = min((d["v"] for d in candidates), default=None)
+        reads = candidates + [
+            d for d in dels if oldest is not None and d["v"] > oldest
+        ]
+        if any(d.get("rows") is None for d in reads) or (
+            sum(d["rows"] for d in reads) > self._DRIVER_MAX_ROWS
         ):
             return None
         cols = [f.name for f in schema.fields]
@@ -1429,7 +1441,9 @@ class MoonTable:
             ).astype(np.int64)
             hit_files = np.unique(file_of[_match(found, live_keys, pk)[0]])
             touched = [candidates[i] for i in hit_files]
-            use_mor = _use_mor(strategy, mor_threshold, files, touched)
+            use_mor = _use_mor(
+                strategy, mor_threshold, files, touched, batch.num_rows
+            )
             feed = self.change_feed_enabled()
             # touched rows: which are live, and the batch row of each
             in_touched = np.isin(file_of, hit_files)
@@ -1509,17 +1523,30 @@ class MoonTable:
         ``fv``): True where no tombstone of a LATER version holds the
         row's key — :meth:`_scan`'s rule.  Only delete files newer than
         the oldest row's file can remove anything, so only those are
-        read (pk columns only)."""
+        read (pk columns only), each filtered to the keys of ``rows``."""
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         alive = np.ones(rows.num_rows, dtype=bool)
         later = [d for d in dels if len(fv) and d["v"] > fv.min()]
         if not later:
             return alive
         pk_schema = pa.schema([tschema.field(k) for k in pk])
+        key_sets = {k: pc.unique(rows.column(k)) for k in pk}
+
+        def among_rows(t: Any) -> Any:
+            mask = pc.is_in(t.column(pk[0]), value_set=key_sets[pk[0]])
+            for k in pk[1:]:
+                mask = pc.and_(mask, pc.is_in(t.column(k), value_set=key_sets[k]))
+            return t.filter(mask)
+
         tombs = [
-            _read_arrow(os.path.join(self.data_path, d["name"]), pk_schema, d.get("phys"))
+            among_rows(
+                _read_arrow(
+                    os.path.join(self.data_path, d["name"]), pk_schema, d.get("phys")
+                )
+            )
             for d in later
         ]
         dv = np.repeat(
@@ -2508,39 +2535,44 @@ def _footer_stats(md: Any, cols: list[str], types: dict) -> dict[str, tuple]:
     return out
 
 
-# Arrow-pinned merge batches: DataFrame → its rows as Arrow, or None when
-# the batch is over the driver bound (pinning was tried, nothing kept).
+# Pinned merge batches: DataFrame → its rows as Arrow (an Arrow-backed
+# twin), or None (a local checkpoint of a batch over the driver bound).
 # Weak keys: an entry lives exactly as long as the frame it describes.
 _PINNED: "weakref.WeakKeyDictionary[DataFrame, Any]" = weakref.WeakKeyDictionary()
 
 
 def pin_batch(df: DataFrame) -> DataFrame:
-    """Evaluate a merge batch ONCE.  When it has at most
-    ``MoonTable._DRIVER_MAX_ROWS`` rows (one job:
-    ``limit(B + 1).toArrow()``) return an Arrow-backed twin — a
-    ``LocalRelation``, so later plans over it run no job to re-read the
-    batch and every consumer sees the same rows — else ``df`` itself.
-    Idempotent; a bound of 0 pins nothing and runs no job."""
+    """Evaluate a merge batch ONCE, in one job: the batch is marked for
+    a local checkpoint and its first ``MoonTable._DRIVER_MAX_ROWS + 1``
+    rows are collected as Arrow (``limit(B + 1).toArrow()``), which
+    stores every partition of the checkpoint as it goes.  At most B
+    rows: return an Arrow-backed twin — a ``LocalRelation``, so later
+    plans over it run no job to re-read the batch and every consumer
+    sees the same rows.  More: return the checkpointed frame, whose
+    plans read the rows that job stored instead of the source plan.
+    Idempotent; a bound of 0, or a column type Arrow cannot carry,
+    pins nothing and runs no job."""
     bound = MoonTable._DRIVER_MAX_ROWS
     if df in _PINNED or bound <= 0:
         return df
     try:
         _arrow_schema(df.schema)
-    except TypeError:  # a column type Arrow cannot carry
-        _PINNED[df] = None
+    except TypeError:
         return df
-    tab = _arrow_conform(df.limit(bound + 1).toArrow(), df.schema)
+    cp = df.localCheckpoint(eager=False)
+    tab = _arrow_conform(cp.limit(bound + 1).toArrow(), df.schema)
     if tab is None or tab.num_rows > bound:
-        _PINNED[df] = None
-        return df
+        _PINNED[cp] = None
+        return cp
     out = df.sparkSession.createDataFrame(tab, schema=df.schema)
     _PINNED[out] = tab
     return out
 
 
 def is_pinned(df: DataFrame) -> bool:
-    """True for an Arrow-backed batch :func:`pin_batch` returned."""
-    return _PINNED.get(df) is not None
+    """True for a frame :func:`pin_batch` returned that holds its rows
+    (an Arrow-backed twin or a local checkpoint)."""
+    return df in _PINNED
 
 
 def _driver_pk_types(schema: T.StructType, pk: list[str]) -> bool:
@@ -2669,19 +2701,26 @@ def _repeats_keys(batch: Any, pk: list[str]) -> bool:
 
 
 def _use_mor(
-    strategy: str, mor_threshold: float, files: list[dict], touched: list[dict]
+    strategy: str,
+    mor_threshold: float,
+    files: list[dict],
+    touched: list[dict],
+    n_keys: int,
 ) -> bool:
     """Merge-on-read (tombstones + appended upserts) instead of a
     copy-on-write rewrite: forced by ``strategy='mor'``, or under
-    'auto' when most files would be rewritten."""
-    return bool(touched) and (
-        strategy == "mor"
-        or (
-            strategy == "auto"
-            and len(files) >= 4
-            and len(touched) / len(files) > mor_threshold
-        )
-    )
+    'auto' when a rewrite would mostly copy rows the batch leaves
+    alone — on a table of 4 or more files, when more than
+    ``mor_threshold`` of the files would be rewritten; on a smaller
+    table, when the touched files hold more than ``1 / mor_threshold``
+    rows per changed key (a descriptor without ``rows`` counts none)."""
+    if not touched or strategy not in ("mor", "auto"):
+        return False
+    if strategy == "mor":
+        return True
+    if len(files) >= 4:
+        return len(touched) / len(files) > mor_threshold
+    return sum(d.get("rows") or 0 for d in touched) * mor_threshold > n_keys
 
 
 # per py4j gateway: the compiled JVM Pattern that splits a joined path list

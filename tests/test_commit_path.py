@@ -83,8 +83,24 @@ def test_commit_path_runs_no_python_worker(
     spark, tmp_path, monkeypatch, no_python_worker
 ):
     """append, a bloom-engaged change-feed merge on the driver path
-    (many files, few keys), a Spark-path merge, optimize and an MV
-    refresh all commit without a Python worker pass."""
+    (many files, few keys), optimize and an MV refresh all commit
+    without a Python worker pass."""
+    _bloom_engaged_commit_path(
+        spark, tmp_path, monkeypatch, MoonTable._DRIVER_MAX_ROWS
+    )
+
+
+def test_commit_path_on_the_spark_plan_runs_no_python_worker(
+    spark, tmp_path, monkeypatch, no_python_worker
+):
+    """The same on the Spark plan: under a bound between the batch's 3
+    keys and the rows of its candidate files the merge leaves the
+    driver, and the Spark plan's own bloom pruning runs."""
+    _bloom_engaged_commit_path(spark, tmp_path, monkeypatch, 150)
+
+
+def _bloom_engaged_commit_path(spark, tmp_path, monkeypatch, bound):
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
     eng = MooncakeEngine(spark, str(tmp_path / "wh"))
     src = spark.range(0, 2000).select(
         "id", (F.col("id") % 5).cast("string").alias("v")
@@ -103,28 +119,38 @@ def test_commit_path_runs_no_python_worker(
         return out
 
     monkeypatch.setattr(MoonTable, "_bloom_filter_candidates", spy)
-    on_driver = []
+    on_driver, spark_pruned = [], []
     orig_driver = MoonTable._merge_on_driver
+    orig_prune = MoonTable._bloom_prune
 
     def driver_spy(self, *a, **kw):
         v = orig_driver(self, *a, **kw)
         on_driver.append(v is not None)
         return v
 
+    def prune_spy(self, candidates, *a, **kw):
+        out = orig_prune(self, candidates, *a, **kw)
+        spark_pruned.append((len(candidates), len(out)))
+        return out
+
     monkeypatch.setattr(MoonTable, "_merge_on_driver", driver_spy)
+    monkeypatch.setattr(MoonTable, "_bloom_prune", prune_spy)
     v = eng.apply_changes(
         "b", spark.createDataFrame(
             [(3, "u", "U"), (1999, None, "D"), (7000, "n", "I")], CHANGES
         )
     )
     assert pruned and pruned[0][1] < pruned[0][0], "bloom pruning not engaged"
-    assert on_driver[:1] == [True], "the merge left the driver path"
+    if bound == 150:
+        assert on_driver[:1] == [False], "the merge stayed on the driver"
+        assert spark_pruned and spark_pruned[0][1] < spark_pruned[0][0], (
+            "the Spark plan's bloom pruning not engaged"
+        )
+    else:
+        assert on_driver[:1] == [True], "the merge left the driver path"
+        assert not spark_pruned
     kinds = sorted(r["_change_type"] for r in mt.changes(v, v).collect())
     assert kinds == ["delete", "insert", "update_postimage", "update_preimage"]
-    bound = MoonTable._DRIVER_MAX_ROWS
-    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", 0)  # the Spark plan
-    eng.apply_changes("b", spark.createDataFrame([(4, "s", "U")], CHANGES))
-    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
     eng.optimize_table("b")
     eng.refresh_materialized_view("mv")
     got = {r["v"]: r["n"] for r in eng.materialized_view("mv").collect()}

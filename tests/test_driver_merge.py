@@ -311,12 +311,16 @@ def _jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("bound", [BOUND, 0], ids=["driver", "spark"])
+@pytest.mark.parametrize(
+    "bound", [BOUND, 0, 10], ids=["driver", "spark", "over-bound"]
+)
 def test_job_budget(spark, tmp_path, monkeypatch, bound):
     """On the driver path a change-feed merge runs ONE Spark job, the
-    pin; at bound 0 the Spark plan runs its own jobs.  Every batch has
-    more keys than the table has files, so bloom pruning (whose key
-    collect the bound also caps) stays out of both."""
+    pin; at bound 0 the Spark plan runs its own jobs.  A batch over a
+    non-zero bound runs the pin and then the Spark plan over the
+    checkpoint the pin stored.  Every batch has more keys than the
+    table has files, so bloom pruning (whose key collect the bound also
+    caps) stays out of all three."""
     monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
     mt = MoonTable(spark, str(tmp_path / "t"))
     mt.create(spark.range(1).selectExpr("id", "'a' AS v").schema,
@@ -332,7 +336,7 @@ def test_job_budget(spark, tmp_path, monkeypatch, bound):
     ):
         df = spark.createDataFrame(rows, ch)
         counts.append(_jobs(spark, lambda: mt.merge(df, strategy=strategy)))
-    if bound:
+    if bound == BOUND:
         assert counts == [1, 1, 1]
     else:
         assert min(counts) > 5, counts
@@ -343,10 +347,15 @@ def test_job_budget(spark, tmp_path, monkeypatch, bound):
                     "insert": 1}
 
 
-def test_apply_changes_evaluates_the_batch_once(spark, warehouse, tmp_path):
+@pytest.mark.parametrize("bound", [BOUND, 2], ids=["twin", "checkpoint"])
+def test_apply_changes_evaluates_the_batch_once(
+    spark, warehouse, tmp_path, monkeypatch, bound
+):
     """apply_changes pins the batch: merge and the export sync read the
-    Arrow-backed twin, so a source plan that counts its evaluations
-    runs once."""
+    Arrow-backed twin, or, for a batch over the bound, the local
+    checkpoint the pin's one job stored, so a source plan that counts
+    its evaluations runs once."""
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
     eng = MooncakeEngine(spark, warehouse)
     eng.create_table(
         "t", source_df=spark.range(0, 100).selectExpr("id", "'a' AS v"),
@@ -396,6 +405,64 @@ def test_rows_over_the_bound_take_the_spark_path(spark, tmp_path, monkeypatch):
     assert taken == [True, False]
     got = {r["id"]: r["v"] for r in mt.read().collect()}
     assert got[5] == "y" and got[390] == "z" and len(got) == 400
+
+
+@pytest.mark.parametrize("bound", [150, 200], ids=["spark", "driver"])
+def test_tombstones_count_toward_the_bound(spark, tmp_path, monkeypatch, bound):
+    """The tombstones a driver merge would read count toward the bound:
+    the 100 candidate rows fit 150, but with the 60 rows of the delete
+    files that can remove them they do not, and the merge runs the
+    Spark plan; under 200 it stays on the driver.  Either copy-on-write
+    rewrite keeps the deleted rows deleted, tombstones of keys outside
+    the batch included."""
+    mt = MoonTable(spark, str(tmp_path / "t"))
+    mt.create(spark.range(1).selectExpr("id", "'a' AS v").schema,
+              primary_key=["id"])
+    mt.append(spark.range(0, 100).selectExpr("id", "'a' AS v").coalesce(1))
+    ch = "id long, v string, __op string"
+    for lo in (10, 40, 70):  # three delete files of 20 keys
+        mt.merge(
+            spark.createDataFrame([(k, None, "D") for k in range(lo, lo + 20)], ch),
+            strategy="mor",
+        )
+    taken = []
+    orig = MoonTable._merge_on_driver
+
+    def spy(self, *a, **kw):
+        v = orig(self, *a, **kw)
+        taken.append(v is not None)
+        return v
+
+    monkeypatch.setattr(MoonTable, "_merge_on_driver", spy)
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
+    v = mt.merge(spark.createDataFrame([(5, "x", "U")], ch), strategy="cow")
+    assert taken == [bound == 200] and mt._read_commit(v).op == "merge"
+    got = {r["id"]: r["v"] for r in mt.read().collect()}
+    deleted = {k for lo in (10, 40, 70) for k in range(lo, lo + 20)}
+    want = {k: "a" for k in range(100) if k not in deleted}
+    want[5] = "x"
+    assert got == want and len(got) == 40
+
+
+@pytest.mark.parametrize("bound", [BOUND, 0], ids=["driver", "spark"])
+def test_auto_flips_a_small_table_on_rows_per_key(
+    spark, tmp_path, monkeypatch, bound
+):
+    """'auto' on a one-file table: a batch changing 2 of its 100 rows
+    would copy 50 rows per changed key, so it commits merge-on-read; a
+    batch changing 40 (2.5 rows per key, under 1 / 0.3) rewrites."""
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
+    mt = MoonTable(spark, str(tmp_path / "t"))
+    mt.create(spark.range(1).selectExpr("id", "'a' AS v").schema,
+              primary_key=["id"])
+    mt.append(spark.range(0, 100).selectExpr("id", "'a' AS v").coalesce(1))
+    ch = "id long, v string, __op string"
+    v = mt.merge(spark.createDataFrame([(1, "x", "U"), (2, None, "D")], ch))
+    assert mt._read_commit(v).op == "merge-mor"
+    v = mt.merge(spark.createDataFrame([(k, "y", "U") for k in range(40)], ch))
+    assert mt._read_commit(v).op == "merge"
+    got = {r["id"]: r["v"] for r in mt.read().collect()}
+    assert len(got) == 100 and got[2] == "y" and got[50] == "a"
 
 
 def test_driver_merge_reads_spark_int96_and_writes_utc(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -176,7 +177,29 @@ def test_optimize_compacts_files(spark, warehouse):
     assert rows == list(range(8))
 
 
-def test_merge_prunes_untouched_files(spark, warehouse):
+@pytest.fixture(
+    params=[MoonTable._DRIVER_MAX_ROWS, 150], ids=["driver", "spark"]
+)
+def merge_bound(request, monkeypatch):
+    """Both merge paths of a one-key batch: the driver bound as shipped,
+    and a bound below the rows of the candidate files (the Spark plan).
+    Yields the list of :meth:`MoonTable._merge_on_driver` outcomes
+    (True: the merge ran on the driver)."""
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", request.param)
+    taken = []
+    orig = MoonTable._merge_on_driver
+
+    def spy(self, *a, **kw):
+        v = orig(self, *a, **kw)
+        taken.append(v is not None)
+        return v
+
+    monkeypatch.setattr(MoonTable, "_merge_on_driver", spy)
+    yield taken
+    assert taken[:1] == [request.param != 150]
+
+
+def test_merge_prunes_untouched_files(spark, warehouse, merge_bound):
     """The copy-on-write MERGE must not rewrite files whose pk range
     doesn't intersect the change batch (the 100 TB scale property)."""
     eng = _engine(spark, warehouse)
@@ -190,7 +213,8 @@ def test_merge_prunes_untouched_files(spark, warehouse):
     before = {d["name"] for d in mt._snapshot(None)[0]}
     # change batch touches only the high key range
     ch = spark.createDataFrame([(100000, "HI", "U")], "k long, v string, __op string")
-    eng.apply_changes("cow", ch, source_version=2)
+    v = eng.apply_changes("cow", ch, source_version=2)
+    assert mt._read_commit(v).op == "merge"
     after = {d["name"] for d in mt._snapshot(None)[0]}
     # files holding the low range must have survived untouched
     assert before & after, "low-range files were rewritten despite pruning"
@@ -222,7 +246,7 @@ def test_streaming_sync_available_now(spark, warehouse, tmp_path):
     assert rows == [(2, "b2"), (3, "c")]
 
 
-def test_optimize_sort_mode_improves_pruning(spark, warehouse):
+def test_optimize_sort_mode_improves_pruning(spark, warehouse, merge_bound):
     """optimize_table('sort:k') range-clusters files; a subsequent MERGE
     touching one key range must rewrite exactly one data file."""
     eng = _engine(spark, warehouse)

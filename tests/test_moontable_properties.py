@@ -138,13 +138,30 @@ def test_concurrent_commit_conflict_detected(spark, tmp_path):
     assert not _glob.glob(_os.path.join(path, "_moonlog", "*.tmp.*"))
 
 
-def test_merge_scattered_keys_rewrites_only_containing_files(spark, tmp_path):
+@pytest.mark.parametrize(
+    "bound", [MoonTable._DRIVER_MAX_ROWS, 150], ids=["driver", "spark"]
+)
+def test_merge_scattered_keys_rewrites_only_containing_files(
+    spark, tmp_path, monkeypatch, bound
+):
     """VERDICT r7 task 1: a CDC batch whose keys span the id space must
     NOT degrade the merge to a full-table rewrite.  The batch's global
     [min,max] envelope overlaps every file of a pk-sorted table when its
     two keys sit at opposite ends — the exact key-membership probe has to
     narrow the rewrite to only the files that actually contain a changed
-    key (≤2 of many)."""
+    key (≤2 of many).  On the driver path, and on the Spark plan under a
+    bound between the batch's 2 keys and its candidates' rows, where
+    :meth:`MoonTable._probe_by_keys` is that probe."""
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
+    probed = []
+    orig = MoonTable._probe_by_keys
+
+    def spy(self, candidates, *a, **kw):
+        out = orig(self, candidates, *a, **kw)
+        probed.append((len(candidates), len(out)))
+        return out
+
+    monkeypatch.setattr(MoonTable, "_probe_by_keys", spy)
     path = str(tmp_path / "t")
     mt = MoonTable(spark, path)
     mt.create(SCHEMA, primary_key=["k"])
@@ -165,6 +182,8 @@ def test_merge_scattered_keys_rewrites_only_containing_files(spark, tmp_path):
         f"scattered-key merge rewrote {len(commit.remove)}/{n_files} files; "
         "expected the key-membership probe to touch ≤2"
     )
+    assert commit.op == "merge" and commit.remove
+    assert bool(probed) == (bound == 150)
     got = {r["k"]: r["v"] for r in mt.read().collect()}
     assert got[1] == -1 and got[998] == -2 and got[500] == 1000
     assert len(got) == 1000
