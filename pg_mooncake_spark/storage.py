@@ -610,11 +610,22 @@ class MoonTable:
     def _version_map(self, files: list[dict], col: str) -> DataFrame:
         """Broadcast (``__file`` → commit version ``col``) map of
         ``files``, to join onto a :meth:`_read_files` scan made with
-        ``add_file_col``."""
+        ``add_file_col``.  Built from Arrow: a ``LocalRelation``, which
+        runs no Python worker when a read executes (a list-built frame
+        is a Python RDD)."""
+        import pyarrow as pa
+
         return F.broadcast(
             self.spark.createDataFrame(
-                [(os.path.basename(d["name"]), int(d.get("v") or 0)) for d in files],
-                f"__file string, {col} long",
+                pa.table(
+                    {
+                        "__file": pa.array(
+                            [os.path.basename(d["name"]) for d in files], pa.string()
+                        ),
+                        col: pa.array([int(d.get("v") or 0) for d in files], pa.int64()),
+                    }
+                ),
+                schema=f"__file string, {col} long",
             )
         )
 
