@@ -53,7 +53,13 @@ from pg_mooncake_spark.sqlparse import (  # noqa: F401  (re-exported: tests
     _values_spans,
     parse_table_name,
 )
-from pg_mooncake_spark.storage import OP_COL, MoonTable, is_pinned, pin_batch
+from pg_mooncake_spark.storage import (
+    OP_COL,
+    MoonTable,
+    is_pinned,
+    pin_batch,
+    release_batch,
+)
 
 
 def _path_slug(canonical: str) -> str:
@@ -686,52 +692,55 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         # sync below both read what the pin holds (an Arrow-backed twin,
         # or a local checkpoint of a batch over the driver bound)
         changes = pin_batch(changes)
-        v = mt.merge(
-            changes,
-            source_version=source_version,
-            on_schema_drift=on_schema_drift,
-            strategy=strategy,
-            commit_props=self._txn_commit_props(),
-        )
-        # exports sync BEFORE the watermark moves: wait_for_source_version
-        # is the freshness barrier, and "ingested" must mean the batch is
-        # applied to the mirror AND every attached export — otherwise a
-        # reader passing the barrier can still see a stale export while
-        # the sync loop's commits are in flight.  With defer_exports the
-        # caller owns the export flush (streaming commit batching): the
-        # COMMIT watermark then only moves at flush time, so the barrier
-        # never lies about export freshness.
-        exports = entry.get("exports") or []
-        # views refresh BEFORE the watermark moves, same contract as
-        # exports: a reader passing the freshness barrier must see the
-        # batch in the mirror, every attached export, AND every view
-        if defer_exports:
+        try:
+            v = mt.merge(
+                changes,
+                source_version=source_version,
+                on_schema_drift=on_schema_drift,
+                strategy=strategy,
+                commit_props=self._txn_commit_props(),
+            )
+            # exports sync BEFORE the watermark moves: wait_for_source_version
+            # is the freshness barrier, and "ingested" must mean the batch is
+            # applied to the mirror AND every attached export — otherwise a
+            # reader passing the barrier can still see a stale export while
+            # the sync loop's commits are in flight.  With defer_exports the
+            # caller owns the export flush (streaming commit batching): the
+            # COMMIT watermark then only moves at flush time, so the barrier
+            # never lies about export freshness.
+            exports = entry.get("exports") or []
+            # views refresh BEFORE the watermark moves, same contract as
+            # exports: a reader passing the freshness barrier must see the
+            # batch in the mirror, every attached export, AND every view
+            if defer_exports:
+                self._refresh_views_of(dst)
+                # export_version intentionally NOT moved: exports now lag the
+                # mirror until flush_exports (or, after a crash that loses
+                # the buffered batches, repair_exports) converges them.  The
+                # defer base records the mirror version the deferral started
+                # from, so flush_exports can tell "steady deferral" (its
+                # buffer covers the whole window — advance) from an export
+                # watermark LOWERED mid-window by a time-travel attach (its
+                # buffer does not — leave the lag for repair_exports).
+                if entry.get("export_defer_base") is None:
+                    self.catalog.set_field(dst, "export_defer_base", prior_latest)
+                self.catalog.update_watermarks(
+                    dst, flush_version=v, applied_source_version=source_version
+                )
+                self._maybe_auto_compact(dst, mt)
+                return v
+            if exports:
+                self._sync_exports(mt, changes, exports)
             self._refresh_views_of(dst)
-            # export_version intentionally NOT moved: exports now lag the
-            # mirror until flush_exports (or, after a crash that loses
-            # the buffered batches, repair_exports) converges them.  The
-            # defer base records the mirror version the deferral started
-            # from, so flush_exports can tell "steady deferral" (its
-            # buffer covers the whole window — advance) from an export
-            # watermark LOWERED mid-window by a time-travel attach (its
-            # buffer does not — leave the lag for repair_exports).
-            if entry.get("export_defer_base") is None:
-                self.catalog.set_field(dst, "export_defer_base", prior_latest)
             self.catalog.update_watermarks(
-                dst, flush_version=v, applied_source_version=source_version
+                dst, commit_version=source_version, flush_version=v,
+                export_version=self._ev_advance(v, prior_ev, prior_latest),
+                applied_source_version=source_version,
             )
             self._maybe_auto_compact(dst, mt)
             return v
-        if exports:
-            self._sync_exports(mt, changes, exports)
-        self._refresh_views_of(dst)
-        self.catalog.update_watermarks(
-            dst, commit_version=source_version, flush_version=v,
-            export_version=self._ev_advance(v, prior_ev, prior_latest),
-            applied_source_version=source_version,
-        )
-        self._maybe_auto_compact(dst, mt)
-        return v
+        finally:
+            release_batch(changes)
 
     @staticmethod
     def _ev_advance(

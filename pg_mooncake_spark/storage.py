@@ -1248,7 +1248,9 @@ class MoonTable:
                         "recreate the mirror to change its schema"
                     )
             work_schema = T.StructType(new_fields)
+        owned = not is_pinned(changes)
         changes = pin_batch(changes)
+        pinned = changes
         batch = _PINNED.get(changes)
         if batch is not None and _driver_pk_types(work_schema, pk):
             batch = _arrow_conform(batch, work_schema, extra=[OP_COL])
@@ -1345,6 +1347,8 @@ class MoonTable:
             if scan_cached is not None:
                 scan_cached.unpersist()
             changes.unpersist()
+            if owned:
+                release_batch(pinned)
 
     def _commit_merge(
         self,
@@ -2575,6 +2579,7 @@ def pin_batch(df: DataFrame) -> DataFrame:
     if tab is None or tab.num_rows > bound:
         _PINNED[cp] = None
         return cp
+    _drop_checkpoint(cp)
     out = df.sparkSession.createDataFrame(tab, schema=df.schema)
     _PINNED[out] = tab
     return out
@@ -2584,6 +2589,20 @@ def is_pinned(df: DataFrame) -> bool:
     """True for a frame :func:`pin_batch` returned that holds its rows
     (an Arrow-backed twin or a local checkpoint)."""
     return df in _PINNED
+
+
+def release_batch(df: DataFrame) -> None:
+    """Free the stored partitions of a checkpoint :func:`pin_batch`
+    returned, once the batch's last reader is done (the caller that
+    pinned it); any other frame is left alone."""
+    if df in _PINNED and _PINNED[df] is None:
+        del _PINNED[df]
+        _drop_checkpoint(df)
+
+
+def _drop_checkpoint(cp: DataFrame) -> None:
+    """Unpersist the RDD behind a ``localCheckpoint`` frame."""
+    cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _driver_pk_types(schema: T.StructType, pk: list[str]) -> bool:

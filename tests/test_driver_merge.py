@@ -354,7 +354,8 @@ def test_apply_changes_evaluates_the_batch_once(
     """apply_changes pins the batch: merge and the export sync read the
     Arrow-backed twin, or, for a batch over the bound, the local
     checkpoint the pin's one job stored, so a source plan that counts
-    its evaluations runs once."""
+    its evaluations runs once; nothing the pin stored outlives the
+    apply."""
     monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
     eng = MooncakeEngine(spark, warehouse)
     eng.create_table(
@@ -373,8 +374,12 @@ def test_apply_changes_evaluates_the_batch_once(
         [(3, "u", "U"), (7, None, "D"), (500, "n", "I")], 1
     ).mapPartitions(tick)
     batch = spark.createDataFrame(rdd, "id long, v string, __op string")
+    jsc = spark.sparkContext._jsc.sc()
+    stored = len(jsc.getRDDStorageInfo())
     eng.apply_changes("t", batch)
     assert acc.value == 3
+    # the pin's stored partitions are freed once the apply is done
+    assert len(jsc.getRDDStorageInfo()) == stored
     got = {r["id"]: r["v"] for r in eng.table("t").collect()}
     assert got[3] == "u" and got[500] == "n" and 7 not in got
 
