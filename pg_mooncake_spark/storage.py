@@ -2601,8 +2601,12 @@ def release_batch(df: DataFrame) -> None:
 
 
 def _drop_checkpoint(cp: DataFrame) -> None:
-    """Unpersist the RDD behind a ``localCheckpoint`` frame."""
-    cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    """Remove the stored partitions of the RDD behind a
+    ``localCheckpoint`` frame (through ``SparkContext.unpersistRDD``:
+    ``RDD.unpersist`` logs a warning for every locally checkpointed
+    RDD)."""
+    rdd = cp._jdf.queryExecution().analyzed().rdd()
+    cp.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
 
 
 def _driver_pk_types(schema: T.StructType, pk: list[str]) -> bool:
