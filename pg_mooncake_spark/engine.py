@@ -690,7 +690,11 @@ class MooncakeEngine(SqlRouterMixin, SequencesMixin, AdminMixin):
         prior_ev, prior_latest = entry.get("export_version"), mt.latest_version()
         # evaluate the batch's source plan ONCE: the merge and the export
         # sync below both read what the pin holds (an Arrow-backed twin,
-        # or a local checkpoint of a batch over the driver bound)
+        # or a local checkpoint of a batch over the driver bound).  The
+        # mirror's column types are assigned first, as the merge would,
+        # so the pin holds the values the mirror stores
+        if on_schema_drift == "fail":
+            changes = mt.assign_types(changes)
         changes = pin_batch(changes)
         try:
             v = mt.merge(

@@ -171,14 +171,22 @@ class MoonTable:
     _SCAN_MEMO: dict[tuple, DataFrame] = {}
     _SCAN_MEMO_MAX = 256
 
+    # the change set of the newest driver-side merge per table path:
+    # (commit version, its change-file names, the Arrow change set), so
+    # a view refresh folds the commit without re-reading the change
+    # feed (:meth:`driver_changes`)
+    _CHANGE_MEMO: dict[str, tuple] = {}
+    _CHANGE_MEMO_MAX = 64
+
     @classmethod
     def invalidate_caches(cls, path: str) -> None:
         """Purge every process-wide cache entry under ``path``.
 
         Called when a table directory is (re)created or deleted so a
         recreated table at the same deterministic warehouse path never
-        serves the previous incarnation's commits, bloom sidecars or
-        snapshot scans (:meth:`vacuum` purges the scans too)."""
+        serves the previous incarnation's commits, bloom sidecars,
+        snapshot scans or change sets (:meth:`vacuum` purges the scans
+        and change sets too)."""
         prefix = os.path.normpath(path) + os.sep
         for cache in (cls._COMMIT_CACHE, cls._BLOOM_CACHE):
             for k in [k for k in cache if os.path.normpath(k).startswith(prefix)]:
@@ -187,12 +195,36 @@ class MoonTable:
 
     @classmethod
     def _purge_scans(cls, path: str) -> None:
-        """Drop the memoized snapshot scans of the table at or under
-        ``path`` (by table path or data path)."""
+        """Drop the memoized snapshot scans and change sets of the table
+        at or under ``path`` (by table path or data path)."""
         root = os.path.normpath(path) + os.sep
         for k in list(cls._SCAN_MEMO):
             if any((os.path.normpath(p) + os.sep).startswith(root) for p in k[1:3]):
                 cls._SCAN_MEMO.pop(k, None)
+        for k in list(cls._CHANGE_MEMO):
+            if (k + os.sep).startswith(root):
+                cls._CHANGE_MEMO.pop(k, None)
+
+    def driver_changes(self, version: int) -> Optional[Any]:
+        """The change set of commit ``version`` as the Arrow table the
+        driver-side merge that made it classified (the table's columns,
+        ``_change_type`` and ``_commit_version``), or None when this
+        process holds no such set.  Served only while it is the table's
+        newest memoized set, its commit version and uuid-named change
+        files equal those the log records for ``version`` (so a dropped
+        and recreated table is never served a stale set), and that
+        commit is a merge that evolved no column."""
+        hit = self._CHANGE_MEMO.get(os.path.normpath(self.path))
+        if hit is None or hit[0] != version:
+            return None
+        c = self._read_commit(version)
+        names = (c.props or {}).get("change_files")
+        if (
+            c.op not in ("merge", "merge-mor") or c.schema or c.renames
+            or names is None or tuple(names) != hit[1]
+        ):
+            return None
+        return hit[2]
 
     def _read_commit(self, v: int) -> Commit:
         key = os.path.join(self.log_path, f"{v:010d}.json")
@@ -665,11 +697,11 @@ class MoonTable:
             .groupBy(*pk)
             .agg(F.max("__dv").alias("__dv"))
         )
-        return (
+        return _select_names(
             df.join(self._version_map(files, "__fv"), "__file")
             .join(tomb, on=list(pk), how="left")
-            .filter(F.col("__dv").isNull() | (F.col("__fv") >= F.col("__dv")))
-            .select(*[F.col(f.name) for f in schema.fields])
+            .filter(F.col("__dv").isNull() | (F.col("__fv") >= F.col("__dv"))),
+            [f.name for f in schema.fields],
         )
 
     # ---------------------------------------------------------------- writes
@@ -1107,7 +1139,10 @@ class MoonTable:
         :meth:`append` — transaction-replay idempotency tags).
 
         ``on_schema_drift``: 'fail' (default) refuses a batch whose
-        columns drifted from the mirror schema; 'evolve' widens the
+        columns drifted from the mirror schema, and casts a column whose
+        type differs to the mirror's type with Spark's cast
+        (:func:`_assign_types`; a value the cast cannot convert raises
+        before anything is written); 'evolve' widens the
         mirror instead — extra batch columns become new NULLABLE mirror
         columns (recorded in a schema-evolving commit; pre-evolution
         files read the new column as NULL; time travel below the
@@ -1248,6 +1283,8 @@ class MoonTable:
                         "recreate the mirror to change its schema"
                     )
             work_schema = T.StructType(new_fields)
+        else:
+            changes = _assign_types(changes, work_schema)
         owned = not is_pinned(changes)
         changes = pin_batch(changes)
         pinned = changes
@@ -1401,71 +1438,30 @@ class MoonTable:
         ``_DRIVER_MAX_ROWS`` rows together, or a descriptor has no count.
 
         ``batch`` is the pinned batch as Arrow in the table's Arrow
-        schema plus ``__op``, with no repeated non-NULL key.  Candidates
-        are read whole (:func:`_read_arrow`: rename eras, NULL-filled
-        columns a file predates, widened types).  A file holding a batch
-        key is touched, tombstones or not, as in
-        :meth:`_probe_by_keys`; a touched row is live when its file's
-        version is ≥ the highest tombstone version of its key (the
-        :meth:`_scan` rule).  Live rows with a batch key are the
-        pre-images, the other live rows of a touched file the CoW
-        survivors.  The change feed is classified as in
-        :meth:`_merge_change_files`; each of the upsert (or CoW), the
-        tombstone and the change file is written once by
-        :meth:`_put_arrow`, never with zero rows."""
+        schema plus ``__op``, with no repeated non-NULL key.  The
+        touched files and their rows come from :meth:`_driver_probe`; a
+        touched row is live when its file's version is ≥ the highest
+        tombstone version of its key (the :meth:`_scan` rule).  Live
+        rows with a batch key are the pre-images, the other live rows
+        of a touched file the CoW survivors.  The change feed is
+        classified as in :meth:`_merge_change_files`; each of the
+        upsert (or CoW), the tombstone and the change file is written
+        once by :meth:`_put_arrow`, never with zero rows.  Once the
+        commit lands, its change set is memoized for
+        :meth:`driver_changes`."""
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from pg_mooncake_spark.functions import bloom as B
 
         keys = batch.select(pk)
-        live_keys = keys.filter(_keyed_mask(keys, pk))
-        bounds = {}
-        for k in pk:
-            mm = pc.min_max(keys.column(k)).as_py()
-            bounds[f"min_{k}"], bounds[f"max_{k}"] = mm["min"], mm["max"]
-        candidates = [d for d in files if _intersects(d, pk, bounds)]
-        if candidates and any(d.get("bloom") for d in candidates):
-            # NULL keys match nothing, so the non-NULL keys prune soundly
-            candidates = self._bloom_filter_candidates(
-                candidates, B.arrow_key_hashes(live_keys, pk)
-            )
-        # the driver reads the candidates and every tombstone that can
-        # remove one of their rows (a delete file newer than the oldest)
-        oldest = min((d["v"] for d in candidates), default=None)
-        reads = candidates + [
-            d for d in dels if oldest is not None and d["v"] > oldest
-        ]
-        if any(d.get("rows") is None for d in reads) or (
-            sum(d["rows"] for d in reads) > self._DRIVER_MAX_ROWS
-        ):
-            return None
         cols = [f.name for f in schema.fields]
         tschema = batch.select(cols).schema
+        probe = self._driver_probe(keys, pk, tschema, files, dels)
+        if probe is None:
+            return None
+        touched, rows, fv = probe
+        use_mor = _use_mor(strategy, mor_threshold, files, touched, batch.num_rows)
+        feed = self.change_feed_enabled()
         try:
-            parts = [
-                _read_arrow(
-                    os.path.join(self.data_path, d["name"]), tschema, d.get("phys")
-                )
-                for d in candidates
-            ]
-            found = pa.concat_tables(parts) if parts else tschema.empty_table()
-            file_of = np.repeat(
-                np.arange(len(candidates)), [t.num_rows for t in parts]
-            ).astype(np.int64)
-            hit_files = np.unique(file_of[_match(found, live_keys, pk)[0]])
-            touched = [candidates[i] for i in hit_files]
-            use_mor = _use_mor(
-                strategy, mor_threshold, files, touched, batch.num_rows
-            )
-            feed = self.change_feed_enabled()
-            # touched rows: which are live, and the batch row of each
-            in_touched = np.isin(file_of, hit_files)
-            rows = found.filter(pa.array(in_touched))
-            fv = np.array(
-                [d["v"] for d in candidates], dtype=np.int64
-            )[file_of[in_touched]]
             alive = (
                 self._tombstone_alive(rows, fv, dels, pk, tschema)
                 if touched and (feed or not use_mor)
@@ -1526,10 +1522,104 @@ class MoonTable:
                 pa.concat_tables([survivors, upserts]), pk, schema
             )
             deletes, remove = [], touched
-        return self._commit_merge(
+        self._commit_merge(
             v, use_mor, add, deletes, remove,
             schema if evolved else None, source_version, props,
         )
+        if feed:
+            memo = self._CHANGE_MEMO
+            if len(memo) >= self._CHANGE_MEMO_MAX:
+                memo.clear()
+            # one chunk per column: createDataFrame of a table whose
+            # columns are chunked differently can drop rows
+            memo[os.path.normpath(self.path)] = (v, tuple(names), chg.combine_chunks())
+        return v
+
+    def _driver_probe(
+        self, keys: Any, pk: list[str], tschema: Any,
+        files: list[dict], dels: list[dict],
+    ) -> Optional[tuple]:
+        """(touched files, their rows as the Arrow ``tschema``, the
+        commit version of each row's file) for the Arrow key table
+        ``keys``: the stat- and bloom-pruned candidate files are read
+        whole (:func:`_read_arrow`: rename eras, NULL-filled columns a
+        file predates, widened types) and a file holding one of the
+        keys is touched, tombstones or not, as in
+        :meth:`_probe_by_keys`.  None when the candidates and the
+        delete files newer than the oldest of them hold more than
+        ``_DRIVER_MAX_ROWS`` rows together, a descriptor has no count,
+        or pyarrow cannot convert a stored type."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from pg_mooncake_spark.functions import bloom as B
+
+        live_keys = keys.filter(_keyed_mask(keys, pk))
+        bounds = {}
+        for k in pk:
+            mm = pc.min_max(keys.column(k)).as_py()
+            bounds[f"min_{k}"], bounds[f"max_{k}"] = mm["min"], mm["max"]
+        candidates = [d for d in files if _intersects(d, pk, bounds)]
+        if candidates and any(d.get("bloom") for d in candidates):
+            # NULL keys match nothing, so the non-NULL keys prune soundly
+            candidates = self._bloom_filter_candidates(
+                candidates, B.arrow_key_hashes(live_keys, pk)
+            )
+        # the driver reads the candidates and every tombstone that can
+        # remove one of their rows (a delete file newer than the oldest)
+        oldest = min((d["v"] for d in candidates), default=None)
+        reads = candidates + [
+            d for d in dels if oldest is not None and d["v"] > oldest
+        ]
+        if any(d.get("rows") is None for d in reads) or (
+            sum(d["rows"] for d in reads) > self._DRIVER_MAX_ROWS
+        ):
+            return None
+        try:
+            parts = [
+                _read_arrow(
+                    os.path.join(self.data_path, d["name"]), tschema, d.get("phys")
+                )
+                for d in candidates
+            ]
+            found = pa.concat_tables(parts) if parts else tschema.empty_table()
+            file_of = np.repeat(
+                np.arange(len(candidates)), [t.num_rows for t in parts]
+            ).astype(np.int64)
+            hit_files = np.unique(file_of[_match(found, live_keys, pk)[0]])
+            in_touched = np.isin(file_of, hit_files)
+            rows = found.filter(pa.array(in_touched))
+        except pa.ArrowException:
+            return None
+        fv = np.array([d["v"] for d in candidates], dtype=np.int64)
+        return [candidates[i] for i in hit_files], rows, fv[file_of[in_touched]]
+
+    def rows_for_keys(self, keys: Any) -> Optional[Any]:
+        """The live rows of the latest snapshot whose primary key is a
+        row of the Arrow table ``keys`` (the pk columns in
+        :func:`_arrow_schema` types), read on the driver with pyarrow
+        and returned in that schema — the driver-side merge's probe
+        (:meth:`_driver_probe`) and tombstone rule
+        (:meth:`_tombstone_alive`).  None when the files to read exceed
+        ``_DRIVER_MAX_ROWS`` or pyarrow cannot read them."""
+        import numpy as np
+        import pyarrow as pa
+
+        pk = list(self.primary_key() or [])
+        files, dels, _ = self._snapshot_full(None)
+        tschema = _arrow_schema(self.schema())
+        probe = self._driver_probe(keys, pk, tschema, files, dels)
+        if probe is None:
+            return None
+        _touched, rows, fv = probe
+        try:
+            rows = rows.filter(
+                pa.array(self._tombstone_alive(rows, fv, dels, pk, tschema))
+            )
+        except pa.ArrowException:
+            return None
+        return rows.take(pa.array(np.unique(_match(rows, keys, pk)[0])))
 
     def _tombstone_alive(
         self, rows: Any, fv: Any, dels: list[dict], pk: list[str], tschema: Any
@@ -2366,6 +2456,7 @@ class MoonTable:
         live = {d["name"] for d in snap_files} | {d["name"] for d in snap_dels}
         # a memoized scan of a pre-vacuum snapshot would only fail at
         # execution; rebuilt, it fails at plan time as it always did
+        # (the change set memo goes with it)
         self._purge_scans(self.path)
         removed = 0
         now = _time.time()
@@ -2462,6 +2553,14 @@ class MoonTable:
             df = df.withColumnRenamed(old, new)
         return df
 
+    def assign_types(self, df: DataFrame) -> DataFrame:
+        """``df`` with its columns in the table's spelling
+        (:meth:`_align_case`) and every column the table has in the
+        table's type (:func:`_assign_types`): what :meth:`merge` does to
+        a batch under ``on_schema_drift='fail'``, for a caller that pins
+        the batch before the merge."""
+        return _assign_types(self._align_case(df), self.schema())
+
     def _conform(self, df: DataFrame) -> DataFrame:
         """Schema reconciliation: align column order & types to the table
         schema (load_files contract — reference src/functions.rs:118-130)."""
@@ -2473,6 +2572,32 @@ class MoonTable:
         return df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
+
+
+def _assign_types(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """``df`` with every column whose type differs from the same-named
+    column of ``schema`` cast to that type with Spark's cast, as
+    Postgres casts an assigned value to its column's type (a double
+    0.25 stored in a ``decimal(23,1)`` column rounds half up to 0.3).
+    A value the cast cannot convert raises when the batch is first
+    evaluated, before anything is written.  Types compare without
+    nullability; a frame whose types all match comes back as it is, so
+    a pinned batch stays pinned."""
+    want = {f.name: f.dataType for f in schema.fields}
+    fields = df.schema.fields
+    differs = {
+        f.name for f in fields
+        if f.name in want and want[f.name].simpleString() != f.dataType.simpleString()
+    }
+    if not differs:
+        return df
+    return df.select(
+        *[
+            F.col(f.name).cast(want[f.name]).alias(f.name)
+            if f.name in differs else F.col(f.name)
+            for f in fields
+        ]
+    )
 
 
 _INT_RANK = {T.ByteType: 0, T.ShortType: 1, T.IntegerType: 2, T.LongType: 3}
@@ -2580,9 +2705,16 @@ def pin_batch(df: DataFrame) -> DataFrame:
         _PINNED[cp] = None
         return cp
     _drop_checkpoint(cp)
-    out = df.sparkSession.createDataFrame(tab, schema=df.schema)
-    _PINNED[out] = tab
-    return out
+    return pin_arrow(df.sparkSession.createDataFrame(tab, schema=df.schema), tab)
+
+
+def pin_arrow(df: DataFrame, tab: Any) -> DataFrame:
+    """Register ``tab`` as the rows of ``df`` — a frame whose plan
+    evaluates on the driver (over a local relation), its rows already
+    in :func:`_arrow_schema` of ``df.schema`` — so :func:`pin_batch`
+    counts ``df`` as pinned and a merge of it runs no job."""
+    _PINNED[df] = tab
+    return df
 
 
 def is_pinned(df: DataFrame) -> bool:
@@ -2762,16 +2894,40 @@ _PATH_SPLITTERS: "weakref.WeakKeyDictionary[Any, Any]" = weakref.WeakKeyDictiona
 
 
 def _jpaths(spark: SparkSession, paths: list[str]) -> Any:
-    """The Scala ``Seq[String]`` of ``paths`` for a JVM reader call, in
-    a constant number of py4j round trips: the list crosses as ONE
-    newline-joined string and is split JVM-side.  (pyspark's own
-    conversion sends one ``ArrayList.add`` per path.)"""
+    """The Scala ``Seq[String]`` of ``paths`` (strings without a
+    newline) for a JVM call, in a constant number of py4j round trips:
+    the list crosses as ONE newline-joined string and is split
+    JVM-side.  (pyspark's own conversion sends one ``ArrayList.add``
+    per path.)"""
     gw = spark.sparkContext._gateway
     pat = _PATH_SPLITTERS.get(gw)
     if pat is None:
         pat = _PATH_SPLITTERS[gw] = spark._jvm.java.util.regex.Pattern.compile("\n")
     jlist = pat.splitAsStream("\n".join(paths)).toList()
     return spark._jvm.PythonUtils.toSeq(jlist)
+
+
+def _select_names(df: DataFrame, names: list[str]) -> DataFrame:
+    """``df.select(*names)`` in a constant number of py4j round trips
+    (one ``F.col`` per name costs one each): the names cross as one
+    :func:`_jpaths` sequence to ``Dataset.select(String, Seq[String])``,
+    which resolves each name as ``F.col`` does.  A name holding a
+    newline cannot cross that way, nor an empty rest (a split of ""
+    is [""]); those take ``F.col``."""
+    if len(names) < 2 or any("\n" in n for n in names):
+        return df.select(*[F.col(n) for n in names])
+    spark = df.sparkSession
+    return DataFrame(df._jdf.select(names[0], _jpaths(spark, names[1:])), spark)
+
+
+def _select_exprs(df: DataFrame, exprs: list[str]) -> DataFrame:
+    """``df.selectExpr(*exprs)`` in a constant number of py4j round
+    trips, as :func:`_select_names` (an expression holding a newline
+    takes pyspark's own conversion)."""
+    if not exprs or any("\n" in e for e in exprs):
+        return df.selectExpr(*exprs)
+    spark = df.sparkSession
+    return DataFrame(df._jdf.selectExpr(_jpaths(spark, exprs)), spark)
 
 
 def _file_key(files: list[dict]) -> tuple:

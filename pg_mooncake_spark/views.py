@@ -48,10 +48,13 @@ from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pg_mooncake_spark.fsio import get_backend
 from pg_mooncake_spark.storage import (
     CHANGE_TYPE_COL,
+    OP_COL,
+    VERSION_COL,
     MoonTable,
     MoonTableError,
 )
@@ -302,7 +305,21 @@ class MaterializedView:
 
     def refresh(self) -> int:
         """Fold the base's changes since the last refresh into the view
-        state; returns the base version the view now reflects."""
+        state; returns the base version the view now reflects.
+
+        Two ways to fold, one result.  When the window is exactly one
+        base commit whose change set this process still holds as Arrow
+        (:meth:`MoonTable.driver_changes` — a driver-side merge made
+        it), the view has no ``enrich`` chain, and no min/max group
+        loses its current extreme, the fold runs on the driver
+        (:meth:`_fold_on_driver`) and runs no Spark job.  Every other
+        window — several commits, DML other than a driver-side merge,
+        an enriched view, a retracted min/max extreme, a state over the
+        driver bound, a delta the state type cannot hold — runs the
+        Spark plan (:meth:`_fold_with_spark`), which reads the change
+        feed.  Both apply the same fold arithmetic (:func:`_fold_sql`)
+        and U/D split (:func:`_op_sql`), and both commit the base
+        version with the state as its durable watermark."""
         spec = self.spec()
         gb: list[str] = spec["group_by"]
         aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
@@ -329,6 +346,172 @@ class MaterializedView:
             self._fold_dim_churn(spec, base, gb, aggs, reflected)
         if end < start:
             return reflected
+        chg = None
+        if not spec.get("enrich") and start == end:
+            chg = base.driver_changes(end)
+        if chg is None or not self._fold_on_driver(spec, base, chg, gb, aggs, end):
+            self._fold_with_spark(spec, base, gb, aggs, start, end)
+        spec["base_version"] = end
+        self._count_fold(spec)
+        self._save_spec(spec)
+        return end
+
+    def _fold_on_driver(
+        self,
+        spec: dict,
+        base: MoonTable,
+        chg: Any,
+        gb: list[str],
+        aggs: dict[str, tuple[str, str]],
+        end: int,
+    ) -> bool:
+        """Fold the Arrow change set ``chg`` of base commit ``end`` with
+        no Spark job; False, with nothing written, when the fold needs
+        the Spark plan.
+
+        One Spark projection over the change set as a local relation —
+        the ``where`` filter, then the group keys, the sign and each
+        aggregate's input — keeps Spark's expression semantics, and
+        Catalyst folds it into a local relation, so its ``collect``
+        runs no job.  The deltas are grouped and summed in Python
+        (decimals exactly, NULL inputs skipped) into the state's own
+        columns and types, so a delta the state type cannot hold falls
+        back.  The old state rows of the touched groups come from
+        :meth:`MoonTable.rows_for_keys` (None over the driver bound:
+        fall back).  The fold (:func:`_fold_sql`), the cast to the
+        state types and the U/D split (:func:`_op_sql`) run as a
+        second projection over a local relation; its collected rows
+        pin that frame (:func:`pin_arrow`), so the state's merge runs
+        no job either.  Projections cross py4j as SQL strings in one
+        round trip each (a ``Column`` costs one per function)."""
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.errors import ArithmeticException
+
+        from pg_mooncake_spark.storage import (
+            _arrow_schema,
+            _driver_pk_types,
+            _match,
+            _select_exprs,
+            pin_arrow,
+        )
+
+        state_schema = self.state.schema()
+        types = {f.name: f.dataType for f in state_schema.fields}
+        if not _driver_pk_types(state_schema, gb) or any(
+            fn in ("min", "max") and not _py_ordered(types[out])
+            for out, (fn, _e) in aggs.items()
+        ):
+            return False
+        src = self.spark.createDataFrame(
+            chg,
+            schema=T.StructType(
+                list(base.schema().fields)
+                + [
+                    T.StructField(CHANGE_TYPE_COL, T.StringType(), True),
+                    T.StructField(VERSION_COL, T.LongType(), True),
+                ]
+            ),
+        )
+        if spec.get("where"):
+            src = src.filter(spec["where"])
+        items = list(aggs.items())
+        rows = _select_exprs(
+            src,
+            [_q(g) for g in gb]
+            + [f"{_SIGN} AS __s"]
+            + [
+                f"({'1' if expr == '*' else expr}) AS __e{i}"
+                for i, (_out, (_fn, expr)) in enumerate(items)
+            ],
+        ).collect()
+
+        grouped = _group_deltas(rows, len(gb), items)
+        if grouped is None:
+            return False
+        deltas, retracted = grouped
+        keys = list(deltas)
+        tschema = _arrow_schema(state_schema)
+        state_cols = [f.name for f in state_schema.fields if f.name not in gb]
+        try:
+            key_tab = pa.table(
+                [
+                    pa.array([k[i] for k in keys], tschema.field(g).type)
+                    for i, g in enumerate(gb)
+                ],
+                names=gb,
+            )
+            dcols = [
+                pa.array([d.get(c) for d in deltas.values()], tschema.field(c).type)
+                for c in state_cols
+            ]
+        except (pa.ArrowException, OverflowError, TypeError):
+            return False  # a delta the state type cannot hold
+        old = self.state.rows_for_keys(key_tab)
+        if old is None:
+            return False
+        oi, ki = _match(old, key_tab, gb)
+        at = np.full(len(keys), -1, dtype=np.int64)
+        at[ki] = oi
+        old = old.take(pa.array(at, mask=at < 0))
+        for i, key in enumerate(keys):
+            for out, xs in retracted.get(key, {}).items():
+                cur = old.column(out)[i].as_py()
+                if cur is None or any(
+                    x <= cur if aggs[out][0] == "min" else x >= cur for x in xs
+                ):
+                    return False  # a lost extreme: the bounded recompute
+        joined = pa.table(
+            list(key_tab.columns) + [old.column(c) for c in state_cols] + dcols,
+            names=gb + [f"__o_{c}" for c in state_cols]
+            + [f"__d_{c}" for c in state_cols],
+        ).combine_chunks()  # see MoonTable._merge_on_driver's memo
+        jschema = T.StructType(
+            [f for f in state_schema.fields if f.name in gb]
+            + [
+                T.StructField(f"{p}{c}", types[c], True)
+                for p in ("__o_", "__d_")
+                for c in state_cols
+            ]
+        )
+        fold = _fold_sql(gb, aggs)
+        folded = _select_exprs(
+            self.spark.createDataFrame(joined, schema=jschema),
+            [
+                f"CAST({fold[f.name]} AS {f.dataType.simpleString()}) "
+                f"AS {_q(f.name)}"
+                for f in state_schema.fields
+            ]
+            + [f"{_op_sql(fold[_ROWS])} AS {OP_COL}"],
+        )
+        try:
+            out_rows = folded.collect()
+        except ArithmeticException:
+            return False  # overflow: the Spark plan meets it as it always did
+        aschema = _arrow_schema(folded.schema)
+        batch = pa.table(
+            [
+                pa.array([r[i] for r in out_rows], f.type)
+                for i, f in enumerate(aschema)
+            ],
+            schema=aschema,
+        )
+        self.state.merge(pin_arrow(folded, batch), source_version=end)
+        return True
+
+    def _fold_with_spark(
+        self,
+        spec: dict,
+        base: MoonTable,
+        gb: list[str],
+        aggs: dict[str, tuple[str, str]],
+        start: int,
+        end: int,
+    ) -> None:
+        """Fold base commits ``start..end`` with Spark: the change feed
+        (enriched, then filtered per image) is delta-aggregated, joined
+        to the state and merged back; min/max groups that saw a
+        retraction are recomputed from the base, semi-join-bounded."""
         ch = base.changes(start, end)
         if spec.get("enrich"):
             ch = _apply_enrich(self.spark, ch, spec["enrich"])
@@ -338,10 +521,8 @@ class MaterializedView:
             # predicate boundary fall out correctly
             ch = ch.filter(spec["where"])
 
-        sign = F.when(
-            F.col(CHANGE_TYPE_COL).isin("insert", "update_postimage"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        dexprs = [F.sum(sign).alias(f"__d{_ROWS}")]
+        sign = F.expr(_SIGN)
+        dexprs = [F.sum(sign).alias(f"__d_{_ROWS}")]
         minmax: list[str] = []
         for out, (fn, expr) in aggs.items():
             e = F.lit(1) if expr == "*" else F.expr(expr)
@@ -378,51 +559,20 @@ class MaterializedView:
             *gb, *[F.col(c).alias(f"__o_{c}") for c in state_cols]
         )
         j = old_r.join(deltas, on=gb, how="right")
-
-        def _merged(out: str, fn: str) -> list:
-            if fn in ("sum", "avg"):
-                col = out if fn == "sum" else f"{out}__sum"
-                nn = f"{out}__nn"
-                new_nn = F.coalesce(F.col(f"__o_{nn}"), F.lit(0)) + F.coalesce(
-                    F.col(f"__d_{nn}"), F.lit(0)
-                )
-                new_sum = F.coalesce(F.col(f"__o_{col}"), F.lit(0)) + F.coalesce(
-                    F.col(f"__d_{col}"), F.lit(0)
-                )
-                return [
-                    F.when(new_nn > 0, new_sum).alias(col),
-                    new_nn.alias(nn),
-                ]
-            if fn == "count":
-                return [
-                    (
-                        F.coalesce(F.col(f"__o_{out}"), F.lit(0))
-                        + F.coalesce(F.col(f"__d_{out}"), F.lit(0))
-                    ).alias(out)
-                ]
-            pick = F.least if fn == "min" else F.greatest
-            return [pick(F.col(f"__o_{out}"), F.col(f"__d_{out}")).alias(out)]
-
-        new_rows = F.coalesce(F.col(f"__o_{_ROWS}"), F.lit(0)) + F.coalesce(
-            F.col(f"__d{_ROWS}"), F.lit(0)
-        )
-        out_cols = [F.col(c) for c in gb] + [new_rows.alias(_ROWS)]
-        for out, (fn, _e) in aggs.items():
-            out_cols.extend(_merged(out, fn))
-        ret_cols = [F.col(f"__ret_{m}") for m in minmax]
+        ret_cols = [_q(f"__ret_{m}") for m in minmax]
         if not ret_cols:
-            needs = F.lit(0)
+            needs = "0"
         elif len(ret_cols) == 1:
             needs = ret_cols[0]
         else:
-            needs = F.greatest(*ret_cols)
-        inc = j.select(*out_cols, F.coalesce(needs, F.lit(0)).alias("__needs"))
+            needs = f"greatest({', '.join(ret_cols)})"
+        inc = j.selectExpr(
+            *[f"{e} AS {_q(c)}" for c, e in _fold_sql(gb, aggs).items()],
+            f"coalesce({needs}, 0) AS __needs",
+        )
 
         state_schema = self.state.schema()
-        aligned = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in state_schema.fields
-        ]
+        aligned = _aligned(state_schema)
         if minmax:
             inc = inc.persist()
             try:
@@ -463,20 +613,25 @@ class MaterializedView:
                 inc.unpersist()
         else:
             self._merge_state(inc.select(*aligned), None, gb, state_schema, end)
-        spec["base_version"] = end
-        # Self-compaction (round 17, measured in BASELINE.md round-17
-        # q3 section): each fold's MERGE may commit merge-on-read
-        # tombstones, and a read over composed deltas cost 3.0 s where
-        # the compacted state read costs 0.2 s (87 k rows, sf10).  The
-        # state is orders of magnitude smaller than the base — one
-        # O(state) compaction every few folds keeps reads at the
-        # compacted floor for ~25% amortized fold overhead.
+
+    def _count_fold(self, spec: dict) -> None:
+        """Count one fold toward the state's self-compaction.
+
+        Round 17, measured in BASELINE.md's round-17 q3 section: each
+        fold's MERGE may commit merge-on-read tombstones, and a read
+        over composed deltas cost 3.0 s where the compacted state read
+        costs 0.2 s (87 k rows, sf10).  The state is orders of
+        magnitude smaller than the base — one O(state) compaction every
+        ``COMPACT_EVERY_FOLDS`` folds keeps reads at the compacted
+        floor for ~25% amortized fold overhead.  A state that is one
+        data file with no delete files is already compacted: a rewrite
+        would only copy it, so it is skipped and the count restarts."""
         spec["folds_since_compact"] = spec.get("folds_since_compact", 0) + 1
         if spec["folds_since_compact"] >= self.COMPACT_EVERY_FOLDS:
-            self.state.optimize()
+            files, dels, _ = self.state._snapshot_full(None)  # noqa: SLF001
+            if len(files) > 1 or dels:
+                self.state.optimize()
             spec["folds_since_compact"] = 0
-        self._save_spec(spec)
-        return end
 
     # -------------------------------------------------------- dim churn
 
@@ -639,10 +794,7 @@ class MaterializedView:
                 gb, aggs,
             ).localCheckpoint(eager=True)
             state_schema = self.state.schema()
-            aligned = [
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in state_schema.fields
-            ]
+            aligned = _aligned(state_schema)
             gone = affected_groups.join(
                 rec.select(*gb), on=gb, how="leftanti"
             )
@@ -651,12 +803,7 @@ class MaterializedView:
             self._merge_state(
                 rec.select(*aligned), gone, gb, state_schema, reflected
             )
-            spec["folds_since_compact"] = (
-                spec.get("folds_since_compact", 0) + 1
-            )
-            if spec["folds_since_compact"] >= self.COMPACT_EVERY_FOLDS:
-                self.state.optimize()
-                spec["folds_since_compact"] = 0
+            self._count_fold(spec)
             self._save_spec(spec)
 
     # ----------------------------------------------------------- rename
@@ -713,14 +860,10 @@ class MaterializedView:
         base_version: int,
     ) -> None:
         """One MERGE into the state table: live groups upsert, emptied
-        groups delete (a group is empty when its row count folded to 0).
+        groups delete (:func:`_op_sql`), as do ``extra_deletes``.
         ``base_version`` rides in the same commit — the durable refresh
         watermark (:meth:`_state_watermark`)."""
-        from pg_mooncake_spark.storage import OP_COL
-
-        ups = batch.filter(F.col(_ROWS) > 0).withColumn(OP_COL, F.lit("U"))
-        dels = batch.filter(F.col(_ROWS) <= 0).withColumn(OP_COL, F.lit("D"))
-        merged = ups.unionByName(dels)
+        merged = batch.withColumn(OP_COL, F.expr(_op_sql(_q(_ROWS))))
         if extra_deletes is not None:
             pad = extra_deletes
             for f in state_schema.fields:
@@ -753,6 +896,105 @@ class MaterializedView:
             else:
                 cols.append(F.col(out))
         return df.select(*cols)
+
+
+#: +1 for an image a change adds (insert, update_postimage), −1 for one
+#: it retracts (delete, update_preimage)
+_SIGN = (
+    f"CASE WHEN {CHANGE_TYPE_COL} IN ('insert', 'update_postimage') "
+    "THEN 1 ELSE -1 END"
+)
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _fold_sql(gb: list[str], aggs: dict[str, tuple[str, str]]) -> dict[str, str]:
+    """State column → the SQL expression of its folded value in a
+    touched group, from the group's old state (``__o_<col>``, NULL for a
+    new group) and delta (``__d_<col>``) columns: row counts, counts
+    and sums add — a sum is NULL while its non-NULL count is 0 — and
+    min/max keep the least/greatest of the old extreme and the
+    insert-side candidate.  Both folds evaluate it."""
+
+    def added(c: str) -> str:
+        return f"coalesce({_q('__o_' + c)}, 0) + coalesce({_q('__d_' + c)}, 0)"
+
+    cols = {g: _q(g) for g in gb}
+    cols[_ROWS] = added(_ROWS)
+    for out, (fn, _e) in aggs.items():
+        if fn in ("sum", "avg"):
+            col = out if fn == "sum" else f"{out}__sum"
+            nn = f"{out}__nn"
+            cols[col] = f"CASE WHEN {added(nn)} > 0 THEN {added(col)} END"
+            cols[nn] = added(nn)
+        elif fn == "count":
+            cols[out] = added(out)
+        else:
+            pick = "least" if fn == "min" else "greatest"
+            cols[out] = f"{pick}({_q('__o_' + out)}, {_q('__d_' + out)})"
+    return cols
+
+
+def _group_deltas(rows: list, n: int, items: list) -> Optional[tuple]:
+    """(group key → the delta of each state column, group key → each
+    min/max's retracted values) of the projected change rows ``rows``
+    (``n`` group keys, the sign, then each aggregate's input, in the
+    order of ``items``), summed as the Spark fold's delta aggregate
+    sums them: NULL inputs skip, decimals add exactly.  None when a
+    min/max input is NaN, which Spark orders above every number."""
+    import decimal
+
+    deltas: dict[tuple, dict] = {}
+    retracted: dict[tuple, dict] = {}
+    with decimal.localcontext(decimal.Context(prec=100)):
+        for r in rows:
+            key, s = tuple(r[:n]), r[n]
+            d = deltas.setdefault(key, {_ROWS: 0})
+            d[_ROWS] += s
+            for i, (out, (fn, _expr)) in enumerate(items):
+                e = r[n + 1 + i]
+                if e is None:
+                    continue
+                if fn in ("sum", "avg"):
+                    col = out if fn == "sum" else f"{out}__sum"
+                    d[col] = d.get(col, 0) + s * e
+                    d[f"{out}__nn"] = d.get(f"{out}__nn", 0) + s
+                elif fn == "count":
+                    d[out] = d.get(out, 0) + s
+                elif e != e:
+                    return None
+                elif s == 1:
+                    pick = min if fn == "min" else max
+                    d[out] = pick(d[out], e) if out in d else e
+                else:
+                    retracted.setdefault(key, {}).setdefault(out, []).append(e)
+    return deltas, retracted
+
+
+def _aligned(state_schema: T.StructType) -> list:
+    """The state columns in order, each cast to its state type."""
+    return [
+        F.col(f.name).cast(f.dataType).alias(f.name) for f in state_schema.fields
+    ]
+
+
+def _op_sql(rows: str) -> str:
+    """The state merge's U/D split, given the SQL of a group's folded
+    row count: a group at 0 rows or below is empty and deletes, every
+    other group upserts."""
+    return f"CASE WHEN {rows} > 0 THEN 'U' ELSE 'D' END"
+
+
+def _py_ordered(dt: T.DataType) -> bool:
+    """A min/max state type whose Python order is Spark's (NaN aside,
+    which the driver fold refuses): numbers, dates and binary-collated
+    strings."""
+    if isinstance(dt, T.StringType):
+        return getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
+    return isinstance(dt, (T.NumericType, T.DateType))
 
 
 def _full_agg(

@@ -18,6 +18,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_mooncake_spark.engine import MooncakeEngine
@@ -382,6 +383,116 @@ def test_apply_changes_evaluates_the_batch_once(
     assert len(jsc.getRDDStorageInfo()) == stored
     got = {r["id"]: r["v"] for r in eng.table("t").collect()}
     assert got[3] == "u" and got[500] == "n" and 7 not in got
+
+
+def test_apply_changes_with_a_view_runs_only_the_pin(spark, warehouse):
+    """A change-feed mirror with one count/sum view: each apply runs
+    exactly one Spark job, the pin.  The view folds on the driver from
+    the merge's change set and its state merges a pinned batch, and
+    the periodic state compaction skips a state that is one file."""
+    from pg_mooncake_spark.views import MaterializedView
+
+    eng = MooncakeEngine(spark, warehouse)
+    eng.create_table(
+        "t",
+        source_df=spark.range(0, 300).selectExpr(
+            "id", "CAST(id % 3 AS STRING) AS g", "CAST(id AS DECIMAL(12,2)) AS x"
+        ),
+        primary_key=["id"], change_feed=True,
+    )
+    eng.create_materialized_view(
+        "v", "t", ["g"], {"n": ("count", "*"), "s": ("sum", "x")}
+    )
+    ch = "id long, g string, x decimal(12,2), __op string"
+    jobs = []
+    for b in range(MaterializedView.COMPACT_EVERY_FOLDS + 1):
+        rows = [(k, "u", decimal.Decimal(k), "U") for k in range(b, 300, 30)]
+        rows += [(1000 + b, "n", decimal.Decimal("1.5"), "I"), (b + 1, None, None, "D")]
+        df = spark.createDataFrame(rows, ch)
+        jobs.append(_jobs(spark, lambda: eng.apply_changes("t", df, source_version=b + 1)))
+    assert jobs == [1] * len(jobs)
+    got = {(r.g, r.n, r.s) for r in eng.materialized_view("v").collect()}
+    want = {
+        (r.g, r.n, r.s)
+        for r in eng.table("t").groupBy("g").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
+        ).collect()
+    }
+    assert got == want
+
+
+def test_change_set_memo_is_served_only_for_its_own_commit(spark, tmp_path):
+    """driver_changes serves a driver merge's change set for that commit
+    only: not for another version, not after a drop and recreate at the
+    same path (create purges it), and not when the log's commit at that
+    version names other change files — a recreate by another writer."""
+    import shutil
+
+    path = str(tmp_path / "t")
+    ch = "id long, v string, __op string"
+
+    def build():
+        mt = MoonTable(spark, path)
+        mt.create(spark.range(1).selectExpr("id", "'a' AS v").schema,
+                  primary_key=["id"], change_feed=True)
+        mt.append(spark.range(0, 10).selectExpr("id", "'a' AS v"))
+        return mt, mt.merge(spark.createDataFrame([(3, "u", "U")], ch))
+
+    mt, v = build()
+    got = mt.driver_changes(v)
+    assert [(r["id"], r["_change_type"]) for r in got.to_pylist()] == [
+        (3, "update_preimage"), (3, "update_postimage")]
+    assert mt.driver_changes(v - 1) is None
+    stale = MoonTable._CHANGE_MEMO[os.path.normpath(path)]
+    shutil.rmtree(path)
+    mt, v2 = build()
+    assert v2 == v
+    MoonTable._CHANGE_MEMO[os.path.normpath(path)] = stale
+    assert mt.driver_changes(v) is None
+    MoonTable.invalidate_caches(path)
+    assert mt.driver_changes(v) is None
+
+
+@pytest.mark.parametrize("bound", [BOUND, 0], ids=["driver", "spark"])
+def test_batch_columns_take_the_mirror_types(spark, warehouse, monkeypatch, bound):
+    """Under on_schema_drift='fail' a batch column of another type is
+    cast to the mirror's type with Spark's cast: a double 0.25 stored
+    in decimal(23,1) is 0.3 (half up, as Postgres assigns it) on both
+    paths, and later reads, the change feed and a compaction read the
+    files back.  A value the cast cannot convert raises before anything
+    is written."""
+    monkeypatch.setattr(MoonTable, "_DRIVER_MAX_ROWS", bound)
+    eng = MooncakeEngine(spark, warehouse)
+    eng.create_table(
+        "t",
+        source_df=spark.createDataFrame(
+            [(1, decimal.Decimal("1.0"))], "k int, p decimal(23,1)"
+        ),
+        primary_key=["k"], change_feed=True,
+    )
+    ch = "k int, p double, __op string"
+    eng.apply_changes(
+        "t", spark.createDataFrame([(1, 0.25, "U"), (2, 1.0, "I")], ch),
+        source_version=1,
+    )
+    mt = eng._moontable("t")
+    mt.merge(spark.createDataFrame([(3, 2.25, "I")], ch))  # merge's own cast
+    want = [(1, decimal.Decimal("0.3")), (2, decimal.Decimal("1.0")),
+            (3, decimal.Decimal("2.3"))]
+    assert sorted((r.k, r.p) for r in mt.read().collect()) == want
+    assert {r["_change_type"] for r in mt.changes(2).collect()} == {
+        "update_preimage", "update_postimage", "insert"
+    }
+    mt.optimize()
+    assert sorted((r.k, r.p) for r in mt.read().collect()) == want
+    v = mt.latest_version()
+    before = sorted(os.listdir(mt.path))
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        eng.apply_changes(
+            "t", spark.createDataFrame([(4, 1e30, "I")], ch), source_version=2
+        )
+    assert mt.latest_version() == v
+    assert sorted(os.listdir(mt.path)) == before
 
 
 def test_rows_over_the_bound_take_the_spark_path(spark, tmp_path, monkeypatch):

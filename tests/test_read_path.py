@@ -108,6 +108,30 @@ class TestPy4jBudget:
         assert n[0] <= 40, f"first read after a write built with {n[0]} py4j calls"
         assert [(r.id, r.status) for r in df.collect()] == [(3, "X")]
 
+    def test_point_read_of_a_table_with_tombstones(self, spark, warehouse):
+        """A merge-on-read scan restores the column order in one JVM
+        select of the joined name list, not one ``F.col`` per field
+        (about 340 calls before, about 260 with it)."""
+        eng = MooncakeEngine(spark, warehouse)
+        eng.create_table(
+            "orders", source_df=_orders(spark, 400).repartition(4), primary_key=["id"]
+        )
+        t0 = dt.datetime(2024, 3, 10)
+        for b in range(3):
+            eng.apply_changes(
+                "orders",
+                spark.createDataFrame(
+                    [(k, 1, "X", 1.0, t0, "p", "U") for k in range(b, 400, 40)],
+                    T.StructType(ORDERS.fields + [T.StructField("__op", T.StringType())]),
+                ),
+                source_version=b + 1, strategy="mor",
+            )
+        assert eng._moontable("orders")._snapshot_full(None)[1], "no tombstones"
+        with _py4j_calls(spark) as n:
+            df = eng.sql(POINT.format(42))
+        assert n[0] <= 300, f"point read with tombstones built with {n[0]} py4j calls"
+        assert [(r.id, r.status) for r in df.collect()] == [(42, "X")]
+
     def test_scan_build_is_independent_of_the_file_count(self, spark, tmp_path):
         mt = MoonTable(spark, str(tmp_path / "t"))
         mt.create(SCHEMA, primary_key=["id"])

@@ -9,6 +9,8 @@ recompute, emptied groups, NULL semantics).
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -24,6 +26,31 @@ SCHEMA = T.StructType(
         T.StructField("x", T.DoubleType(), True),
     ]
 )
+
+
+@pytest.fixture(params=["driver", "spark"])
+def refresh_path(request, monkeypatch):
+    """Both refresh folds: as shipped (a window of one driver-merged
+    commit folds on the driver) and with the driver fold refused, so
+    every fold runs the Spark plan.  Yields the fold counts; on
+    teardown asserts that the path under test ran."""
+    ran = {"driver": 0, "spark": 0}
+    on_driver = MaterializedView._fold_on_driver
+    with_spark = MaterializedView._fold_with_spark
+
+    def driver(self, *a, **k):
+        ok = request.param == "driver" and on_driver(self, *a, **k)
+        ran["driver"] += ok
+        return ok
+
+    def spark(self, *a, **k):
+        ran["spark"] += 1
+        return with_spark(self, *a, **k)
+
+    monkeypatch.setattr(MaterializedView, "_fold_on_driver", driver)
+    monkeypatch.setattr(MaterializedView, "_fold_with_spark", spark)
+    yield ran
+    assert ran[request.param] > 0, ran
 
 
 def _mk(spark, path, rows, change_feed=True):
@@ -136,7 +163,7 @@ class TestMaterializedView:
         eng.create_materialized_view("v", "b", ["g"], aggs)
         return eng
 
-    def test_incremental_matches_recompute(self, spark, warehouse):
+    def test_incremental_matches_recompute(self, spark, warehouse, refresh_path):
         eng = self._setup(
             spark,
             warehouse,
@@ -175,7 +202,7 @@ class TestMaterializedView:
         ]
         assert got == want
 
-    def test_group_vanishes_and_appears(self, spark, warehouse):
+    def test_group_vanishes_and_appears(self, spark, warehouse, refresh_path):
         eng = self._setup(spark, warehouse, {"n": ("count", "*")})
         eng.delete_where("b", "g = 'g0'")
         ch = spark.createDataFrame(
@@ -187,7 +214,7 @@ class TestMaterializedView:
         assert got["brand_new"] == 1
         assert got["g1"] == 10 and got["g2"] == 10
 
-    def test_null_semantics(self, spark, warehouse):
+    def test_null_semantics(self, spark, warehouse, refresh_path):
         eng = MooncakeEngine(spark, warehouse)
         src = spark.createDataFrame(
             [(1, "a", None), (2, "a", None), (3, "b", 5.0)], SCHEMA
@@ -208,7 +235,7 @@ class TestMaterializedView:
         assert rows["a"]["s"] is None and rows["a"]["nx"] == 0
         assert rows["b"]["s"] == 12.0 and rows["b"]["nx"] == 2
 
-    def test_refresh_is_incremental_not_rescan(self, spark, warehouse):
+    def test_refresh_is_incremental_not_rescan(self, spark, warehouse, refresh_path):
         """The refresh reads the change feed, not the base table: after
         refresh, the view spec pins the base version, and a second
         refresh with no new commits is a no-op."""
@@ -227,7 +254,7 @@ class TestMaterializedView:
 
 
 class TestFilteredView:
-    def test_predicate_migration(self, spark, warehouse):
+    def test_predicate_migration(self, spark, warehouse, refresh_path):
         """Rows migrating across the predicate boundary: out-migration is
         a pure retraction, in-migration a pure addition."""
         eng = MooncakeEngine(spark, warehouse)
@@ -293,6 +320,234 @@ class TestFilteredView:
             eng.table("v", version=1)
 
 
+DSCHEMA = T.StructType(
+    [
+        T.StructField("id", T.IntegerType(), False),
+        T.StructField("g", T.StringType(), True),
+        T.StructField("x", T.DoubleType(), True),
+        T.StructField("d", T.DecimalType(12, 2), True),
+    ]
+)
+DCHANGES = "id int, g string, x double, d decimal(12,2), __op string"
+
+
+def _drow(i: int, g: str, op: str | None = None) -> tuple:
+    row = (i, g, None if i % 5 == 0 else float(i), Decimal(f"{i}.25"))
+    return row if op is None else row + (op,)
+
+
+class TestDriverFold:
+    """The driver fold (MaterializedView._fold_on_driver) and the Spark
+    fold both leave the view a from-scratch GROUP BY would compute."""
+
+    AGGS = {
+        "n": ("count", "*"), "nx": ("count", "x"), "s": ("sum", "x"),
+        "sd": ("sum", "d"), "sc": ("sum", "CAST(x AS DECIMAL(18,2))"),
+        "a": ("avg", "x"), "lo": ("min", "x"), "hi": ("max", "d"),
+    }
+
+    @staticmethod
+    def _truth(eng, aggs):
+        exprs = []
+        for out, (fn, e) in aggs.items():
+            col = F.lit(1) if e == "*" else F.expr(e)
+            if fn == "avg":
+                exprs.append((F.sum(col) / F.count(col)).alias(out))
+            elif fn == "count":
+                exprs.append(F.count(col).alias(out))
+            else:
+                exprs.append(getattr(F, fn)(col).alias(out))
+        rows = eng.table("b").groupBy("g").agg(*exprs).collect()
+        return sorted((tuple(r) for r in rows), key=repr)
+
+    @staticmethod
+    def _view(eng, name):
+        rows = eng.materialized_view(name).collect()
+        return sorted((tuple(r) for r in rows), key=repr)
+
+    def test_every_aggregate_folds_like_a_recompute(
+        self, spark, warehouse, refresh_path
+    ):
+        """count/sum/avg/min/max with NULL inputs and decimal sums, a
+        new group, a group migration and an emptied group.  A batch
+        retracting a min/max extreme folds that view with Spark."""
+        eng = MooncakeEngine(spark, warehouse)
+        src = spark.createDataFrame(
+            [_drow(i, f"g{i % 4}") for i in range(1, 25)], DSCHEMA
+        )
+        eng.create_table("b", source_df=src, primary_key=["id"], change_feed=True)
+        sums = {k: self.AGGS[k] for k in ("n", "nx", "s", "sd", "sc", "a")}
+        eng.create_materialized_view("v", "b", ["g"], self.AGGS)
+        eng.create_materialized_view("w", "b", ["g"], sums)
+        batches = [
+            # no extreme retracted: both views fold on the driver
+            [(9, "g1", 90.0, Decimal("9.50"), "U"),
+             _drow(14, "g2", "D"),
+             (30, "g1", None, Decimal("0.10"), "I"),
+             (31, "g9", 5.5, Decimal("100.00"), "I"),
+             (7, "g2", 7.0, Decimal("7.25"), "U")],  # g3 → g2
+            # g1's max d and g2's min x retract: v folds with Spark
+            [_drow(21, "g1", "D"), (2, "g2", 200.0, Decimal("2.25"), "U")],
+            # g9 empties, g7 appears
+            [(31, None, None, None, "D"), (40, "g7", 1.0, Decimal("1.00"), "I")],
+        ]
+        for sv, rows in enumerate(batches, start=1):
+            eng.apply_changes(
+                "b", spark.createDataFrame(rows, DCHANGES), source_version=sv
+            )
+            assert self._view(eng, "v") == self._truth(eng, self.AGGS)
+            assert self._view(eng, "w") == self._truth(eng, sums)
+        assert "g9" not in {r[0] for r in self._view(eng, "w")}
+        want = {"driver": 4, "spark": 2} if refresh_path["driver"] else \
+            {"driver": 0, "spark": 6}
+        assert refresh_path == want
+
+    def test_null_group_key_folds_as_the_spark_plan(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A NULL group key addresses no state row on either path (the
+        state merge matches keys with SQL equality); the driver fold
+        leaves exactly the state the Spark fold leaves, and every
+        non-NULL group equals the recompute."""
+        batches = [
+            [(1, None, 10.0, Decimal("1.00"), "U"), (50, None, 2.0, Decimal("2.00"), "I"),
+             (51, "g1", None, Decimal("3.00"), "I")],
+            [(50, None, None, None, "D"), (3, None, 3.5, Decimal("3.50"), "U")],
+        ]
+        aggs = {"n": ("count", "*"), "s": ("sum", "x"), "sd": ("sum", "d")}
+        folds = {"driver": 0}
+        on_driver = MaterializedView._fold_on_driver
+
+        def counted(self, *a, **k):
+            ok = on_driver(self, *a, **k)
+            folds["driver"] += ok
+            return ok
+
+        views = {}
+        for path in ("driver", "spark"):
+            monkeypatch.setattr(
+                MaterializedView, "_fold_on_driver",
+                counted if path == "driver" else (lambda *a, **k: False),
+            )
+            eng = MooncakeEngine(spark, str(tmp_path / path))
+            src = spark.createDataFrame(
+                [_drow(i, None if i % 4 == 0 else f"g{i % 4}") for i in range(1, 13)],
+                DSCHEMA,
+            )
+            eng.create_table(
+                "b", source_df=src, primary_key=["id"], change_feed=True
+            )
+            eng.create_materialized_view("v", "b", ["g"], aggs)
+            for sv, rows in enumerate(batches, start=1):
+                eng.apply_changes(
+                    "b", spark.createDataFrame(rows, DCHANGES), source_version=sv
+                )
+            views[path] = self._view(eng, "v")
+            keyed = [r for r in views[path] if r[0] is not None]
+            assert keyed == [r for r in self._truth(eng, aggs) if r[0] is not None]
+        assert views["driver"] == views["spark"]
+        assert folds["driver"] == 2
+
+    def test_two_level_cascade_folds_on_the_driver(
+        self, spark, warehouse, refresh_path
+    ):
+        """The level-1 state's own driver merge memoizes its change set,
+        so the level-2 view folds from it on the driver too."""
+        eng = MooncakeEngine(spark, warehouse)
+        rows = [(i, "skip" if i % 7 == 0 else "keep", float(i)) for i in range(60)]
+        eng.create_table(
+            "base2",
+            source_df=spark.createDataFrame(rows, SCHEMA).withColumn(
+                "id_mod", F.col("id") % 11
+            ),
+            primary_key=["id"], change_feed=True,
+        )
+        eng.create_materialized_view(
+            "lvl1", "base2", ["id_mod"], {"c": ("count", "*")},
+            where="g <> 'skip'", state_change_feed=True,
+        )
+        eng.create_materialized_view("lvl2", "lvl1", ["c"], {"n": ("count", "*")})
+        ch = "id int, g string, x double, id_mod int, __op string"
+        batches = [
+            [(3, "keep", 3.0, 3, "D"), (100, "keep", 1.0, 1, "I")],
+            [(14, "keep", 14.0, 3, "U"), (15, "skip", 15.0, 4, "U")],
+            [(101, "keep", 1.0, 2, "I"), (102, "keep", 1.0, 3, "I"),
+             (4, None, None, None, "D")],
+        ]
+        for sv, rows in enumerate(batches, start=1):
+            eng.apply_changes("base2", spark.createDataFrame(rows, ch),
+                              source_version=sv)
+            assert {
+                (r["c"], r["n"]) for r in eng.materialized_view("lvl2").collect()
+            } == TestChainedViews()._expected(eng)
+        if refresh_path["driver"]:
+            assert refresh_path == {"driver": 6, "spark": 0}
+
+    def test_window_of_several_commits_takes_the_spark_plan(
+        self, spark, tmp_path, refresh_path
+    ):
+        base = MoonTable(spark, str(tmp_path / "b"))
+        base.create(SCHEMA, primary_key=["id"], change_feed=True)
+        base.append(spark.createDataFrame(
+            [(i, f"g{i % 3}", float(i)) for i in range(1, 13)], SCHEMA
+        ))
+        mv = MaterializedView.create(
+            spark, str(tmp_path / "v"), base, ["g"],
+            {"s": ("sum", "x"), "n": ("count", "*")},
+        )
+        ch = "id int, g string, x double, __op string"
+        base.merge(spark.createDataFrame([(1, "g1", 10.0, "U")], ch))
+        base.merge(spark.createDataFrame([(2, None, None, "D")], ch))
+        mv.refresh()  # two commits: only the second's change set is held
+        assert refresh_path == {"driver": 0, "spark": 1}
+        base.merge(spark.createDataFrame([(50, "g0", 5.0, "I")], ch))
+        mv.refresh()
+        got = {(r.g, r.s, r.n) for r in mv.read().collect()}
+        want = {
+            (r.g, r.s, r.n) for r in base.read().groupBy("g").agg(
+                F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
+            ).collect()
+        }
+        assert got == want
+
+    def test_restart_between_state_commit_and_spec_save(
+        self, spark, tmp_path, refresh_path, monkeypatch
+    ):
+        """The state commit carries the base version it reflects: a
+        refresh that dies before saving the spec is not folded twice."""
+        base = MoonTable(spark, str(tmp_path / "b"))
+        base.create(SCHEMA, primary_key=["id"], change_feed=True)
+        base.append(spark.createDataFrame(
+            [(i, f"g{i % 3}", float(i)) for i in range(1, 13)], SCHEMA
+        ))
+        path = str(tmp_path / "v")
+        MaterializedView.create(
+            spark, path, base, ["g"], {"s": ("sum", "x"), "n": ("count", "*")}
+        )
+        base.merge(spark.createDataFrame(
+            [(1, "g1", 10.0, "U"), (60, "g2", 6.0, "I")],
+            "id int, g string, x double, __op string",
+        ))
+        save = MaterializedView._save_spec
+
+        def crash(self, spec):
+            raise RuntimeError("crash before the spec save")
+
+        monkeypatch.setattr(MaterializedView, "_save_spec", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            MaterializedView(spark, path).refresh()
+        monkeypatch.setattr(MaterializedView, "_save_spec", save)
+        mv = MaterializedView(spark, path)
+        assert mv.refresh() == base.latest_version()
+        got = {(r.g, r.s, r.n) for r in mv.read().collect()}
+        want = {
+            (r.g, r.s, r.n) for r in base.read().groupBy("g").agg(
+                F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
+            ).collect()
+        }
+        assert got == want
+
+
 def test_streaming_sync_keeps_view_fresh(spark, tmp_path):
     """MVs refresh inside every micro-batch of the sync loop: after the
     freshness barrier, the view must reflect the synced state."""
@@ -330,7 +585,9 @@ def test_streaming_sync_keeps_view_fresh(spark, tmp_path):
         q.stop()
 
 
-def test_refresh_never_reads_base_for_distributive_aggs(spark, tmp_path):
+def test_refresh_never_reads_base_for_distributive_aggs(
+    spark, tmp_path, refresh_path
+):
     """The O(changes) contract, proven physically: a sum/count/avg view
     refreshes from the change feed alone — even with every base DATA
     file deleted, the refresh succeeds (only min/max retractions may

@@ -51,14 +51,20 @@ smoke_dir="$(mktemp -d)"
 import sys
 
 sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+
 from pg_mooncake_spark.session import get_spark
 from pg_mooncake_spark.storage import MoonTable
+from pg_mooncake_spark.views import MaterializedView
 
 spark = get_spark()
 df = spark.range(0, 400).selectExpr("id", "cast(id % 7 as string) AS v")
 mt = MoonTable(spark, sys.argv[2] + "/t")
 mt.create(df.schema, primary_key=["id"], change_feed=True)
 mt.append(df.repartition(8))
+mv = MaterializedView.create(
+    spark, sys.argv[2] + "/mv", mt, ["v"], {"n": ("count", "*"), "s": ("sum", "id")}
+)
 # a driver-path merge (pyarrow writes its files): Spark must read the
 # change file back with no package on the workers
 v = mt.merge(spark.createDataFrame(
@@ -70,10 +76,23 @@ for r in mt.changes(v, v).collect():
     kinds[r["_change_type"]] = kinds.get(r["_change_type"], 0) + 1
 assert kinds == {"delete": 1, "insert": 1, "update_preimage": 1,
                  "update_postimage": 1}, kinds
+# the view folds that merge's change set on the driver, with no job
+
+
+def spark_fold(*_a, **_k):
+    raise AssertionError("the view fold took the Spark plan")
+
+
+MaterializedView._fold_with_spark = spark_fold
+assert mv.refresh() == v
+got = {(r["v"], r["n"], r["s"]) for r in mv.read().collect()}
+want = {tuple(r) for r in mt.read().groupBy("v").agg(
+    F.count(F.lit(1)), F.sum("id")).collect()}
+assert got == want, (got, want)
 mt.optimize()
 got = {r["id"]: r["v"] for r in mt.read().collect()}
 assert len(got) == 400 and got[3] == "u" and got[1000] == "n" and 399 not in got
-print("driver-only commit path ok")
+print("driver-only commit path and view fold ok")
 EOF
 )
 rm -rf "$smoke_dir"
